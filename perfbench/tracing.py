@@ -230,7 +230,7 @@ def _zero() -> dict:
 # --- kernel replay ------------------------------------------------------------
 
 
-def replay_parquet(paths: list[str], spec: list[dict], scratch: str) -> dict:
+def replay_parquet(paths: list[str], spec: list[dict], workdir: str) -> dict:
     """Rewrite copies of ``paths`` serially in this process with the same
     calls ``sources.parquet_file.rewrite_parquet_file`` makes, timing
     decode (``read_row_group``), mask (``delete_mask`` + filter), encode
@@ -245,9 +245,9 @@ def replay_parquet(paths: list[str], spec: list[dict], scratch: str) -> dict:
 
     acc = dict(decode_s=0.0, mask_s=0.0, encode_s=0.0, commit_s=0.0,
                bytes_in=0, bytes_out=0, objects=0)
-    os.makedirs(scratch, exist_ok=True)
+    os.makedirs(workdir, exist_ok=True)
     for i, src in enumerate(paths):
-        local = os.path.join(scratch, f"obj-{i}.parquet")
+        local = os.path.join(workdir, f"obj-{i}.parquet")
         tmp = local + ".new"
         shutil.copyfile(src, local)
         acc["bytes_in"] += os.path.getsize(local)
@@ -277,7 +277,7 @@ def replay_parquet(paths: list[str], spec: list[dict], scratch: str) -> dict:
     return acc
 
 
-def replay_json(paths: list[str], spec: list[dict], scratch: str) -> dict:
+def replay_json(paths: list[str], spec: list[dict], workdir: str) -> dict:
     """As ``replay_parquet`` for JSON Lines objects through
     ``sources.jsonl_file.rewrite_json_file`` (one timed call per object:
     read, parse, filter and gzip encode) and ``versions.commit``."""
@@ -288,9 +288,9 @@ def replay_json(paths: list[str], spec: list[dict], scratch: str) -> dict:
 
     acc = dict(rewrite_s=0.0, commit_s=0.0, lines=0, bytes_in=0,
                bytes_out=0, objects=0)
-    os.makedirs(scratch, exist_ok=True)
+    os.makedirs(workdir, exist_ok=True)
     for i, src in enumerate(paths):
-        local = os.path.join(scratch, f"obj-{i}.json.gz")
+        local = os.path.join(workdir, f"obj-{i}.json.gz")
         tmp = local + ".new.gz"
         shutil.copyfile(src, local)
         acc["bytes_in"] += os.path.getsize(local)
