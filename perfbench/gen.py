@@ -33,7 +33,7 @@ MASK64 = (1 << 64) - 1
 TRICKLE = dict(objects=32, customers_per_object=200, parquet_rows_per_customer=100,
                row_group_rows=5_000, json_lines_per_customer=3, jobs=400,
                ids_per_job=5)
-CURATE = dict(docs=2_500, files=4, german=0.08, junk=0.04, exact_dup=0.05,
+CURATE = dict(docs=500, files=4, german=0.08, junk=0.04, exact_dup=0.05,
               near_dup=0.10)
 
 JSON_SCHEMA_DDL = (
@@ -226,15 +226,25 @@ def gen_curate(seed: int, out: str) -> dict:
     rng = np.random.default_rng([seed, 4])
     vocab = _words(rng, 3_000)
     n = cfg["docs"]
+    # every kind of document is planted a fixed number of times (at
+    # seed-chosen positions), so the stages remove about the same share
+    # of the corpus whatever the seed
+    counts = {kind: round(cfg[kind] * n) for kind in ("exact_dup", "near_dup", "german", "junk")}
+    kind = np.full(n, "original", dtype=object)
+    copies = rng.permutation(np.arange(51, n))  # copies need earlier originals
+    kind[copies[: counts["exact_dup"]]] = "exact_dup"
+    kind[copies[counts["exact_dup"] : counts["exact_dup"] + counts["near_dup"]]] = "near_dup"
+    plain = rng.permutation(np.nonzero(kind == "original")[0])
+    kind[plain[: counts["german"]]] = "german"
+    kind[plain[counts["german"] : counts["german"] + counts["junk"]]] = "junk"
     texts: list[str] = []
     originals: list[int] = []  # copies are only ever made of these
     near_pairs: list[tuple[int, int]] = []
     for i in range(n):
-        roll = rng.random()
-        if i > 50 and roll < cfg["exact_dup"]:
+        if kind[i] == "exact_dup":
             texts.append(texts[originals[int(rng.integers(0, len(originals)))]])
             continue
-        if i > 50 and roll < cfg["exact_dup"] + cfg["near_dup"]:
+        if kind[i] == "near_dup":
             src = originals[int(rng.integers(0, len(originals)))]
             cand = texts[src].split(" ", 1)[-1]
             if jaccard(texts[src], cand) >= NEAR_DUP_MIN_JACCARD:
@@ -243,10 +253,10 @@ def gen_curate(seed: int, out: str) -> dict:
                 continue
         length = int(rng.integers(60, 120))
         toks = vocab[rng.integers(0, len(vocab), length)].tolist()
-        stop = DE_STOP if rng.random() < cfg["german"] else EN_STOP
+        stop = DE_STOP if kind[i] == "german" else EN_STOP
         for j in np.nonzero(rng.random(length) < 0.15)[0]:
             toks[j] = stop[int(rng.integers(0, len(stop)))]
-        if rng.random() < cfg["junk"]:
+        if kind[i] == "junk":
             toks = [t + "!!" for t in toks]
         originals.append(i)
         texts.append(" ".join(toks))
@@ -260,7 +270,9 @@ def gen_curate(seed: int, out: str) -> dict:
         path = os.path.join(corpus, f"part-{f:05d}.parquet")
         pq.write_table(
             pa.table({"doc_id": ids[sl], "text": pa.array(texts[sl])}),
-            path, compression="snappy",
+            # uncompressed: how well random text compresses moves with the
+            # seed's vocabulary, and the corpus bytes divide the ratios
+            path, compression="none",
         )
         paths.append(path)
     chain, final = reference_curate(texts)

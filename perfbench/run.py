@@ -1,12 +1,13 @@
 """Erasure and curation benchmark for the find-and-forget engine.
 
-    python3 perfbench/run.py --workload trickle --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload trickle --seed 1 --seconds 10 --trace 0
 
 Run from the repository root. Builds the workload's inputs from
 ``--seed``, starts one Spark session on ``local[<cores>]``, runs the
 workload through the engine's public surface (``api.Engine`` for
-erasure, the ``operators`` functions for curation) for about
-``--seconds``, checks every output with ``verify.py`` and prints one
+erasure, the ``operators`` functions for curation) for at least
+``--seconds`` and a fixed number of jobs, times each job in CPU
+seconds, checks every output with ``verify.py`` and prints one
 JSON object as the last line of standard output. ``--trace 0`` reports
 the end-to-end metrics; ``--trace 1`` runs the same workload with
 spans, the Spark event log and a serial kernel replay, and reports the
@@ -36,13 +37,22 @@ import tracing  # noqa: E402
 import verify  # noqa: E402
 
 WORKLOADS = ("trickle", "curate")
-SETUP_REPS = 2  # set-up repetitions per run; setup_s takes their median
-MIN_UNITS = 4  # the timed loop runs at least this many jobs / passes
+SETUP_REPS = 3  # set-up repetitions per run; setup_s takes their median
+# untimed jobs / passes between the cold one and the timed loop: the JVM
+# is still compiling the engine's hot paths over the first few
+WARMUP_UNITS = {"trickle": 2, "curate": 2}
+# the timed loop runs at least this many jobs / passes, which takes
+# longer than --seconds on a 4-core host, so the units a run measures
+# rarely depend on how fast the host happened to be
+MIN_UNITS = {"trickle": 5, "curate": 4}
 
+# Jobs are timed in CPU seconds of the whole process tree: on a shared
+# host, wall time follows the CPU time other tenants steal (the same
+# jobs read 2.6 s and 3.4 s in consecutive runs at 8.5 and 8.9 CPU s), so
+# wall latency is printed above the result line but not reported in it.
 E2E = {
-    "job_p50_s": "s",
-    "job_tail_s": "s",
-    "cold_job_s": "s",
+    "job_cpu_s": "s",
+    "cold_job_cpu_s": "s",
     "setup_s": "s",
     "verified_frac": "ratio",
     "bytes_out_per_in": "ratio",
@@ -91,6 +101,31 @@ def median(values) -> float:
     return float(statistics.median(values)) if values else 0.0
 
 
+def tree_cpu_s() -> float:
+    """User + system CPU seconds of this process and every live
+    descendant (the Spark JVM and its Python workers), including the
+    children they have reaped."""
+    children: dict[int, list[int]] = {}
+    ticks: dict[int, int] = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as f:
+                stat = f.read()
+        except OSError:  # exited while listing
+            continue
+        fields = stat[stat.rindex(")") + 2:].split()
+        children.setdefault(int(fields[1]), []).append(int(name))
+        ticks[int(name)] = sum(int(x) for x in fields[11:15])
+    total, todo = 0, [os.getpid()]
+    while todo:
+        pid = todo.pop()
+        total += ticks.get(pid, 0)
+        todo += children.get(pid, [])
+    return total / os.sysconf("SC_CLK_TCK")
+
+
 def tail(values) -> tuple[float, float]:
     """(percentile, value): the highest percentile with at least 10 samples
     beyond it, linearly interpolated; with fewer than 20 samples, the
@@ -113,6 +148,11 @@ def start_session(work: str, cores: int, event_dir: str | None):
         "spark.local.dir": os.path.join(work, "spark-local"),
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         "spark.ui.showConsoleProgress": "false",
+        # C1 only: with the default tiered C2 compiler the engine is still
+        # being recompiled after a dozen jobs, and how far it got moves a
+        # job's CPU time by 20% between runs; C1 code is steady after the
+        # first job or two
+        "spark.driver.extraJavaOptions": "-XX:TieredStopAtLevel=1",
     }
     if event_dir:
         os.makedirs(event_dir)
@@ -226,7 +266,7 @@ class Run:
             [{"Type": "Simple", "MatchId": i, "DataMappers": mappers} for i in ids]
         )
         before = self._snapshot()
-        t0 = time.perf_counter()
+        cpu0, t0 = tree_cpu_s(), time.perf_counter()
         if self.tracer and self.tracer.active:
             with self.tracer.span("api.process_queue") as span:
                 doc = self.engine.process_queue()
@@ -234,12 +274,14 @@ class Run:
             span = None
             doc = self.engine.process_queue()
         latency = time.perf_counter() - t0
+        cpu = tree_cpu_s() - cpu0
         after = self._snapshot()
         changed = [p for p in before if after.get(p) != before[p]]
         self.attempted += 1
         self.problems += verify.job(doc, len(changed))
         return {
             "latency": latency,
+            "cpu": cpu,
             "ids": ids,
             "changed": changed,
             "bytes_in": sum(before[p][1] for p in changed),
@@ -259,8 +301,10 @@ class Run:
     def run_trickle(self) -> None:
         jobs = iter(self.spec["jobs"])
         self.cold = self.erase(next(jobs))
+        for _ in range(WARMUP_UNITS["trickle"]):
+            self.erase(next(jobs))
         self._loop(lambda: self.erase(next(jobs)))
-        done = 1 + len(self.units)
+        done = 1 + WARMUP_UNITS["trickle"] + len(self.units)
         deleted = [i for job in self.spec["jobs"][:done] for i in job]
         survivors = {}
         for lake in self.lakes:
@@ -290,7 +334,7 @@ class Run:
                 return df.localCheckpoint(eager=True)
 
         out_dir = os.path.join(self.work, "curated")
-        t0 = time.perf_counter()
+        cpu0, t0 = tree_cpu_s(), time.perf_counter()
         docs = self.spark.read.parquet(self.corpus)
         survivors = stage("operators.exact_dedup", dedup.exact_dedup(docs))
         tokd = survivors.withColumn("_ct_toks", text.tokens(F.col("text")))
@@ -325,15 +369,18 @@ class Run:
         with tr.span("write") if tr else contextlib.nullcontext():
             result.write.mode("overwrite").parquet(out_dir)
         latency = time.perf_counter() - t0
+        cpu = tree_cpu_s() - cpu0
         out_bytes = sum(os.path.getsize(os.path.join(out_dir, n))
                         for n in os.listdir(out_dir) if n.endswith(".parquet"))
         self.attempted += 1
         self.problems += verify.curate_output(out_dir, self.spec)
-        return {"latency": latency, "bytes_in": self.spec["bytes"],
+        return {"latency": latency, "cpu": cpu, "bytes_in": self.spec["bytes"],
                 "bytes_out": out_bytes, "lake_bytes": self.spec["bytes"]}
 
     def run_curate(self) -> None:
         self.cold = self.curate_pass()
+        for _ in range(WARMUP_UNITS["curate"]):
+            self.curate_pass()
         self._loop(self.curate_pass)
 
     # the timed loop ----------------------------------------------------------
@@ -344,7 +391,7 @@ class Run:
         run every other unit is traced; the rest measure the same work
         untraced, for ``trace.overhead_s``."""
         deadline = time.monotonic() + self.seconds
-        while len(self.units) < MIN_UNITS or time.monotonic() < deadline:
+        while len(self.units) < MIN_UNITS[self.workload] or time.monotonic() < deadline:
             i = len(self.units)
             traced = self.tracer is not None and i % 2 == 1
             with self.tracer.unit() if traced else contextlib.nullcontext():
@@ -354,16 +401,22 @@ class Run:
 
     # metrics ---------------------------------------------------------------------
 
+    def wall_times(self) -> list[str]:
+        """Wall latency of the untraced timed units and of the cold one:
+        printed for reading, too host-dependent to report."""
+        lat = [u["latency"] for u in self.units if not u["traced"]]
+        pct, tail_s = tail(lat)
+        return [f"job_p50_s {median(lat):.3f} s, job_tail_s (p{pct:.1f}) "
+                f"{tail_s:.3f} s over {len(lat)} jobs; cold_job_s "
+                f"{self.cold['latency']:.3f} s (wall time)"]
+
     def end_to_end(self) -> dict:
         """{metric: (value, samples)} over the untraced timed units."""
         units = [u for u in self.units if not u["traced"]]
-        lat = [u["latency"] for u in units]
-        self.tail_pct, tail_s = tail(lat)
         bytes_out = sum(u["bytes_out"] for u in units)
         return {
-            "job_p50_s": (median(lat), len(lat)),
-            "job_tail_s": (tail_s, len(lat)),
-            "cold_job_s": (self.cold["latency"], 1),
+            "job_cpu_s": (median([u["cpu"] for u in units]), len(units)),
+            "cold_job_cpu_s": (self.cold["cpu"], 1),
             "setup_s": (self.setup_s, SETUP_REPS),
             "verified_frac": (1.0 - len(self.problems) / max(self.attempted, 1),
                               self.attempted),
@@ -544,7 +597,7 @@ def main(argv=None) -> int:
             metrics = {k: v[0] for k, v in e2e.items()}
             units = E2E
             rows = [(k, *v) for k, v in e2e.items()]
-            table = [f"job_tail_s is p{run.tail_pct:.1f} of {e2e['job_tail_s'][1]} jobs"]
+            table = run.wall_times()
     finally:
         if run.spark is not None:
             stop_session(run.spark)

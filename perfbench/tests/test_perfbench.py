@@ -1,4 +1,5 @@
-"""The benchmark's own checks: seeded inputs, the verifier, the metric names.
+"""The benchmark's own checks: seeded inputs, the verifier, the metric names,
+the CPU accounting.
 
     python3 -m pytest perfbench/tests -q
 
@@ -10,6 +11,8 @@ import gzip
 import json
 import os
 import shutil
+import subprocess
+import sys
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -209,3 +212,11 @@ def test_tail_percentile_rule():
     assert run.tail([4.0, 1.0, 3.0, 2.0]) == (50.0, 2.5)
     pct, value = run.tail([float(i) for i in range(1, 101)])
     assert pct == 90.0 and value == pytest.approx(90.1)
+
+
+def test_tree_cpu_counts_child_processes():
+    before = run.tree_cpu_s()
+    subprocess.run([sys.executable, "-c",
+                    "import time\nt = time.process_time()\n"
+                    "while time.process_time() - t < 0.5: pass"], check=True)
+    assert run.tree_cpu_s() - before >= 0.4
