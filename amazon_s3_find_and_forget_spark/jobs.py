@@ -255,32 +255,45 @@ def run_job(
     all_stats: list = []
     counters: dict = {"TotalObjectUpdateFailedCount": 0, "TotalQueryFailedCount": 0}
     try:
-        for mapper in mappers:
-            routed = route_items(queue_items, mapper.mapper_id)
-            if not routed:
-                continue
-            df = mapper.read(spark, kms=kms)
-            groups = build_column_groups(
-                df.schema, mapper.columns, routed
+        routed_mappers = [
+            (mapper, routed)
+            for mapper in mappers
+            if (routed := route_items(queue_items, mapper.mapper_id))
+        ]
+        if manifest_dir or manifest_table:
+            # the auditable stringified manifest of every routed mapper,
+            # partitioned like the reference's Glue JSONL manifest table
+            # (S7, generate_queries.py:223-225 + templates/manifests.yaml)
+            # and written before the first Find, as generate_queries does.
+            # One driver-built relation in one task: one part file per
+            # (JobId, DataMapperId) directory, no Python worker
+            from .matches import (
+                MANIFEST_SCHEMA,
+                local_relation,
+                manifest_rows,
+                register_manifest_table,
+                write_manifest,
             )
-            if manifest_dir or manifest_table:
-                # the auditable stringified manifest, partitioned like the
-                # reference's Glue JSONL manifest table (S7,
-                # generate_queries.py:223-225 + templates/manifests.yaml)
-                from .matches import (
-                    build_manifest_df,
-                    register_manifest_table,
-                    write_manifest,
-                )
 
-                mdf = build_manifest_df(
-                    spark, job_id, mapper.mapper_id, mapper.columns, routed
+            rows = [
+                row
+                for mapper, routed in routed_mappers
+                for row in manifest_rows(
+                    job_id, mapper.mapper_id, mapper.columns, routed
                 )
+            ]
+            if rows:
+                mdf = local_relation(spark, MANIFEST_SCHEMA, rows).coalesce(1)
                 if manifest_dir:
                     write_manifest(mdf, manifest_dir)
                 if manifest_table:
                     # catalog registration (generate_queries.py:288-326)
                     register_manifest_table(mdf, manifest_table)
+        for mapper, routed in routed_mappers:
+            df = mapper.read(spark, kms=kms)
+            groups = build_column_groups(
+                df.schema, mapper.columns, routed
+            )
             paths = None
             for attempt in range(query_max_retries + 1):
                 # bounded retry budget, the AthenaQueryMaxRetries analog
@@ -290,13 +303,21 @@ def run_job(
                 try:
                     # probe one past the threshold: a small job gets its
                     # complete list, a large one only proves it is large
+                    started = time.monotonic()
                     paths = [
                         r[0]
                         for r in find_affected_files(df, groups)
                         .limit(path_handoff_threshold + 1)
                         .collect()
                     ]
-                    emit("QuerySucceeded", {"DataMapperId": mapper.mapper_id})
+                    millis = int((time.monotonic() - started) * 1000)
+                    emit(
+                        "QuerySucceeded",
+                        {
+                            "DataMapperId": mapper.mapper_id,
+                            "Statistics": {"EngineExecutionTimeInMillis": millis},
+                        },
+                    )
                     break
                 except Exception as e:  # noqa: BLE001
                     if attempt < query_max_retries:

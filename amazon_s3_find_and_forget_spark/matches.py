@@ -24,7 +24,9 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -189,19 +191,34 @@ MANIFEST_SCHEMA = StructType(
 )
 
 
-def build_manifest_df(
-    spark: SparkSession,
+def local_relation(
+    spark: SparkSession, schema: StructType, rows: list[tuple]
+) -> DataFrame:
+    """A driver-built relation that plans as a JVM ``LocalTableScan``.
+
+    The rows reach the JVM as one Arrow table, so reading them needs no
+    Python worker. ``spark.createDataFrame(rows)`` would instead plan
+    ``parallelize`` plus a Python ``map`` (``Scan ExistingRDD``), one
+    Python task per partition every time the relation is read.
+    """
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def manifest_rows(
     job_id: str,
     mapper_id: str,
     identifier_columns: list[str],
     items: list[QueueItem],
-) -> DataFrame:
-    """The auditable stringified manifest (reference generate_queries.py:89-127).
-
-    One row per (match x column-group); written with
-    ``.write.partitionBy("JobId","DataMapperId")`` it reproduces the
-    reference's partitioned JSONL manifest table (templates/manifests.yaml:59-88).
-    """
+) -> list[tuple]:
+    """The stringified manifest rows of one (job, mapper), ``MANIFEST_SCHEMA``
+    order (reference generate_queries.py:89-127): one row per
+    (match x column-group)."""
     rows = []
     for item in items:
         if item.type == "Simple":
@@ -237,7 +254,27 @@ def build_manifest_df(
                     mapper_id,
                 )
             )
-    return spark.createDataFrame(rows, MANIFEST_SCHEMA)
+    return rows
+
+
+def build_manifest_df(
+    spark: SparkSession,
+    job_id: str,
+    mapper_id: str,
+    identifier_columns: list[str],
+    items: list[QueueItem],
+) -> DataFrame:
+    """The auditable stringified manifest of one (job, mapper).
+
+    Written with ``.write.partitionBy("JobId","DataMapperId")`` it
+    reproduces the reference's partitioned JSONL manifest table
+    (templates/manifests.yaml:59-88).
+    """
+    return local_relation(
+        spark,
+        MANIFEST_SCHEMA,
+        manifest_rows(job_id, mapper_id, identifier_columns, items),
+    )
 
 
 def write_manifest(df: DataFrame, path: str) -> None:

@@ -34,7 +34,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ..matches import ColumnGroup
+from ..matches import ColumnGroup, local_relation
+from ..schema import holds_exactly
 
 # Above this many match values, an In-predicate stops pruning well and the
 # broadcast semi-join path wins. Athena's practical bound on the same
@@ -66,7 +67,10 @@ def null_safe_predicate(group: ColumnGroup) -> Column:
 
 def matches_df(spark: SparkSession, group: ColumnGroup) -> DataFrame:
     """A typed in-memory relation of the group's match values (the Spark
-    analog of one manifest partition, kept typed instead of stringified)."""
+    analog of one manifest partition, kept typed instead of stringified).
+
+    Values the identifier column cannot hold are left out: they match no
+    row, and Spark would round or refuse them on the way in."""
     fields = [
         StructField(f"_m{i}", dtype, False)
         for i, dtype in enumerate(group.types)
@@ -76,7 +80,8 @@ def matches_df(spark: SparkSession, group: ColumnGroup) -> DataFrame:
         if group.composite
         else [(v,) for v in group.values]
     )
-    return spark.createDataFrame(rows, StructType(fields))
+    rows = [r for r in rows if all(map(holds_exactly, group.types, r))]
+    return local_relation(spark, StructType(fields), rows)
 
 
 def _semi_join_branch(

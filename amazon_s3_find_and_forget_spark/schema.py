@@ -17,7 +17,7 @@ Rules (parity with reference docs/LIMITS.md:18-27):
 
 from __future__ import annotations
 
-from decimal import Decimal, InvalidOperation
+from decimal import Context, Decimal, InvalidOperation
 
 from pyspark.sql.types import (
     ByteType,
@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 _INT_TYPES = (ByteType, ShortType, IntegerType, LongType)
 _FLOAT_TYPES = (FloatType, DoubleType)
 _STR_TYPES = (StringType, CharType, VarcharType)
+_INT_BITS = {ByteType: 8, ShortType: 16, IntegerType: 32, LongType: 64}
 
 
 class MatchIdCastingError(ValueError):
@@ -137,3 +138,21 @@ def cast_match_id(value, column: str, dtype: DataType):
         return str(value)
     except (ValueError, TypeError, InvalidOperation):
         raise MatchIdCastingError(column, dtype, value) from None
+
+
+def holds_exactly(dtype: DataType, value) -> bool:
+    """Whether a column of ``dtype`` can hold the cast match id ``value``
+    without overflow or rounding. A value it cannot hold matches no row
+    of that column: 1.505 is not 1.51 in a ``decimal(10,2)`` column."""
+    if isinstance(dtype, _INT_TYPES):
+        half = 1 << (_INT_BITS[type(dtype)] - 1)
+        return -half <= value < half
+    if isinstance(dtype, DecimalType):
+        try:
+            fitted = value.quantize(
+                Decimal(1).scaleb(-dtype.scale), context=Context(prec=dtype.precision)
+            )
+        except InvalidOperation:
+            return False
+        return fitted == value
+    return True

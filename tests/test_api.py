@@ -87,6 +87,10 @@ def test_process_queue_end_to_end(engine, spark, lake):
     assert page1[-1]["Sk"] < page2[0]["Sk"]
     names = [e["EventName"] for e in page1 + page2]
     assert names[0] == "JobStarted" and "ObjectUpdated" in names
+    # the Find's wall time reaches the event and the job's counters
+    found = [e for e in job["Events"] if e["EventName"] == "QuerySucceeded"]
+    assert found[0]["EventData"]["Statistics"]["EngineExecutionTimeInMillis"] > 0
+    assert job["TotalQueryTimeInMillis"] > 0
 
 
 def test_single_job_guard(engine, spark, lake, tmp_path):
@@ -137,6 +141,97 @@ def test_manifest_written_and_future_watermark_rejected(engine, spark, lake):
         engine.list_job_events(
             job["Id"], watermark=f"{job['JobFinishTime'] + 99999}#zz"
         )
+
+
+def _customers_lake(path):
+    import pyarrow as pa, pyarrow.parquet as pq  # noqa: E401
+
+    os.makedirs(path)
+    pq.write_table(
+        pa.table(
+            {
+                "customer_id": pa.array([7, 8, 9], pa.int64()),
+                "region": ["eu", "eu", "us"],
+                "user": [{"email": "7"}, {"email": "b"}, {"email": "c"}],
+            }
+        ),
+        os.path.join(path, "part-0.parquet"),
+    )
+    return path
+
+
+def test_manifest_one_file_per_job_and_mapper(engine, spark, lake, tmp_path):
+    cust = _customers_lake(str(tmp_path / "customers"))
+    idle = _customers_lake(str(tmp_path / "idle"))
+    engine.put_data_mapper(
+        "m/1", {"Location": cust, "Columns": ["customer_id", "user.email"]}
+    )
+    engine.put_data_mapper("li", {"Location": lake, "Columns": ["l_orderkey"]})
+    engine.put_data_mapper("idle", {"Location": idle, "Columns": ["customer_id"]})
+    simple, composite = engine.enqueue_matches(
+        [
+            {"MatchId": 7, "DataMappers": ["m/1", "li"]},
+            {
+                "MatchId": [
+                    {"Column": "region", "Value": "eu"},
+                    {"Column": "customer_id", "Value": 8},
+                ],
+                "Type": "Composite",
+                "DataMappers": ["m/1"],
+            },
+        ]
+    )
+    job = engine.process_queue()
+    assert job["JobStatus"] == "COMPLETED"
+    jid = job["Id"]
+    root = os.path.join(engine.state_dir, "manifests", f"JobId={jid}")
+    # the mapper with no routed items gets no partition; "/" is escaped
+    assert sorted(os.listdir(root)) == ["DataMapperId=li", "DataMapperId=m%2F1"]
+    assert job["Manifests"] == [
+        os.path.join(root, "DataMapperId=li"),
+        os.path.join(root, "DataMapperId=m%2F1"),
+    ]
+    for d in job["Manifests"]:
+        assert len([f for f in os.listdir(d) if f.endswith(".json")]) == 1
+
+    got = {
+        (r.DataMapperId, tuple(r.Columns), tuple(r.MatchId),
+         r.DeletionQueueItemId, r.CreatedAt, r.QueryableColumns,
+         r.QueryableMatchId)
+        for r in spark.read.json(os.path.join(engine.state_dir, "manifests"))
+        .where(f"JobId = '{jid}'")
+        .collect()
+    }
+    sid, cid = simple["DeletionQueueItemId"], composite["DeletionQueueItemId"]
+    st, ct = simple["CreatedAt"], composite["CreatedAt"]
+    assert got == {
+        ("m/1", ("customer_id",), ("7",), sid, st, "customer_id", "7"),
+        ("m/1", ("user.email",), ("7",), sid, st, "user.email", "7"),
+        ("m/1", ("customer_id", "region"), ("8", "eu"), cid, ct,
+         "customer_id_S3F2COMP_region", "8_S3F2COMP_eu"),
+        ("li", ("l_orderkey",), ("7",), sid, st, "l_orderkey", "7"),
+    }
+
+
+def test_find_failure_still_records_manifests(engine, lake, monkeypatch):
+    from amazon_s3_find_and_forget_spark.plans import find
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("scan failed")
+
+    monkeypatch.setattr(find, "find_affected_files", broken)
+    engine.put_settings({"QueryMaxRetries": 0})
+    engine.put_data_mapper("li", {"Location": lake, "Columns": ["l_orderkey"]})
+    engine.enqueue_matches([{"MatchId": 1}])
+    job = engine.process_queue()
+    assert job["JobStatus"] == "FIND_FAILED"
+    # the manifest is written before the first Find, so the job document
+    # still points at it and delete_job can clean it up
+    assert job["Manifests"] == [
+        os.path.join(
+            engine.state_dir, "manifests", f"JobId={job['Id']}", "DataMapperId=li"
+        )
+    ]
 
 
 def test_settings(engine):

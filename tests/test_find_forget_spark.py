@@ -61,6 +61,25 @@ def test_find_semi_join_path_same_result(spark, lake):
     assert pred == joined
 
 
+def test_semi_join_skips_values_the_column_cannot_hold(spark, tmp_path):
+    # 1.505 must not round onto the 1.51 row of a decimal(10,2) column, and
+    # a byte column's out-of-range id matches nothing instead of failing
+    from decimal import Decimal
+
+    loc = str(tmp_path / "typed")
+    spark.createDataFrame(
+        [(Decimal("1.51"), 1), (Decimal("1.50"), 2)], "amt decimal(10,2), b byte"
+    ).write.parquet(loc)
+    df = spark.read.parquet(loc)
+    for col, ids in (("amt", ["1.505", "1.5"]), ("b", [300, 2])):
+        groups = build_column_groups(
+            df.schema, [col], [QueueItem(match_id=v) for v in ids]
+        )
+        for limit in (0, 10):
+            rows = find_matching_rows(df, groups, predicate_value_limit=limit)
+            assert [r.b for r in rows.collect()] == [2], (col, limit)
+
+
 def test_find_matching_rows(spark, lake):
     df = spark.read.parquet(lake)
     items = [QueueItem(match_id=1)]

@@ -4,14 +4,22 @@ produce at scale — pushed filters, broadcast joins, partition pruning.
 tests/unit/tasks/test_execute_query.py.)"""
 
 import os
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType, LongType, StringType
 
-from amazon_s3_find_and_forget_spark.matches import QueueItem, build_column_groups
+from amazon_s3_find_and_forget_spark.matches import (
+    ColumnGroup,
+    QueueItem,
+    build_column_groups,
+    build_manifest_df,
+)
 from amazon_s3_find_and_forget_spark.plans.find import (
     find_affected_files,
     find_matching_rows,
+    matches_df,
 )
 
 
@@ -69,6 +77,61 @@ def test_find_semi_join_broadcasts(spark, lake):
     )
     assert "BroadcastHashJoin" in plan
     assert "LeftSemi" in plan
+
+
+def test_manifest_is_a_local_relation(spark):
+    # driver-built Arrow rows: a JVM LocalTableScan, no Python worker
+    mdf = build_manifest_df(
+        spark,
+        "j1",
+        "m/1",
+        ["customer_id", "user.email"],
+        [
+            QueueItem(match_id=7),
+            QueueItem(
+                match_id=[
+                    {"Column": "region", "Value": "eu"},
+                    {"Column": "customer_id", "Value": 8},
+                ],
+                type="Composite",
+                data_mappers=["m/1"],
+            ),
+        ],
+    )
+    plan = explain_str(mdf)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert [(r.QueryableColumns, r.QueryableMatchId) for r in mdf.collect()] == [
+        ("customer_id", "7"),
+        ("user.email", "7"),
+        ("customer_id_S3F2COMP_region", "8_S3F2COMP_eu"),
+    ]
+
+
+@pytest.mark.parametrize(
+    "group, expected",
+    [
+        (ColumnGroup(["id"], [LongType()], [1, 2**40], False), [(1,), (2**40,)]),
+        (ColumnGroup(["s"], [StringType()], ["a", "b"], False), [("a",), ("b",)]),
+        (
+            ColumnGroup(
+                ["amt"], [DecimalType(10, 2)], [Decimal("1.5"), Decimal("1.25")], False
+            ),
+            [(Decimal("1.50"),), (Decimal("1.25"),)],
+        ),
+        (
+            ColumnGroup(
+                ["id", "s"], [LongType(), StringType()], [(1, "a"), (2, "b")], True
+            ),
+            [(1, "a"), (2, "b")],
+        ),
+    ],
+    ids=["bigint", "string", "decimal", "composite"],
+)
+def test_semi_join_matches_are_a_local_relation(spark, group, expected):
+    m = matches_df(spark, group)
+    plan = explain_str(m)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert [tuple(r) for r in m.collect()] == expected
 
 
 def test_partition_pruning(spark, partitioned_lake):
