@@ -234,8 +234,9 @@ def run_job(
     stats + status.
 
     Find->Forget handoff is hybrid: up to ``path_handoff_threshold``
-    affected objects take the list path (driver-side paths, per-object
-    events — reference parity, one SQS message per object). Above it the
+    affected objects take the list path (driver-side paths and sizes,
+    per-object events — reference parity, one SQS message per object;
+    ``forget_files`` sizes its task count by the bytes). Above it the
     affected-path relation stays a DataFrame end to end
     (``forget_files_df``): the rewrite fans out via ``mapInPandas``, stats
     aggregate distributively, and only the per-status rollup reaches the
@@ -304,12 +305,12 @@ def run_job(
                     # probe one past the threshold: a small job gets its
                     # complete list, a large one only proves it is large
                     started = time.monotonic()
-                    paths = [
-                        r[0]
-                        for r in find_affected_files(df, groups)
+                    found = (
+                        find_affected_files(df, groups)
                         .limit(path_handoff_threshold + 1)
                         .collect()
-                    ]
+                    )
+                    paths = [r[0] for r in found]
                     millis = int((time.monotonic() - started) * 1000)
                     emit(
                         "QuerySucceeded",
@@ -364,6 +365,8 @@ def run_job(
                     role_arn=getattr(mapper, "role_arn", ""),
                     store_factory=store_factory,
                     redact_columns=mapper.effective_redact_columns(),
+                    # bytes per object size the task count
+                    sizes=[r[1] for r in found],
                 )
                 all_stats.extend(stats)
                 stats_rel = None
@@ -373,7 +376,7 @@ def run_job(
                 stats = None
                 stats_rel = forget_files_df(
                     spark,
-                    find_affected_files(df, groups),
+                    find_affected_files(df, groups).select("file_path"),
                     groups,
                     fmt=mapper.format,
                     ignore_not_found=mapper.ignore_object_not_found,

@@ -43,6 +43,7 @@ from ..schema import holds_exactly
 PREDICATE_VALUE_LIMIT = 2048
 
 PATH_COL = "file_path"
+SIZE_COL = "file_size"
 
 
 def group_predicate(group: ColumnGroup) -> Column:
@@ -124,17 +125,26 @@ def find_affected_files(
 ) -> DataFrame:
     """J1/J2 + P1 + A1: distinct file paths containing >= 1 match.
 
-    Returns a one-column DataFrame ``file_path``. The scan reads only the
-    identifier columns (column pruning) and the pushed match predicates
-    prune row groups / files.
+    Returns ``file_path`` (the object URI) and ``file_size`` (its bytes,
+    which size the Forget dispatch). The scan reads only the identifier
+    columns (column pruning) and the pushed match predicates prune row
+    groups / files; the size comes from the file index, not the data.
     """
     if "_file_path" in df.columns:
         # non-native scans (e.g. the CSE-KMS mapInPandas decrypt) carry
-        # provenance in an explicit column; input_file_name() is only
+        # provenance in explicit columns; input_file_name() is only
         # defined for native file-source scans
-        projection = [F.col("_file_path").alias(PATH_COL)]
+        projection = [
+            F.col("_file_path").alias(PATH_COL),
+            F.col("_file_size").alias(SIZE_COL),
+        ]
     else:
-        projection = [F.input_file_name().alias(PATH_COL)]
+        # the path stays input_file_name()'s file:/// URI form (the one
+        # events carry); _metadata.file_path spells it file:/
+        projection = [
+            F.input_file_name().alias(PATH_COL),
+            F.col("_metadata.file_size").alias(SIZE_COL),
+        ]
     branches = _branches(df, groups, projection, predicate_value_limit)
     if not branches:
         return df.limit(0).select(*projection)

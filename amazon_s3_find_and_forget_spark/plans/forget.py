@@ -12,9 +12,12 @@ Two physical strategies, chosen by the caller:
    Find phase flagged are touched; each is rewritten in place (temp file
    + atomic rename), schema preserved, and the job fails the object if
    zero rows were deleted (Find/Forget consistency check, main.py:182-187).
-   Files are distributed one-per-task via ``mapInPandas`` over a paths
-   DataFrame — the Spark scheduler replaces the reference's SQS + Fargate
-   fleet (task retry, speculation, backpressure for free).
+   The Spark scheduler replaces the reference's SQS + Fargate fleet (task
+   retry, speculation, backpressure for free), and like that fleet the
+   dispatch is sized to the work: ``forget_task_count`` gives a call one
+   task per ``TASK_BYTES`` of affected bytes, capped by the object count
+   and the parallelism. ``forget_files_df`` is the large-job
+   variant: the paths stay a DataFrame, rewritten via ``mapInPandas``.
 
 Null semantics: a NULL identifier never matches, so anti-join/filter
 must KEEP null rows — ``forget_table`` wraps predicates in
@@ -23,6 +26,7 @@ must KEEP null rows — ``forget_table`` wraps predicates in
 
 from __future__ import annotations
 
+import math
 import os
 import uuid
 from functools import reduce
@@ -36,7 +40,16 @@ from ..matches import ColumnGroup
 # again inside the file kernels (their own public contract) — ONE
 # definition for all three sites
 from ..sources import check_redact_columns as _check_redact_columns
+from ..sources import object_path
 from .find import null_safe_predicate
+
+# Affected bytes worth one ``forget_files`` rewrite task. A Python task
+# costs about 0.26 CPU s before it starts (SCALE.md, "Audit manifest"),
+# and the Parquet rewrite kernel runs at about 24 MB/s (2.0 MB decoded,
+# masked and re-encoded in 0.082 s on a 4-vCPU VM, perfbench/README.md
+# "Traced breakdown"), so a task pays for its start-up at about 6 MB.
+# Rounded down to 4 MB: gzip JSON rewrites fewer bytes per second.
+TASK_BYTES = 4 * 1024 * 1024
 
 STATS_SCHEMA = (
     "file_path string, format string, processed_rows long, deleted_rows long, "
@@ -271,13 +284,10 @@ def _rewrite_one(
     if store_factory is not None or path.startswith("s3://"):
         # non-posix lake (or injected backend): the ObjectStore protocol
         # carries the commit; RoleArn takes runtime effect here. Spark's
-        # $path column names local objects as file:// URIs — a local
-        # backend needs the posix path, while events keep the URI.
-        store_path = (
-            path[len("file:") :] if path.startswith("file:") else path
-        )
+        # $path column names objects by percent-encoded URI — the store
+        # needs the decoded path or key, while events keep the URI.
         row = _rewrite_one_store(
-            store_path,
+            object_path(path),
             fmt,
             spec,
             ignore_not_found,
@@ -288,7 +298,7 @@ def _rewrite_one(
             redact_columns,
         )
         return (path,) + tuple(row[1:])
-    local = path[len("file:") :] if path.startswith("file:") else path
+    local = object_path(path)
     if not os.path.exists(local):
         status = "skipped" if ignore_not_found else "failed"
         return (path, fmt, 0, 0, status, "ObjectNotFound")
@@ -391,6 +401,16 @@ def _rewrite_one(
                 os.remove(p)
 
 
+def forget_task_count(sizes: list[int | None], parallelism: int) -> int:
+    """How many rewrite tasks a ``forget_files`` call runs: one per
+    ``TASK_BYTES`` of affected bytes, at most one per object and at most
+    ``parallelism``. An unknown size (``None``) counts as ``TASK_BYTES``,
+    so a call without sizes runs one object per task up to
+    ``parallelism``."""
+    total = sum(TASK_BYTES if s is None else s for s in sizes)
+    return min(len(sizes), parallelism, max(1, math.ceil(total / TASK_BYTES)))
+
+
 def forget_files(
     spark: SparkSession,
     files: list[str],
@@ -403,20 +423,29 @@ def forget_files(
     role_arn: str = "",
     store_factory=None,
     redact_columns: list[str] | None = None,
+    sizes: list[int | None] | None = None,
 ) -> list[tuple]:
-    """Rewrite each affected file on the cluster; returns stats rows.
+    """Rewrite each affected file on the cluster; returns stats rows in
+    ``files`` order.
 
     Eager by design: a deletion is an action, not a query — running it
     lazily would re-execute the side effect on every plan re-evaluation.
-    One task per file (the reference's one-SQS-message-per-object,
-    submit_query_results.py:42-54, without the queue).
+    Each object is rewritten on its own, as the reference's
+    one-SQS-message-per-object (submit_query_results.py:42-54), in
+    ``forget_task_count(sizes)`` tasks (``sizes``: bytes per object,
+    aligned with ``files``): a few small objects share one task, as the
+    reference sizes its Fargate fleet to the queue
+    (orchestrate_ecs_service_scaling.py:13-21).
     """
     _check_redact_columns(redact_columns)
     if not files:
         return []
     spec = groups_to_spec(groups)
     sc = spark.sparkContext
-    slices = min(len(files), max(parallelism or sc.defaultParallelism, 1))
+    slices = forget_task_count(
+        sizes if sizes is not None else [None] * len(files),
+        max(parallelism or sc.defaultParallelism, 1),
+    )
     rdd = sc.parallelize(files, numSlices=slices).map(
         lambda p: _rewrite_one(
             p,

@@ -252,30 +252,32 @@ def read_encrypted_parquet(spark, location: str, kms):
     ``binaryFile`` rows (path, content) are decrypted and parsed
     per-executor with ``mapInPandas`` — ciphertext never lands on disk
     decrypted, and the scan distributes one file per task like any
-    other source. A ``_file_path`` column carries provenance (the
-    encrypted scan's stand-in for ``input_file_name()``, which would
-    point at the binaryFile row, not the logical object... it does —
-    same path — but the column keeps Find format-agnostic).
+    other source. ``_file_path`` and ``_file_size`` carry provenance for
+    Find (``input_file_name()`` and ``_metadata`` do not survive the
+    ``mapInPandas``): the object's URI in ``input_file_name()``'s form,
+    as a native scan reports it, and its stored (ciphertext) bytes.
     """
     import pyarrow.parquet as pq
-    from pyspark.sql.types import StringType, StructField
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, StringType, StructField
+
+    from . import object_path
 
     _require_crypto()
     files = (
         spark.read.format("binaryFile")
         .load(os.path.join(location, "*.parquet"))
-        .select("path", "content")
+        .select(F.input_file_name().alias("path"), "content", "length")
     )
     # derive the logical schema from one decrypted object on the driver
     first = files.limit(1).collect()
     if not first:
-        return spark.createDataFrame([], "`_file_path` string")
+        return spark.createDataFrame(
+            [], "`_file_path` string, `_file_size` bigint"
+        )
     import io
 
-    local_first = first[0]["path"]
-    local_first = (
-        local_first[len("file:") :] if local_first.startswith("file:") else local_first
-    )
+    local_first = object_path(first[0]["path"])
     sample = decrypt_bytes(
         open(local_first, "rb").read(), load_metadata(local_first), kms
     )
@@ -283,21 +285,24 @@ def read_encrypted_parquet(spark, location: str, kms):
         pq.read_table(io.BytesIO(sample)).to_pandas()
     ).schema
     out_schema = type(sample_schema)(
-        sample_schema.fields + [StructField("_file_path", StringType())]
+        sample_schema.fields
+        + [
+            StructField("_file_path", StringType()),
+            StructField("_file_size", LongType()),
+        ]
     )
 
     def decrypt_batches(iterator):
-        import pandas as pd
-
         for batch in iterator:
             for _, row in batch.iterrows():
                 path = row["path"]
-                local = path[len("file:") :] if path.startswith("file:") else path
+                local = object_path(path)
                 plain = decrypt_bytes(
                     bytes(row["content"]), load_metadata(local), kms
                 )
                 pdf = pq.read_table(io.BytesIO(plain)).to_pandas()
                 pdf["_file_path"] = path
+                pdf["_file_size"] = row["length"]
                 yield pdf
 
     return files.mapInPandas(decrypt_batches, out_schema)

@@ -72,12 +72,38 @@ def _make_encrypted_lake(tmp_path, name="lake"):
 
 
 def test_encrypted_scan(spark, tmp_path):
-    lake, _ = _make_encrypted_lake(tmp_path)
+    lake, obj = _make_encrypted_lake(tmp_path)
     df = cse.read_encrypted_parquet(spark, lake, KMS)
     rows = df.collect()
     assert len(rows) == 5
     assert sorted(r.customer_id for r in rows) == [1, 2, 3, 4, 5]
     assert all(r._file_path.endswith("part-0.parquet") for r in rows)
+    # the stored (ciphertext) bytes, which size the Forget dispatch
+    assert {r._file_size for r in rows} == {os.path.getsize(obj)}
+
+
+def test_find_over_encrypted_lake_carries_uri_and_size(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from amazon_s3_find_and_forget_spark.matches import build_column_groups
+    from amazon_s3_find_and_forget_spark.plans.find import find_affected_files
+
+    lake, obj = _make_encrypted_lake(tmp_path, name="lake a")
+    df = cse.read_encrypted_parquet(spark, lake, KMS)
+    groups = build_column_groups(
+        df.schema, ["customer_id"], [QueueItem(match_id=2)]
+    )
+    found = find_affected_files(df, groups).collect()
+    # the same URI form and size a native scan of the object reports
+    native = (
+        spark.read.format("binaryFile")
+        .load(obj)
+        .select(F.input_file_name(), F.col("_metadata.file_size"))
+        .collect()
+    )
+    assert [tuple(r) for r in found] == [tuple(r) for r in native]
+    assert "lake%20a" in found[0][0]
+    assert found[0][1] == os.path.getsize(obj)
 
 
 def test_job_over_encrypted_lake(spark, tmp_path):
@@ -95,6 +121,17 @@ def test_job_over_encrypted_lake(spark, tmp_path):
     assert cse.is_kms_cse_encrypted(md)
     survivors = cse.read_encrypted_parquet(spark, lake, KMS).collect()
     assert sorted(r.customer_id for r in survivors) == [1, 3, 5]
+
+
+def test_job_over_encrypted_lake_with_space_in_path(spark, tmp_path):
+    lake, obj = _make_encrypted_lake(tmp_path, name="lake a")
+    mapper = DataMapper(
+        "enc", lake, ["customer_id"], format="parquet", encrypted=True
+    )
+    result = run_job(spark, [mapper], [QueueItem(match_id=2)], kms=KMS)
+    assert result.status == "COMPLETED", result.events
+    survivors = cse.read_encrypted_parquet(spark, lake, KMS).collect()
+    assert sorted(r.customer_id for r in survivors) == [1, 3, 4, 5]
 
 
 def test_encrypted_job_without_kms_fails(spark, tmp_path):

@@ -36,8 +36,12 @@ def test_find_affected_files_predicate_path(spark, lake):
     items = [QueueItem(match_id=1), QueueItem(match_id=3)]
     groups = build_column_groups(df.schema, ["l_orderkey"], items)
     paths = find_affected_files(df, groups)
-    assert paths.columns == ["file_path"]
-    hit = [r[0] for r in paths.collect()]
+    assert paths.columns == ["file_path", "file_size"]
+    found = paths.collect()
+    hit = [r[0] for r in found]
+    # the size is the object's bytes on disk
+    for path, size in found:
+        assert size == os.path.getsize(path[len("file:") :])
     # every affected file really contains a match
     expected = {
         r[0]
