@@ -43,12 +43,15 @@ from ..sources import check_redact_columns as _check_redact_columns
 from ..sources import object_path
 from .find import null_safe_predicate
 
-# Affected bytes worth one ``forget_files`` rewrite task. A Python task
-# costs about 0.26 CPU s before it starts (SCALE.md, "Audit manifest"),
-# and the Parquet rewrite kernel runs at about 24 MB/s (2.0 MB decoded,
-# masked and re-encoded in 0.082 s on a 4-vCPU VM, perfbench/README.md
-# "Traced breakdown"), so a task pays for its start-up at about 6 MB.
-# Rounded down to 4 MB: gzip JSON rewrites fewer bytes per second.
+# Affected bytes worth one ``forget_files`` rewrite task. A Python task's
+# worker spends about 0.006 CPU s before the task starts on a local
+# master (SCALE.md, "Python worker start-up"; 0.24-0.33 s with Spark's
+# stock daemon), and the Parquet rewrite kernel runs at about 24 MB/s
+# (2.0 MB decoded, masked and re-encoded in 0.082 s on a 4-vCPU VM,
+# perfbench/README.md "Traced breakdown"), so start-up alone would
+# justify a task per fraction of a MB. 4 MB is kept because no measured
+# workload tells the values apart: trickle gets one task per call for
+# any value from 1 to 64 MB.
 TASK_BYTES = 4 * 1024 * 1024
 
 STATS_SCHEMA = (

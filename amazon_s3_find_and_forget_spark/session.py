@@ -8,6 +8,10 @@ down for local testing:
 - Arrow on: every pandas_udf / mapInPandas boundary is Arrow-batched.
 - shuffle partitions sized to cores locally; on a real cluster this is
   overridden (or left to AQE's coalescing with a high initial value).
+- a master that spark-submit already set is kept; ``local[cpus]`` is
+  only the default.
+- on a local master, Python workers start from ``worker_daemon``, which
+  imports pyspark from site-packages instead of Spark's zip archives.
 """
 
 from __future__ import annotations
@@ -15,6 +19,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+WORKER_DAEMON = "amazon_s3_find_and_forget_spark.worker_daemon"
+# The directory (or --py-files zip) this package is imported from: the
+# worker daemon is started with ``python -m``, before any task could
+# ship the package, so the workers' path must already reach it.
+IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_memory(mem_total_bytes: int | None = None) -> str:
@@ -44,6 +54,24 @@ def _default_driver_memory(mem_total_bytes: int | None = None) -> str:
     return f"{gib}g"
 
 
+def _submitted_conf(key: str) -> str | None:
+    """``key`` as spark-submit set it for this driver, or None. Only a
+    driver that spark-submit started finds its gateway in
+    ``PYSPARK_GATEWAY_PORT``; a driver that launches its own JVM has no
+    submitted conf to read."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return SparkConf().get(key, None)
+
+
+def _with_import_root(pythonpath: str | None) -> str:
+    entries = [e for e in (pythonpath or "").split(os.pathsep) if e]
+    return os.pathsep.join(entries + [IMPORT_ROOT] * (IMPORT_ROOT not in entries))
+
+
 def get_spark(
     app_name: str = "s3-find-and-forget-spark",
     cpus: int | None = None,
@@ -54,10 +82,20 @@ def get_spark(
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
     if shuffle_partitions is None:
         shuffle_partitions = cpus
+    conf = dict(extra_conf or {})
+    master = (
+        conf.pop("spark.master", None)
+        or _submitted_conf("spark.master")
+        or f"local[{cpus}]"
+    )
+    if master.startswith("local"):
+        conf.setdefault("spark.python.daemon.module", WORKER_DAEMON)
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = _with_import_root(conf.get(key) or _submitted_conf(key))
 
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
+        .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -98,6 +136,6 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -8,9 +8,11 @@ boto_utils.py:251-267 (json_lines_iterator). Requirements replicated:
   newlines AFTER decoding, each line parsed independently;
 - key lookup is case-insensitive at every nesting level (OpenX SerDe
   semantics, json_handler.py:11-24);
-- a missing or *falsy* value never matches (``if record:`` in the
-  reference — so 0, "", None, [] never match a Simple group);
-- composite groups collect only present-and-truthy members and compare
+- a missing or null value never matches. The reference tests
+  truthiness (``if record:``), so it also skips 0 and "", which Find
+  does match; here only None is skipped, so such a row is erased;
+- a list or object value never matches (it equals no match id);
+- composite groups collect only present, non-null members and compare
   the resulting partial tuple against the match tuples
   (tests/unit/ecs_tasks/test_json.py:168-194,247-270);
 - gzip in -> gzip out, by file extension (json_handler.py:43-45);
@@ -48,17 +50,19 @@ def row_should_delete(parsed: dict, to_delete: list[dict]) -> bool:
     for group in to_delete:
         if group["Type"] == "Simple":
             record = get_value(group["Column"], parsed)
-            if record and record in set_of(group["MatchIds"]):
-                return True
         else:
-            matched = []
-            for col in group["Columns"]:
-                record = get_value(col, parsed)
-                if record:
-                    matched.append(record)
-            if tuple(matched) in set_of(group["MatchIds"]):
-                return True
+            values = (get_value(col, parsed) for col in group["Columns"])
+            record = tuple(v for v in values if v is not None)
+        if record is not None and _is_match(record, set_of(group["MatchIds"])):
+            return True
     return False
+
+
+def _is_match(record, match_ids) -> bool:
+    try:
+        return record in match_ids
+    except TypeError:  # a list or object value equals no match id
+        return False
 
 
 def set_of(values):

@@ -18,8 +18,11 @@ trap 'rm -rf "$WORK"' EXIT
 mkdir -p "$WORK/lake" "$WORK/state"
 cp "$SF_DIR/lineitem.parquet" "$WORK/lake/lineitem.parquet"
 
-SUBMIT="${SPARK_SUBMIT:-spark-submit}"
-OUT="$("$SUBMIT" \
+# The two spark-submit runs see only the --py-files zip: PYTHONPATH is
+# unset and the working directory is outside the checkout, as on a
+# cluster, so a module that only the checkout provides fails here.
+SUBMIT=(env -u PYTHONPATH "${SPARK_SUBMIT:-spark-submit}")
+OUT="$(cd "$WORK" && "${SUBMIT[@]}" \
     --master "local[4]" \
     --conf spark.sql.shuffle.partitions=4 \
     --conf spark.sql.adaptive.enabled=true \
@@ -43,7 +46,7 @@ PY
 
 # survivors check through a second, independent submit (dry-run Find):
 # the deleted match ids must no longer hit any file
-OUT2="$("$SUBMIT" \
+OUT2="$(cd "$WORK" && "${SUBMIT[@]}" \
     --master "local[4]" \
     --conf spark.sql.shuffle.partitions=4 \
     --conf spark.ui.enabled=false \

@@ -2,9 +2,9 @@
 
 The cluster analog of ``python -m amazon_s3_find_and_forget_spark ...``:
 ship the package with --py-files and forward the arguments verbatim to
-the CLI — the CLI's session factory calls ``getOrCreate``, so the
-submit's master/conf win and the command runs on the cluster the submit
-targets (deploy/README.md has the full recipe):
+the CLI — the CLI's session factory keeps the submit's master (and the
+submitted confs it does not set itself), so the command runs on the
+cluster the submit targets (deploy/README.md has the full recipe):
 
     spark-submit --py-files s3f2.zip deploy/submit_cli.py \
         --state-dir s3://bucket/s3f2-state \

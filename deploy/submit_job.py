@@ -53,15 +53,17 @@ def main(argv=None):
                    help="Find phase only: report affected counts, "
                    "rewrite nothing")
     p.add_argument("--shuffle-partitions", type=int, default=None,
-                   help="override spark.sql.shuffle.partitions for this "
-                   "driver (cluster submits normally set it via --conf)")
+                   help="spark.sql.shuffle.partitions for this driver "
+                   "(default: the driver's core count; a --conf value is "
+                   "overridden by the session factory)")
     args = p.parse_args(argv)
     if not args.match_id:
         p.error("at least one --match-id is required")
 
-    # Under spark-submit the session already carries the cluster confs;
-    # getOrCreate just attaches. Standalone (smoke test), the factory's
-    # scale defaults apply.
+    # Under spark-submit, get_spark keeps the submitted master and every
+    # submitted conf it does not set itself; its own scale defaults
+    # (shuffle partitions, AQE, Arrow, ...) are applied on top, so set
+    # shuffle partitions with --shuffle-partitions, not --conf.
     from amazon_s3_find_and_forget_spark.api import Engine
     from amazon_s3_find_and_forget_spark.session import get_spark
 

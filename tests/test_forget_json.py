@@ -99,16 +99,30 @@ def test_null_and_missing_never_match():
     assert not row_should_delete({}, groups)
 
 
-def test_falsy_values_never_match():
-    # reference json_handler.py:55 uses truthiness: 0 / "" never match
+def test_falsy_values_match():
+    # the reference tests truthiness (json_handler.py:55), so 0 / "" never
+    # matched although Find matches them; only a missing or null value
+    # is skipped here
     groups = [{"Type": "Simple", "Column": "n", "MatchIds": {0, ""}}]
-    assert not row_should_delete({"n": 0}, groups)
-    assert not row_should_delete({"n": ""}, groups)
+    assert row_should_delete({"n": 0}, groups)
+    assert row_should_delete({"n": ""}, groups)
+    assert not row_should_delete({"n": 1}, groups)
+    composite = [{"Type": "Composite", "Columns": ["a", "b"], "MatchIds": {(0, 5)}}]
+    assert row_should_delete({"a": 0, "b": 5}, composite)
+    assert not row_should_delete({"b": 5}, composite)
+
+
+def test_unhashable_values_never_match():
+    groups = [{"Type": "Simple", "Column": "n", "MatchIds": {0}}]
+    assert not row_should_delete({"n": []}, groups)
+    assert not row_should_delete({"n": {"x": 0}}, groups)
+    composite = [{"Type": "Composite", "Columns": ["a", "b"], "MatchIds": {(0, 5)}}]
+    assert not row_should_delete({"a": [0], "b": 5}, composite)
 
 
 def test_composite_partial_tuple():
     # reference test_json.py:247-270 — composite with missing members
-    # compares only the present (truthy) members
+    # compares only the present (non-null) members
     groups = [
         {
             "Type": "Composite",

@@ -87,3 +87,45 @@ def test_json_gzip_lake(spark, tmp_path):
     with gzip.open(str(lake / "a.json.gz"), "rb") as f:
         lines = f.read().decode().splitlines()
     assert lines == ['{"customer_id": "34567"}']
+
+
+def test_json_job_erases_zero_identifiers(spark, tmp_path):
+    """A row whose identifier is 0, or a composite with a 0 member, is a
+    match like any other: Find flags its object and Forget must drop it,
+    not keep it as if the value were missing."""
+    ids, comp = tmp_path / "ids", tmp_path / "comp"
+    ids.mkdir()
+    comp.mkdir()
+    write_jsonl(str(ids / "a.json"), [{"customer_id": i} for i in (0, 1, 2)])
+    write_jsonl(
+        str(comp / "b.json"),
+        [{"region": 1, "seq": 0}, {"region": 1, "seq": 1}, {"region": 0, "seq": 0}],
+    )
+    simple = DataMapper(
+        "zero_ids", str(ids), ["customer_id"], format="json",
+        schema="customer_id bigint",
+    )
+    composite = DataMapper(
+        "zero_comp", str(comp), ["region", "seq"], format="json",
+        schema="region bigint, seq bigint",
+    )
+    result = run_job(
+        spark,
+        [simple, composite],
+        [
+            QueueItem(match_id=0, data_mappers=["zero_ids"]),
+            QueueItem(
+                match_id=[{"Column": "region", "Value": 1},
+                          {"Column": "seq", "Value": 0}],
+                type="Composite",
+                data_mappers=["zero_comp"],
+            ),
+        ],
+    )
+    assert result.status == "COMPLETED"
+    with open(ids / "a.json") as f:
+        assert [json.loads(x)["customer_id"] for x in f] == [1, 2]
+    with open(comp / "b.json") as f:
+        assert [(r["region"], r["seq"]) for r in map(json.loads, f)] == [
+            (1, 1), (0, 0),
+        ]

@@ -93,11 +93,11 @@ def test_jsonl_rewrite_byte_exact_complement(tmp_path_factory, rows, matches):
     spec = [{"Type": "Simple", "Column": "customer_id", "MatchIds": matches}]
     stats = rewrite_json_file(src, out, spec)
     match_set = set(matches)
-    # falsy/missing never match (reference json_handler.py:50-66)
+    # null/missing never match
     expected = [
         raw
         for raw, r in zip(raw_lines, rows)
-        if not (r.get("customer_id") and r["customer_id"] in match_set)
+        if not (r.get("customer_id") is not None and r["customer_id"] in match_set)
     ]
     with open(out) as f:
         survived = f.read().splitlines()
@@ -414,8 +414,8 @@ def test_jsonl_redact_byte_exact_unmatched(tmp_path_factory, rows, matches):
     spec = [{"Type": "Simple", "Column": "customer_id", "MatchIds": matches}]
     stats = rewrite_json_file(src, out, spec, redact_columns=["name"])
     match_set = set(matches)
-    # falsy ids (0, None) never match — the reference's `if record:`
-    matched = [bool(r[0]) and r[0] in match_set for r in rows]
+    # a null id never matches; 0 is an id like any other
+    matched = [r[0] is not None and r[0] in match_set for r in rows]
     got = open(out).read().splitlines()
     assert stats["ProcessedRows"] == len(rows)
     assert stats["DeletedRows"] == sum(matched)
