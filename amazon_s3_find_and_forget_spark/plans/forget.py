@@ -9,9 +9,13 @@ Two physical strategies, chosen by the caller:
 
 2. ``forget_files`` — the reference's surgical one-in-one-out rewrite
    (backend/ecs_tasks/delete_files/main.py:132-265): only the files the
-   Find phase flagged are touched; each is rewritten in place (temp file
-   + atomic rename), schema preserved, and the job fails the object if
-   zero rows were deleted (Find/Forget consistency check, main.py:182-187).
+   Find phase flagged are touched. ``_rewrite_one`` rewrites each one
+   with the reference's per-object commit protocol — read with its
+   version, rewrite, fail the object if zero rows were deleted
+   (main.py:182-187), save with its properties, verify the version
+   chain, roll back on conflict, purge old versions — against an
+   ``ObjectStore``: ``LocalObjectStore`` for posix lakes (read in place,
+   atomic rename), ``S3ObjectStore`` for ``s3://``, or an injected one.
    The Spark scheduler replaces the reference's SQS + Fargate fleet (task
    retry, speculation, backpressure for free), and like that fleet the
    dispatch is sized to the work: ``forget_task_count`` gives a call one
@@ -26,9 +30,9 @@ must KEEP null rows — ``forget_table`` wraps predicates in
 
 from __future__ import annotations
 
+import functools
 import math
 import os
-import uuid
 from functools import reduce
 from operator import or_
 
@@ -140,7 +144,7 @@ def _looks_not_found(e: Exception) -> bool:
     return code in ("NoSuchKey", "NoSuchVersion", "NotFound", "404")
 
 
-def _rewrite_one_store(
+def _rewrite_one(
     path: str,
     fmt: str,
     spec: list[dict],
@@ -151,90 +155,91 @@ def _rewrite_one_store(
     store_factory=None,
     redact_columns: list[str] | None = None,
 ):
-    """Object-store rewrite: the reference's S3 commit protocol end to end
-    (main.py:132-265; s3.py:61-98 properties replay, :301-341 integrity,
-    :344-357 rollback, :244-281 version purge) through the ObjectStore
-    seam instead of the posix fast path.
+    """Rewrite one object without its matching rows: the reference's
+    per-object commit protocol end to end (main.py:132-265; s3.py:61-98
+    properties replay, :301-341 integrity, :344-357 rollback, :244-281
+    version purge), run the same way against every store.
 
-    Runs INSIDE the executor task: the store client is built here from
-    the mapper's picklable ``role_arn`` string — per-task
+    Runs INSIDE the executor task: the store is ``store_factory`` if
+    given, an ``S3ObjectStore`` for ``s3://`` objects and a
+    ``LocalObjectStore`` otherwise. A store client is built here from the
+    mapper's picklable ``role_arn`` string — per-task
     ``get_session(body["RoleArn"])`` parity (main.py:140,154) — so a
     cross-account mapper's credentials never ship from the driver.
+    Returns a ``STATS_SCHEMA`` row.
     """
     import shutil
-    import tempfile
 
     from ..sources import cse
     from ..sources import object_store as ostore
     from ..sources.jsonl_file import rewrite_json_file
     from ..sources.parquet_file import rewrite_parquet_file
 
+    # Spark's $path column names objects by percent-encoded URI — the
+    # store needs the decoded path or key, while the row keeps the URI
+    key = object_path(path)
+    suffix = ".gz" if key.endswith(".gz") else ""
+    workdir = None
     try:
-        store = (
-            store_factory(role_arn or None)
-            if store_factory is not None
-            else ostore.store_for_mapper(role_arn or None)
-        )
+        if store_factory is not None:
+            store = store_factory(role_arn or None)
+        elif key.startswith("s3://"):
+            store = ostore.store_for_mapper(role_arn or None)
+        else:
+            store = ostore.LocalObjectStore()
         try:
-            # the version must be captured WITH (or before) the read —
-            # a listing taken after get_object would absorb a concurrent
-            # write into from_version and the integrity check would
-            # silently bless a rewrite computed from stale bytes
-            getv = getattr(store, "get_object_and_version", None)
-            if getv is not None:
-                data, from_version = getv(path)
-            else:
-                chain = store.list_versions(path)
-                from_version = chain[-1] if chain else "null"
-                data = store.get_object(path)
+            workdir = store.staging_dir(key)
+            # the version is captured WITH (or before) the read — one
+            # taken after it would absorb a concurrent write into
+            # from_version and the integrity check would silently bless
+            # a rewrite computed from stale bytes
+            src, from_version = store.fetch(
+                key, os.path.join(workdir, "in" + suffix)
+            )
         except Exception as e:  # noqa: BLE001
-            if ignore_not_found and _looks_not_found(e):
-                return (path, fmt, 0, 0, "skipped", "ObjectNotFound")
+            if _looks_not_found(e):
+                status = "skipped" if ignore_not_found else "failed"
+                return (path, fmt, 0, 0, status, "ObjectNotFound")
             raise
-        props = store.get_properties(path)
-        metadata = dict(props.metadata or {})
-        if cse.is_kms_cse_encrypted(metadata):
+        props = store.get_properties(key)
+        encrypted = cse.is_kms_cse_encrypted(props.metadata)
+        if encrypted:
+            # decrypt -> rewrite plaintext -> re-encrypt with a FRESH data
+            # key (reference main.py:176-178, 199-201 around the handler)
             if kms is None:
                 raise ValueError(
                     "Object is CSE-KMS encrypted but no KMS client provided"
                 )
-            data = cse.decrypt_bytes(data, metadata, kms)
-        suffix = ".gz" if path.endswith(".gz") else ""
-        workdir = tempfile.mkdtemp(prefix="s3f2-store-")
-        try:
-            rp = os.path.join(workdir, "in" + suffix)
-            wp = os.path.join(workdir, "out" + suffix)
-            with open(rp, "wb") as f:
-                f.write(data)
-            if fmt == "parquet":
-                stats = rewrite_parquet_file(rp, wp, spec, redact_columns)
-            else:
-                stats = rewrite_json_file(rp, wp, spec, redact_columns)
-            if stats["DeletedRows"] == 0:
-                return (
-                    path,
-                    fmt,
-                    stats["ProcessedRows"],
-                    0,
-                    "failed",
-                    "Unprocessable: no rows deleted",
-                )
-            with open(wp, "rb") as f:
-                out_bytes = f.read()
-        finally:
-            shutil.rmtree(workdir, ignore_errors=True)
-        if cse.is_kms_cse_encrypted(metadata):
-            # fresh data key per rewrite; the new envelope rides in the
-            # object metadata replayed by save() (reference cse.py:57-84)
-            out_bytes, props.metadata = cse.encrypt_bytes(
-                out_bytes, metadata, kms
+            with open(src, "rb") as f:
+                plain = cse.decrypt_bytes(f.read(), props.metadata, kms)
+            src = os.path.join(workdir, "plain" + suffix)
+            with open(src, "wb") as f:
+                f.write(plain)
+        out = os.path.join(workdir, "out" + suffix)
+        rewrite = rewrite_parquet_file if fmt == "parquet" else rewrite_json_file
+        stats = rewrite(src, out, spec, redact_columns)
+        if stats["DeletedRows"] == 0:
+            # Find said this object matches but Forget deleted nothing —
+            # fail the object rather than silently no-op (main.py:182-187)
+            return (
+                path, fmt, stats["ProcessedRows"], 0, "failed",
+                "Unprocessable: no rows deleted",
             )
-        new_version = store.save(path, out_bytes, props)
+        if encrypted:
+            # the new envelope rides in the metadata save() replays, so it
+            # commits with the ciphertext (reference cse.py:57-84)
+            with open(out, "rb") as f:
+                ciphertext, props.metadata = cse.encrypt_bytes(
+                    f.read(), props.metadata, kms
+                )
+            with open(out, "wb") as f:
+                f.write(ciphertext)
+        new_version = store.save(key, out, props, from_version)
         try:
-            store.verify_version_integrity(path, from_version, new_version)
+            store.verify_version_integrity(key, from_version, new_version)
         except ostore.VersionConflictError as e:
             try:
-                store.rollback_version(path, new_version)
+                store.rollback_version(key, new_version)
             except Exception as re:  # noqa: BLE001
                 return (
                     path, fmt, 0, 0, "rollback_failed",
@@ -251,157 +256,35 @@ def _rewrite_one_store(
             )
         if delete_old_versions:
             try:
-                store.delete_old_versions(path, new_version)
+                store.delete_old_versions(key, new_version)
             except Exception as e:  # noqa: BLE001 — same honest accounting
                 return (
                     path, fmt, stats["ProcessedRows"], stats["DeletedRows"],
                     "failed", f"PostCommit {type(e).__name__}: {e}",
                 )
         return (
-            path,
-            fmt,
-            stats["ProcessedRows"],
-            stats["DeletedRows"],
-            "updated",
-            None,
+            path, fmt, stats["ProcessedRows"], stats["DeletedRows"],
+            "updated", None,
         )
     except Exception as e:  # noqa: BLE001 — per-object error isolation
-        return (path, fmt, 0, 0, "failed", f"{type(e).__name__}: {e}")
-
-
-def _rewrite_one(
-    path: str,
-    fmt: str,
-    spec: list[dict],
-    ignore_not_found: bool,
-    delete_old_versions: bool = True,
-    kms=None,
-    role_arn: str = "",
-    store_factory=None,
-    redact_columns: list[str] | None = None,
-):
-    from ..sources import cse, versions
-    from ..sources.jsonl_file import rewrite_json_file
-    from ..sources.parquet_file import rewrite_parquet_file
-
-    if store_factory is not None or path.startswith("s3://"):
-        # non-posix lake (or injected backend): the ObjectStore protocol
-        # carries the commit; RoleArn takes runtime effect here. Spark's
-        # $path column names objects by percent-encoded URI — the store
-        # needs the decoded path or key, while events keep the URI.
-        row = _rewrite_one_store(
-            object_path(path),
-            fmt,
-            spec,
-            ignore_not_found,
-            delete_old_versions,
-            kms,
-            role_arn,
-            store_factory,
-            redact_columns,
-        )
-        return (path,) + tuple(row[1:])
-    local = object_path(path)
-    if not os.path.exists(local):
-        status = "skipped" if ignore_not_found else "failed"
-        return (path, fmt, 0, 0, status, "ObjectNotFound")
-    suffix = ".gz" if local.endswith(".gz") else ""
-    tmp = os.path.join(
-        os.path.dirname(local), f".s3f2tmp-{uuid.uuid4().hex}{suffix}"
-    )
-    plain_in = plain_out = None
-    try:
-        # source "VersionId": any concurrent write between here and commit
-        # fails the object instead of silently clobbering it (the local
-        # analog of s3.py:301-341's version-integrity check)
-        source = versions.snapshot(local)
-        metadata = cse.load_metadata(local)
-        encrypted = cse.is_kms_cse_encrypted(metadata)
-        if encrypted:
-            # decrypt -> rewrite plaintext -> re-encrypt with a FRESH data
-            # key (reference main.py:176-178, 199-201 around the handler)
-            if kms is None:
-                raise ValueError(
-                    "Object is CSE-KMS encrypted but no KMS client provided"
-                )
-            plain_in = tmp + ".plain-in"
-            plain_out = tmp + ".plain-out"
-            cse.decrypt_file(local, plain_in, kms)
-            read_path, write_path = plain_in, plain_out
-        else:
-            read_path, write_path = local, tmp
-        if fmt == "parquet":
-            stats = rewrite_parquet_file(read_path, write_path, spec,
-                                         redact_columns)
-        else:
-            stats = rewrite_json_file(read_path, write_path, spec,
-                                      redact_columns)
-        if stats["DeletedRows"] == 0:
-            # Find said this object matches but Forget deleted nothing —
-            # fail the object rather than silently no-op (main.py:182-187).
-            if os.path.exists(tmp):
-                os.remove(tmp)
-            return (
-                path,
-                fmt,
-                stats["ProcessedRows"],
-                0,
-                "failed",
-                "Unprocessable: no rows deleted",
-            )
-        companions = None
-        if encrypted:
-            with open(plain_out, "rb") as f:
-                ciphertext, new_md = cse.encrypt_bytes(f.read(), metadata, kms)
-            with open(tmp, "wb") as f:
-                f.write(ciphertext)
-            # the fresh-data-key envelope commits WITH the ciphertext (the
-            # S3 analog PUTs object+metadata atomically): the new sidecar
-            # bytes are durable before the content swap, the old sidecar is
-            # archived beside the old ciphertext so restore_version yields
-            # a decryptable (content, envelope) pair
-            import json as _json
-
-            side_tmp = tmp + ".metatmp"
-            with open(side_tmp, "w") as f:
-                _json.dump(new_md, f)
-            companions = {cse.metadata_path(local): side_tmp}
-        versions.commit(
-            local,
-            tmp,
-            source,
-            delete_old=delete_old_versions,
-            companions=companions,
-        )
-        # Hadoop's local FS keeps ".<name>.crc" sidecars; the rewritten
-        # bytes invalidate them (irrelevant on S3 where there is none).
-        crc = os.path.join(
-            os.path.dirname(local), "." + os.path.basename(local) + ".crc"
-        )
-        if os.path.exists(crc):
-            os.remove(crc)
-        return (
-            path,
-            fmt,
-            stats["ProcessedRows"],
-            stats["DeletedRows"],
-            "updated",
-            None,
-        )
-    except Exception as e:  # noqa: BLE001 — per-object error isolation
-        try:
-            for leftover in (tmp, tmp + ".metatmp"):
-                if os.path.exists(leftover):
-                    os.remove(leftover)
-        except OSError as re:
-            # the "rollback" (discarding the uncommitted rewrite) failed —
-            # surface it as its own status (main.py:248-262 analog)
-            return (path, fmt, 0, 0, "rollback_failed", f"{type(re).__name__}: {re}")
         return (path, fmt, 0, 0, "failed", f"{type(e).__name__}: {e}")
     finally:
-        for p in (plain_in, plain_out):
-            if p and os.path.exists(p):
-                os.remove(p)
+        if workdir is not None:
+            shutil.rmtree(workdir, ignore_errors=True)
+
+
+def _rewriter(groups, fmt, ignore_not_found, delete_old_versions, kms,
+              role_arn, store_factory, redact_columns):
+    """``_rewrite_one`` bound to everything but the object path: the one
+    place the dispatchers check the mode contract and serialize the
+    groups."""
+    _check_redact_columns(redact_columns)
+    return functools.partial(
+        _rewrite_one, fmt=fmt, spec=groups_to_spec(groups),
+        ignore_not_found=ignore_not_found,
+        delete_old_versions=delete_old_versions, kms=kms, role_arn=role_arn,
+        store_factory=store_factory, redact_columns=redact_columns,
+    )
 
 
 def forget_task_count(sizes: list[int | None], parallelism: int) -> int:
@@ -440,28 +323,16 @@ def forget_files(
     reference sizes its Fargate fleet to the queue
     (orchestrate_ecs_service_scaling.py:13-21).
     """
-    _check_redact_columns(redact_columns)
+    rewrite = _rewriter(groups, fmt, ignore_not_found, delete_old_versions,
+                        kms, role_arn, store_factory, redact_columns)
     if not files:
         return []
-    spec = groups_to_spec(groups)
     sc = spark.sparkContext
     slices = forget_task_count(
         sizes if sizes is not None else [None] * len(files),
         max(parallelism or sc.defaultParallelism, 1),
     )
-    rdd = sc.parallelize(files, numSlices=slices).map(
-        lambda p: _rewrite_one(
-            p,
-            fmt,
-            spec,
-            ignore_not_found,
-            delete_old_versions,
-            kms,
-            role_arn,
-            store_factory,
-            redact_columns,
-        )
-    )
+    rdd = sc.parallelize(files, numSlices=slices).map(rewrite)
     return rdd.collect()
 
 
@@ -491,36 +362,19 @@ def forget_files_df(
     Callers aggregate the stats distributively and collect only the
     per-status rollup.
     """
-    _check_redact_columns(redact_columns)
-    spec = groups_to_spec(groups)
+    rewrite = _rewriter(groups, fmt, ignore_not_found, delete_old_versions,
+                        kms, role_arn, store_factory, redact_columns)
     path_col = paths_df.columns[0]
     n = max(parallelism or spark.sparkContext.defaultParallelism, 1)
+    cols = [f.split()[0] for f in STATS_SCHEMA.split(", ")]
 
-    def rewrite(batches):
+    def rewrite_batches(batches):
         import pandas as pd
 
-        cols = [
-            "file_path", "format", "processed_rows", "deleted_rows",
-            "status", "error",
-        ]
         for pdf in batches:
-            rows = [
-                _rewrite_one(
-                    p,
-                    fmt,
-                    spec,
-                    ignore_not_found,
-                    delete_old_versions,
-                    kms,
-                    role_arn,
-                    store_factory,
-                    redact_columns,
-                )
-                for p in pdf[path_col]
-            ]
-            yield pd.DataFrame(rows, columns=cols)
+            yield pd.DataFrame([rewrite(p) for p in pdf[path_col]], columns=cols)
 
-    out = paths_df.repartition(n).mapInPandas(rewrite, STATS_SCHEMA)
+    out = paths_df.repartition(n).mapInPandas(rewrite_batches, STATS_SCHEMA)
     return out.localCheckpoint(eager=True)
 
 

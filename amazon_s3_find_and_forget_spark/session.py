@@ -8,6 +8,7 @@ down for local testing:
 - Arrow on: every pandas_udf / mapInPandas boundary is Arrow-batched.
 - shuffle partitions sized to cores locally; on a real cluster this is
   overridden (or left to AQE's coalescing with a high initial value).
+- each default yields to a conf spark-submit set for this driver.
 - a master that spark-submit already set is kept; ``local[cpus]`` is
   only the default.
 - on a local master, Python workers start from ``worker_daemon``, which
@@ -93,13 +94,13 @@ def get_spark(
         key = "spark.executorEnv.PYTHONPATH"
         conf[key] = _with_import_root(conf.get(key) or _submitted_conf(key))
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+    # scale defaults; a conf spark-submit set for this driver beats its
+    # default, and ``extra_conf`` beats both
+    defaults = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
         # On a real cluster ALSO set
         # spark.sql.adaptive.coalescePartitions.parallelismFirst=false
         # (Spark's own production recommendation) so AQE coalesces to
@@ -107,14 +108,14 @@ def get_spark(
         # A/B-ed at sf0.1 local[32]: no local win (task scheduling in a
         # single JVM is too cheap for it to matter), so it is left to
         # cluster deployment rather than hardcoded here.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.sql.caseSensitive", "false")
-        .config("spark.sql.session.timeZone", "UTC")
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+        "spark.sql.parquet.aggregatePushdown": "true",
+        "spark.sql.caseSensitive": "false",
+        "spark.sql.session.timeZone": "UTC",
         # TIMESTAMP(NANOS) parquet columns surface as long nanos instead of
         # failing the scan (converted back to timestamps at load)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # In local[N] the driver JVM IS the executor: N concurrent
         # tasks share this one heap. The old 8g default left 256 MB per
         # task at N=32 — event logs showed 12-22 s of GC inside single
@@ -128,14 +129,16 @@ def get_spark(
         # separately and this default only shapes the driver. Capped
         # at half of MemTotal so a small host can still launch
         # (_default_driver_memory, r17 verdict ask #7).
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEMORY")
-            or _default_driver_memory(),
-        )
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-    )
+        "spark.driver.memory": (
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory()
+        ),
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.ui.enabled": "false",
+    }
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in defaults.items():
+        if _submitted_conf(k) is None:
+            builder = builder.config(k, v)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

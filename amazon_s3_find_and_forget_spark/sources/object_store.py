@@ -8,20 +8,19 @@ verify no concurrent writer slipped between read and write
 (s3.py:301-341), roll back the new version on conflict (s3.py:344-357),
 and purge prior versions on success (s3.py:244-281).
 
-This module is the SEAM between that protocol and its backends:
+This module is the SEAM between that protocol and its backends; the
+Forget phase (``plans.forget._rewrite_one``) runs the protocol once,
+inside the executor task, against whichever backend holds the object:
 
 - ``ObjectStore`` — the interface, one method per reference behavior;
-- ``LocalObjectStore`` — the filesystem backend the engine tests run on:
-  versioning via ``sources.versions`` and object properties in a JSON
-  sidecar (the filesystem has no native metadata to replay);
+- ``LocalObjectStore`` — the posix backend every filesystem lake
+  rewrites through: the object is read in place, versioning via
+  ``sources.versions``, properties in a hidden JSON sidecar (the
+  filesystem has no native metadata to replay);
 - ``S3ObjectStore`` — the boto3-shaped backend. boto3 is not installed
   in this environment, so construction is lazy-import-guarded; the
   method bodies map 1:1 onto the reference's client calls so pointing
   the engine at real S3 is a constructor swap, not a rewrite.
-
-The Spark forget plan itself never touches this module's hot path —
-object rewriting is per-file inside ``mapInPandas`` tasks; the store is
-the commit/safety layer around each file.
 """
 
 from __future__ import annotations
@@ -31,11 +30,10 @@ import json
 import os
 import tempfile
 import time
-import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Protocol
 
-from . import versions
+from . import cse, versions
 
 
 class TransientStoreError(RuntimeError):
@@ -124,10 +122,20 @@ class VersionConflictError(RuntimeError):
 
 
 class ObjectStore(Protocol):
-    """One method per reference safety behavior (s3.py file:line cited)."""
+    """One method per reference safety behavior (s3.py file:line cited).
 
-    def get_object(self, path: str) -> bytes:
-        """Read the object's content bytes."""
+    Objects move as local files: ``fetch`` hands the rewrite kernel a file
+    to read and ``save`` takes the rewritten file back."""
+
+    def staging_dir(self, path: str) -> str:
+        """A fresh directory for one rewrite's files; the caller removes
+        it."""
+        ...
+
+    def fetch(self, path: str, dest: str) -> tuple[str, str]:
+        """A local file holding the object's bytes (``dest``, or the
+        object itself when it is already local) and the version id those
+        bytes are (s3.py:301-341's from_version)."""
         ...
 
     def get_properties(self, path: str) -> ObjectProperties:
@@ -135,16 +143,16 @@ class ObjectStore(Protocol):
         ...
 
     def save(
-        self, path: str, data: bytes, properties: ObjectProperties | None = None
+        self,
+        path: str,
+        src: str,
+        properties: ObjectProperties | None = None,
+        source_version: str | None = None,
     ) -> str:
-        """Write a new version, replaying properties (s3.py:61-98).
-
-        Returns the new version id.
-        """
-        ...
-
-    def list_versions(self, path: str) -> list[str]:
-        """Version ids, oldest first (s3.py:244-257's listing order)."""
+        """Write the local file ``src`` as a new version, replaying
+        properties (s3.py:61-98). ``source_version`` is the version the
+        bytes were computed from, for a store that checks it before the
+        write. Returns the new version id."""
         ...
 
     def verify_version_integrity(
@@ -171,112 +179,136 @@ class ObjectStore(Protocol):
 
 
 class LocalObjectStore:
-    """Filesystem backend: explicit version files + JSON property sidecar.
+    """Filesystem backend, the store every posix lake rewrites through.
 
-    Unlike S3, a filesystem write is atomic (``os.replace``) and the
-    integrity check runs BEFORE the swap (``versions.commit`` re-stats
-    the object under the snapshot) — strictly stronger than the
-    reference's after-the-fact version-chain verification. The
-    ``verify_version_integrity`` method is still provided with the
-    reference's chain semantics so callers written against the S3
-    protocol behave identically here.
+    The kernel reads the object in place and ``save`` moves the rewritten
+    file in with ``os.replace``, so the store never holds an object's
+    bytes. Versions are hardlinks in ``sources.versions``' hidden store.
+    Unlike S3, the integrity check also runs BEFORE the swap: ``save``
+    hands ``versions.commit`` the (mtime, size) snapshot the source
+    version id carries, so a concurrent writer fails the save with the
+    object untouched — strictly stronger than the reference's
+    after-the-fact version-chain check, which ``verify_version_integrity``
+    still provides with the reference's semantics.
+
+    Properties live in a hidden ``.<name>.s3f2meta`` sidecar, written
+    only for an object that has some; a CSE envelope (object metadata on
+    S3) stays in the ``<name>.s3meta.json`` sidecar the encrypted scan
+    reads. Both commit as companions of the content.
     """
 
     _META_SUFFIX = ".s3f2meta"
 
-    def get_object(self, path: str) -> bytes:
-        with open(path, "rb") as f:
-            return f.read()
+    def staging_dir(self, path: str) -> str:
+        # hidden from Spark's listing, and on the object's filesystem so
+        # the commit's os.replace stays atomic
+        return tempfile.mkdtemp(
+            dir=os.path.dirname(path) or ".", prefix=".s3f2tmp-"
+        )
 
-    def get_object_and_version(self, path: str) -> tuple[bytes, str]:
-        """Read content plus the version it represents. The version is
-        captured BEFORE the read: if a writer lands in between, the
-        stale version makes the commit's integrity check fail loudly
-        instead of silently clobbering the concurrent write."""
-        version = self.current_version(path)
-        return self.get_object(path), version
+    def fetch(self, path: str, dest: str) -> tuple[str, str]:
+        """The object itself, read in place, and its version. The version
+        is captured BEFORE the read: if a writer lands in between, the
+        stale version fails the commit's pre-swap check instead of the
+        rewrite silently clobbering the concurrent write."""
+        return path, self.current_version(path)
+
+    def _props_path(self, path: str) -> str:
+        head, name = os.path.split(path)
+        return os.path.join(head, f".{name}{self._META_SUFFIX}")
 
     def get_properties(self, path: str) -> ObjectProperties:
-        meta = path + self._META_SUFFIX
-        if os.path.exists(meta):
-            with open(meta, "r", encoding="utf-8") as f:
-                return ObjectProperties.from_json(f.read())
-        return ObjectProperties()
+        props = ObjectProperties()
+        if os.path.exists(self._props_path(path)):
+            with open(self._props_path(path), encoding="utf-8") as f:
+                props = ObjectProperties.from_json(f.read())
+        props.metadata.update(cse.load_metadata(path))
+        return props
+
+    def _sidecars(self, path: str, props: ObjectProperties) -> dict[str, str]:
+        """Sidecar path -> content for ``props``; a property sidecar only
+        when there is a property to keep or an old sidecar to replace."""
+        out = {}
+        if cse.is_kms_cse_encrypted(props.metadata):
+            out[cse.metadata_path(path)] = json.dumps(props.metadata)
+            props = replace(props, metadata={})
+        payload = props.to_json()
+        if payload != "{}" or os.path.exists(self._props_path(path)):
+            out[self._props_path(path)] = payload
+        return out
 
     def put_properties(self, path: str, properties: ObjectProperties) -> None:
-        with open(path + self._META_SUFFIX, "w", encoding="utf-8") as f:
-            f.write(properties.to_json())
+        for target, payload in self._sidecars(path, properties).items():
+            with open(target, "w", encoding="utf-8") as f:
+                f.write(payload)
 
     def save(
-        self, path: str, data: bytes, properties: ObjectProperties | None = None
+        self,
+        path: str,
+        src: str,
+        properties: ObjectProperties | None = None,
+        source_version: str | None = None,
     ) -> str:
         # replay semantics: absent properties -> keep the current ones
         props = properties or self.get_properties(path)
-        snap = versions.snapshot(path)
-        prev_id = self.current_version(path)
-        fd, tmp = tempfile.mkstemp(
-            dir=os.path.dirname(path) or ".", prefix=".s3f2put-"
-        )
+        source_version = source_version or self.current_version(path)
+        mtime_ns, size, _ = source_version.split("-")
+        # sidecars are staged beside src: same filesystem as the object
+        sidecars = self._sidecars(path, props)
+        companions = {t: f"{src}~{os.path.basename(t)}" for t in sidecars}
         try:
-            with os.fdopen(fd, "wb") as f:
-                f.write(data)
-            mtmp = tmp + ".meta"
-            with open(mtmp, "w", encoding="utf-8") as f:
-                f.write(props.to_json())
+            for target, payload in sidecars.items():
+                with open(companions[target], "w", encoding="utf-8") as f:
+                    f.write(payload)
             archived = versions.commit(
                 path,
-                tmp,
-                snap,
+                src,
+                (int(mtime_ns), int(size)),
                 delete_old=False,
-                companions={path + self._META_SUFFIX: mtmp},
+                companions=companions,
             )
-        except versions.VersionIntegrityError as e:
-            os.unlink(tmp)
-            raise VersionConflictError(str(e)) from e
-        # one id scheme end-to-end: rename the archive to the id the
-        # content had WHILE LIVE (current_version form), so integrity
+        finally:
+            for staged in companions.values():
+                if os.path.exists(staged):
+                    os.remove(staged)
+        # one id scheme end-to-end: rename the archive (and its companion
+        # archives) to the id the content had WHILE LIVE, so integrity
         # chains compare like S3's version listings
-        if archived is not None:
-            old = versions.version_path(path, archived)
-            store_dir = os.path.dirname(old)
-            target = versions.version_path(path, prev_id)
-            if os.path.exists(target):
-                # the digest in the id guarantees an existing target holds
-                # the SAME bytes — drop the duplicate instead of renaming
-                # over it (never silently clobber a distinct version)
-                os.remove(old)
-            else:
-                os.rename(old, target)
-            for name in os.listdir(store_dir):
-                if name.startswith(f"{archived}~"):
-                    ctarget = os.path.join(
-                        store_dir, f"{prev_id}~{name[len(archived) + 1:]}"
-                    )
-                    if os.path.exists(ctarget):
-                        os.remove(os.path.join(store_dir, name))
-                    else:
-                        os.rename(os.path.join(store_dir, name), ctarget)
+        store_dir = os.path.dirname(versions.version_path(path, archived))
+        for name in os.listdir(store_dir):
+            if name == archived or name.startswith(f"{archived}~"):
+                # the digest in the id means an existing target holds the
+                # SAME bytes, so replacing it never clobbers a distinct
+                # version
+                os.replace(
+                    os.path.join(store_dir, name),
+                    os.path.join(store_dir, source_version + name[len(archived):]),
+                )
+        # Hadoop's local FS keeps ".<name>.crc" sidecars; the rewritten
+        # bytes invalidate them (irrelevant on S3 where there is none)
+        head, name = os.path.split(path)
+        crc = os.path.join(head, f".{name}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
         return self.current_version(path)
 
     def current_version(self, path: str) -> str:
-        # mtime+size alone can collide across distinct contents on
-        # coarse-timestamp filesystems (or clock-preserving copies), which
-        # would let save()'s archive-rename clobber a prior version — a
-        # short content digest makes the id collision-safe
-        st = os.stat(path)
+        # (mtime, size) is the pre-swap check's snapshot; it alone can
+        # collide across distinct contents on coarse-timestamp
+        # filesystems (or clock-preserving copies), which would let
+        # save()'s archive-rename clobber a prior version — a short
+        # content digest makes the id collision-safe
+        mtime_ns, size = versions.snapshot(path)
         h = hashlib.sha256()
         with open(path, "rb") as f:
             for chunk in iter(lambda: f.read(1 << 20), b""):
                 h.update(chunk)
-        return f"{st.st_mtime_ns:020d}-{st.st_size}-{h.hexdigest()[:12]}"
-
-    def list_versions(self, path: str) -> list[str]:
-        return versions.list_versions(path)
+        return f"{mtime_ns:020d}-{size}-{h.hexdigest()[:12]}"
 
     def verify_version_integrity(
         self, path: str, from_version: str, to_version: str
     ) -> bool:
-        chain = self.list_versions(path) + [self.current_version(path)]
+        chain = versions.list_versions(path) + [self.current_version(path)]
         if from_version not in chain:
             raise VersionConflictError(
                 f"Previous version ({from_version}) has been deleted."
@@ -339,18 +371,19 @@ class S3ObjectStore:
         bucket, _, key = path[5:].partition("/")
         return bucket, key
 
-    def get_object(self, path: str) -> bytes:
-        bucket, key = self._split(path)
-        return self._client.get_object(Bucket=bucket, Key=key)["Body"].read()
+    def staging_dir(self, path: str) -> str:
+        return tempfile.mkdtemp(prefix="s3f2-store-")
 
-    def get_object_and_version(self, path: str) -> tuple[bytes, str]:
-        """GetObject returning (content, VersionId) from ONE response —
-        the version is atomically the one whose bytes were read (the
-        reference records VersionId off the fetch the same way,
+    def fetch(self, path: str, dest: str) -> tuple[str, str]:
+        """GetObject into ``dest``, returning the VersionId of the SAME
+        response — the version is atomically the one whose bytes were
+        read (the reference records VersionId off the fetch the same way,
         s3.py:301-341's from_version)."""
         bucket, key = self._split(path)
         resp = self._client.get_object(Bucket=bucket, Key=key)
-        return resp["Body"].read(), resp.get("VersionId", "null")
+        with open(dest, "wb") as f:
+            f.write(resp["Body"].read())
+        return dest, resp.get("VersionId", "null")
 
     # grantee type -> (ACL response property, Grant-header prefix), the
     # reference's prop_map (s3.py:204-221)
@@ -399,7 +432,11 @@ class S3ObjectStore:
         )
 
     def save(
-        self, path: str, data: bytes, properties: ObjectProperties | None = None
+        self,
+        path: str,
+        src: str,
+        properties: ObjectProperties | None = None,
+        source_version: str | None = None,
     ) -> str:
         # PutObject with replayed ExtraArgs (s3.py:61-98); the reference
         # restores WRITE grants with a separate PutObjectAcl because S3
@@ -408,6 +445,8 @@ class S3ObjectStore:
         props = properties or self.get_properties(path)
         from urllib.parse import quote_plus, urlencode
 
+        with open(src, "rb") as f:
+            data = f.read()
         kwargs = {
             "Bucket": bucket,
             "Key": key,
@@ -464,16 +503,6 @@ class S3ObjectStore:
                 ),
             )
         return new_version
-
-    def list_versions(self, path: str) -> list[str]:
-        bucket, key = self._split(path)
-        out: list[tuple] = []
-        paginator = self._client.get_paginator("list_object_versions")
-        for page in paginator.paginate(Bucket=bucket, Prefix=key):
-            for v in page.get("Versions", []) + page.get("DeleteMarkers", []):
-                if v.get("Key") == key:
-                    out.append((v["LastModified"], v["VersionId"]))
-        return [vid for _, vid in sorted(out)]
 
     def verify_version_integrity(
         self, path: str, from_version: str, to_version: str
@@ -570,10 +599,6 @@ class S3ObjectStore:
                 o for o in objects if (o["Key"], o.get("VersionId")) in failed
             ]
             self._sleep(min(max(2 ** (attempt - 1), 1), 10))
-
-
-def uuid_version() -> str:
-    return uuid.uuid4().hex
 
 
 # --------------------------------------------------------------------------

@@ -43,6 +43,14 @@ assert job["TotalObjectUpdatedCount"] >= 1, job
 assert job["TotalQueryFailedCount"] == 0, job
 print("SMOKE OK:", f"updated={job['TotalObjectUpdatedCount']}")
 PY
+# the rewrite adds no visible entry to the lake: staging, version store
+# and property sidecars are all dot-prefixed
+python3 - "$WORK/lake" <<'PY'
+import os, sys
+visible = sorted(n for n in os.listdir(sys.argv[1]) if not n.startswith("."))
+assert visible == ["lineitem.parquet"], visible
+print("SMOKE OK: the lake holds no visible entry but lineitem.parquet")
+PY
 
 # survivors check through a second, independent submit (dry-run Find):
 # the deleted match ids must no longer hit any file

@@ -54,16 +54,16 @@ def main(argv=None):
                    "rewrite nothing")
     p.add_argument("--shuffle-partitions", type=int, default=None,
                    help="spark.sql.shuffle.partitions for this driver "
-                   "(default: the driver's core count; a --conf value is "
-                   "overridden by the session factory)")
+                   "(default: a submitted --conf value, else the driver's "
+                   "core count)")
     args = p.parse_args(argv)
     if not args.match_id:
         p.error("at least one --match-id is required")
 
     # Under spark-submit, get_spark keeps the submitted master and every
-    # submitted conf it does not set itself; its own scale defaults
-    # (shuffle partitions, AQE, Arrow, ...) are applied on top, so set
-    # shuffle partitions with --shuffle-partitions, not --conf.
+    # submitted conf: its own scale defaults (shuffle partitions, AQE,
+    # Arrow, ...) fill in only the keys the submit left unset, and
+    # --shuffle-partitions beats both.
     from amazon_s3_find_and_forget_spark.api import Engine
     from amazon_s3_find_and_forget_spark.session import get_spark
 

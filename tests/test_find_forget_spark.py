@@ -569,15 +569,22 @@ def _chaos_synthetic_factory():
         )
 
         class Store:
-            def get_object_and_version(self, path):
+            def staging_dir(self, path):
+                import tempfile
+
+                return tempfile.mkdtemp()
+
+            def fetch(self, path, dest):
                 if path.endswith("/vanished.parquet"):
                     raise FileNotFoundError(path)
-                return blob, "v1"
+                with open(dest, "wb") as f:
+                    f.write(blob)
+                return dest, "v1"
 
             def get_properties(self, path):
                 return ObjectProperties()
 
-            def save(self, path, data, properties=None):
+            def save(self, path, src, properties=None, source_version=None):
                 return "v2"
 
             def verify_version_integrity(self, path, from_v, new_v):
@@ -655,10 +662,10 @@ def _chaos_local_factory():
         )
 
         class Store(LocalObjectStore):
-            def get_object_and_version(self, path):
+            def fetch(self, path, dest):
                 if _os.path.basename(path) == "vanished.parquet":
                     raise FileNotFoundError(path)
-                return super().get_object_and_version(path)
+                return super().fetch(path, dest)
 
             def verify_version_integrity(self, path, from_v, new_v):
                 if _os.path.basename(path) == "conflict.parquet":

@@ -8,6 +8,7 @@ import datetime
 
 import pytest
 
+from amazon_s3_find_and_forget_spark.sources import versions
 from amazon_s3_find_and_forget_spark.sources.object_store import (
     LocalObjectStore,
     ObjectProperties,
@@ -27,6 +28,18 @@ def _mk(tmp_path, content=b"v1"):
     return str(p)
 
 
+def _staged(tmp_path, content):
+    """A local file holding ``content``: what ``save`` takes back."""
+    p = tmp_path / f"staged-{content.decode()}"
+    p.write_bytes(content)
+    return str(p)
+
+
+def _read(path):
+    with open(path, "rb") as f:
+        return f.read()
+
+
 def test_local_save_replays_properties_and_archives(tmp_path):
     store = LocalObjectStore()
     path = _mk(tmp_path)
@@ -36,12 +49,12 @@ def test_local_save_replays_properties_and_archives(tmp_path):
         metadata={"origin": "unit"},
     )
     store.put_properties(path, props)
-    store.save(path, b"v2")  # no properties passed -> replay current
-    assert store.get_object(path) == b"v2"
+    store.save(path, _staged(tmp_path, b"v2"))  # no properties -> replay
+    assert _read(path) == b"v2"
     assert store.get_properties(path).content_type == "application/parquet"
     assert store.get_properties(path).tags == {"team": "data"}
     # previous content archived as a version
-    assert len(store.list_versions(path)) == 1
+    assert len(versions.list_versions(path)) == 1
 
 
 def test_local_properties_roundtrip_json(tmp_path):
@@ -58,7 +71,7 @@ def test_local_version_chain_integrity(tmp_path):
     store = LocalObjectStore()
     path = _mk(tmp_path)
     v0 = store.current_version(path)
-    v1 = store.save(path, b"v2")
+    v1 = store.save(path, _staged(tmp_path, b"v2"))
     assert store.verify_version_integrity(path, v0, v1)
     with pytest.raises(VersionConflictError):
         # claiming the new version came from a version that never existed
@@ -84,20 +97,20 @@ def test_local_conflict_detected_before_commit(tmp_path):
     with pytest.raises(versions.VersionIntegrityError):
         versions.commit(path, tmp, snap)
     # the object keeps the concurrent writer's content (no clobber)
-    assert store.get_object(path) == b"concurrent"
+    assert _read(path) == b"concurrent"
 
 
 def test_local_rollback_and_purge(tmp_path):
     store = LocalObjectStore()
     path = _mk(tmp_path)
-    v1 = store.save(path, b"v2")
+    v1 = store.save(path, _staged(tmp_path, b"v2"))
     store.rollback_version(path, v1)
-    assert store.get_object(path) == b"v1"
-    store.save(path, b"v3")
-    store.save(path, b"v4")
-    assert len(store.list_versions(path)) == 2
+    assert _read(path) == b"v1"
+    store.save(path, _staged(tmp_path, b"v3"))
+    store.save(path, _staged(tmp_path, b"v4"))
+    assert len(versions.list_versions(path)) == 2
     assert store.delete_old_versions(path, store.current_version(path)) == 2
-    assert store.list_versions(path) == []
+    assert versions.list_versions(path) == []
 
 
 def test_local_version_ids_distinct_for_same_stat(tmp_path):
@@ -244,7 +257,7 @@ class FakeS3Client:
         return {}
 
 
-def test_s3_store_save_replays_properties():
+def test_s3_store_save_replays_properties(tmp_path):
     client = FakeS3Client()
     store = S3ObjectStore(client=client)
     path = "s3://bucket/data/part-0.parquet"
@@ -257,8 +270,9 @@ def test_s3_store_save_replays_properties():
         Tagging="team=data",
         ServerSideEncryption="aws:kms",
     )
-    v2 = store.save(path, b"v2")  # replay: no properties passed
-    assert store.get_object(path) == b"v2"
+    v2 = store.save(path, _staged(tmp_path, b"v2"))  # replay: no properties
+    assert store.fetch(path, str(tmp_path / "got")) == (str(tmp_path / "got"), "v2")
+    assert _read(tmp_path / "got") == b"v2"
     args = client.objects[("bucket", "data/part-0.parquet")][-1]["Args"]
     assert args["ContentType"] == "application/parquet"
     assert args["Metadata"] == {"origin": "ingest"}
@@ -267,14 +281,14 @@ def test_s3_store_save_replays_properties():
     assert v2 == "v2"
 
 
-def test_s3_store_write_grants_restored_separately():
+def test_s3_store_write_grants_restored_separately(tmp_path):
     client = FakeS3Client()
     store = S3ObjectStore(client=client)
     path = "s3://b/k"
     client.put_object(Bucket="b", Key="k", Body=b"v1")
     props = store.get_properties(path)
     props.acl_grants = {"WRITE": ["grantee-1"], "READ": ["grantee-2"]}
-    store.save(path, b"v2", props)
+    store.save(path, _staged(tmp_path, b"v2"), props)
     # READ grant rides the upload; WRITE needs the separate PutObjectAcl
     args = client.objects[("b", "k")][-1]["Args"]
     assert args["GrantRead"] == "id=grantee-2"
@@ -290,7 +304,7 @@ def test_s3_store_write_grants_restored_separately():
     assert args["GrantFullControl"] == "id=owner"
 
 
-def test_s3_store_grantee_types_formatted_for_headers():
+def test_s3_store_grantee_types_formatted_for_headers(tmp_path):
     """Group and email grantees use uri=/emailAddress=, not id=."""
     client = FakeS3Client()
     client.acl = {
@@ -325,7 +339,7 @@ def test_s3_store_grantee_types_formatted_for_headers():
     ]
     assert props.acl_grants["READ_ACP"] == ["emailAddress=user@example.com"]
     assert props.acl_grants["FULL_CONTROL"] == ["id=abc123"]
-    store.save(path, b"v2", props)
+    store.save(path, _staged(tmp_path, b"v2"), props)
     args = client.objects[("b", "k")][-1]["Args"]
     assert args["GrantRead"] == (
         "uri=http://acs.amazonaws.com/groups/global/AllUsers"
@@ -334,17 +348,17 @@ def test_s3_store_grantee_types_formatted_for_headers():
     assert args["GrantFullControl"] == "id=owner,id=abc123"
 
 
-def test_s3_store_version_integrity_and_rollback():
+def test_s3_store_version_integrity_and_rollback(tmp_path):
     client = FakeS3Client()
     store = S3ObjectStore(client=client)
     path = "s3://b/k"
     client.put_object(Bucket="b", Key="k", Body=b"v1")
     v1 = "v1"
-    v2 = store.save(path, b"v2")
+    v2 = store.save(path, _staged(tmp_path, b"v2"))
     assert store.verify_version_integrity(path, v1, v2)
     # concurrent writer between v1 and our v3
     client.put_object(Bucket="b", Key="k", Body=b"sneak")
-    v4 = store.save(path, b"v4")
+    v4 = store.save(path, _staged(tmp_path, b"v4"))
     with pytest.raises(VersionConflictError):
         store.verify_version_integrity(path, v2, v4)
     store.rollback_version(path, v4)
@@ -415,8 +429,7 @@ def test_forget_rewrite_through_object_store(tmp_path):
     out_tmp = str(tmp_path / "rewritten.parquet")
     spec = [{"Type": "Simple", "Column": "l_orderkey", "MatchIds": [1, 3]}]
     stats = rewrite_parquet_file(obj, out_tmp, spec)
-    with open(out_tmp, "rb") as f:
-        store.save(obj, f.read())
+    store.save(obj, out_tmp)
 
     after = pq.read_table(obj)
     assert after.num_rows == before.num_rows - n_match
@@ -425,7 +438,7 @@ def test_forget_rewrite_through_object_store(tmp_path):
         v in (1, 3) for v in after.column("l_orderkey").to_pylist()
     )
     # the safety envelope held: old content archived, properties replayed
-    assert len(store.list_versions(obj)) == 1
+    assert len(versions.list_versions(obj)) == 1
     assert store.get_properties(obj).tags == {"lake": "test"}
     assert store.get_properties(obj).content_type == "application/parquet"
 
@@ -640,7 +653,7 @@ def test_assumed_role_client_lazy_and_refreshes():
     assert built == ["AKIA1", "AKIA2"]
 
 
-def test_store_for_mapper_same_account_and_cross_account():
+def test_store_for_mapper_same_account_and_cross_account(tmp_path):
     plain = store_for_mapper(client=FakeS3Client())
     assert isinstance(plain._client, FakeS3Client)
     sts = FakeSTS()
@@ -652,7 +665,9 @@ def test_store_for_mapper_same_account_and_cross_account():
     )
     path = "s3://b/k"
     cross._client.put_object(Bucket="b", Key="k", Body=b"v1")
-    assert cross.get_object(path) == b"v1"  # full store protocol works
+    got = str(tmp_path / "got")
+    assert cross.fetch(path, got) == (got, "v1")  # full store protocol works
+    assert _read(got) == b"v1"
     assert sts.calls[0][0] == "arn:aws:iam::333333333333:role/y"
 
 
@@ -670,7 +685,7 @@ def test_data_mapper_role_arn_validation():
 
 
 # --------------------------------------------------------------------------
-# Store-routed Forget rewrite (plans/forget._rewrite_one_store):
+# Store-routed Forget rewrite (plans/forget._rewrite_one):
 # the reference's full per-object commit protocol (main.py:132-265)
 # through the ObjectStore seam, with RoleArn taking runtime effect
 # --------------------------------------------------------------------------
@@ -989,3 +1004,131 @@ def test_rewrite_one_store_redact_mode():
     got = pq.read_table(io.BytesIO(versions[-1]["Body"]))
     assert got.column("customer_id").to_pylist() == [1, None, None, 4]
     assert versions[-1]["Args"]["Metadata"] == {"team": "sre"}
+
+
+# --------------------------------------------------------------------------
+# One commit protocol: posix lakes, S3 lakes and injected stores share
+# every step of plans/forget._rewrite_one
+# --------------------------------------------------------------------------
+
+
+def _local_store_factory():
+    """An injected LocalObjectStore (the Engine(store_factory=...) seam),
+    pickled by value into each task."""
+
+    def factory(arn):
+        from amazon_s3_find_and_forget_spark.sources.object_store import (
+            LocalObjectStore,
+        )
+
+        return LocalObjectStore()
+
+    return factory
+
+
+def test_injected_local_store_leaves_lakes_readable(spark, tmp_path):
+    """A job through an injected LocalObjectStore adds no visible entry to
+    either lake, so Spark reads each back to exactly its survivors (a
+    visible property sidecar failed the Parquet read and added an
+    all-null row to the JSON read)."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from amazon_s3_find_and_forget_spark.data_mappers import DataMapper
+    from amazon_s3_find_and_forget_spark.jobs import fold_counters, run_job
+    from amazon_s3_find_and_forget_spark.matches import QueueItem
+
+    pq_lake = tmp_path / "pq"
+    pq_lake.mkdir()
+    pq.write_table(
+        pa.table({"customer_id": pa.array([1, 2, 3], pa.int64())}),
+        str(pq_lake / "part-0.parquet"),
+    )
+    js_lake = tmp_path / "js"
+    js_lake.mkdir()
+    (js_lake / "a.json").write_text(
+        "".join(json.dumps({"customer_id": i}) + "\n" for i in (1, 2, 3))
+    )
+    result = run_job(
+        spark,
+        [
+            DataMapper("pq", str(pq_lake), ["customer_id"]),
+            DataMapper("js", str(js_lake), ["customer_id"], format="json"),
+        ],
+        [QueueItem(match_id=2)],
+        store_factory=_local_store_factory(),
+    )
+    assert result.status == "COMPLETED", result.events
+    assert fold_counters(result.events)["TotalObjectUpdatedCount"] == 2
+    spark.catalog.clearCache()
+    got_pq = spark.read.parquet(str(pq_lake)).collect()
+    got_js = spark.read.json(str(js_lake)).collect()
+    assert sorted(tuple(r) for r in got_pq) == [(1,), (3,)]
+    assert sorted(tuple(r) for r in got_js) == [(1,), (3,)]
+    for lake, name in ((pq_lake, "part-0.parquet"), (js_lake, "a.json")):
+        assert [n for n in os.listdir(lake) if not n.startswith(".")] == [name]
+
+
+def _rollback_failing_factory():
+    """LocalObjectStore whose integrity check reports a conflict and whose
+    rollback then fails — pickled by value into each task."""
+
+    def factory(arn):
+        from amazon_s3_find_and_forget_spark.sources.object_store import (
+            LocalObjectStore,
+            VersionConflictError,
+        )
+
+        class Store(LocalObjectStore):
+            def verify_version_integrity(self, path, from_v, new_v):
+                raise VersionConflictError("concurrent write detected")
+
+            def rollback_version(self, path, version):
+                raise OSError("rollback refused")
+
+        return Store()
+
+    return factory
+
+
+def test_rewrite_one_reports_rollback_failed(tmp_path):
+    from amazon_s3_find_and_forget_spark.plans.forget import _rewrite_one
+
+    obj = tmp_path / "p.parquet"
+    obj.write_bytes(_parquet_bytes([1, 2, 3]))
+    row = _rewrite_one(
+        str(obj),
+        "parquet",
+        _spec(),
+        ignore_not_found=False,
+        store_factory=_rollback_failing_factory(),
+    )
+    assert row[4] == "rollback_failed", row
+    assert row[5] == "OSError: rollback refused"
+
+
+def test_run_job_emits_rollback_failed_events(spark, tmp_path):
+    """The list handoff turns a rollback_failed row into both
+    ObjectUpdateFailed and ObjectRollbackFailed, and the job ends
+    FORGET_PARTIALLY_FAILED."""
+    from amazon_s3_find_and_forget_spark.data_mappers import DataMapper
+    from amazon_s3_find_and_forget_spark.jobs import fold_counters, run_job
+    from amazon_s3_find_and_forget_spark.matches import QueueItem
+
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    (lake / "p.parquet").write_bytes(_parquet_bytes([1, 2, 3]))
+    result = run_job(
+        spark,
+        [DataMapper("t", str(lake), ["customer_id"])],
+        [QueueItem(match_id=2)],
+        store_factory=_rollback_failing_factory(),
+    )
+    assert result.status == "FORGET_PARTIALLY_FAILED", result.events
+    names = [e["EventName"] for e in result.events]
+    assert "ObjectUpdateFailed" in names
+    assert "ObjectRollbackFailed" in names
+    assert fold_counters(result.events)["TotalObjectRollbackFailedCount"] == 1

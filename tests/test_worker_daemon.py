@@ -1,5 +1,5 @@
 """Python workers import pyspark from site-packages (``worker_daemon``),
-and ``get_spark`` keeps a master that spark-submit already set."""
+and ``get_spark`` keeps the master and confs spark-submit already set."""
 
 import json
 import os
@@ -118,6 +118,7 @@ out = spark.sparkContext.parallelize(range(10), 2).mapPartitions(probe).collect(
 print(json.dumps({
     "master": spark.sparkContext.master,
     "daemon": spark.sparkContext.getConf().get("spark.python.daemon.module"),
+    "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
     "sums": sorted(s for s, _ in out),
     "pyspark": [f for _, f in out],
 }))
@@ -147,6 +148,7 @@ def submitted(tmp_path_factory):
     proc = subprocess.run(
         [submit, "--master", "local[3]", "--driver-memory", "1g",
          "--conf", "spark.ui.enabled=false",
+         "--conf", "spark.sql.shuffle.partitions=7",
          "--py-files", str(archive), "driver.py"],
         cwd=work, env=env, capture_output=True, text=True, timeout=300,
     )
@@ -157,6 +159,11 @@ def submitted(tmp_path_factory):
 def test_spark_submit_master_is_kept(submitted):
     assert submitted["master"] == "local[3]"
     assert submitted["daemon"] == session.WORKER_DAEMON
+
+
+def test_spark_submit_conf_beats_session_defaults(submitted):
+    # get_spark(cpus=2) would default to 2 shuffle partitions
+    assert submitted["shuffle_partitions"] == "7"
 
 
 def test_spark_submit_py_files_runs_python_tasks(submitted):
