@@ -16,7 +16,9 @@ from __future__ import annotations
 
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -213,6 +215,46 @@ class JobResult:
     counters: dict = field(default_factory=dict)
 
 
+@contextmanager
+def _job_tag(sc, tag: str):
+    """Tag every Spark job this thread starts inside the block: the event
+    log records it as ``spark.job.tags`` and ``cancelJobsWithTag`` stops
+    the tagged work. Unlike ``setJobGroup`` it leaves the job description
+    alone, and tags nest."""
+    sc.addJobTag(tag)
+    try:
+        yield
+    finally:
+        sc.removeJobTag(tag)
+
+
+def _rewrite_options(mapper, kms, store_factory) -> dict:
+    """One mapper's rewrite config, as ``rewriter`` and
+    ``forget_files_df`` take it."""
+    return dict(
+        fmt=mapper.format,
+        ignore_not_found=mapper.ignore_object_not_found,
+        delete_old_versions=mapper.delete_old_versions,
+        kms=kms,
+        # cross-account mappers: each rewrite task builds its client
+        # from the ARN (reference main.py:140,154)
+        role_arn=getattr(mapper, "role_arn", ""),
+        store_factory=store_factory,
+        redact_columns=mapper.effective_redact_columns(),
+    )
+
+
+def _refresh(spark: SparkSession, mapper) -> None:
+    """The rewrite changed files behind Spark's back: drop any cached file
+    listing / metadata so later reads in this session see the new objects
+    (S3's analog is read-after-write consistency; Spark's is the catalog
+    file-index cache)."""
+    if mapper.location.startswith("table:"):
+        spark.catalog.refreshTable(mapper.location[len("table:") :])
+    else:
+        spark.catalog.refreshByPath(mapper.location)
+
+
 def run_job(
     spark: SparkSession,
     mappers: list,
@@ -229,23 +271,46 @@ def run_job(
     """The whole deletion-job lifecycle as one driver program.
 
     Replaces the reference's 3 state machines / 8 lambdas / 2 queues
-    (SURVEY.md §3.1): find affected files per mapper (broadcast semi-join
-    or pushed predicates), surgically rewrite them, fold events into
-    stats + status.
+    (SURVEY.md §3.1) and keeps their phase order (steps 4-7):
 
-    Find->Forget handoff is hybrid: up to ``path_handoff_threshold``
-    affected objects take the list path (driver-side paths and sizes,
-    per-object events — reference parity, one SQS message per object;
-    ``forget_files`` sizes its task count by the bytes). Above it the
-    affected-path relation stays a DataFrame end to end
-    (``forget_files_df``): the rewrite fans out via ``mapInPandas``, stats
-    aggregate distributively, and only the per-status rollup reaches the
-    driver — no driver-memory ceiling at millions of objects. Large jobs
-    get per-status summary events instead of per-object ones.
+    1. Manifest: the audit manifest of every routed mapper, written from
+       the driver into ``manifest_dir`` (and registered in
+       ``manifest_table``) before Find; a failed Find keeps it.
+    2. Find: ONE query. Every routed mapper's affected-file relation
+       (broadcast semi-join or pushed predicates) is tagged with the
+       mapper's ordinal, the relations are unioned, and one collect
+       probes ``path_handoff_threshold + 1`` rows. Each attempt emits one
+       ``QuerySucceeded``, ``QueryRetried`` or ``QueryFailed`` event
+       naming all the ``DataMapperIds``. Past the retry budget the job
+       ends ``FIND_FAILED`` and no object has been rewritten.
+    3. Forget: ONE dispatch (``forget_files``) over the objects of every
+       mapper, each rewritten with its own mapper's config, like the
+       reference's single queue of per-object messages; then each mapper's
+       cached listing is refreshed and the events fold into stats +
+       status.
+
+    The Find->Forget handoff is decided per job. Up to
+    ``path_handoff_threshold`` affected objects over all mappers take the
+    list path above (driver-side paths and sizes, per-object events —
+    reference parity; ``forget_files`` sizes its task count by the
+    bytes). Above it EVERY mapper takes the large-job path on its own:
+    its affected-path relation stays a DataFrame end to end
+    (``forget_files_df``), the rewrite fans out via ``mapInPandas``,
+    stats aggregate distributively, and only the per-status rollup
+    reaches the driver — no driver-memory ceiling at millions of
+    objects. Large jobs get per-status summary events instead of
+    per-object ones.
+
+    Mapper locations must not overlap (``check_no_overlap``; a job with
+    overlapping mappers fails before it writes anything): one dispatch
+    assumes no object belongs to two mappers. The job's Spark work is
+    tagged ``s3f2-job-<job_id>``, and its phases ``s3f2-phase-find`` and
+    ``s3f2-phase-forget`` (see ``SparkContext.cancelJobsWithTag``).
     """
+    from .data_mappers import check_no_overlap
     from .matches import build_column_groups, route_items
     from .plans.find import find_affected_files
-    from .plans.forget import forget_files, forget_files_df
+    from .plans.forget import forget_files, forget_files_df, rewriter
 
     job_id = job_id or str(uuid.uuid4())
     events: list = []
@@ -255,208 +320,199 @@ def run_job(
     emit("JobStarted")
     all_stats: list = []
     counters: dict = {"TotalObjectUpdateFailedCount": 0, "TotalQueryFailedCount": 0}
-    try:
-        routed_mappers = [
-            (mapper, routed)
-            for mapper in mappers
-            if (routed := route_items(queue_items, mapper.mapper_id))
-        ]
-        if manifest_dir or manifest_table:
-            # the auditable stringified manifest of every routed mapper,
-            # partitioned like the reference's Glue JSONL manifest table
-            # (S7, generate_queries.py:223-225 + templates/manifests.yaml)
-            # and written before the first Find, as generate_queries does.
-            # One driver-built relation in one task: one part file per
-            # (JobId, DataMapperId) directory, no Python worker
-            from .matches import (
-                MANIFEST_SCHEMA,
-                local_relation,
-                manifest_rows,
-                register_manifest_table,
-                write_manifest,
-            )
 
-            rows = [
-                row
-                for mapper, routed in routed_mappers
-                for row in manifest_rows(
-                    job_id, mapper.mapper_id, mapper.columns, routed
-                )
+    def result() -> JobResult:
+        folded = fold_status(events, counters)
+        return JobResult(
+            job_id=job_id,
+            status=folded.get("JobStatus", "QUEUED"),
+            file_stats=all_stats,
+            events=events,
+            counters=counters,
+        )
+
+    sc = spark.sparkContext
+    try:
+        with _job_tag(sc, f"s3f2-job-{job_id}"):
+            check_no_overlap(mappers)
+            routed_mappers = [
+                (mapper, routed)
+                for mapper in mappers
+                if (routed := route_items(queue_items, mapper.mapper_id))
             ]
-            if rows:
-                mdf = local_relation(spark, MANIFEST_SCHEMA, rows).coalesce(1)
-                if manifest_dir:
-                    write_manifest(mdf, manifest_dir)
-                if manifest_table:
-                    # catalog registration (generate_queries.py:288-326)
-                    register_manifest_table(mdf, manifest_table)
-        for mapper, routed in routed_mappers:
-            df = mapper.read(spark, kms=kms)
-            groups = build_column_groups(
-                df.schema, mapper.columns, routed
-            )
-            paths = None
-            for attempt in range(query_max_retries + 1):
-                # bounded retry budget, the AthenaQueryMaxRetries analog
-                # (check_query_status.py:9-27 + state_machine.yaml:204-224);
-                # Spark's own task retries handle executor-level failures,
-                # this guards whole-query failures
-                try:
-                    # probe one past the threshold: a small job gets its
-                    # complete list, a large one only proves it is large
-                    started = time.monotonic()
-                    found = (
-                        find_affected_files(df, groups)
-                        .limit(path_handoff_threshold + 1)
-                        .collect()
+            if manifest_dir or manifest_table:
+                # the auditable stringified manifest of every routed
+                # mapper, partitioned like the reference's Glue JSONL
+                # manifest table (S7, generate_queries.py:223-225 +
+                # templates/manifests.yaml) and written before Find, as
+                # generate_queries does
+                from .matches import (
+                    MANIFEST_SCHEMA,
+                    local_relation,
+                    manifest_rows,
+                    register_manifest_table,
+                    write_manifest,
+                )
+
+                rows = [
+                    row
+                    for mapper, routed in routed_mappers
+                    for row in manifest_rows(
+                        job_id, mapper.mapper_id, mapper.columns, routed
                     )
-                    paths = [r[0] for r in found]
+                ]
+                if rows and manifest_dir:
+                    write_manifest(rows, manifest_dir)
+                if rows and manifest_table:
+                    # catalog registration (generate_queries.py:288-326)
+                    register_manifest_table(
+                        local_relation(spark, MANIFEST_SCHEMA, rows).coalesce(1),
+                        manifest_table,
+                    )
+            reads = []
+            for mapper, routed in routed_mappers:
+                df = mapper.read(spark, kms=kms)
+                reads.append(
+                    (df, build_column_groups(df.schema, mapper.columns, routed))
+                )
+            query = {"DataMapperIds": [m.mapper_id for m, _ in routed_mappers]}
+            # nothing routed: no query to run, nothing to forget
+            found = None if reads else []
+            with _job_tag(sc, "s3f2-phase-find"):
+                for attempt in range(query_max_retries + 1):
+                    # bounded retry budget, the AthenaQueryMaxRetries analog
+                    # (check_query_status.py:9-27 + state_machine.yaml:204-224);
+                    # Spark's own task retries handle executor-level
+                    # failures, this guards whole-query failures
+                    if found is not None:
+                        break
+                    started = time.monotonic()
+                    try:
+                        union = reduce(
+                            DataFrame.unionAll,
+                            [
+                                find_affected_files(df, groups).withColumn(
+                                    "mapper", F.lit(i)
+                                )
+                                for i, (df, groups) in enumerate(reads)
+                            ],
+                        )
+                        # probe one past the threshold: a small job gets
+                        # its complete list, a large one only proves it is
+                        # large
+                        found = union.limit(path_handoff_threshold + 1).collect()
+                        name, data = "QuerySucceeded", {}
+                    except Exception as e:  # noqa: BLE001
+                        # a failure with retries left records the attempt
+                        # WITHOUT failing the query — the reference emits
+                        # the error event only once the budget is exhausted
+                        # (state_machine.yaml 'Retriable?' -> 'Emit Error'),
+                        # so a recovered retry can still end in a clean
+                        # COMPLETED job
+                        name = (
+                            "QueryRetried"
+                            if attempt < query_max_retries
+                            else "QueryFailed"
+                        )
+                        data = {"Error": str(e), "Attempt": attempt}
                     millis = int((time.monotonic() - started) * 1000)
                     emit(
-                        "QuerySucceeded",
+                        name,
                         {
-                            "DataMapperId": mapper.mapper_id,
+                            **query,
+                            **data,
                             "Statistics": {"EngineExecutionTimeInMillis": millis},
                         },
                     )
-                    break
-                except Exception as e:  # noqa: BLE001
-                    if attempt < query_max_retries:
-                        # transient failure with retries left: record the
-                        # attempt WITHOUT failing the query — the reference
-                        # emits the error event only once the budget is
-                        # exhausted (state_machine.yaml 'Retriable?' ->
-                        # 'Emit Error'), so a recovered retry can still end
-                        # in a clean COMPLETED job
-                        emit(
-                            "QueryRetried",
-                            {"Error": str(e), "Attempt": attempt},
-                        )
-                    else:
-                        counters["TotalQueryFailedCount"] += 1
-                        emit(
-                            "QueryFailed",
-                            {"Error": str(e), "Attempt": attempt},
-                        )
-            if paths is None:
+            if found is None:
                 # fail fast: a Find failure past its retry budget abandons
-                # the job (parity: work_query_queue.py:38-42)
+                # the job before any object is rewritten (parity:
+                # work_query_queue.py:38-42)
+                counters["TotalQueryFailedCount"] += 1
                 emit("FindPhaseFailed")
-                folded = fold_status(events, counters)
-                return JobResult(
-                    job_id=job_id,
-                    status=folded.get("JobStatus", "FIND_FAILED"),
-                    file_stats=all_stats,
-                    events=events,
-                    counters=counters,
-                )
-            if len(paths) <= path_handoff_threshold:
-                stats = forget_files(
-                    spark,
-                    paths,
-                    groups,
-                    fmt=mapper.format,
-                    ignore_not_found=mapper.ignore_object_not_found,
-                    delete_old_versions=mapper.delete_old_versions,
-                    kms=kms,
-                    parallelism=forget_parallelism,
-                    # cross-account mappers: each rewrite task builds its
-                    # client from the ARN (reference main.py:140,154)
-                    role_arn=getattr(mapper, "role_arn", ""),
-                    store_factory=store_factory,
-                    redact_columns=mapper.effective_redact_columns(),
-                    # bytes per object size the task count
-                    sizes=[r[1] for r in found],
-                )
+                return result()
+            if len(found) <= path_handoff_threshold:
+                rewrites = [
+                    rewriter(groups, **_rewrite_options(mapper, kms, store_factory))
+                    for (mapper, _), (_, groups) in zip(routed_mappers, reads)
+                ]
+                with _job_tag(sc, "s3f2-phase-forget"):
+                    stats = forget_files(
+                        spark,
+                        [r[0] for r in found],
+                        [rewrites[r[2]] for r in found],
+                        # bytes per object size the task count
+                        sizes=[r[1] for r in found],
+                        parallelism=forget_parallelism,
+                    )
+                for mapper, _ in routed_mappers:
+                    _refresh(spark, mapper)
                 all_stats.extend(stats)
-                stats_rel = None
-            else:
-                # large-job path: the affected-path relation never leaves
-                # the cluster; stats aggregate distributively below
-                stats = None
-                stats_rel = forget_files_df(
-                    spark,
-                    find_affected_files(df, groups).select("file_path"),
-                    groups,
-                    fmt=mapper.format,
-                    ignore_not_found=mapper.ignore_object_not_found,
-                    delete_old_versions=mapper.delete_old_versions,
-                    kms=kms,
-                    parallelism=forget_parallelism,
-                    role_arn=getattr(mapper, "role_arn", ""),
-                    store_factory=store_factory,
-                    redact_columns=mapper.effective_redact_columns(),
-                )
-            # the rewrite changed files behind Spark's back — drop any
-            # cached file listing / metadata so subsequent reads in this
-            # session see the new objects (S3's analog is read-after-write
-            # consistency; Spark's is the catalog file-index cache)
-            if mapper.location.startswith("table:"):
-                spark.catalog.refreshTable(mapper.location[len("table:") :])
-            else:
-                spark.catalog.refreshByPath(mapper.location)
-            if stats is not None:
                 for row in stats:
                     status = row[4]
                     if status == "updated":
                         emit("ObjectUpdated", {"Object": row[0]})
                     elif status == "skipped":
                         emit("ObjectUpdateSkipped", {"Object": row[0]})
-                    elif status == "rollback_failed":
-                        counters["TotalObjectUpdateFailedCount"] += 1
-                        emit("ObjectUpdateFailed", {"Object": row[0], "Error": row[5]})
-                        emit("ObjectRollbackFailed", {"Object": row[0], "Error": row[5]})
                     else:
                         counters["TotalObjectUpdateFailedCount"] += 1
-                        emit("ObjectUpdateFailed", {"Object": row[0], "Error": row[5]})
+                        failed = {"Object": row[0], "Error": row[5]}
+                        emit("ObjectUpdateFailed", failed)
+                        if status == "rollback_failed":
+                            emit("ObjectRollbackFailed", dict(failed))
             else:
-                # per-status rollup, computed on the cluster; only a handful
-                # of rows ever reach the driver for a large job
-                rollup = (
-                    stats_rel.groupBy("status")
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum("processed_rows").alias("processed"),
-                        F.sum("deleted_rows").alias("deleted"),
-                        F.max("error").alias("sample_error"),
+                for (mapper, _), (df, groups) in zip(routed_mappers, reads):
+                    # large-job path: the affected-path relation never
+                    # leaves the cluster; stats aggregate distributively
+                    with _job_tag(sc, "s3f2-phase-forget"):
+                        stats_rel = forget_files_df(
+                            spark,
+                            find_affected_files(df, groups).select("file_path"),
+                            groups,
+                            parallelism=forget_parallelism,
+                            **_rewrite_options(mapper, kms, store_factory),
+                        )
+                    _refresh(spark, mapper)
+                    # per-status rollup, computed on the cluster; only a
+                    # handful of rows ever reach the driver for a large job
+                    rollup = (
+                        stats_rel.groupBy("status")
+                        .agg(
+                            F.count(F.lit(1)).alias("n"),
+                            F.sum("processed_rows").alias("processed"),
+                            F.sum("deleted_rows").alias("deleted"),
+                            F.max("error").alias("sample_error"),
+                        )
+                        .collect()
                     )
-                    .collect()
-                )
-                for r in rollup:
-                    data = {
-                        "Status": r["status"],
-                        "Objects": int(r["n"]),
-                        "ProcessedRows": int(r["processed"] or 0),
-                        "DeletedRows": int(r["deleted"] or 0),
-                    }
-                    if r["sample_error"]:
-                        data["SampleError"] = r["sample_error"]
-                    emit("ObjectUpdateSummary", data)
-                    if r["status"] not in ("updated", "skipped"):
-                        counters["TotalObjectUpdateFailedCount"] += int(r["n"])
-                all_stats.append(
-                    (
-                        mapper.mapper_id,
-                        mapper.format,
-                        sum(int(r["processed"] or 0) for r in rollup),
-                        sum(int(r["deleted"] or 0) for r in rollup),
-                        "summary",
-                        None,
+                    for r in rollup:
+                        data = {
+                            "Status": r["status"],
+                            "Objects": int(r["n"]),
+                            "ProcessedRows": int(r["processed"] or 0),
+                            "DeletedRows": int(r["deleted"] or 0),
+                        }
+                        if r["sample_error"]:
+                            data["SampleError"] = r["sample_error"]
+                        emit("ObjectUpdateSummary", data)
+                        if r["status"] not in ("updated", "skipped"):
+                            counters["TotalObjectUpdateFailedCount"] += int(r["n"])
+                    all_stats.append(
+                        (
+                            mapper.mapper_id,
+                            mapper.format,
+                            sum(int(r["processed"] or 0) for r in rollup),
+                            sum(int(r["deleted"] or 0) for r in rollup),
+                            "summary",
+                            None,
+                        )
                     )
-                )
-        emit("ForgetPhaseEnded")
-        if (
-            counters["TotalObjectUpdateFailedCount"] == 0
-            and counters["TotalQueryFailedCount"] == 0
-        ):
-            emit("CleanupSucceeded")
+            emit("ForgetPhaseEnded")
+            if (
+                counters["TotalObjectUpdateFailedCount"] == 0
+                and counters["TotalQueryFailedCount"] == 0
+            ):
+                emit("CleanupSucceeded")
     except Exception as e:  # noqa: BLE001
         emit("Exception", {"Error": str(e)})
-    folded = fold_status(events, counters)
-    return JobResult(
-        job_id=job_id,
-        status=folded.get("JobStatus", "QUEUED"),
-        file_stats=all_stats,
-        events=events,
-        counters=counters,
-    )
+    return result()

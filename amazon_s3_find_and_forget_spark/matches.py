@@ -6,7 +6,8 @@ column-group token (reference: backend/lambdas/tasks/generate_queries.py:89-221)
 On Spark we keep the typed representation all the way through: a
 ``ColumnGroup`` holds typed match values per identifier column group and
 compiles directly into join/filter predicates; the stringified manifest is
-produced only as the auditable artifact (``build_manifest_df``).
+produced only as the auditable artifact (``manifest_rows``, written from the
+driver by ``write_manifest``).
 
 Semantics (parity):
 - a *Simple* match applies to EVERY identifier column of the mapper
@@ -20,6 +21,9 @@ Semantics (parity):
 
 from __future__ import annotations
 
+import contextlib
+import json
+import os
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -277,8 +281,53 @@ def build_manifest_df(
     )
 
 
-def write_manifest(df: DataFrame, path: str) -> None:
-    df.write.mode("append").partitionBy("JobId", "DataMapperId").json(path)
+# the characters Spark's ExternalCatalogUtils.escapePathName writes as
+# %XX in a partition directory name (off Windows); partition discovery
+# unescapes exactly these, so a manifest read back names its mapper
+_PATH_ESCAPES = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list("\"#%'*/:=?\\\x7f{[]^")
+)
+
+
+def escape_path_name(value: str) -> str:
+    """A partition value as Spark spells it in a directory name."""
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in value)
+
+
+def write_manifest(rows: list[tuple], path: str) -> None:
+    """Write ``MANIFEST_SCHEMA`` rows from the driver as Spark's
+    ``partitionBy("JobId", "DataMapperId").json(path)`` lays them out:
+    one JSON Lines file per (JobId, DataMapperId) directory, with the
+    partition values in the directory names only.
+
+    Each file is written under a dot-prefixed name, which Spark's readers
+    skip, and renamed into place, so a reader never sees a partial
+    manifest. A repeated write appends a file, as Spark's append mode
+    does. No Spark job runs.
+    """
+    names = MANIFEST_SCHEMA.fieldNames()[:-2]
+    parts: dict[tuple, list] = {}
+    for row in rows:
+        parts.setdefault(row[-2:], []).append(dict(zip(names, row[:-2])))
+    for (job_id, mapper_id), records in parts.items():
+        directory = os.path.join(
+            path,
+            f"JobId={escape_path_name(job_id)}",
+            f"DataMapperId={escape_path_name(mapper_id)}",
+        )
+        os.makedirs(directory, exist_ok=True)
+        name = f"part-00000-{uuid.uuid4()}.json"
+        tmp = os.path.join(directory, f".{name}.tmp")
+        try:
+            with open(tmp, "w", encoding="utf-8") as f:
+                for r in records:
+                    f.write(json.dumps(r, ensure_ascii=False, separators=(",", ":")))
+                    f.write("\n")
+            os.replace(tmp, os.path.join(directory, name))
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+            raise
 
 
 def register_manifest_table(

@@ -17,11 +17,15 @@ Two physical strategies, chosen by the caller:
    ``ObjectStore``: ``LocalObjectStore`` for posix lakes (read in place,
    atomic rename), ``S3ObjectStore`` for ``s3://``, or an injected one.
    The Spark scheduler replaces the reference's SQS + Fargate fleet (task
-   retry, speculation, backpressure for free), and like that fleet the
-   dispatch is sized to the work: ``forget_task_count`` gives a call one
-   task per ``TASK_BYTES`` of affected bytes, capped by the object count
-   and the parallelism. ``forget_files_df`` is the large-job
-   variant: the paths stay a DataFrame, rewritten via ``mapInPandas``.
+   retry, speculation, backpressure for free). That fleet drains one
+   queue of per-object messages, each carrying its own mapper's config
+   (submit_query_results.py:42-54); here a job's objects of every mapper
+   go out in one ``forget_files`` dispatch, each with its mapper's
+   ``rewriter``, and like the fleet the dispatch is sized to the work:
+   ``forget_task_count`` gives it one task per ``TASK_BYTES`` of
+   affected bytes, capped by the object count and the parallelism.
+   ``forget_files_df`` is the large-job variant, one call per mapper:
+   the paths stay a DataFrame, rewritten via ``mapInPandas``.
 
 Null semantics: a NULL identifier never matches, so anti-join/filter
 must KEEP null rows — ``forget_table`` wraps predicates in
@@ -54,8 +58,9 @@ from .find import null_safe_predicate
 # (2.0 MB decoded, masked and re-encoded in 0.082 s on a 4-vCPU VM,
 # perfbench/README.md "Traced breakdown"), so start-up alone would
 # justify a task per fraction of a MB. 4 MB is kept because no measured
-# workload tells the values apart: trickle gets one task per call for
-# any value from 1 to 64 MB.
+# workload tells the values apart: a trickle job rewrites 2.05-2.08 MB
+# in 10 objects of two mappers (seeds 3 and 4), all in one dispatch, so
+# it gets one task per job for any value from 2.1 MB up.
 TASK_BYTES = 4 * 1024 * 1024
 
 STATS_SCHEMA = (
@@ -273,11 +278,19 @@ def _rewrite_one(
             shutil.rmtree(workdir, ignore_errors=True)
 
 
-def _rewriter(groups, fmt, ignore_not_found, delete_old_versions, kms,
-              role_arn, store_factory, redact_columns):
-    """``_rewrite_one`` bound to everything but the object path: the one
-    place the dispatchers check the mode contract and serialize the
-    groups."""
+def rewriter(
+    groups: list[ColumnGroup],
+    fmt: str = "parquet",
+    ignore_not_found: bool = False,
+    delete_old_versions: bool = True,
+    kms=None,
+    role_arn: str = "",
+    store_factory=None,
+    redact_columns: list[str] | None = None,
+):
+    """``_rewrite_one`` bound to one mapper's config, everything but the
+    object path: the one place the dispatchers check the mode contract
+    and serialize the groups."""
     _check_redact_columns(redact_columns)
     return functools.partial(
         _rewrite_one, fmt=fmt, spec=groups_to_spec(groups),
@@ -300,31 +313,26 @@ def forget_task_count(sizes: list[int | None], parallelism: int) -> int:
 def forget_files(
     spark: SparkSession,
     files: list[str],
-    groups: list[ColumnGroup],
-    fmt: str = "parquet",
-    ignore_not_found: bool = False,
-    delete_old_versions: bool = True,
-    kms=None,
-    parallelism: int | None = None,
-    role_arn: str = "",
-    store_factory=None,
-    redact_columns: list[str] | None = None,
+    rewrites: list,
     sizes: list[int | None] | None = None,
+    parallelism: int | None = None,
 ) -> list[tuple]:
-    """Rewrite each affected file on the cluster; returns stats rows in
-    ``files`` order.
+    """Rewrite every affected object of a job in one Spark job; returns
+    stats rows in ``files`` order.
+
+    The work list is the reference's single queue of per-object messages
+    (submit_query_results.py:42-54), held as aligned lists: object
+    ``files[i]`` is rewritten by ``rewrites[i]``, its mapper's bound
+    ``rewriter``, and weighs ``sizes[i]`` bytes (``None``: unknown). The
+    objects of several mappers share one dispatch, so their paths must
+    not overlap (``data_mappers.check_no_overlap``).
 
     Eager by design: a deletion is an action, not a query — running it
     lazily would re-execute the side effect on every plan re-evaluation.
-    Each object is rewritten on its own, as the reference's
-    one-SQS-message-per-object (submit_query_results.py:42-54), in
-    ``forget_task_count(sizes)`` tasks (``sizes``: bytes per object,
-    aligned with ``files``): a few small objects share one task, as the
-    reference sizes its Fargate fleet to the queue
-    (orchestrate_ecs_service_scaling.py:13-21).
+    Each object is rewritten on its own, in ``forget_task_count(sizes)``
+    tasks: a few small objects share one task, as the reference sizes its
+    Fargate fleet to the queue (orchestrate_ecs_service_scaling.py:13-21).
     """
-    rewrite = _rewriter(groups, fmt, ignore_not_found, delete_old_versions,
-                        kms, role_arn, store_factory, redact_columns)
     if not files:
         return []
     sc = spark.sparkContext
@@ -332,8 +340,13 @@ def forget_files(
         sizes if sizes is not None else [None] * len(files),
         max(parallelism or sc.defaultParallelism, 1),
     )
-    rdd = sc.parallelize(files, numSlices=slices).map(rewrite)
-    return rdd.collect()
+    # each distinct rewrite (one per mapper) ships once, in the task
+    # closure; an object carries only its rewrite's index
+    distinct = list({id(r): r for r in rewrites}.values())
+    index = {id(r): i for i, r in enumerate(distinct)}
+    work = [(f, index[id(r)]) for f, r in zip(files, rewrites, strict=True)]
+    rdd = sc.parallelize(work, numSlices=slices)
+    return rdd.map(lambda w: distinct[w[1]](w[0])).collect()
 
 
 def forget_files_df(
@@ -362,8 +375,11 @@ def forget_files_df(
     Callers aggregate the stats distributively and collect only the
     per-status rollup.
     """
-    rewrite = _rewriter(groups, fmt, ignore_not_found, delete_old_versions,
-                        kms, role_arn, store_factory, redact_columns)
+    rewrite = rewriter(
+        groups, fmt=fmt, ignore_not_found=ignore_not_found,
+        delete_old_versions=delete_old_versions, kms=kms, role_arn=role_arn,
+        store_factory=store_factory, redact_columns=redact_columns,
+    )
     path_col = paths_df.columns[0]
     n = max(parallelism or spark.sparkContext.defaultParallelism, 1)
     cols = [f.split()[0] for f in STATS_SCHEMA.split(", ")]

@@ -36,12 +36,25 @@ OUT="$(cd "$WORK" && "${SUBMIT[@]}" \
 
 echo "$OUT"
 python3 - "$OUT" "$WORK" <<'PY'
-import json, sys, glob
+import json, os, sys, glob
 job = json.loads(sys.argv[1])
 assert job["JobStatus"] == "COMPLETED", job
 assert job["TotalObjectUpdatedCount"] >= 1, job
 assert job["TotalQueryFailedCount"] == 0, job
+# one Find query per job, whatever the number of mappers
+assert job["TotalQueryCount"] == 1, job
 print("SMOKE OK:", f"updated={job['TotalObjectUpdatedCount']}")
+# the driver wrote the audit manifest: one visible JSON Lines file per
+# (job, mapper), one line per match id, no temp file left behind
+(d,) = glob.glob(f"{sys.argv[2]}/state/manifests/JobId=*/DataMapperId=lineitem")
+names = os.listdir(d)
+visible = [n for n in names if not n.startswith(".")]
+assert len(visible) == 1 and visible[0].endswith(".json"), names
+assert visible == names, f"temp file left in the manifest: {names}"
+with open(os.path.join(d, visible[0])) as f:
+    lines = [json.loads(line) for line in f]
+assert sorted(r["MatchId"] for r in lines) == [["1"], ["7"]], lines
+print("SMOKE OK: one driver-written manifest file with both match ids")
 PY
 # the rewrite adds no visible entry to the lake: staging, version store
 # and property sidecars are all dot-prefixed

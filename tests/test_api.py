@@ -3,6 +3,7 @@ process with single-job guard, job/event listing, match-id redaction."""
 
 import os
 import shutil
+import uuid
 
 import pytest
 
@@ -160,7 +161,24 @@ def _customers_lake(path):
     return path
 
 
-def test_manifest_one_file_per_job_and_mapper(engine, spark, lake, tmp_path):
+def test_manifest_one_file_per_job_and_mapper(
+    engine, spark, lake, tmp_path, monkeypatch
+):
+    from amazon_s3_find_and_forget_spark import matches
+
+    # write_manifest runs on the driver: no Spark job under its group
+    sc = spark.sparkContext
+    group = f"manifest-{uuid.uuid4().hex}"
+    real = matches.write_manifest
+
+    def grouped(*args, **kwargs):
+        sc.setJobGroup(group, "manifest")
+        try:
+            return real(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(matches, "write_manifest", grouped)
     cust = _customers_lake(str(tmp_path / "customers"))
     idle = _customers_lake(str(tmp_path / "idle"))
     engine.put_data_mapper(
@@ -168,9 +186,18 @@ def test_manifest_one_file_per_job_and_mapper(engine, spark, lake, tmp_path):
     )
     engine.put_data_mapper("li", {"Location": lake, "Columns": ["l_orderkey"]})
     engine.put_data_mapper("idle", {"Location": idle, "Columns": ["customer_id"]})
+    # ids Spark escapes in a directory name, and one it keeps as UTF-8
+    for mid, loc in (("a=b:c%d", "escaped"), ("kunde-ü", "unicode")):
+        engine.put_data_mapper(
+            mid,
+            {
+                "Location": _customers_lake(str(tmp_path / loc)),
+                "Columns": ["customer_id"],
+            },
+        )
     simple, composite = engine.enqueue_matches(
         [
-            {"MatchId": 7, "DataMappers": ["m/1", "li"]},
+            {"MatchId": 7, "DataMappers": ["m/1", "li", "a=b:c%d", "kunde-ü"]},
             {
                 "MatchId": [
                     {"Column": "region", "Value": "eu"},
@@ -183,16 +210,28 @@ def test_manifest_one_file_per_job_and_mapper(engine, spark, lake, tmp_path):
     )
     job = engine.process_queue()
     assert job["JobStatus"] == "COMPLETED"
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
     jid = job["Id"]
     root = os.path.join(engine.state_dir, "manifests", f"JobId={jid}")
-    # the mapper with no routed items gets no partition; "/" is escaped
-    assert sorted(os.listdir(root)) == ["DataMapperId=li", "DataMapperId=m%2F1"]
-    assert job["Manifests"] == [
-        os.path.join(root, "DataMapperId=li"),
-        os.path.join(root, "DataMapperId=m%2F1"),
+    # the mapper with no routed items gets no partition; "/", "=", ":"
+    # and "%" are escaped as Spark escapes them
+    expected_dirs = [
+        "DataMapperId=a%3Db%3Ac%25d",
+        "DataMapperId=kunde-ü",
+        "DataMapperId=li",
+        "DataMapperId=m%2F1",
     ]
+    assert sorted(os.listdir(root)) == expected_dirs
+    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    for mid in ("m/1", "a=b:c%d", "kunde-ü"):
+        assert f"DataMapperId={escape.escapePathName(mid)}" in expected_dirs
+    for c in map(chr, range(1, 0x200)):
+        assert matches.escape_path_name(c) == escape.escapePathName(c), repr(c)
+    assert job["Manifests"] == [os.path.join(root, d) for d in expected_dirs]
     for d in job["Manifests"]:
+        # one visible JSON Lines file, and no temp file left behind
         assert len([f for f in os.listdir(d) if f.endswith(".json")]) == 1
+        assert not [f for f in os.listdir(d) if f.startswith(".")]
 
     got = {
         (r.DataMapperId, tuple(r.Columns), tuple(r.MatchId),
@@ -210,6 +249,8 @@ def test_manifest_one_file_per_job_and_mapper(engine, spark, lake, tmp_path):
         ("m/1", ("customer_id", "region"), ("8", "eu"), cid, ct,
          "customer_id_S3F2COMP_region", "8_S3F2COMP_eu"),
         ("li", ("l_orderkey",), ("7",), sid, st, "l_orderkey", "7"),
+        ("a=b:c%d", ("customer_id",), ("7",), sid, st, "customer_id", "7"),
+        ("kunde-ü", ("customer_id",), ("7",), sid, st, "customer_id", "7"),
     }
 
 

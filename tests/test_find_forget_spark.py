@@ -19,7 +19,11 @@ from amazon_s3_find_and_forget_spark.plans.find import (
     find_affected_files,
     find_matching_rows,
 )
-from amazon_s3_find_and_forget_spark.plans.forget import forget_files, forget_table
+from amazon_s3_find_and_forget_spark.plans.forget import (
+    forget_files,
+    forget_table,
+    rewriter,
+)
 
 
 @pytest.fixture()
@@ -165,7 +169,8 @@ def test_job_find_forget_consistency_failure(spark, tmp_path):
     items = [QueueItem(match_id="zzz")]
     df = spark.read.parquet(loc)
     groups = build_column_groups(df.schema, ["customer_id"], items)
-    stats = forget_files(spark, files, groups, fmt="parquet")
+    rewrite = rewriter(groups, fmt="parquet")
+    stats = forget_files(spark, files, [rewrite] * len(files))
     assert stats[0][4] == "failed"
     assert "no rows deleted" in stats[0][5]
 
@@ -323,6 +328,91 @@ def test_transient_query_failure_recovers_to_completed(
     names = [e["EventName"] for e in result.events]
     assert "QueryRetried" in names and "QueryFailed" not in names
     assert "CleanupSucceeded" in names
+
+
+def _lake_bytes(root):
+    """Every file under ``root`` (hidden ones too) with its bytes."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            with open(os.path.join(d, n), "rb") as f:
+                out[os.path.relpath(os.path.join(d, n), root)] = f.read()
+    return out
+
+
+def test_find_failure_on_any_mapper_rewrites_nothing(spark, tmp_path):
+    """Find finishes for every mapper before Forget starts: when the
+    second mapper's Find fails on every attempt (a corrupt object in a
+    DDL-schema JSON lake), the job ends FIND_FAILED and neither lake is
+    touched — the first mapper's objects are not rewritten either."""
+    import gzip
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq_lake = tmp_path / "pq"
+    pq_lake.mkdir()
+    pq.write_table(
+        pa.table({"customer_id": pa.array([1, 2, 3], pa.int64())}),
+        str(pq_lake / "part-0.parquet"),
+    )
+    js_lake = tmp_path / "js"
+    js_lake.mkdir()
+    with gzip.open(js_lake / "a.json.gz", "wt") as f:
+        f.write('{"customer_id": 2}\n{"customer_id": 4}\n')
+    (js_lake / "b.json.gz").write_bytes(b"\x1f\x8b\x08 not gzip data")
+    before = {p: _lake_bytes(p) for p in (pq_lake, js_lake)}
+    result = run_job(
+        spark,
+        [
+            DataMapper("pq", str(pq_lake), ["customer_id"]),
+            DataMapper(
+                "js", str(js_lake), ["customer_id"], format="json",
+                schema="customer_id bigint",
+            ),
+        ],
+        [QueueItem(match_id=2)],
+        query_max_retries=1,
+    )
+    assert result.status == "FIND_FAILED", result.events
+    names = [e["EventName"] for e in result.events]
+    assert names.count("QueryRetried") == 1 and names.count("QueryFailed") == 1
+    assert "QuerySucceeded" not in names
+    assert names[-1] == "FindPhaseFailed"
+    # one query per attempt, naming every mapper it covered
+    failed = next(e for e in result.events if e["EventName"] == "QueryFailed")
+    assert failed["EventData"]["DataMapperIds"] == ["pq", "js"]
+    assert result.counters["TotalQueryFailedCount"] == 1
+    assert result.file_stats == []
+    assert {p: _lake_bytes(p) for p in (pq_lake, js_lake)} == before
+
+
+def test_overlapping_mappers_rewrite_nothing(spark, tmp_path):
+    """One Forget dispatch assumes no object belongs to two mappers, so a
+    job over overlapping mapper locations fails before any rewrite."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    pq.write_table(
+        pa.table({"customer_id": pa.array([1, 2, 3], pa.int64())}),
+        str(lake / "part-0.parquet"),
+    )
+    before = _lake_bytes(lake)
+    result = run_job(
+        spark,
+        [
+            DataMapper("a", str(lake), ["customer_id"]),
+            DataMapper("b", f"{lake}/", ["customer_id"]),
+        ],
+        [QueueItem(match_id=2)],
+        manifest_dir=str(tmp_path / "manifests"),
+    )
+    assert result.status == "FAILED", result.events
+    assert "overlapping" in result.events[-1]["EventData"]["Error"]
+    assert _lake_bytes(lake) == before
+    assert not os.path.exists(tmp_path / "manifests")
 
 
 def test_dataframe_handoff_matches_list_path(spark, tmp_path):

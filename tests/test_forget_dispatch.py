@@ -52,20 +52,33 @@ def test_unknown_sizes_keep_one_task_per_object():
 
 @pytest.fixture()
 def small_lake(tmp_path):
+    return _small_parquet_lake(str(tmp_path / "small"))
+
+
+def _small_parquet_lake(loc):
     """5 small Parquet objects, each holding one row of customer 1."""
-    loc = tmp_path / "small"
-    loc.mkdir()
+    os.makedirs(loc)
     for k in range(5):
         pq.write_table(
             pa.table({"customer_id": pa.array([1, 10 + k, 20 + k], pa.int64())}),
-            str(loc / f"part-{k}.parquet"),
+            os.path.join(loc, f"part-{k}.parquet"),
         )
-    return str(loc)
+    return loc
+
+
+def _small_json_lake(loc):
+    """5 small JSON Lines objects, each holding one line of customer 1."""
+    os.makedirs(loc)
+    for k in range(5):
+        with open(os.path.join(loc, f"part-{k}.json"), "w") as f:
+            f.writelines(f'{{"customer_id": {c}}}\n' for c in (1, 30 + k))
+    return loc
 
 
 def _forget_tasks(spark, monkeypatch, run):
-    """Run ``run()`` and count the Spark tasks its Forget calls launched,
-    read from the status tracker for a job group set around them."""
+    """Run ``run()`` and count the Spark jobs and tasks its Forget calls
+    launched, read from the status tracker for a job group set around
+    them."""
     sc = spark.sparkContext
     group = f"forget-{uuid.uuid4().hex}"
     real = forget_mod.forget_files
@@ -77,8 +90,9 @@ def _forget_tasks(spark, monkeypatch, run):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
 
-    monkeypatch.setattr(forget_mod, "forget_files", grouped)
-    result = run()
+    with monkeypatch.context() as m:
+        m.setattr(forget_mod, "forget_files", grouped)
+        result = run()
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
     assert jobs
@@ -87,30 +101,51 @@ def _forget_tasks(spark, monkeypatch, run):
         for j in jobs
         for s in tracker.getJobInfo(j).stageIds
     )
-    return result, tasks
+    return result, len(jobs), tasks
 
 
-def test_small_job_forgets_in_one_task(spark, small_lake, monkeypatch):
-    mapper = DataMapper("small", small_lake, ["customer_id"])
-    result, tasks = _forget_tasks(
-        spark,
-        monkeypatch,
-        lambda: run_job(
-            spark, [mapper], [QueueItem(match_id=1)], forget_parallelism=4
-        ),
-    )
-    assert result.status == "COMPLETED", result.events
-    assert [s[4] for s in result.file_stats] == ["updated"] * 5
-    assert tasks == 1
-    spark.catalog.clearCache()
-    assert spark.read.parquet(small_lake).where("customer_id = 1").count() == 0
+def test_small_job_forgets_in_one_task(spark, tmp_path, monkeypatch):
+    # one Parquet mapper, then a second (JSON) mapper sharing the one
+    # Forget job and task
+    for case, with_json in enumerate((False, True)):
+        small_lake = _small_parquet_lake(str(tmp_path / f"small-{case}"))
+        mappers = [DataMapper("small", small_lake, ["customer_id"])]
+        if with_json:
+            json_lake = _small_json_lake(str(tmp_path / f"json-{case}"))
+            mappers.append(
+                DataMapper("js", json_lake, ["customer_id"], format="json")
+            )
+        result, jobs, tasks = _forget_tasks(
+            spark,
+            monkeypatch,
+            lambda: run_job(
+                spark, mappers, [QueueItem(match_id=1)], forget_parallelism=4
+            ),
+        )
+        assert result.status == "COMPLETED", result.events
+        objects = 5 * len(mappers)
+        assert [s[4] for s in result.file_stats] == ["updated"] * objects
+        # every object is rewritten exactly once, each by its own mapper
+        paths = [s[0] for s in result.file_stats]
+        assert len(set(paths)) == objects
+        assert sorted(s[1] for s in result.file_stats) == sorted(
+            m.format for m in mappers for _ in range(5)
+        )
+        assert (jobs, tasks) == (1, 1)
+        spark.catalog.clearCache()
+        left = spark.read.parquet(small_lake)
+        assert left.where("customer_id = 1").count() == 0
+        if with_json:
+            left = spark.read.json(json_lake)
+            assert left.where("customer_id = 1").count() == 0
+            assert left.count() == 5
 
 
 def test_job_over_task_bytes_keeps_full_width(spark, small_lake, monkeypatch):
     # every object outweighs a 1-byte task: min(files, parallelism)
     monkeypatch.setattr(forget_mod, "TASK_BYTES", 1)
     mapper = DataMapper("small", small_lake, ["customer_id"])
-    result, tasks = _forget_tasks(
+    result, _, tasks = _forget_tasks(
         spark,
         monkeypatch,
         lambda: run_job(
@@ -165,3 +200,34 @@ def test_job_over_percent_encoded_paths(spark, tmp_path):
     spark.catalog.clearCache()
     left = spark.read.parquet(loc)
     assert sorted(r.customer_id for r in left.collect()) == [2, 3]
+
+
+# --- job tags ----------------------------------------------------------------
+
+
+def test_forget_tasks_carry_job_and_phase_tags(spark, small_lake, tmp_path):
+    """A Forget task runs under the job's tag and the Forget phase tag;
+    run_job leaves no tag behind on the calling thread."""
+    seen = str(tmp_path / "tags")
+
+    def factory(arn):
+        from pyspark import TaskContext
+
+        from amazon_s3_find_and_forget_spark.sources.object_store import (
+            LocalObjectStore,
+        )
+
+        with open(seen, "a") as f:
+            f.write(TaskContext.get().getLocalProperty("spark.job.tags") + "\n")
+        return LocalObjectStore()
+
+    mapper = DataMapper("small", small_lake, ["customer_id"])
+    result = run_job(
+        spark, [mapper], [QueueItem(match_id=1)], job_id="tagged-job",
+        store_factory=factory,
+    )
+    assert result.status == "COMPLETED", result.events
+    with open(seen) as f:
+        tags = {frozenset(line.strip().split(",")) for line in f}
+    assert tags == {frozenset({"s3f2-job-tagged-job", "s3f2-phase-forget"})}
+    assert set(spark.sparkContext.getJobTags()) == set()

@@ -864,7 +864,7 @@ def test_forget_files_threads_role_arn_to_store_factory(spark, tmp_path):
     """run_job-level contract: the mapper's RoleArn string reaches the
     executor-side store factory (per-task get_session parity,
     main.py:140,154); a wrong ARN would fail the object."""
-    from amazon_s3_find_and_forget_spark.plans.forget import forget_files
+    from amazon_s3_find_and_forget_spark.plans.forget import forget_files, rewriter
     from amazon_s3_find_and_forget_spark.matches import ColumnGroup
 
     obj = tmp_path / "p.parquet"
@@ -883,9 +883,7 @@ def test_forget_files_threads_role_arn_to_store_factory(spark, tmp_path):
             raise ValueError(f"wrong arn reached the store factory: {arn}")
         return LocalObjectStore()
 
-    stats = forget_files(
-        spark,
-        [str(obj)],
+    rewrite = rewriter(
         [
             ColumnGroup(
                 columns=["customer_id"],
@@ -898,6 +896,7 @@ def test_forget_files_threads_role_arn_to_store_factory(spark, tmp_path):
         role_arn=expected,
         store_factory=factory,
     )
+    stats = forget_files(spark, [str(obj)], [rewrite])
     assert stats[0][4] == "updated", stats
     assert stats[0][3] == 1
     # and the rewrite really went through the store commit
