@@ -228,22 +228,6 @@ def _job_tag(sc, tag: str):
         sc.removeJobTag(tag)
 
 
-def _rewrite_options(mapper, kms, store_factory) -> dict:
-    """One mapper's rewrite config, as ``rewriter`` and
-    ``forget_files_df`` take it."""
-    return dict(
-        fmt=mapper.format,
-        ignore_not_found=mapper.ignore_object_not_found,
-        delete_old_versions=mapper.delete_old_versions,
-        kms=kms,
-        # cross-account mappers: each rewrite task builds its client
-        # from the ARN (reference main.py:140,154)
-        role_arn=getattr(mapper, "role_arn", ""),
-        store_factory=store_factory,
-        redact_columns=mapper.effective_redact_columns(),
-    )
-
-
 def _refresh(spark: SparkSession, mapper) -> None:
     """The rewrite changed files behind Spark's back: drop any cached file
     listing / metadata so later reads in this session see the new objects
@@ -264,7 +248,6 @@ def run_job(
     manifest_dir: str | None = None,
     query_max_retries: int = 2,
     forget_parallelism: int | None = None,
-    path_handoff_threshold: int = 100_000,
     manifest_table: str | None = None,
     store_factory=None,
 ) -> JobResult:
@@ -279,38 +262,35 @@ def run_job(
     2. Find: ONE query. Every routed mapper's affected-file relation
        (broadcast semi-join or pushed predicates) is tagged with the
        mapper's ordinal, the relations are unioned, and one collect
-       probes ``path_handoff_threshold + 1`` rows. Each attempt emits one
-       ``QuerySucceeded``, ``QueryRetried`` or ``QueryFailed`` event
-       naming all the ``DataMapperIds``. Past the retry budget the job
-       ends ``FIND_FAILED`` and no object has been rewritten.
-    3. Forget: ONE dispatch (``forget_files``) over the objects of every
-       mapper, each rewritten with its own mapper's config, like the
-       reference's single queue of per-object messages; then each mapper's
-       cached listing is refreshed and the events fold into stats +
-       status.
+       brings the (path, size, mapper) list to the driver. Each attempt
+       emits one ``QuerySucceeded``, ``QueryRetried`` or ``QueryFailed``
+       event naming all the ``DataMapperIds``. Past the retry budget the
+       job ends ``FIND_FAILED`` and no object has been rewritten.
+    3. Forget: ONE dispatch (``forget_files``, its task count sized by
+       the bytes) over the objects of every mapper, each rewritten with
+       its own mapper's config, like the reference's single queue of
+       per-object messages; then each mapper's cached listing is
+       refreshed, every object gets its own event and the events fold
+       into stats + status.
 
-    The Find->Forget handoff is decided per job. Up to
-    ``path_handoff_threshold`` affected objects over all mappers take the
-    list path above (driver-side paths and sizes, per-object events —
-    reference parity; ``forget_files`` sizes its task count by the
-    bytes). Above it EVERY mapper takes the large-job path on its own:
-    its affected-path relation stays a DataFrame end to end
-    (``forget_files_df``), the rewrite fans out via ``mapInPandas``,
-    stats aggregate distributively, and only the per-status rollup
-    reaches the driver — no driver-memory ceiling at millions of
-    objects. Large jobs get per-status summary events instead of
-    per-object ones.
+    Every job takes this path, whatever its size: the driver holds the
+    object list, its stats rows and one event per object, so driver
+    memory grows with the affected objects (deploy/README.md "Driver
+    sizing" gives the measured bytes per object).
 
-    Mapper locations must not overlap (``check_no_overlap``; a job with
-    overlapping mappers fails before it writes anything): one dispatch
-    assumes no object belongs to two mappers. The job's Spark work is
+    One dispatch assumes no object belongs to two mappers: overlapping
+    mapper locations (``check_no_overlap``) fail the job before it writes
+    anything, and an object that Find returns under two mappers (a
+    ``table:`` mapper over another mapper's directory) fails it before
+    any rewrite. The job's Spark work is
     tagged ``s3f2-job-<job_id>``, and its phases ``s3f2-phase-find`` and
     ``s3f2-phase-forget`` (see ``SparkContext.cancelJobsWithTag``).
     """
     from .data_mappers import check_no_overlap
     from .matches import build_column_groups, route_items
     from .plans.find import find_affected_files
-    from .plans.forget import forget_files, forget_files_df, rewriter
+    from .plans.forget import forget_files, rewriter
+    from .sources import object_path
 
     job_id = job_id or str(uuid.uuid4())
     events: list = []
@@ -397,10 +377,7 @@ def run_job(
                                 for i, (df, groups) in enumerate(reads)
                             ],
                         )
-                        # probe one past the threshold: a small job gets
-                        # its complete list, a large one only proves it is
-                        # large
-                        found = union.limit(path_handoff_threshold + 1).collect()
+                        found = union.collect()
                         name, data = "QuerySucceeded", {}
                     except Exception as e:  # noqa: BLE001
                         # a failure with retries left records the attempt
@@ -431,82 +408,57 @@ def run_job(
                 counters["TotalQueryFailedCount"] += 1
                 emit("FindPhaseFailed")
                 return result()
-            if len(found) <= path_handoff_threshold:
-                rewrites = [
-                    rewriter(groups, **_rewrite_options(mapper, kms, store_factory))
-                    for (mapper, _), (_, groups) in zip(routed_mappers, reads)
-                ]
-                with _job_tag(sc, "s3f2-phase-forget"):
-                    stats = forget_files(
-                        spark,
-                        [r[0] for r in found],
-                        [rewrites[r[2]] for r in found],
-                        # bytes per object size the task count
-                        sizes=[r[1] for r in found],
-                        parallelism=forget_parallelism,
+            owners: dict = {}
+            for path, _, i in found:
+                j = owners.setdefault(object_path(path), i)
+                if j != i:
+                    # a table: mapper over another mapper's directory gets
+                    # past check_no_overlap; rewriting its objects twice
+                    # would fail the second rewrite with no rows to delete
+                    raise ValueError(
+                        f"Object {path} is found by data mappers "
+                        f"{routed_mappers[j][0].mapper_id} and "
+                        f"{routed_mappers[i][0].mapper_id}"
                     )
-                for mapper, _ in routed_mappers:
-                    _refresh(spark, mapper)
-                all_stats.extend(stats)
-                for row in stats:
-                    status = row[4]
-                    if status == "updated":
-                        emit("ObjectUpdated", {"Object": row[0]})
-                    elif status == "skipped":
-                        emit("ObjectUpdateSkipped", {"Object": row[0]})
-                    else:
-                        counters["TotalObjectUpdateFailedCount"] += 1
-                        failed = {"Object": row[0], "Error": row[5]}
-                        emit("ObjectUpdateFailed", failed)
-                        if status == "rollback_failed":
-                            emit("ObjectRollbackFailed", dict(failed))
-            else:
-                for (mapper, _), (df, groups) in zip(routed_mappers, reads):
-                    # large-job path: the affected-path relation never
-                    # leaves the cluster; stats aggregate distributively
-                    with _job_tag(sc, "s3f2-phase-forget"):
-                        stats_rel = forget_files_df(
-                            spark,
-                            find_affected_files(df, groups).select("file_path"),
-                            groups,
-                            parallelism=forget_parallelism,
-                            **_rewrite_options(mapper, kms, store_factory),
-                        )
-                    _refresh(spark, mapper)
-                    # per-status rollup, computed on the cluster; only a
-                    # handful of rows ever reach the driver for a large job
-                    rollup = (
-                        stats_rel.groupBy("status")
-                        .agg(
-                            F.count(F.lit(1)).alias("n"),
-                            F.sum("processed_rows").alias("processed"),
-                            F.sum("deleted_rows").alias("deleted"),
-                            F.max("error").alias("sample_error"),
-                        )
-                        .collect()
-                    )
-                    for r in rollup:
-                        data = {
-                            "Status": r["status"],
-                            "Objects": int(r["n"]),
-                            "ProcessedRows": int(r["processed"] or 0),
-                            "DeletedRows": int(r["deleted"] or 0),
-                        }
-                        if r["sample_error"]:
-                            data["SampleError"] = r["sample_error"]
-                        emit("ObjectUpdateSummary", data)
-                        if r["status"] not in ("updated", "skipped"):
-                            counters["TotalObjectUpdateFailedCount"] += int(r["n"])
-                    all_stats.append(
-                        (
-                            mapper.mapper_id,
-                            mapper.format,
-                            sum(int(r["processed"] or 0) for r in rollup),
-                            sum(int(r["deleted"] or 0) for r in rollup),
-                            "summary",
-                            None,
-                        )
-                    )
+            rewrites = [
+                rewriter(
+                    groups,
+                    fmt=mapper.format,
+                    ignore_not_found=mapper.ignore_object_not_found,
+                    delete_old_versions=mapper.delete_old_versions,
+                    kms=kms,
+                    # cross-account mappers: each rewrite task builds its
+                    # client from the ARN (reference main.py:140,154)
+                    role_arn=getattr(mapper, "role_arn", ""),
+                    store_factory=store_factory,
+                    redact_columns=mapper.effective_redact_columns(),
+                )
+                for (mapper, _), (_, groups) in zip(routed_mappers, reads)
+            ]
+            with _job_tag(sc, "s3f2-phase-forget"):
+                stats = forget_files(
+                    spark,
+                    [r[0] for r in found],
+                    [rewrites[r[2]] for r in found],
+                    # bytes per object size the task count
+                    sizes=[r[1] for r in found],
+                    parallelism=forget_parallelism,
+                )
+            for mapper, _ in routed_mappers:
+                _refresh(spark, mapper)
+            all_stats.extend(stats)
+            for row in stats:
+                status = row[4]
+                if status == "updated":
+                    emit("ObjectUpdated", {"Object": row[0]})
+                elif status == "skipped":
+                    emit("ObjectUpdateSkipped", {"Object": row[0]})
+                else:
+                    counters["TotalObjectUpdateFailedCount"] += 1
+                    failed = {"Object": row[0], "Error": row[5]}
+                    emit("ObjectUpdateFailed", failed)
+                    if status == "rollback_failed":
+                        emit("ObjectRollbackFailed", dict(failed))
             emit("ForgetPhaseEnded")
             if (
                 counters["TotalObjectUpdateFailedCount"] == 0

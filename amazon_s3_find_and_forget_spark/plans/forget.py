@@ -23,9 +23,9 @@ Two physical strategies, chosen by the caller:
    go out in one ``forget_files`` dispatch, each with its mapper's
    ``rewriter``, and like the fleet the dispatch is sized to the work:
    ``forget_task_count`` gives it one task per ``TASK_BYTES`` of
-   affected bytes, capped by the object count and the parallelism.
-   ``forget_files_df`` is the large-job variant, one call per mapper:
-   the paths stay a DataFrame, rewritten via ``mapInPandas``.
+   affected bytes, capped by the object count and the parallelism. It
+   is the one dispatcher: a job of any size takes it, with the object
+   list collected on the driver as the fleet's queue holds it.
 
 Null semantics: a NULL identifier never matches, so anti-join/filter
 must KEEP null rows — ``forget_table`` wraps predicates in
@@ -289,8 +289,8 @@ def rewriter(
     redact_columns: list[str] | None = None,
 ):
     """``_rewrite_one`` bound to one mapper's config, everything but the
-    object path: the one place the dispatchers check the mode contract
-    and serialize the groups."""
+    object path: the one place the dispatch checks the mode contract
+    and serializes the groups."""
     _check_redact_columns(redact_columns)
     return functools.partial(
         _rewrite_one, fmt=fmt, spec=groups_to_spec(groups),
@@ -332,6 +332,8 @@ def forget_files(
     Each object is rewritten on its own, in ``forget_task_count(sizes)``
     tasks: a few small objects share one task, as the reference sizes its
     Fargate fleet to the queue (orchestrate_ecs_service_scaling.py:13-21).
+    Every job takes this call whatever its size; the lists and the
+    returned rows live on the driver (deploy/README.md "Driver sizing").
     """
     if not files:
         return []
@@ -347,51 +349,6 @@ def forget_files(
     work = [(f, index[id(r)]) for f, r in zip(files, rewrites, strict=True)]
     rdd = sc.parallelize(work, numSlices=slices)
     return rdd.map(lambda w: distinct[w[1]](w[0])).collect()
-
-
-def forget_files_df(
-    spark: SparkSession,
-    paths_df: DataFrame,
-    groups: list[ColumnGroup],
-    fmt: str = "parquet",
-    ignore_not_found: bool = False,
-    delete_old_versions: bool = True,
-    kms=None,
-    parallelism: int | None = None,
-    role_arn: str = "",
-    store_factory=None,
-    redact_columns: list[str] | None = None,
-) -> DataFrame:
-    """Distributed Find->Forget handoff: rewrite every file in ``paths_df``
-    without the path list ever materializing on the driver.
-
-    ``forget_files`` round-trips the affected-path list through a driver
-    collect — fine at the reference's 45k-object scenario, a driver-memory
-    bottleneck at millions of objects. Here the Find output stays a
-    DataFrame: repartition (paths only — a few bytes per row), rewrite
-    per-partition via ``mapInPandas``, and return the per-file stats
-    relation, eagerly localCheckpointed so the destructive side effect
-    runs exactly once no matter how often the stats are consumed.
-    Callers aggregate the stats distributively and collect only the
-    per-status rollup.
-    """
-    rewrite = rewriter(
-        groups, fmt=fmt, ignore_not_found=ignore_not_found,
-        delete_old_versions=delete_old_versions, kms=kms, role_arn=role_arn,
-        store_factory=store_factory, redact_columns=redact_columns,
-    )
-    path_col = paths_df.columns[0]
-    n = max(parallelism or spark.sparkContext.defaultParallelism, 1)
-    cols = [f.split()[0] for f in STATS_SCHEMA.split(", ")]
-
-    def rewrite_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame([rewrite(p) for p in pdf[path_col]], columns=cols)
-
-    out = paths_df.repartition(n).mapInPandas(rewrite_batches, STATS_SCHEMA)
-    return out.localCheckpoint(eager=True)
 
 
 def stats_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:

@@ -12,7 +12,8 @@ execution modes, mirroring how ``screen.py`` streams the Find side.
 
 Scale shape: per micro-batch work is bounded by the batch's match
 count; the rewrite inside ``run_job`` keeps its distributed fan-out
-(broadcast semi-join Find, per-file ``mapInPandas`` Forget). The
+(broadcast semi-join Find, one ``forget_files`` dispatch sized by the
+affected bytes). The
 checkpoint makes queue-file discovery exactly-once across restarts —
 re-running after a crash reprocesses no drained item.
 """

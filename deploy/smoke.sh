@@ -39,7 +39,11 @@ python3 - "$OUT" "$WORK" <<'PY'
 import json, os, sys, glob
 job = json.loads(sys.argv[1])
 assert job["JobStatus"] == "COMPLETED", job
-assert job["TotalObjectUpdatedCount"] >= 1, job
+# the lake is the single object lineitem.parquet: rewritten once, with
+# no object skipped or failed
+assert job["TotalObjectUpdatedCount"] == 1, job
+assert job["TotalObjectUpdateSkippedCount"] == 0, job
+assert job["TotalObjectUpdateFailedCount"] == 0, job
 assert job["TotalQueryFailedCount"] == 0, job
 # one Find query per job, whatever the number of mappers
 assert job["TotalQueryCount"] == 1, job

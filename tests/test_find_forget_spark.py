@@ -415,40 +415,40 @@ def test_overlapping_mappers_rewrite_nothing(spark, tmp_path):
     assert not os.path.exists(tmp_path / "manifests")
 
 
-def test_dataframe_handoff_matches_list_path(spark, tmp_path):
-    """Forcing the large-job path (threshold 0) must rewrite the same
-    rows with equal counters/status as the driver-list path — with the
-    path list never collected and per-status summary events instead of
-    per-object ones."""
+def test_object_found_by_two_mappers_rewrites_nothing(spark, tmp_path):
+    """A table: mapper over a path mapper's directory gets past the
+    location overlap check; Find then returns the same object under both
+    mappers, and the job fails before any rewrite rather than rewriting
+    the object twice."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from amazon_s3_find_and_forget_spark.data_mappers import DataMapper
-    from amazon_s3_find_and_forget_spark.jobs import run_job
-    from amazon_s3_find_and_forget_spark.matches import QueueItem
-
-    results = {}
-    for mode, threshold in (("list", 100_000), ("dataframe", 0)):
-        lake = tmp_path / f"lake-{mode}"
-        lake.mkdir()
-        for i, ids in enumerate(([1, 2, 3, 4], [5, 6, 7, 8])):
-            pq.write_table(
-                pa.table({"customer_id": pa.array(ids, pa.int64())}),
-                str(lake / f"part-{i}.parquet"),
-            )
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    pq.write_table(
+        pa.table({"customer_id": pa.array([1, 2, 3], pa.int64())}),
+        str(lake / "part-0.parquet"),
+    )
+    before = _lake_bytes(lake)
+    table = "s3f2_two_mapper_object"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.catalog.createTable(table, path=str(lake), source="parquet")
+    try:
         result = run_job(
             spark,
-            [DataMapper(f"m{mode}", str(lake), ["customer_id"])],
-            [QueueItem(match_id=2), QueueItem(match_id=7)],
-            path_handoff_threshold=threshold,
+            [
+                DataMapper("path", str(lake), ["customer_id"]),
+                DataMapper("table", f"table:{table}", ["customer_id"]),
+            ],
+            [QueueItem(match_id=2)],
         )
-        assert result.status == "COMPLETED", result.events
-        survivors = sorted(
-            r.customer_id for r in spark.read.parquet(str(lake)).collect()
-        )
-        results[mode] = (survivors, result.counters)
-    assert results["list"][0] == results["dataframe"][0] == [1, 3, 4, 5, 6, 8]
-    assert results["list"][1] == results["dataframe"][1]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    assert result.status == "FAILED", result.events
+    error = result.events[-1]["EventData"]["Error"]
+    assert "part-0.parquet" in error and "path" in error and "table" in error
+    assert result.file_stats == []
+    assert _lake_bytes(lake) == before
 
 
 def test_manifest_registered_as_catalog_table(spark, tmp_path):
@@ -631,7 +631,7 @@ def test_redact_mapper_validation():
         )
 
 
-# --- chaos tests: the distributed (DataFrame) Forget handoff ---------------
+# --- chaos tests: the Forget dispatch at scale and under failures ---------
 
 
 def _chaos_synthetic_factory():
@@ -692,56 +692,45 @@ def _chaos_synthetic_factory():
     return factory
 
 
-def test_forget_files_df_100k_paths_with_failures(spark):
-    """Chaos e2e at the handoff scale point: 100,001 affected paths —
-    past the run_job threshold where the path list must never touch the
-    driver — with one object vanished mid-job (ignore_not_found) and
-    one concurrent-writer conflict forcing a rollback. The per-file
-    stats relation must aggregate the exact per-status counts
-    distributively."""
-    from pyspark.sql import functions as F
+def test_forget_files_100k_paths_with_failures(spark):
+    """Chaos e2e at scale: 100,001 affected paths through the one
+    dispatcher, with one object vanished mid-job (ignore_not_found) and
+    one concurrent-writer conflict forcing a rollback. Every object gets
+    its own stats row, in ``files`` order, with the exact per-status
+    counts."""
+    from collections import Counter
 
     from amazon_s3_find_and_forget_spark.matches import ColumnGroup
-    from amazon_s3_find_and_forget_spark.plans.forget import forget_files_df
 
     n = 100_001
-    paths_df = spark.range(n - 2).select(
-        F.concat(F.lit("s3://lake/f"), F.col("id"), F.lit(".parquet")).alias(
-            "file_path"
-        )
-    ).unionAll(
-        spark.createDataFrame(
-            [("s3://lake/vanished.parquet",), ("s3://lake/conflict.parquet",)],
-            "file_path string",
-        )
-    )
+    files = [f"s3://lake/f{i}.parquet" for i in range(n - 2)] + [
+        "s3://lake/vanished.parquet",
+        "s3://lake/conflict.parquet",
+    ]
     groups = [ColumnGroup(["customer_id"], ["bigint"], [2], composite=False)]
-    stats = forget_files_df(
-        spark,
-        paths_df,
+    rewrite = rewriter(
         groups,
         fmt="parquet",
         ignore_not_found=True,
         store_factory=_chaos_synthetic_factory(),
     )
-    rollup = {
-        r["status"]: (int(r["n"]), int(r["deleted"] or 0))
-        for r in stats.groupBy("status").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("deleted_rows").alias("deleted")
-        ).collect()
+    stats = forget_files(spark, files, [rewrite] * n)
+    assert [r[0] for r in stats] == files
+    rollup = Counter((r[4], r[3]) for r in stats)
+    assert rollup == {
+        ("updated", 1): n - 2,  # one deleted row each
+        ("skipped", 0): 1,
+        ("failed", 0): 1,  # the rolled-back conflict
     }
-    assert rollup["updated"] == (n - 2, n - 2)  # one deleted row each
-    assert rollup["skipped"] == (1, 0)
-    assert rollup["failed"] == (1, 0)  # the rolled-back conflict
-    err = stats.where(F.col("status") == "failed").collect()
-    assert len(err) == 1 and "VersionConflictError" in err[0]["error"]
+    assert stats[-2][4:] == ("skipped", "ObjectNotFound")
+    assert stats[-1][4] == "failed" and "VersionConflictError" in stats[-1][5]
 
 
 def _chaos_local_factory():
     """LocalObjectStore wrapper injecting the same two failures by
     basename — pickled by value (see _chaos_synthetic_factory); used
-    through run_job's DataFrame handoff so the EVENTS and counters
-    aggregation is exercised end to end."""
+    through run_job so the per-object EVENTS and counters are exercised
+    end to end."""
 
     def factory(arn):
         import os as _os
@@ -767,17 +756,15 @@ def _chaos_local_factory():
     return factory
 
 
-def test_run_job_dataframe_handoff_chaos_events(spark, tmp_path):
-    """run_job through the large-job (DataFrame) path with one vanished
-    object and one rollback: per-status summary events and counters must
-    aggregate correctly, the conflict file must roll back to its
-    pre-job bytes, and the job must end FORGET_PARTIALLY_FAILED."""
+def test_run_job_chaos_events(spark, tmp_path):
+    """run_job with one vanished object and one rollback: every object
+    gets its own event, the counters fold from them, the conflict file
+    rolls back to its pre-job bytes, and the job ends
+    FORGET_PARTIALLY_FAILED."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from amazon_s3_find_and_forget_spark.data_mappers import DataMapper
-    from amazon_s3_find_and_forget_spark.jobs import run_job
-    from amazon_s3_find_and_forget_spark.matches import QueueItem
+    from amazon_s3_find_and_forget_spark.jobs import fold_counters
 
     lake = tmp_path / "lake"
     lake.mkdir()
@@ -795,22 +782,25 @@ def test_run_job_dataframe_handoff_chaos_events(spark, tmp_path):
         [DataMapper("t", str(lake), ["customer_id"],
                      ignore_object_not_found=True)],
         [QueueItem(match_id=2), QueueItem(match_id=4), QueueItem(match_id=6)],
-        path_handoff_threshold=0,  # force the DataFrame handoff
         store_factory=_chaos_local_factory(),
     )
     assert result.status == "FORGET_PARTIALLY_FAILED", result.events
     assert result.counters["TotalObjectUpdateFailedCount"] == 1
     assert result.counters["TotalQueryFailedCount"] == 0
-    summaries = {
-        e["EventData"]["Status"]: e["EventData"]
+    by_object = {
+        os.path.basename(e["EventData"]["Object"]): e
         for e in result.events
-        if e["EventName"] == "ObjectUpdateSummary"
+        if e["EventName"].startswith("ObjectUpdate")
     }
-    assert summaries["updated"]["Objects"] == 1
-    assert summaries["updated"]["DeletedRows"] == 1
-    assert summaries["skipped"]["Objects"] == 1
-    assert summaries["failed"]["Objects"] == 1
-    assert "VersionConflictError" in summaries["failed"]["SampleError"]
+    assert by_object["good.parquet"]["EventName"] == "ObjectUpdated"
+    assert by_object["vanished.parquet"]["EventName"] == "ObjectUpdateSkipped"
+    failed = by_object["conflict.parquet"]
+    assert failed["EventName"] == "ObjectUpdateFailed"
+    assert "VersionConflictError" in failed["EventData"]["Error"]
+    counters = fold_counters(result.events)
+    assert counters["TotalObjectUpdatedCount"] == 1
+    assert counters["TotalObjectUpdateSkippedCount"] == 1
+    assert counters["TotalObjectUpdateFailedCount"] == 1
 
     spark.catalog.clearCache()
     got = {
