@@ -16,7 +16,6 @@ Layout
 - ``plans.forget``  Forget phase: anti-join table rewrite + per-file surgical rewrite
 - ``sources``     per-file parquet / raw-line JSONL IO used by the Forget phase
 - ``operators``   dedup / similarity / text-analysis / multimodal operators
-- ``streaming``   structured-streaming fold of the job event log
 """
 
 __version__ = "0.1.0"

@@ -768,25 +768,19 @@ class Engine:
 
     # --- maintenance -------------------------------------------------------
 
-    def compact_index(
-        self,
-        index_dir: str,
-        checkpoint_dir: str | None = None,
-        upto: int | None = None,
-    ) -> dict:
-        """Maintenance pass for a dedup-screen index: fold per-batch
-        delta directories into a base partition without breaking the
-        screens' idempotent-retry protocol. The ``vacuum`` sibling for
-        screen indexes — vacuum itself must NOT be pointed at one (naive
-        bin-packing would collapse the ``batch_id=N`` partitions the
-        retry exclusion depends on). See
+    def compact_index(self, index_dir: str) -> dict:
+        """Maintenance pass for a dedup-screen index: fold its per-batch
+        ``batch=<digest>`` delta directories into one base partition
+        without breaking the screen's idempotent-retry protocol. This is
+        the screen-index counterpart of ``vacuum``, which does not touch
+        an index: its bin-packing globs only a directory's top-level
+        ``*.parquet`` files, and an index keeps every row under a
+        ``batch=`` partition directory. See
         ``operators.incremental.compact_index`` for the protocol and
         crash-ordering contract."""
         from .operators.incremental import compact_index
 
-        return compact_index(
-            self.spark, index_dir, checkpoint_dir=checkpoint_dir, upto=upto
-        )
+        return compact_index(self.spark, index_dir)
 
     def vacuum(
         self,

@@ -326,25 +326,9 @@ def main(argv: list[str] | None = None) -> int:
         "compact-index",
         help="fold a dedup-screen index's per-batch delta directories "
         "into a base partition (protocol-aware: retried batches still "
-        "never see their own output); run with the stream stopped or "
-        "between triggers",
+        "never see their own output); run between screens",
     )
     ci.add_argument("--index-dir", required=True)
-    ci.add_argument(
-        "--checkpoint",
-        default=None,
-        help="the stream's checkpointLocation; its commit log bounds "
-        "the fold so a batch Spark might still retry is never folded "
-        "(required for streaming-layout indexes unless --upto is given)",
-    )
-    ci.add_argument(
-        "--upto",
-        type=int,
-        default=None,
-        help="explicit highest batch_id to fold (min-ed with the "
-        "checkpoint bound; passing it alone asserts the stream is "
-        "stopped)",
-    )
 
     sd = sub.add_parser(
         "select-data",
@@ -829,8 +813,7 @@ def main(argv: list[str] | None = None) -> int:
         # sizes and mtimes) — outputs go to batch=<digest> partitions
         # with OVERWRITE, and screening excludes the batch's own
         # partition, so a re-run after a mid-write failure produces
-        # byte-identical results instead of appending duplicates (same
-        # protocol as the streaming screens' batch_id=N directories).
+        # byte-identical results instead of appending duplicates.
         # The fingerprint closes the reused-path trap: NEW data landing
         # at yesterday's path gets a NEW digest instead of silently
         # overwriting (and self-excluding) yesterday's index delta,
@@ -1098,14 +1081,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "compact-index":
         from .operators.incremental import compact_index
 
-        _emit(
-            compact_index(
-                eng.spark,
-                args.index_dir,
-                checkpoint_dir=args.checkpoint,
-                upto=args.upto,
-            )
-        )
+        _emit(compact_index(eng.spark, args.index_dir))
     elif args.cmd == "curate":
         from pyspark.sql import functions as F
 

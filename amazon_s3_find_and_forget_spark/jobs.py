@@ -8,8 +8,10 @@ The reference keeps one Job row plus append-only JobEvent rows keyed
 
 Here the event log is a DataFrame (or a plain list for the driver-side
 fold); the stats fold is a ``groupBy(Id).agg(sum(...))`` and the status
-fold a pure function — both also usable under Structured Streaming
-``foreachBatch`` (streaming/job_events.py).
+fold a pure function. ``api.Engine.process_queue``, the one deletion
+entry point, folds each job's events in process with ``fold_counters``
+and ``fold_status``; the ``job_stats_fold`` catalog row runs
+``fold_stats``.
 """
 
 from __future__ import annotations
@@ -63,10 +65,6 @@ OBJECT_EVENTS = [
     "ObjectUpdateFailed",
     "ObjectRollbackFailed",
 ]
-
-EVENT_SCHEMA = (
-    "Id string, Sk string, EventName string, CreatedAt long, EventData string"
-)
 
 
 def make_event(job_id: str, name: str, data: dict | None = None, at: int | None = None):
@@ -153,21 +151,15 @@ def fold_counters(events: list[dict]) -> dict:
     return c
 
 
-def fold_status(
-    events: list[dict],
-    counters: dict | None = None,
-    initial: dict | None = None,
-) -> dict:
+def fold_status(events: list[dict], counters: dict | None = None) -> dict:
     """A6: fold ordered events into {JobStatus, JobStartTime, JobFinishTime}.
 
     ``events``: [{"EventName","CreatedAt"}] in Sk order. ``counters``
     supplies the error counts used to derive FORGET_PARTIALLY_FAILED
-    (status_updater.py:85-104). ``initial`` resumes from a prior fold's
-    output (incremental/streaming use) — locked terminal states stay
-    locked across batches.
+    (status_updater.py:85-104).
     """
     counters = counters or {}
-    out: dict = dict(initial or {})
+    out: dict = {}
     for ev in events:
         name = ev["EventName"]
         if name not in STATUS_MAP:

@@ -22,10 +22,6 @@ smallest id survives — so incremental screening over a stream of
 batches converges to exactly the batch result over the union (proven
 by the ``dedup_incremental_*`` catalog rows' oracles and the
 batch-agreement tests).
-
-Streaming counterpart: streaming/dedup.py screens a LIVE feed with
-watermark-bounded state; these operators are the unbounded-horizon
-batch path (state lives in the lake, not the state store).
 """
 
 from __future__ import annotations
@@ -73,10 +69,10 @@ def read_index_or_empty(
     Any OTHER read failure (corrupt footer on committed data,
     permissions) propagates so the caller's retry machinery re-runs the
     batch — substituting an empty index there would silently re-admit
-    every previously-seen document. Shared by the CLI ``dedup-screen``
-    and ``streaming/dedup._index_screen_stream`` so this classification
-    (whose error text has already changed across Spark versions, hence
-    multiple markers) lives in one place.
+    every previously-seen document. The CLI ``dedup-screen`` reads its
+    index through here so this classification (whose error text has
+    already changed across Spark versions, hence multiple markers)
+    lives in one place.
     """
     from pyspark.errors import AnalysisException
 
@@ -205,7 +201,6 @@ def incremental_minhash_dedup(
     bands: int | None = None,
     threshold: float = 0.8,
     broadcast: bool = True,
-    check_compat: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Screen an arriving batch for near-duplicates of the indexed corpus.
 
@@ -230,35 +225,30 @@ def incremental_minhash_dedup(
     becomes a shuffled hash join (both sides exchange on band_hash —
     correct at any size, at the cost of shuffling the index once).
 
-    ``check_compat`` probes one index row (an eager one-row job — cheap
-    on a file-backed index, but it recomputes a partition when the
-    index is a freshly COMPUTED unpersisted relation). Callers that
-    screen many batches against the same persisted index under fixed
-    parameters (the streaming screens) verify once and pass ``False``
-    afterwards.
+    Before planning, one index row is probed for its signature length
+    (an eager one-row job — cheap on a file-backed index, but it
+    recomputes a partition when the index is a freshly COMPUTED
+    unpersisted relation) so a mismatched index fails at call time.
     """
     if bands is None:
         # threshold-tuned banding (see dedup.optimal_bands); band keys
         # are derived at call time, so a persisted index stays valid
         # under any bands choice — only num_perm is a storage parameter
         bands = optimal_bands(num_perm, threshold)
-    if check_compat:
-        # probe the first NON-NULL signature: sampling a null row and
-        # passing vacuously would silently disable the fail-fast
-        head = (
-            index_sigs.where(F.col("_sig").isNotNull())
-            .select("_sig")
-            .head(1)
+    # probe the first NON-NULL signature: sampling a null row and
+    # passing vacuously would silently disable the fail-fast
+    head = (
+        index_sigs.where(F.col("_sig").isNotNull()).select("_sig").head(1)
+    )
+    if head and len(head[0][0]) != num_perm:
+        # a persisted index built under a different num_perm would
+        # slice past its signatures and silently re-admit every
+        # near-duplicate of the indexed history — fail fast instead
+        raise ValueError(
+            f"index signatures have {len(head[0][0])} components but "
+            f"num_perm={num_perm}; rebuild the index or match the "
+            "parameters it was built with"
         )
-        if head and len(head[0][0]) != num_perm:
-            # a persisted index built under a different num_perm would
-            # slice past its signatures and silently re-admit every
-            # near-duplicate of the indexed history — fail fast instead
-            raise ValueError(
-                f"index signatures have {len(head[0][0])} components but "
-                f"num_perm={num_perm}; rebuild the index or match the "
-                "parameters it was built with"
-            )
     new_sigs = minhash_signatures(new_df, text_col, id_col, k, num_perm)
     new_sigs = _eager(new_sigs)  # one UDF pass; feeds three consumers
     sim = sig_agreement("_sig_a", "_sig_b") / F.lit(float(num_perm))
@@ -280,8 +270,8 @@ def incremental_minhash_dedup(
     # comparison per row before the banding projection, measured ~free,
     # where wrapping the _sig column itself re-evaluated the assert per
     # band (+27% on the sf1 screen). NULL signatures pass (they match
-    # nothing); the sampled check_compat probe remains for a friendlier
-    # call-time error.
+    # nothing); the sampled call-time probe above gives the friendlier
+    # error.
     sig_guard = F.assert_true(
         F.col("_sig").isNull() | (F.size("_sig") == num_perm),
         F.lit(
@@ -589,9 +579,9 @@ def incremental_bloom_dedup(
     ``_eager``-materialized (one probe pass feeds BOTH the delta build
     and whatever action the caller runs on ``novel`` — previously the
     lazy probe recomputed on each), and the broadcast is destroyed
-    before returning — a streaming caller screening thousands of
-    micro-batches holds exactly one bitmap broadcast at a time instead
-    of accumulating them until GC.
+    before returning — a caller screening thousands of batches holds
+    exactly one bitmap broadcast at a time instead of accumulating them
+    until GC.
     """
     batch_first = _eager(exact_dedup(new_df, text_col, id_col))
     num_bits = len(bits) * 64
@@ -660,7 +650,6 @@ def incremental_embedding_dedup(
     id_col: str = "vec_id",
     seed: int = 42,
     broadcast: bool = True,
-    check_compat: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Screen arriving embeddings for near-duplicates of the indexed
     corpus (cosine >= threshold), LSH-bucketed like
@@ -686,34 +675,28 @@ def incremental_embedding_dedup(
     exploded batch carries its unit vectors, so the limit arrives
     sooner here than in the MinHash screen at large dim).
 
-    ``check_compat``: same trade as ``incremental_minhash_dedup`` — an
-    eager one-row probe, skippable after the first batch of a
-    fixed-parameter screening run.
+    As in ``incremental_minhash_dedup``, one index row is probed
+    eagerly so a mismatched index fails at call time.
     """
     from .similarity import _dot
 
-    if check_compat:
-        # first NON-NULL row, as in the MinHash probe
-        head = (
-            index.where(
-                F.col("_u").isNotNull() & F.col("_k").isNotNull()
-            )
-            .select("_u", "_k")
-            .head(1)
+    # first NON-NULL row, as in the MinHash probe
+    head = (
+        index.where(F.col("_u").isNotNull() & F.col("_k").isNotNull())
+        .select("_u", "_k")
+        .head(1)
+    )
+    if head and (len(head[0][0]) != dim or len(head[0][1]) != n_tables):
+        # a mismatched hyperplane family (different dim/bits/tables/
+        # seed cannot all be detected, but dim and table count can)
+        # would bucket the two sides incompatibly and silently lose
+        # recall
+        raise ValueError(
+            f"index vectors are dim={len(head[0][0])} with "
+            f"{len(head[0][1])} tables; got dim={dim}, "
+            f"n_tables={n_tables} — match the parameters the index "
+            "was built with"
         )
-        if head and (
-            len(head[0][0]) != dim or len(head[0][1]) != n_tables
-        ):
-            # a mismatched hyperplane family (different dim/bits/tables/
-            # seed cannot all be detected, but dim and table count can)
-            # would bucket the two sides incompatibly and silently lose
-            # recall
-            raise ValueError(
-                f"index vectors are dim={len(head[0][0])} with "
-                f"{len(head[0][1])} tables; got dim={dim}, "
-                f"n_tables={n_tables} — match the parameters the index "
-                "was built with"
-            )
     batch_keyed = _eager(
         embedding_index(new_df, dim, bits, n_tables, emb_col, id_col, seed)
     )
@@ -770,29 +753,20 @@ def incremental_embedding_dedup(
 
 # --- index compaction (protocol-aware) -----------------------------------
 #
-# The screens' idempotent-retry protocol writes one delta directory per
-# batch and re-reads every prior delta on every screen: at a cadence of
-# minutes, a year-long stream is ~500k partition directories, and the
-# file-LISTING cost grows linearly in stream age until it dominates the
-# screen itself. Naive compaction (fold everything into one dir) breaks
-# the protocol, which relies on the per-batch partition value to hide a
-# retried batch's own half-written output from itself. The fold below
-# keeps the protocol intact:
+# The ``dedup-screen`` idempotent-retry protocol writes one delta
+# directory per batch (``batch=<digest>``) and re-reads every prior delta
+# on every screen: at a cadence of minutes, a year of batches is ~500k
+# partition directories, and the file-LISTING cost grows linearly with
+# the index's age until it dominates the screen itself. Naive compaction
+# (fold everything into one dir) breaks the protocol, which relies on
+# the per-batch partition value (the screen keeps ``batch != digest``)
+# to hide a retried batch's own half-written output from itself. The
+# fold below keeps the protocol intact: committed deltas fold into
+# ``batch=base-<digest-of-committed-source-names>``, and the screen
+# refuses user batch ids with the ``base-`` prefix, so no batch can
+# ever exclude a base.
 #
-# - streaming layout (``batch_id=<int>``, screen keeps ``batch_id <
-#   N``): deltas with id <= K fold into a BASE partition with a fresh
-#   NEGATIVE id (at most -(K+1), always strictly below every existing
-#   partition). Stream batch ids are never negative, so every live
-#   batch's ``batch_id < N`` view includes the base, while the retried
-#   batch's own (non-negative) delta stays hidden. K is bounded by the
-#   checkpoint's commit log: a batch Spark might still retry is never
-#   folded, so the base can never contain a batch's own output.
-# - CLI layout (``batch=<digest>``, screen keeps ``batch != digest``):
-#   committed deltas fold into ``base-<digest-of-committed-source-
-#   names>``. The screen refuses user batch ids with the ``base-``
-#   prefix, so no batch can ever exclude a base.
-#
-# A fold NEVER overwrites a committed directory (fresh names above):
+# A fold NEVER overwrites a committed directory (fresh name above):
 # an in-place base rewrite crashing mid-write would leave rows whose
 # source deltas are long deleted only in a markerless dir that the next
 # run discards as a crashed write — permanent index loss. Re-running
@@ -933,25 +907,6 @@ def input_fingerprint(spark, path: str) -> tuple[str, list[str]]:
     return path, entries
 
 
-def committed_upto(spark, checkpoint_dir: str) -> int | None:
-    """Highest batch id the streaming checkpoint has COMMITTED — the
-    fold bound: Spark never retries a committed batch, so folding
-    ``batch_id <= committed`` can never put a batch's own output into
-    the base it screens against. None when no batch has committed."""
-    import re
-
-    fs, jvm = _hadoop_fs(spark, checkpoint_dir)
-    commits = jvm.org.apache.hadoop.fs.Path(checkpoint_dir + "/commits")
-    if not fs.exists(commits):
-        return None
-    ids = [
-        int(st.getPath().getName())
-        for st in fs.listStatus(commits)
-        if re.fullmatch(r"\d+", st.getPath().getName())
-    ]
-    return max(ids) if ids else None
-
-
 def _fold_rows(df: DataFrame) -> DataFrame:
     """Dedup the unioned deltas by index key. Duplicates only exist in
     the crash window between a base write and the delta deletes, and
@@ -968,75 +923,43 @@ def _fold_rows(df: DataFrame) -> DataFrame:
     return df.dropDuplicates()
 
 
-def compact_index(
-    spark,
-    index_dir: str,
-    checkpoint_dir: str | None = None,
-    upto: int | None = None,
-) -> dict:
-    """Fold a screen index's delta directories into a base partition
-    without breaking the screens' idempotent-retry protocol (see module
-    note above). Detects the layout from the directory names.
+def compact_index(spark, index_dir: str) -> dict:
+    """Fold a ``dedup-screen`` index's ``batch=<digest>`` delta
+    directories into one ``batch=base-<digest>`` partition without
+    breaking the screen's idempotent-retry protocol (see module note
+    above). Run it between screens: a screen that lists the index
+    mid-delete fails and must be re-run.
 
-    Streaming layout needs a safe bound: pass ``checkpoint_dir`` (the
-    stream's checkpoint — the commit log caps the fold at the last
-    committed batch) and/or an explicit ``upto`` (the effective bound
-    is the minimum of the two; ``upto`` alone asserts the stream is
-    stopped). Run between triggers or with the stream stopped: a
-    concurrently-running screen that lists the index mid-delete fails
-    that micro-batch, and the checkpoint retries it — correct, but a
-    wasted trigger.
+    Raises ``ValueError`` on an index holding ``batch_id=<int>``
+    partitions — the layout of the removed structured-streaming screens,
+    which this fold does not read — rather than report such an index as
+    having nothing to fold.
 
-    Returns ``{"Layout", "BasePath", "BaseRows", "FoldedDirs",
-    "RemovedDirs"}`` (all-zero no-op when there is nothing to fold).
+    Returns ``{"BasePath", "BaseRows", "FoldedDirs", "RemovedDirs"}``
+    (all-zero no-op when there is nothing to fold).
     """
+    import hashlib
     import re
 
     names = _list_dirs(spark, index_dir)
-    stream_parts = {}
-    cli_parts = {}
+    if any(re.fullmatch(r"batch_id=-?\d+", n) for n in names):
+        raise ValueError(
+            f"{index_dir} holds batch_id=<int> partitions: that is the "
+            "removed structured-streaming screen layout, which "
+            "compact-index no longer folds; rebuild the index with "
+            "dedup-screen"
+        )
+    fold = {}
     for n in names:
-        m = re.fullmatch(r"batch_id=(-?\d+)", n)
-        if m:
-            stream_parts[int(m.group(1))] = f"{index_dir}/{n}"
-            continue
         m = re.fullmatch(r"batch=([^/]+)", n)
         if m:
-            cli_parts[m.group(1)] = f"{index_dir}/{n}"
-    if stream_parts and cli_parts:
-        raise ValueError(
-            f"{index_dir} mixes batch_id= and batch= partitions — not "
-            "one index"
-        )
-    noop = {
-        "Layout": "stream" if stream_parts else "cli",
-        "BasePath": None, "BaseRows": 0, "FoldedDirs": 0, "RemovedDirs": 0,
-    }
-    if not stream_parts and not cli_parts:
+            fold[m.group(1)] = f"{index_dir}/{n}"
+    noop = {"BasePath": None, "BaseRows": 0, "FoldedDirs": 0, "RemovedDirs": 0}
+    if not fold:
         return noop
 
-    if stream_parts:
-        committed = (
-            committed_upto(spark, checkpoint_dir)
-            if checkpoint_dir is not None
-            else None
-        )
-        if committed is None and upto is None:
-            raise ValueError(
-                "streaming-layout compaction needs a bound: pass "
-                "checkpoint_dir (commit-log bound) and/or upto"
-            )
-        k = min(v for v in (committed, upto) if v is not None)
-        fold = {b: p for b, p in stream_parts.items() if b <= k}
-    else:
-        fold = dict(cli_parts)
-
-    def is_base(key) -> bool:
-        return (
-            str(key).startswith("-")
-            if stream_parts
-            else str(key).startswith("base-")
-        )
+    def is_base(key: str) -> bool:
+        return key.startswith("base-")
 
     # a crashed base WRITE has no _SUCCESS and its deltas all survive
     # (deletes run only after a successful write) — drop it from the
@@ -1057,66 +980,50 @@ def compact_index(
     # during an in-place rewrite of the previous base would leave its
     # rows (whose source deltas are long deleted) only in a markerless
     # dir the next run classifies as a crashed write and discards —
-    # permanent index loss. Stream layout: pick an id strictly below
-    # every existing partition (monotone-fresh, still negative so every
-    # screen's batch_id < N view includes it). CLI layout: the digest
-    # covers the COMMITTED source names — a previous base's name encodes
-    # its own history, so a digest can only repeat for a retry of the
-    # same fold, whose target is then at most a markerless partial.
-    if stream_parts:
-        base_id = min(-(k + 1), min(stream_parts) - 1)
-        base_name = f"batch_id={base_id}"
-    else:
-        import hashlib
-
-        digest = hashlib.md5(
-            "\n".join(sorted(sources)).encode()
-        ).hexdigest()[:16]
-        base_name = f"batch=base-{digest}"
-    target = f"{index_dir}/{base_name}"
+    # permanent index loss. The digest covers the COMMITTED source
+    # names — a previous base's name encodes its own history, so a
+    # digest can only repeat for a retry of the same fold, whose target
+    # is then at most a markerless partial.
+    digest = hashlib.md5("\n".join(sorted(sources)).encode()).hexdigest()[:16]
+    target = f"{index_dir}/batch=base-{digest}"
     already_base_only = len(sources) == 1 and is_base(next(iter(sources)))
     if not sources or already_base_only:
-        noop["RemovedDirs"] = 0
         for path in fold.values():  # clear crashed partial bases
             if path not in sources.values():
                 _delete_dir(spark, path)
                 noop["RemovedDirs"] += 1
         return noop
 
-    key_col = "batch_id" if stream_parts else "batch"
     folded = _fold_rows(
         spark.read.option("basePath", index_dir)
         .parquet(*sources.values())
-        .drop(key_col)
+        .drop("batch")
     )
     folded = _eager(folded)
     base_rows = folded.count()
     # fresh (or at-most-partial) target, never a committed dir — see note
     folded.write.mode("overwrite").parquet(target)
-    if not stream_parts:
-        # record WHICH batch digests now live in the base (carrying
-        # forward any previous base's history), so dedup-screen can
-        # refuse a re-run of a folded batch — after the fold its rows
-        # are in the base, its own-partition exclusion no longer hides
-        # them, and the re-run would self-match every document and
-        # overwrite its correct novel output with an empty partition.
-        # Written AFTER the parquet commit, BEFORE the deletes: a crash
-        # in between leaves manifest + deltas, and the next fold
-        # re-derives the same history.
-        history: set[str] = set()
-        for key, path in sources.items():
-            if is_base(key):
-                history |= _read_folded_manifest(spark, path)
-            else:
-                history.add(key)
-        _write_folded_manifest(spark, target, history)
+    # record WHICH batch digests now live in the base (carrying forward
+    # any previous base's history), so dedup-screen can refuse a re-run
+    # of a folded batch — after the fold its rows are in the base, its
+    # own-partition exclusion no longer hides them, and the re-run would
+    # self-match every document and overwrite its correct novel output
+    # with an empty partition. Written AFTER the parquet commit, BEFORE
+    # the deletes: a crash in between leaves manifest + deltas, and the
+    # next fold re-derives the same history.
+    history: set[str] = set()
+    for key, path in sources.items():
+        if is_base(key):
+            history |= _read_folded_manifest(spark, path)
+        else:
+            history.add(key)
+    _write_folded_manifest(spark, target, history)
     removed = 0
     for path in fold.values():
         if path != target:
             _delete_dir(spark, path)
             removed += 1
     return {
-        "Layout": "stream" if stream_parts else "cli",
         "BasePath": target,
         "BaseRows": base_rows,
         "FoldedDirs": len(sources),

@@ -148,6 +148,19 @@ assert c["FoldedDirs"] == 2, c
 print("SMOKE OK: compact-index folded both batch deltas")
 PY
 
+# scheduled compaction must converge: a second run over the base-only
+# index folds and removes nothing and leaves exactly one base
+C2="$("${CLI2[@]}" compact-index --index-dir "$IDX" \
+    2>>"$WORK/submit.log")"
+python3 - "$C2" "$IDX" <<'PY'
+import json, os, sys
+c = json.loads(sys.argv[1])
+assert (c["FoldedDirs"], c["RemovedDirs"]) == (0, 0), c
+bases = [d for d in os.listdir(sys.argv[2]) if d.startswith("batch=base-")]
+assert len(bases) == 1, os.listdir(sys.argv[2])
+print("SMOKE OK: second compact-index is a no-op over one base")
+PY
+
 # re-running a batch already folded into the base must be refused (it
 # would self-match every row and blank its own novel output)
 if "${CLI2[@]}" dedup-screen --input "$WORK/b2" --index-dir "$IDX" \

@@ -698,12 +698,14 @@ def test_engine_compact_index_facade(engine, spark, tmp_path):
     )
     index_dir = str(tmp_path / "idx")
     inc.exact_index(docs.where("doc_id = 1")).write.parquet(
-        f"{index_dir}/batch_id=0"
+        f"{index_dir}/batch=d0"
     )
     inc.exact_index(docs.where("doc_id = 2")).write.parquet(
-        f"{index_dir}/batch_id=1"
+        f"{index_dir}/batch=d1"
     )
-    stats = engine.compact_index(index_dir, upto=1)
-    assert stats["BasePath"].endswith("batch_id=-2")
+    stats = engine.compact_index(index_dir)
+    assert stats["BasePath"].startswith(f"{index_dir}/batch=base-")
     assert stats["BaseRows"] == 2
-    assert sorted(os.listdir(index_dir)) == ["batch_id=-2"]
+    assert sorted(os.listdir(index_dir)) == [
+        os.path.basename(stats["BasePath"])
+    ]

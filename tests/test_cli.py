@@ -569,7 +569,7 @@ def test_cli_compact_index_folds_screen_deltas(spark, tmp_path, capsys):
     assert len(os.listdir(index)) == 2
 
     c = run(capsys, *base, "compact-index", "--index-dir", index)
-    assert c["Layout"] == "cli" and c["BaseRows"] == 3
+    assert c["BaseRows"] == 3
     dirs = os.listdir(index)
     assert len(dirs) == 1 and dirs[0].startswith("batch=base-")
 

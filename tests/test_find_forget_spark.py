@@ -8,7 +8,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from amazon_s3_find_and_forget_spark.data_mappers import DataMapper, check_no_overlap
-from amazon_s3_find_and_forget_spark.jobs import fold_status, run_job
+from amazon_s3_find_and_forget_spark.jobs import (
+    fold_stats,
+    fold_status,
+    list_events,
+    list_jobs,
+    make_event,
+    run_job,
+)
 from amazon_s3_find_and_forget_spark.matches import (
     QueueItem,
     build_column_groups,
@@ -249,6 +256,45 @@ def test_status_fold_locked_terminal():
     ]
     out = fold_status(evs)
     assert out["JobStatus"] == "FIND_FAILED"  # terminal state locked
+
+
+def test_list_events_pagination(spark):
+    rows = [
+        ("j1", f"{1000 + i}#u{i}", "ObjectUpdated", 1000 + i, "{}")
+        for i in range(10)
+    ]
+    df = spark.createDataFrame(
+        rows, "Id string, Sk string, EventName string, CreatedAt long, EventData string"
+    )
+    page1 = list_events(df, "j1", watermark="0", page_size=4).collect()
+    assert len(page1) == 4
+    page2 = list_events(df, "j1", watermark=page1[-1].Sk, page_size=4).collect()
+    assert len(page2) == 4
+    assert page2[0].Sk > page1[-1].Sk
+
+
+def test_list_jobs_topk(spark):
+    df = spark.createDataFrame(
+        [(f"j{i}", i) for i in range(20)], "Id string, CreatedAt long"
+    )
+    top = list_jobs(df, page_size=5).collect()
+    assert [r.Id for r in top] == ["j19", "j18", "j17", "j16", "j15"]
+
+
+def test_fold_stats_multiple_jobs(spark):
+    evs = [
+        make_event("a", "QuerySucceeded", {"Statistics": {"DataScannedInBytes": 10, "EngineExecutionTimeInMillis": 5}}),
+        make_event("a", "QueryFailed"),
+        make_event("b", "ObjectUpdateFailed"),
+    ]
+    df = spark.createDataFrame(
+        evs, "Id string, Sk string, EventName string, CreatedAt long, EventData string"
+    )
+    out = {r.Id: r.asDict() for r in fold_stats(df).collect()}
+    assert out["a"]["TotalQueryCount"] == 2
+    assert out["a"]["TotalQuerySucceededCount"] == 1
+    assert out["a"]["TotalQueryScannedInBytes"] == 10
+    assert out["b"]["TotalObjectUpdateFailedCount"] == 1
 
 
 def test_single_column_composite_folds_into_simple_group(spark, tmp_path, sf_dir):

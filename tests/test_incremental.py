@@ -278,9 +278,9 @@ def test_incremental_screens_reject_mismatched_index(spark):
 def test_incremental_compat_probe_null_safe_and_skippable(spark):
     """The one-row compat probe must tolerate a NULL first index row
     (ValueError is reserved for a PROVEN parameter mismatch, not a
-    TypeError on len(None)), and ``check_compat=False`` must skip the
-    eager probe entirely — the streaming screens verify once per run
-    and pass False for every later micro-batch."""
+    TypeError on len(None)), and a mismatched row the probe does not
+    sample must still fail the screen through the in-plan per-row
+    guard."""
     batch = docs(spark, [(10, NEAR_A2)])
     null_idx = spark.createDataFrame(
         [(1, None)], "_id long, _sig array<bigint>"
@@ -297,16 +297,18 @@ def test_incremental_compat_probe_null_safe_and_skippable(spark):
     )
     assert vnovel.count() == 1
 
-    # skipping the eager probe does NOT disable safety: the in-plan
-    # per-row guard riding the index scan still fails the screen on a
-    # genuinely mismatched index (mismatches mostly KILL band
-    # collisions, so a silent run would lose recall with nothing for a
-    # post-join check to see)
-    index64 = inc.minhash_index(docs(spark, [(1, NEAR_A)]), num_perm=64)
-    with pytest.raises(Exception, match="num_perm=128"):
-        inc.incremental_minhash_dedup(
-            batch, index64, num_perm=128, check_compat=False
-        )
+    # the probe passing does NOT end the checking: the in-plan per-row
+    # guard riding the index scan still fails the screen on a later
+    # mismatched row (mismatches mostly KILL band collisions, so a
+    # silent run would lose recall with nothing for a post-join check
+    # to see). The probed first row has the right width; a later one
+    # does not.
+    index128 = inc.minhash_index(docs(spark, [(1, NEAR_A)]), num_perm=128)
+    index64 = inc.minhash_index(docs(spark, [(2, NEAR_A)]), num_perm=64)
+    mixed = index128.unionByName(index64)
+    assert len(mixed.where("_sig is not null").head(1)[0]["_sig"]) == 128
+    with pytest.raises(Exception, match="signature length != num_perm=128"):
+        inc.incremental_minhash_dedup(batch, mixed, num_perm=128)
 
 
 def test_compat_probe_skips_null_rows_to_real_data(spark):
@@ -340,11 +342,11 @@ def test_read_index_or_empty_treats_uncommitted_dir_as_empty(spark, tmp_path):
     """A crash during the FIRST delta write leaves the index dir
     holding no committed parquet footer; the read then fails schema
     inference. By the append-only protocol that state IS an empty
-    index — re-raising would wedge a restarted stream forever (the
+    index — re-raising would wedge every re-run of the screen (the
     failure precedes any write, so every retry fails identically)."""
     from pyspark.sql import functions as F
 
-    (tmp_path / "idx" / "batch_id=0" / "_temporary").mkdir(parents=True)
+    (tmp_path / "idx" / "batch=d0" / "_temporary").mkdir(parents=True)
     out = inc.read_index_or_empty(
         spark,
         str(tmp_path / "idx"),
@@ -358,8 +360,16 @@ def test_read_index_or_empty_treats_uncommitted_dir_as_empty(spark, tmp_path):
 # --- compaction crash windows ---------------------------------------------
 
 
-def _write_delta(df, index_dir, batch_id):
-    df.write.mode("overwrite").parquet(f"{index_dir}/batch_id={batch_id}")
+def _write_delta(df, index_dir, digest):
+    df.write.mode("overwrite").parquet(f"{index_dir}/batch={digest}")
+
+
+def _base_name(*source_keys):
+    """The fresh base a fold of these committed partitions writes."""
+    import hashlib
+
+    digest = hashlib.md5("\n".join(sorted(source_keys)).encode())
+    return f"batch=base-{digest.hexdigest()[:16]}"
 
 
 def test_compact_index_crash_between_write_and_delete(spark, tmp_path):
@@ -371,91 +381,94 @@ def test_compact_index_crash_between_write_and_delete(spark, tmp_path):
 
     index_dir = str(tmp_path / "idx")
     hist = docs(spark, HISTORY)
-    _write_delta(inc.exact_index(hist.where("doc_id <= 2")), index_dir, 0)
+    _write_delta(inc.exact_index(hist.where("doc_id <= 2")), index_dir, "d0")
     _write_delta(
         inc.exact_index(hist.where("doc_id = 3")).withColumn(
             "doc_id", F.col("doc_id")
         ),
-        index_dir, 1,
+        index_dir, "d1",
     )
-    stats = inc.compact_index(spark, index_dir, upto=1)
-    assert stats["BasePath"].endswith("batch_id=-2")
+    stats = inc.compact_index(spark, index_dir)
+    first_base = _base_name("d0", "d1")
+    assert stats["BasePath"].endswith(first_base)
     # simulate the crash: resurrect a folded delta next to the base
-    _write_delta(inc.exact_index(hist.where("doc_id <= 2")), index_dir, 0)
+    _write_delta(inc.exact_index(hist.where("doc_id <= 2")), index_dir, "d0")
 
     index = inc.read_index_or_empty(
-        spark, index_dir, F.col("batch_id") < 5,
+        spark, index_dir, F.col("batch") != "d9",
         ["content_hash", "doc_id"],
         lambda: inc.exact_index(hist.limit(0)),
     )
     novel, delta = inc.incremental_exact_dedup(docs(spark, BATCH), index)
     assert sorted(r["doc_id"] for r in novel.collect()) == [11, 14]
 
-    stats2 = inc.compact_index(spark, index_dir, upto=1)
+    stats2 = inc.compact_index(spark, index_dir)
     assert stats2["BaseRows"] == 2  # deduped by content_hash
-    # the refold writes a FRESH base strictly below every existing
-    # partition — never in-place over the committed -2, whose rows'
-    # source deltas are already gone (a crashed in-place rewrite would
-    # lose them permanently)
-    assert sorted(os.listdir(index_dir)) == ["batch_id=-3"]
+    # the refold writes a FRESH base named by its committed sources —
+    # never in-place over the committed first base, whose rows' source
+    # deltas are already gone (a crashed in-place rewrite would lose
+    # them permanently)
+    second_base = _base_name(first_base[len("batch="):], "d0")
+    assert second_base != first_base
+    assert sorted(os.listdir(index_dir)) == [second_base]
     # and a further run with nothing new converges to a no-op
-    stats3 = inc.compact_index(spark, index_dir, upto=1)
+    stats3 = inc.compact_index(spark, index_dir)
     assert (stats3["FoldedDirs"], stats3["RemovedDirs"]) == (0, 0)
-    assert sorted(os.listdir(index_dir)) == ["batch_id=-3"]
+    assert sorted(os.listdir(index_dir)) == [second_base]
     shutil.rmtree(index_dir)
 
 
 def test_compact_index_excludes_partial_base_write(spark, tmp_path):
     """A base directory without _SUCCESS is a crashed WRITE: its deltas
     all survive (deletes only run after a successful write), so the
-    fold must ignore its possibly-partial bytes, overwrite it, and
-    still produce the full index."""
+    fold must ignore its possibly-partial bytes, overwrite or delete
+    it, and still produce the full index."""
     index_dir = str(tmp_path / "idx")
     hist = docs(spark, HISTORY)
-    _write_delta(inc.exact_index(hist.where("doc_id <= 2")), index_dir, 0)
-    _write_delta(inc.exact_index(hist.where("doc_id = 3")), index_dir, 1)
-    partial = tmp_path / "idx" / "batch_id=-2"
-    partial.mkdir()
-    (partial / "part-00000.parquet").write_bytes(b"\x00garbage-no-footer")
+    _write_delta(inc.exact_index(hist.where("doc_id <= 2")), index_dir, "d0")
+    _write_delta(inc.exact_index(hist.where("doc_id = 3")), index_dir, "d1")
+    # one partial under the very name this fold picks (a retry of the
+    # crashed fold: overwritten) and one under another name (an older
+    # crashed fold: deleted); neither is read
+    for name in (_base_name("d0", "d1"), "batch=base-0123456789abcdef"):
+        partial = tmp_path / "idx" / name
+        partial.mkdir()
+        (partial / "part-00000.parquet").write_bytes(b"\x00garbage-no-footer")
 
-    stats = inc.compact_index(spark, index_dir, upto=1)
+    stats = inc.compact_index(spark, index_dir)
     assert stats["BaseRows"] == 2 and stats["FoldedDirs"] == 2
-    # fresh name below the (discarded) partial -2
-    assert sorted(os.listdir(index_dir)) == ["batch_id=-3"]
-    rows = spark.read.parquet(index_dir).drop("batch_id").collect()
+    assert sorted(os.listdir(index_dir)) == [_base_name("d0", "d1")]
+    rows = spark.read.parquet(index_dir).drop("batch").collect()
     assert sorted(r["doc_id"] for r in rows) == [1, 2]
 
 
 def test_compact_index_refuses_markerless_delta(spark, tmp_path):
-    """A DELTA without _SUCCESS inside the fold bound is an integrity
-    hole (committed batches always leave the marker) — refuse rather
-    than silently fold or drop partial data."""
+    """A DELTA without _SUCCESS is an integrity hole (committed batches
+    always leave the marker) — refuse rather than silently fold or drop
+    partial data."""
     index_dir = str(tmp_path / "idx")
-    _write_delta(inc.exact_index(docs(spark, HISTORY)), index_dir, 0)
-    os.remove(os.path.join(index_dir, "batch_id=0", "_SUCCESS"))
+    _write_delta(inc.exact_index(docs(spark, HISTORY)), index_dir, "d0")
+    os.remove(os.path.join(index_dir, "batch=d0", "_SUCCESS"))
     with pytest.raises(ValueError, match="_SUCCESS"):
-        inc.compact_index(spark, index_dir, upto=0)
+        inc.compact_index(spark, index_dir)
 
 
 def test_compact_index_guards(spark, tmp_path):
-    """No bound -> error; absent/empty dir -> no-op; mixed layouts ->
-    error; fold bound below every delta -> no-op."""
+    """Absent/empty dir -> no-op; an index holding the removed
+    ``batch_id=<int>`` stream layout -> error naming it, alone or beside
+    ``batch=`` partitions (never read as an index with nothing to
+    fold)."""
     index_dir = str(tmp_path / "idx")
-    assert inc.compact_index(spark, index_dir, upto=3)["FoldedDirs"] == 0
+    assert inc.compact_index(spark, index_dir)["FoldedDirs"] == 0
 
-    _write_delta(inc.exact_index(docs(spark, HISTORY)), index_dir, 5)
-    with pytest.raises(ValueError, match="bound"):
+    hist = inc.exact_index(docs(spark, HISTORY))
+    hist.write.parquet(f"{index_dir}/batch_id=5")
+    with pytest.raises(ValueError, match="batch_id="):
         inc.compact_index(spark, index_dir)
-    # checkpoint with no commits: still no safe bound
-    ckpt = tmp_path / "ckpt"
-    (ckpt / "commits").mkdir(parents=True)
-    with pytest.raises(ValueError, match="bound"):
-        inc.compact_index(spark, index_dir, checkpoint_dir=str(ckpt))
-    assert inc.compact_index(spark, index_dir, upto=4)["FoldedDirs"] == 0
-
-    os.makedirs(os.path.join(index_dir, "batch=abc"))
-    with pytest.raises(ValueError, match="mixes"):
-        inc.compact_index(spark, index_dir, upto=5)
+    _write_delta(hist, index_dir, "d0")
+    with pytest.raises(ValueError, match="batch_id="):
+        inc.compact_index(spark, index_dir)
+    assert sorted(os.listdir(index_dir)) == ["batch=d0", "batch_id=5"]
 
 
 def test_compact_index_minhash_layout(spark, tmp_path):
@@ -469,11 +482,11 @@ def test_compact_index_minhash_layout(spark, tmp_path):
         (2, "completely different subject matter about cooking pasta"),
     ])
     sigs = inc.minhash_index(hist)
-    sigs.where("_id = 1").write.parquet(f"{index_dir}/batch_id=0")
-    sigs.where("_id = 2").write.parquet(f"{index_dir}/batch_id=1")
-    stats = inc.compact_index(spark, index_dir, upto=1)
+    sigs.where("_id = 1").write.parquet(f"{index_dir}/batch=d0")
+    sigs.where("_id = 2").write.parquet(f"{index_dir}/batch=d1")
+    stats = inc.compact_index(spark, index_dir)
     assert stats["BaseRows"] == 2
-    assert sorted(os.listdir(index_dir)) == ["batch_id=-2"]
+    assert sorted(os.listdir(index_dir)) == [_base_name("d0", "d1")]
 
     batch = docs(spark, [
         (10, "spark structured streaming processes data incrementally "
@@ -481,7 +494,7 @@ def test_compact_index_minhash_layout(spark, tmp_path):
         (11, "yet another unrelated text concerning mountain hiking"),
     ])
     index = inc.read_index_or_empty(
-        spark, index_dir, F.col("batch_id") < 9, ["_id", "_sig"],
+        spark, index_dir, F.col("batch") != "d9", ["_id", "_sig"],
         lambda: inc.minhash_index(batch.limit(0)),
     )
     novel, _ = inc.incremental_minhash_dedup(batch, index, threshold=0.7)

@@ -936,6 +936,48 @@ def test_chunking_reconstructs_token_stream(docs):
         assert rebuilt == toks[doc_id], doc_id
 
 
+def test_curation_ops_compose_with_streams(spark, tmp_path, sf_dir):
+    """The map-only curation operators (chunking, redaction, lang-id,
+    token counts) apply to a streaming DataFrame unchanged — stateless
+    expression pipelines are engine-checked as stream-compatible, so the
+    batch curation code IS the streaming curation code."""
+    import os
+
+    from amazon_s3_find_and_forget_spark.operators import text
+
+    src_dir = str(tmp_path / "in")
+    os.makedirs(src_dir)
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs.limit(50).write.parquet(os.path.join(src_dir, "batch0"))
+
+    stream = spark.readStream.schema(docs.schema).parquet(src_dir + "/*")
+    chunked = text.chunk_documents(
+        text.redact_pii(stream).withColumnRenamed("text_redacted", "text2")
+        .drop("text").withColumnRenamed("text2", "text"),
+        max_tokens=32,
+        overlap=8,
+    )
+    q = (
+        chunked.writeStream.format("memory")
+        .queryName("curated_chunks")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = spark.sql("select * from curated_chunks").collect()
+    # same rows as the batch plan over the same files
+    want = text.chunk_documents(
+        text.redact_pii(spark.read.schema(docs.schema).parquet(src_dir + "/*"))
+        .withColumnRenamed("text_redacted", "text2")
+        .drop("text").withColumnRenamed("text2", "text"),
+        max_tokens=32,
+        overlap=8,
+    ).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert len(got) > 0
+
+
 def test_packing_is_contiguous_and_budget_aligned(docs):
     """Invariant: within a group, pack ids are non-decreasing in doc
     order, and each doc's pack is exactly floor(cum_before / budget)."""

@@ -314,40 +314,6 @@ def test_funnel_matches_greedy_subsequence(spark, events):
     assert got == expect
 
 
-@given(
-    stream=st.lists(
-        st.tuples(st.integers(0, 30), st.integers(1, 20)), max_size=60
-    ),
-    capacity=st.integers(1, 8),
-)
-@settings(max_examples=200, deadline=None)
-def test_mg_insert_invariants(stream, capacity):
-    """Misra-Gries under arbitrary batched arrival: never overcounts,
-    undercount bounded by n/(capacity+1), size bounded by capacity."""
-    from collections import Counter
-
-    from amazon_s3_find_and_forget_spark.streaming.heavy_hitters import (
-        _mg_insert,
-    )
-
-    summary: dict = {}
-    exact: Counter = Counter()
-    n = 0
-    for key, c in stream:
-        k = f"k{key}"
-        _mg_insert(summary, k, c, capacity)
-        exact[k] += c
-        n += c
-        assert len(summary) <= capacity
-    bound = n / (capacity + 1)
-    for k, true in exact.items():
-        mg = summary.get(k, 0)
-        assert mg <= true  # no overcount, ever
-        assert true - mg <= bound  # classic MG undercount bound
-    # no phantom keys, no nonpositive counts
-    assert all(k in exact and v > 0 for k, v in summary.items())
-
-
 @settings(max_examples=60, deadline=None)
 @given(
     rows=st.lists(st.tuples(ids, names), min_size=1, max_size=40),
