@@ -8,7 +8,7 @@ Reference endpoints re-expressed (SURVEY.md §3; citations inline):
 | PUT/GET/DELETE /v1/data_mappers/{id}             | put/get/delete_data_mapper |
 | GET /v1/data_mappers                             | list_data_mappers          |
 | PATCH /v1/queue (+/matches)                      | enqueue_matches            |
-| GET /v1/queue                                    | list_queue                 |
+| GET /v1/queue                                    | list_queue_page            |
 | DELETE /v1/queue/matches                         | delete_matches             |
 | DELETE /v1/queue (process_handler)               | process_queue              |
 | GET /v1/jobs, /v1/jobs/{id}, /v1/jobs/{id}/events| list_jobs/get_job/list_job_events |
@@ -32,7 +32,7 @@ import uuid
 from pyspark.sql import SparkSession
 
 from .data_mappers import DataMapper, check_no_overlap
-from .jobs import fold_counters, fold_status, run_job
+from .jobs import fold_status, run_job
 from .matches import QueueItem
 
 REDACTED = "*** MATCH ID ***"
@@ -238,9 +238,6 @@ class Engine:
             order.extend(it["DeletionQueueItemId"] for it in items)
             self._save("queue_order", order)
         return items
-
-    def list_queue(self, start_at: int = 0, page_size: int = 20) -> list[dict]:
-        return self._load("deletion_queue", [])[start_at : start_at + page_size]
 
     def list_queue_page(
         self, start_at: str | None = None, page_size: int = 10
@@ -507,10 +504,8 @@ class Engine:
                 manifest_table=settings.get("ManifestTable"),
                 store_factory=self.store_factory,
             )
-            folded = fold_status(result.events, result.counters)
-            job.update(folded)
-            job["JobStatus"] = result.status
-            job.update(fold_counters(result.events))
+            job.update(fold_status(result.events, result.counters))
+            job.update(result.counters)
             # record the job's manifest partitions on the job document so
             # deletion can clean them up (parity: the reference Job item's
             # Manifests list, consumed by

@@ -221,9 +221,10 @@ def q_dedup_minhash_survivors_t08(spark, sf_dir):
     banding preset (b=16, r=4 at num_perm=64 resolves differently —
     see dedup.optimal_bands), measured 2.3x faster than the legacy
     layout at equal recall/precision in the round-11 A/B
-    (tools/ab_minhash_presets.py). Registered so the headline bench
-    exercises the configuration users actually get by default, not
-    only the slowest supported one (r11 VERDICT ask #3). Rows-only
+    (``git show ef4b941:tools/ab_minhash_presets.py``). Registered so
+    the headline bench exercises the configuration users actually get
+    by default, not only the slowest supported one (r11 VERDICT ask
+    #3). Rows-only
     like the t=0.5 row: the survivor set is seed-deterministic but
     not SQL-replicable; quality is gated by dedup_minhash_recall."""
     return dedup.minhash_dedup(

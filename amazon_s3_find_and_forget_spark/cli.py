@@ -145,8 +145,10 @@ def main(argv: list[str] | None = None) -> int:
     eq.add_argument("--data-mapper", action="append", default=[],
                     help="restrict the match to specific mappers")
 
-    lq = sub.add_parser("list-queue")
-    lq.add_argument("--start-at", type=int, default=0)
+    lq = sub.add_parser(
+        "list-queue", help="id-keyed queue page, as GET /v1/queue"
+    )
+    lq.add_argument("--start-at", help="a page's NextStart (exclusive)")
     lq.add_argument("--page-size", type=int, default=20)
     sub.add_parser("process", help="run the deletion job for the queue")
     sub.add_parser("list-jobs")
@@ -744,11 +746,8 @@ def main(argv: list[str] | None = None) -> int:
             )
         _emit(eng.enqueue_matches(matches))
     elif args.cmd == "list-queue":
-        _emit(
-            eng.list_queue(
-                start_at=args.start_at, page_size=args.page_size
-            )
-        )
+        items, next_start = eng.list_queue_page(args.start_at, args.page_size)
+        _emit({"MatchIds": items, "NextStart": next_start})
     elif args.cmd == "process":
         _emit(eng.process_queue())
     elif args.cmd == "list-jobs":

@@ -8,10 +8,10 @@ The reference keeps one Job row plus append-only JobEvent rows keyed
 
 Here the event log is a DataFrame (or a plain list for the driver-side
 fold); the stats fold is a ``groupBy(Id).agg(sum(...))`` and the status
-fold a pure function. ``api.Engine.process_queue``, the one deletion
-entry point, folds each job's events in process with ``fold_counters``
-and ``fold_status``; the ``job_stats_fold`` catalog row runs
-``fold_stats``.
+fold a pure function. ``run_job`` folds each job's counters once, in
+process, with ``fold_counters``; ``api.Engine.process_queue``, the one
+deletion entry point, stores them with the ``fold_status`` fold. The
+``job_stats_fold`` catalog row runs ``fold_stats``.
 """
 
 from __future__ import annotations
@@ -291,9 +291,9 @@ def run_job(
     )
     emit("JobStarted")
     all_stats: list = []
-    counters: dict = {"TotalObjectUpdateFailedCount": 0, "TotalQueryFailedCount": 0}
 
     def result() -> JobResult:
+        counters = fold_counters(events)
         folded = fold_status(events, counters)
         return JobResult(
             job_id=job_id,
@@ -397,7 +397,6 @@ def run_job(
                 # fail fast: a Find failure past its retry budget abandons
                 # the job before any object is rewritten (parity:
                 # work_query_queue.py:38-42)
-                counters["TotalQueryFailedCount"] += 1
                 emit("FindPhaseFailed")
                 return result()
             owners: dict = {}
@@ -439,6 +438,7 @@ def run_job(
             for mapper, _ in routed_mappers:
                 _refresh(spark, mapper)
             all_stats.extend(stats)
+            failed_objects = 0
             for row in stats:
                 status = row[4]
                 if status == "updated":
@@ -446,16 +446,13 @@ def run_job(
                 elif status == "skipped":
                     emit("ObjectUpdateSkipped", {"Object": row[0]})
                 else:
-                    counters["TotalObjectUpdateFailedCount"] += 1
+                    failed_objects += 1
                     failed = {"Object": row[0], "Error": row[5]}
                     emit("ObjectUpdateFailed", failed)
                     if status == "rollback_failed":
                         emit("ObjectRollbackFailed", dict(failed))
             emit("ForgetPhaseEnded")
-            if (
-                counters["TotalObjectUpdateFailedCount"] == 0
-                and counters["TotalQueryFailedCount"] == 0
-            ):
+            if not failed_objects:
                 emit("CleanupSucceeded")
     except Exception as e:  # noqa: BLE001
         emit("Exception", {"Error": str(e)})

@@ -308,7 +308,8 @@ def minhash_signatures_sql(
     vs byte-level in the numpy kernel, so the two paths are
     interchangeable as an LSH family but NOT row-for-row identical.
 
-    Trade (measured in ``tools/ab_minhash.py``, ``AB_MODE=kernel``):
+    Trade (measured in ``tools/ab_minhash.py``, ``AB_MODE=kernel``;
+    reproduce with ``git show ef4b941:tools/ab_minhash.py``):
     higher-order-function lambdas evaluate interpreted (outside
     whole-stage codegen), so each shingle costs an interpreted
     multiply-min per permutation; the numpy kernel does the same
@@ -410,9 +411,10 @@ def optimal_bands(num_perm: int, threshold: float) -> int:
     verify-rejected, ~55 % of the whole survivors query — and
     t*-matched banding is 2.3x faster end-to-end with measured
     recall/precision 1.0 on the exact-Jaccard baseline
-    (tools/ab_minhash_presets.py). Raise num_perm (sharper estimator
-    AND sharper banding) when boundary pairs matter; every
-    threshold-bearing entry point defaults ``bands=None`` -> this, and
+    (``git show ef4b941:tools/ab_minhash_presets.py``). Raise num_perm
+    (sharper estimator AND sharper banding) when boundary pairs matter;
+    every threshold-bearing entry point defaults ``bands=None`` -> this,
+    and
     an explicit ``bands`` pins a layout (band keys derive at call time,
     so persisted signature indexes remain valid under ANY choice)."""
     best_r = 1  # r=1: t* = 1/num_perm, below any sane threshold

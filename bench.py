@@ -289,10 +289,9 @@ def calibration_probe(spark, runs: int = 3) -> float:
 
     The host this bench runs on drifts: round 10 measured identical
     code +24 % suite-over-suite (driver) and a further +27 % (judge
-    rerun) — pure neighbor load. Per-query bands alone cannot tell a
+    rerun) — pure neighbor load. A row's seconds alone cannot tell a
     slow host from a slow plan, so every BENCH record carries this
-    probe and the tripwire expresses each band floor in CURRENT-host
-    seconds (floor x cal_now / cal_then). The workload is all
+    probe as its reader's reference for host weather. The workload is all
     whole-stage-codegen arithmetic (range -> xxhash64 -> partial
     hash-agg over 65536 groups, one tiny exchange) with partition count
     pinned at 32 regardless of $SPARK_GRAFT_CPUS, so the number is
@@ -335,10 +334,7 @@ def shuffle_probe(spark, runs: int = 2) -> dict:
     64-partition hash exchange + wide agg — moves ~0.5 GiB through
     serialization, shuffle block write/read on spark.local.dir, and
     the sort/agg memory path, so its seconds track exactly the
-    resource those rows burn. The tripwire prices
-    ``SHUFFLE_BOUND_ROWS`` in these units once history carries the
-    reading (the calibration_io_sustained self-heal pattern: record
-    this round, engage next)."""
+    resource those rows burn."""
     from pyspark.sql import functions as F
 
     best = None
@@ -374,10 +370,9 @@ def io_probe(runs: int = 2, mib: int = 256) -> dict:
     query (its forget rewrite moves ~2 GiB through the page cache at
     sf10). Round-14 bisect data: across three sessions the row's raw
     min tracked this probe's reading (197-536 MiB/s, oscillating by
-    minutes) while the CPU probe sat flat at 0.62-0.65 s — so its
-    floor must be adjudicated in disk-bandwidth units, not
-    CPU-calibration units (the tripwire's ``IO_BOUND_ROWS`` path).
-    Max-of-runs because bandwidth is a capacity: the best observed rate
+    minutes) while the CPU probe sat flat at 0.62-0.65 s — so a
+    reading of that row is weighed against this probe, not the CPU
+    one. Max-of-runs because bandwidth is a capacity: the best observed rate
     is the host's ability, the worst is neighbor interference.
 
     Probe hygiene (round-15, ADVICE): the buffer is ``mib`` MiB of
@@ -394,14 +389,9 @@ def io_probe(runs: int = 2, mib: int = 256) -> dict:
     BURST bandwidth — cloud volumes serve short writes from a credit
     bucket at a rate multi-GiB writes cannot sustain (measured same
     session this round: 500 MiB/s burst vs 197 MiB/s sustained on this
-    host — a 2.6x gap that made the burst-priced io floor flag pure
-    disk weather on the sf10 lane row, whose rewrite moves ~3 GiB).
-    ``main`` therefore records a second reading at ``mib=1024`` as
-    ``calibration_io_sustained``; ``evaluate_tripwire`` prefers the
-    sustained reading for IO_BOUND_ROWS whenever the current record
-    AND a prior both carry it, falling back to the burst band
-    otherwise (the same self-heal-over-one-round pattern the io band
-    itself used in round 15).
+    host, while the sf10 lane row's rewrite moves ~3 GiB). ``main``
+    therefore records a second reading at ``mib=1024`` as
+    ``calibration_io_sustained``.
     """
     probe_dir = tempfile.gettempdir()
     path = os.path.join(probe_dir, "_s3f2_io_probe.bin")
@@ -429,461 +419,33 @@ def io_probe(runs: int = 2, mib: int = 256) -> dict:
     }
 
 
-# Rows whose wall-clock is DISK-bandwidth-bound, not CPU-bound: the
-# round-14 bisect (SCALE.md:930-971) proved find_forget_job's time is
-# its ~2 GiB rewrite I/O — its raw min tracked the disk probe's
-# 197-536 MiB/s oscillation while the CPU probe sat flat — so the
-# tripwire must normalize these rows by ``calibration_io``, not the CPU
-# probe (r14 verdict ask #2): a disk-weather swing scales row and probe
-# alike and stays quiet, while a genuine plan regression (more bytes
-# moved, or a new CPU stage) still flags at any bandwidth.
-IO_BOUND_ROWS = {"find_forget_job"}
-
-# Rows whose cost is dominated by corpus-scale exchanges (the MinHash/
-# SimHash band joins, span/paragraph reassembly, ExactSubstr window
-# relation): their floors are additionally priced in shuffle-probe
-# units once history carries the reading (round 17 — see
-# shuffle_probe's docstring for the two-regime evidence). The max-of-
-# bases rule means a slow-shuffle day RAISES these rows' defensible
-# floor instead of flagging weather, while a real plan regression
-# still exceeds every basis.
-SHUFFLE_BOUND_ROWS = {
-    "dedup_simhash_pairs_v2",
-    "dedup_clusters_minhash",
-    "dedup_minhash_survivors_t08",
-    "dedup_span_removal",
-    "dedup_paragraphs",
-    "dedup_exact_substrings",
-}
-
-
-# A prior record's probe may only re-price its cells when the probe
-# shows a host within this factor of the fleet's best-observed probe
-# for that basis. Rationale (round 17, measured): normalization assumes query
-# wall-clock scales WITH the probe (a uniformly slow host). On this
-# host class the probes can degrade far more than the rows they price
-# — the committed probe-2.854 weather record's disk/shuffle-bound sf10
-# cells sat at quiet-session values (its own artifact documents the
-# regime diagnosis) — so dividing a quiet-valued cell by a 4-5x probe
-# fabricates a normalized floor 3-6x below any cell EVER OBSERVED, and
-# the band min() selects exactly those poisoned samples: a later quiet
-# run false-flagged 37 rows across the three lanes, every floor traced
-# to a degraded-probe record. Records from such sessions keep their
-# raw values (upper bounds — still valid for the uncalibrated
-# fallback) but are excluded from the normalized bands. One-sided by
-# design: a FASTER-than-median probe with quiet cells is the best-ever
-# band the tripwire wants; only the slow-probe direction breaks the
-# proportionality assumption.
-PROBE_OUTLIER_FACTOR = 1.5
-
-
-# record-tuple probe indices -> basis names (for the probe_excluded
-# marker carried through the history tuples)
-_PROBE_BASIS = {1: "cpu", 2: "io", 3: "ios", 4: "shuffle"}
-
-
-def _probe_anchor(vals, slower_is_higher=True):
-    """The fleet's best-observed probe for a basis: min for time-unit
-    probes (fixed work — the fastest reading is the closest to
-    hardware truth and can only be approached, never faked, by a
-    contended host), max for bandwidth probes."""
-    return min(vals) if slower_is_higher else max(vals)
-
-
-def _probe_outlier_cut(records, idx, slower_is_higher=True):
-    """Null out probe field ``idx`` on records whose probe indicates a
-    host >= PROBE_OUTLIER_FACTOR x slower than the fleet's
-    BEST-OBSERVED probe for that basis. Time-unit probes (cpu/shuffle
-    seconds) degrade upward; bandwidth probes (MiB/s) degrade downward.
-
-    Anchored to the fleet best rather than the median (round 18, r17
-    ADVICE): with a median anchor, a degraded MAJORITY shifts the
-    median into the degraded regime and the cut silently no-ops — the
-    poisoned normalized floors return with no signal. The best reading
-    cannot be dragged by degraded sessions (it is itself never cut:
-    best <= factor x best), so the rule is stable under any mix. The
-    round-17 class-(a) residue — quiet-band records whose probes
-    overstated their sessions' row-level degradation (e.g. the 0.927
-    cpu probe whose cells sat at 0.512-session values) — now also
-    falls outside the band instead of fabricating sub-observed floors.
-    Excluded records get the basis name added to their marker set
-    (last tuple element) so the tripwire's fallback flag can
-    distinguish a probe-era degraded session from a pre-probe-era
-    record."""
-    vals = [r[idx] for r in records if r[idx]]
-    if len(vals) < 2:
-        return records  # no fleet to define an anchor against
-    best = _probe_anchor(vals, slower_is_higher)
-    out = []
-    for r in records:
-        p = r[idx]
-        degraded = p is not None and (
-            p > PROBE_OUTLIER_FACTOR * best
-            if slower_is_higher
-            else p * PROBE_OUTLIER_FACTOR < best
-        )
-        if degraded:
-            r = (
-                r[:idx] + (None,) + r[idx + 1:-1]
-                + (r[-1] | {_PROBE_BASIS[idx]},)
-            )
-        out.append(r)
-    return out
-
-
-def _load_bench_history(repo_dir: str):
-    """Per lane/query history from every recorded ``BENCH_r*.json``:
-    ``hist[lane][query] -> [(value, cal, io, ios, sh, excluded)]``
-    plus the number of rounds seen and the surviving fleet probes per
-    basis (``fleet["cpu"|"io"|"ios"|"shuffle"]``). Shared by the
-    tripwire and the sf10 lane's retry floors so both price prior
-    cells identically. Degraded-probe records (see
-    PROBE_OUTLIER_FACTOR) contribute raw values only — their probes
-    are nulled before the tuples are built, so no normalized band is
-    derived from a session whose probe/row proportionality is broken;
-    the ``excluded`` frozenset names the bases that were cut so the
-    fallback flag can say WHY a floor is unpriced."""
-    import glob
-
-    hist: dict[str, dict[str, list[tuple]]] = {}
-    rounds = 0
-    records: list[tuple] = []  # (lanes, cal, io, ios, sh, excl_set)
-    for path in sorted(glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))):
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-        except Exception:  # noqa: BLE001 — a corrupt record is not fatal
-            continue
-        parsed = doc.get("parsed", doc)
-        if not isinstance(parsed, dict):
-            continue
-        cal = (parsed.get("calibration") or {}).get("value")
-        io_doc = parsed.get("calibration_io") or {}
-        io = io_doc.get("value")
-        # probe-methodology gate (round-16 ADVICE): only combine io
-        # readings taken with the fresh-urandom probe ("-fresh" in the
-        # workload tag). The pre-r15 probe rewrote one reused 1-MiB
-        # buffer, which a deduplicating/compressing filesystem folds —
-        # its inflated MiB/s would inflate the implied-MiB floor and
-        # mask or misprice regressions on IO_BOUND_ROWS. An old-basis
-        # (or untagged) reading degrades like the pre-probe case: no io
-        # band from that record, flags carry io_unpriced if none is
-        # left.
-        if io is not None and "-fresh" not in str(io_doc.get("workload") or ""):
-            io = None
-        # sustained-regime reading (round 16): multi-GiB writes on
-        # cloud volumes run below the 256 MiB burst rate; the io-bound
-        # lane row moves GiBs, so its band prefers this reading when
-        # both sides carry it. Same methodology gate.
-        ios_doc = parsed.get("calibration_io_sustained") or {}
-        ios = ios_doc.get("value")
-        if ios is not None and "-fresh" not in str(
-            ios_doc.get("workload") or ""
-        ):
-            ios = None
-        # shuffle-regime reading (round 17): same methodology gate —
-        # only same-versioned workloads combine
-        sh_doc = parsed.get("calibration_shuffle") or {}
-        sh = sh_doc.get("value")
-        if sh is not None and "-v1" not in str(sh_doc.get("workload") or ""):
-            sh = None
-        lanes = {
-            "sf0.1": parsed.get("queries"),
-            "sf1": (parsed.get("sf1") or {}).get("queries"),
-            "sf10": (parsed.get("sf10") or {}).get("queries"),
-        }
-        if any(lanes.values()):
-            rounds += 1
-        records.append((lanes, cal, io, ios, sh, frozenset()))
-    # degraded-probe exclusion, per basis (indices into the record
-    # tuple: 1=cpu seconds, 2=io burst MiB/s, 3=io sustained MiB/s,
-    # 4=shuffle seconds)
-    records = _probe_outlier_cut(records, 1, slower_is_higher=True)
-    records = _probe_outlier_cut(records, 2, slower_is_higher=False)
-    records = _probe_outlier_cut(records, 3, slower_is_higher=False)
-    records = _probe_outlier_cut(records, 4, slower_is_higher=True)
-    fleet: dict[str, list[float]] = {}
-    for _lanes, cal, io, ios, sh, _excl in records:
-        for basis, p in (("cpu", cal), ("io", io), ("ios", ios),
-                         ("shuffle", sh)):
-            if p:
-                fleet.setdefault(basis, []).append(p)
-    for lanes, cal, io, ios, sh, excl in records:
-        for lane, queries in lanes.items():
-            if queries:
-                for q, v in queries.items():
-                    hist.setdefault(lane, {}).setdefault(q, []).append(
-                        (v, cal, io, ios, sh, excl)
-                    )
-    return hist, rounds, fleet
-
-
-def sf10_retry_floors(repo_dir: str, cur_cal) -> dict[str, float]:
-    """Cheap per-row band floors (current-host seconds) for the sf10
-    lane's RETRY decision — the cpu-basis floor the tripwire would use,
-    computed before the lane runs. Rows with <2 priors get no floor
-    (the tripwire would not flag them either). This is a retry
-    heuristic, not a flag: a mispriced floor costs at most one extra
-    bounded sample, never a recorded false positive."""
-    hist, _, _ = _load_bench_history(repo_dir)
-    floors: dict[str, float] = {}
-    for q, prior in hist.get("sf10", {}).items():
-        if len(prior) < 2:
-            continue
-        cpu_normed = [pv / pc for pv, pc, *_rest in prior if pc]
-        if cur_cal and cpu_normed:
-            floors[q] = min(cpu_normed) * cur_cal
-        else:
-            floors[q] = min(pv for pv, *_ in prior)
-    return floors
-
-
 def sf10_should_retry(
     name: str,
     runs: list[float],
-    floor,
     watch,
     rerun_under: float = 60.0,
     spread_third: float = 1.25,
-    factor: float = 1.5,
-    min_delta: float = 0.25,
 ) -> bool:
     """Whether the sf10 lane takes another sample after ``runs``.
 
-    Policy (round 17, closing the r16 verdict's no-retry hole): watch
-    rows ALWAYS run min-of-3 — the 60 s cutoff no longer strands them
-    at one weather-inflated sample (their recorded first samples sat
-    at 45-52 s, exactly the near-the-line case the r16 ADVICE called
-    out). Other rows above the cutoff stay min-of-1 — UNLESS the
-    sample exceeds the row's tripwire band floor by the same
-    (factor, min_delta) margin a flag would use, which earns exactly
-    one extra run: without it a weather-inflated first sample above
-    60 s became the recorded cell (the r16 68.7 s single-sample
-    dedup_simhash_pairs_v2 flag), i.e. the worst samples were the
-    ones the lane refused to retry. Sub-cutoff rows keep min-of-2
-    with a spread-triggered third."""
+    Watch rows always run min-of-3: their first samples sat near the
+    60 s cutoff and a single weather-inflated sample is what min-of-1
+    would record. Other rows at or above the cutoff stay min-of-1; they
+    exist to catch scaling-shape breaks, and a second multi-minute run
+    buys no noise rejection worth its wall-clock. Sub-cutoff rows run
+    min-of-2 with a third sample when the two spread past
+    ``spread_third``."""
     if len(runs) >= 3:
         return False
     if name in watch:
         return True
     if runs[-1] >= rerun_under:
-        return (
-            len(runs) < 2
-            and floor is not None
-            and min(runs) > factor * floor
-            and min(runs) - floor > min_delta
-        )
+        return False
     want = 2
     if len(runs) >= 2 and max(runs) > spread_third * min(runs):
         want = 3
     return len(runs) < want
 
-
-def evaluate_tripwire(
-    out: dict,
-    repo_dir: str,
-    factor: float = 1.5,
-    min_delta: float = 0.25,
-) -> None:
-    """Per-query regression tripwire against the multi-round band.
-
-    Round 9 measured identical code moving -51%/+11% per query between
-    rounds, so a single prior sample cannot be a baseline. Instead each
-    lane's floor is the MIN across every recorded ``BENCH_r*.json``
-    (each itself a min-of-N), and the flag fires only when the current
-    min exceeds ``factor`` x that floor with >= 2 prior rounds of
-    evidence — a sustained shape change, not rig noise. ``min_delta``
-    gates the ABSOLUTE excess too: round-10 ran the bench twice
-    back-to-back on identical code and sub-second queries crossed 1.5x
-    their floor with a DIFFERENT flag set each run (pure neighbor
-    load), so a ratio alone cannot clear the noise envelope on small
-    timings — 0.1 s of jitter must not flag, while a heavy query
-    doubling still does.
-
-    Rig-drift normalization (round 11, engagement widened round 12):
-    when the current record and AT LEAST ONE prior record carry the
-    ``calibration`` probe, each query's band floor is computed in
-    CALIBRATION-NORMALIZED units (seconds per calibration-second) and
-    converted back to current-host seconds before comparison — a
-    uniformly slow host scales query and probe alike and does not flag,
-    while a single-query regression stands out at any host speed. A
-    one-sample normalized band is noisier than a deep one (the
-    ``n_probed`` field says how deep it is), but it is strictly better
-    than pricing today's run against raw seconds from the rig's
-    best-ever weather — exactly the false-positive shape round 11's
-    simhash flag took. With no probed prior at all the raw-seconds band
-    remains (pre-calibration behavior), and the flag then carries
-    ``weather_suspect: true`` when the floor itself predates the probe
-    era — the reader knows the band cannot distinguish a slow plan from
-    a fast old rig. Flags are advisory: re-run on a quiet rig before
-    treating one as a regression. Results land in ``out["tripwire"]``
-    so every BENCH record shows it evaluated."""
-    hist, rounds, fleet = _load_bench_history(repo_dir)
-    cur_cal = (out.get("calibration") or {}).get("value")
-    cur_io = (out.get("calibration_io") or {}).get("value")
-    cur_ios = (out.get("calibration_io_sustained") or {}).get("value")
-    cur_sh = (out.get("calibration_shuffle") or {}).get("value")
-    # Current-run probe outlier check (round 18, r17 ADVICE): the same
-    # one-sided rule the history cut applies, pointed at TODAY's
-    # probes. A degraded current-session probe breaks the same
-    # proportionality assumption — it multiplies every cpu/shuffle
-    # floor up (masking real regressions) and divides io floors down —
-    # so the record carries an explicit probe_suspect tag per basis.
-    # Advisory only: flags still compute (a reader discounts them).
-    probe_suspect: dict[str, bool] = {}
-    for basis, cur, slower_is_higher in (
-        ("cpu", cur_cal, True),
-        ("io", cur_io, False),
-        ("ios", cur_ios, False),
-        ("shuffle", cur_sh, True),
-    ):
-        vals = fleet.get(basis) or []
-        if cur is None or len(vals) < 2:
-            continue
-        best = _probe_anchor(vals, slower_is_higher)
-        if (cur > PROBE_OUTLIER_FACTOR * best if slower_is_higher
-                else cur * PROBE_OUTLIER_FACTOR < best):
-            probe_suspect[basis] = True
-    flagged: dict[str, dict] = {}
-    # per-lane io-band engagement for the disk-bound rows, recorded
-    # whether or not anything flags (round 17, r16 verdict ask #4: the
-    # artifact itself must show WHICH regime priced each io floor —
-    # previously that was only visible on a flag, so a clean round
-    # could not prove the sustained band engaged)
-    io_bands: dict[str, dict[str, str]] = {}
-    shuffle_bands: dict[str, dict[str, str]] = {}
-    current_lanes = {
-        "sf0.1": out.get("queries"),
-        "sf1": (out.get("sf1") or {}).get("queries"),
-        "sf10": (out.get("sf10") or {}).get("queries"),
-    }
-    for lane, current in current_lanes.items():
-        if not current:
-            continue
-        for q, v in current.items():
-            prior = hist.get(lane, {}).get(q, [])
-            if len(prior) < 2:
-                continue  # not enough band to distinguish noise
-            weather_suspect = False
-            basis = None
-            floors: dict[str, tuple[float, int]] = {}
-            io_regime = None
-            if q in IO_BOUND_ROWS:
-                # disk-bound row: cost scales with 1/bandwidth, so the
-                # band lives in implied-MiB units (seconds x MiB/s);
-                # the floor converts back at TODAY's measured bandwidth.
-                # The SUSTAINED reading is preferred whenever both the
-                # current record and a prior carry it — the row moves
-                # GiBs, and burst credit on cloud volumes makes the
-                # 256 MiB reading overstate what a multi-GiB rewrite
-                # gets (2.6x measured round 16); mixing regimes would
-                # misprice the floor, so the two never combine.
-                sus_normed = [
-                    pv * pios for pv, _pc, _pio, pios, *_ in prior if pios
-                ]
-                if cur_ios and sus_normed:
-                    floors["io"] = (
-                        min(sus_normed) / cur_ios, len(sus_normed)
-                    )
-                    io_regime = "sustained"
-                elif cur_io:
-                    io_normed = [
-                        pv * pio for pv, _pc, pio, *_ in prior if pio
-                    ]
-                    if io_normed:
-                        floors["io"] = (
-                            min(io_normed) / cur_io, len(io_normed)
-                        )
-                        io_regime = "burst"
-                io_bands.setdefault(lane, {})[q] = io_regime or "unpriced"
-            if q in SHUFFLE_BOUND_ROWS:
-                sh_normed = [
-                    pv / psh for pv, _pc, _pio, _pios, psh, *_ in prior
-                    if psh
-                ]
-                if cur_sh and sh_normed:
-                    floors["shuffle"] = (
-                        min(sh_normed) * cur_sh, len(sh_normed)
-                    )
-                shuffle_bands.setdefault(lane, {})[q] = (
-                    "priced" if "shuffle" in floors else "unpriced"
-                )
-            cpu_normed = [pv / pc for pv, pc, *_ in prior if pc]
-            if cur_cal and cpu_normed:
-                # floor in current-host seconds: best-ever cost per
-                # calibration-second, re-priced at today's probe
-                floors["cpu"] = (
-                    min(cpu_normed) * cur_cal, len(cpu_normed)
-                )
-            if floors:
-                # a row with both bases (the io-tagged rows at small
-                # scale factors are partly CPU-bound) is bounded below
-                # by BOTH cost models — the max is the tightest
-                # defensible floor, so disk weather can't flag a
-                # CPU-bound lane and CPU weather can't flag a
-                # disk-bound one; a real plan regression exceeds both
-                basis = max(floors, key=lambda b: floors[b][0])
-                floor, n_normed = floors[basis]
-                calibrated = True
-            else:
-                floor_rec = min(prior, key=lambda t: t[0])
-                floor_v, floor_cal = floor_rec[:2]
-                floor = floor_v
-                calibrated = False
-                # floor measured before the probe existed: the band
-                # aggregates the rig's best-ever weather and cannot
-                # be re-priced — treat a flag as weather-suspect.
-                # A probe NULLED by the outlier cut is a different
-                # story (a probe-era degraded session, r17 ADVICE):
-                # the marker set distinguishes the two.
-                floor_excl = floor_rec[-1] if isinstance(
-                    floor_rec[-1], frozenset
-                ) else frozenset()
-                weather_suspect = (
-                    floor_cal is None and "cpu" not in floor_excl
-                )
-            if v > factor * floor and v - floor > min_delta:
-                flag = {
-                    "current": v,
-                    "band_floor": round(floor, 3),
-                    "ratio": round(v / floor, 2),
-                    "n_prior": len(prior),
-                    "calibrated": calibrated,
-                }
-                if calibrated:
-                    flag["n_probed"] = n_normed
-                    flag["basis"] = basis
-                    if basis == "io" and io_regime:
-                        flag["io_regime"] = io_regime
-                elif weather_suspect:
-                    flag["weather_suspect"] = True
-                elif not calibrated and "cpu" in floor_excl:
-                    # the floor record's probe was nulled by the
-                    # outlier cut — a probe-era degraded session, not
-                    # a pre-probe-era record
-                    flag["probe_excluded"] = True
-                if q in IO_BOUND_ROWS and "io" not in floors:
-                    # the round-14 bisect says a CPU/raw-banded flag on
-                    # a disk-bound row is uninterpretable — keep the
-                    # flag visible but say so
-                    flag["io_unpriced"] = True
-                flagged.setdefault(lane, {})[q] = flag
-    out["tripwire"] = {
-        "evaluated": True,
-        "factor": factor,
-        "min_delta": min_delta,
-        "rounds_seen": rounds,
-        "io_band": io_bands,
-        "shuffle_band": shuffle_bands,
-        "flagged": flagged,
-    }
-    if probe_suspect:
-        out["tripwire"]["probe_suspect"] = probe_suspect
-        print(f"# TRIPWIRE probe_suspect (today's probe is a fleet "
-              f"outlier; floors mispriced): {json.dumps(probe_suspect)}",
-              file=sys.stderr)
-    if flagged:
-        print(f"# TRIPWIRE flagged: {json.dumps(flagged)}", file=sys.stderr)
 
 
 def main():
@@ -918,11 +480,9 @@ def main():
         "calibration": {"value": cal, "workload": CAL_WORKLOAD},
         "calibration_io": io_probe(),
         # sustained regime (1 GiB): what a multi-GiB rewrite actually
-        # gets on a burst-credit volume; IO_BOUND_ROWS band on this
-        # reading once history carries it (round 16)
+        # gets on a burst-credit volume (round 16)
         "calibration_io_sustained": io_probe(runs=1, mib=1024),
-        # parallel shuffle/memory regime (round 17): prices the
-        # SHUFFLE_BOUND_ROWS band once history carries the reading
+        # parallel shuffle/memory regime (round 17)
         "calibration_shuffle": shuffle_probe(spark),
     }
 
@@ -983,7 +543,8 @@ def main():
         # dedup_span_removal joined the watch set in round 17: its r16
         # min-of-2 (30.06/29.99 s) read as a 1.49x calibrated drift,
         # but the same-session standalone A/B at the same HEAD
-        # (tools/adjudicate_span_removal.py, SCALE.md round-17 entry)
+        # (SCALE.md round-17 entry; reproduce with
+        # `git show ef4b941:tools/adjudicate_span_removal.py`)
         # measured [34.5, 24.2, 18.6, 20.0] at probe 0.651 — a JIT
         # warm-up curve whose converged min (28.6 cal-sec) sits INSIDE
         # the r15 floor (30.0 cal-sec). Two samples caught only the
@@ -992,8 +553,7 @@ def main():
         # on identical evidence: two quiet-rig lane cells recorded
         # 53.4/54.7 s while the same-HEAD standalone min-of-3 converged
         # 86.4 -> 59.1 -> 34.7 s (control row flat) — its >60 s first
-        # samples hit the above-cutoff path, whose bounded single retry
-        # catches only the curve's second point.
+        # samples hit the above-cutoff path, which records one sample.
         # dedup_minhash_survivors_t08 joined in round 18 closing the
         # r17 verdict's drift adjudication: the row's recorded r17
         # cells ([12.0, 11.4], [13.8, 12.1] — spreads too tight to
@@ -1009,28 +569,19 @@ def main():
             "dedup_exact_substrings", "dedup_minhash_survivors_t08",
         }
         SF10_SPREAD_THIRD = 1.25
-        # band floors for the above-cutoff retry decision (r16 verdict
-        # ask #2); priced once, before the lane runs, at today's probe
-        lane_floors = sf10_retry_floors(
-            os.path.dirname(os.path.abspath(__file__)),
-            (out.get("calibration") or {}).get("value"),
-        )
 
         def sf10_run(name, thunk):
-            # a lane query failing (the likeliest break at a new scale)
+            # ``thunk`` runs the row once and returns its own seconds; a
+            # lane query failing (the likeliest break at a new scale)
             # must cost its own number, not the whole BENCH record
             runs: list[float] = []
             try:
-                n = None
                 while True:
-                    start = time.perf_counter()
-                    n = thunk()
-                    runs.append(round(time.perf_counter() - start, 3))
+                    runs.append(round(thunk(), 3))
                     _lane_gc()
                     if not sf10_should_retry(
                         name,
                         runs,
-                        lane_floors.get(name),
                         SF10_WATCH,
                         rerun_under=SF10_RERUN_UNDER,
                         spread_third=SF10_SPREAD_THIRD,
@@ -1038,8 +589,8 @@ def main():
                         break
                 sf10[name] = min(runs)
                 sf10_spread[name] = runs
-                print(f"# [sf10] {name}: {sf10[name]}s ({n} rows, "
-                      f"spread {runs})", file=sys.stderr)
+                print(f"# [sf10] {name}: {sf10[name]}s (spread {runs})",
+                      file=sys.stderr)
             except Exception as exc:  # noqa: BLE001
                 sf10_errors[name] = f"{type(exc).__name__}: {exc}"[:400]
                 if runs:
@@ -1048,51 +599,24 @@ def main():
                       file=sys.stderr)
                 _lane_gc()
 
+        def timed_count(fn):
+            start = time.perf_counter()
+            fn(spark, sf10_dir).count()
+            return time.perf_counter() - start
+
         for name in SF10_QUERIES:
             fn = _resolve_query(name)
-            sf10_run(name, lambda f=fn: f(spark, sf10_dir).count())
-        # find_forget_job times itself (its lake setup is excluded), so
-        # it gets its own min-of-2 loop instead of sf10_run's timer
-        runs = []
-        try:
-            for _ in range(2):
-                runs.append(
-                    round(bench_find_forget_job(spark, sf10_dir), 3)
-                )
-                _lane_gc()
-                # same above-cutoff policy as sf10_run: a first sample
-                # past 60 s still earns its second run when it exceeds
-                # the row's band floor (otherwise min-of-1 stands)
-                if runs[-1] >= SF10_RERUN_UNDER and not sf10_should_retry(
-                    "find_forget_job",
-                    runs,
-                    lane_floors.get("find_forget_job"),
-                    SF10_WATCH,
-                    rerun_under=SF10_RERUN_UNDER,
-                    spread_third=SF10_SPREAD_THIRD,
-                ):
-                    break
-            sf10["find_forget_job"] = min(runs)
-            sf10_spread["find_forget_job"] = runs
-            print(f"# [sf10] find_forget_job: {sf10['find_forget_job']}s "
-                  f"(spread {runs})", file=sys.stderr)
-        except Exception as exc:  # noqa: BLE001
-            sf10_errors["find_forget_job"] = (
-                f"{type(exc).__name__}: {exc}"[:400]
-            )
-            if runs:
-                sf10_spread["find_forget_job"] = runs
-            print(f"# [sf10] find_forget_job FAILED: "
-                  f"{sf10_errors['find_forget_job']}", file=sys.stderr)
+            sf10_run(name, lambda f=fn: timed_count(f))
+        # find_forget_job times itself: its lake setup is excluded
+        sf10_run(
+            "find_forget_job", lambda: bench_find_forget_job(spark, sf10_dir)
+        )
         out["sf10"] = {
             "value": round(sum(sf10.values()), 3),
             "queries": sf10,
             # actual per-row sample counts (r16 ADVICE: the old
             # hardcoded 2 misdescribed watched/spread-tripled rows)
             "runs": {q: len(r) for q, r in sf10_spread.items()},
-            "retry_floors": {
-                q: round(v, 3) for q, v in sorted(lane_floors.items())
-            },
             "watch_min3": sorted(SF10_WATCH),
             "spread_third_over": SF10_SPREAD_THIRD,
             "rerun_under_sec": SF10_RERUN_UNDER,
@@ -1124,7 +648,6 @@ def main():
             }
         _lane_gc()
 
-    evaluate_tripwire(out, os.path.dirname(os.path.abspath(__file__)))
     emit_record(out)
 
 
@@ -1132,10 +655,10 @@ def emit_record(out: dict, argv: list[str] | None = None) -> str:
     """Write the record to disk and print it as the SINGLE FINAL stdout
     line. The one-line-JSON stdout contract is the driver's parse
     surface and it has been lost twice to interleaved diagnostics
-    (BENCH_r13/r14 truncation; BENCH_r16's tail ended in the tripwire
-    dump — r17 verdict ask #3), so this function is the only stdout
-    writer in the module: every diagnostic, tripwire message and lane
-    log prints to stderr (asserted by test_bench_contract.py against
+    (BENCH_r13/r14 truncation; BENCH_r16's tail ended in an interleaved
+    diagnostic dump — r17 verdict ask #3), so this function is the only
+    stdout writer in the module: every diagnostic and lane log prints
+    to stderr (asserted by test_bench_contract.py against
     the source), stderr is flushed BEFORE the payload so a merged
     stdout+stderr pipe cannot interleave a late diagnostic into the
     JSON line, and the payload is flushed immediately after.
@@ -1144,11 +667,12 @@ def emit_record(out: dict, argv: list[str] | None = None) -> str:
     two rounds running the driver's tail capture truncated the recorded
     artifact (BENCH_r13/r14 ``parsed: null``) — the on-disk copy is the
     artifact of record when stdout gets clipped. By DEFAULT every run
-    overwrites BENCH_rlast_local.json in the repo: the name matches the
-    tripwire's BENCH_r*.json glob, so the most recent run always
-    contributes a full-fidelity record to the band history
-    (round-record copies like BENCH_r15_local.json are kept by passing
-    --json-out / SPARK_GRAFT_BENCH_JSON_OUT explicitly)."""
+    overwrites BENCH_rlast_local.json in the repo, a copy of the latest
+    run for its reader; no code reads it back, and a record is never
+    judged against earlier ones (compare two commits with
+    ``tools/ab.py`` instead). Round-record copies like
+    BENCH_r15_local.json are kept by passing --json-out /
+    SPARK_GRAFT_BENCH_JSON_OUT explicitly."""
     payload = json.dumps(out)
     json_out = os.environ.get(
         "SPARK_GRAFT_BENCH_JSON_OUT",

@@ -89,11 +89,11 @@ assert doc["Mappers"]["lineitem"]["AffectedFiles"] == 0, doc
 print("SMOKE OK: post-delete dry-run finds 0 affected files")
 PY
 # the dry-run must not have touched the persistent deletion queue
-QOUT="$(python3 -m amazon_s3_find_and_forget_spark --state-dir "$WORK/state" list-queue 2>/dev/null | tail -1)"
+QOUT="$(python3 -m amazon_s3_find_and_forget_spark --state-dir "$WORK/state" list-queue 2>/dev/null)"
 python3 - "$QOUT" <<'PY'
 import json, sys
 q = json.loads(sys.argv[1])
-assert q == [], f"dry-run leaked into the deletion queue: {q}"
+assert q == {"MatchIds": [], "NextStart": None}, f"dry-run leaked into the deletion queue: {q}"
 print("SMOKE OK: dry-run left the deletion queue empty")
 PY
 

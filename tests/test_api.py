@@ -51,10 +51,11 @@ def test_queue_crud(engine):
         [{"MatchId": 123}, {"MatchId": "abc", "DataMappers": ["li"]}]
     )
     assert len(items) == 2
-    listed = engine.list_queue()
+    listed, _ = engine.list_queue_page()
     assert [it["MatchId"] for it in listed] == [123, "abc"]
     engine.delete_matches([items[0]["DeletionQueueItemId"]])
-    assert [it["MatchId"] for it in engine.list_queue()] == ["abc"]
+    listed, _ = engine.list_queue_page()
+    assert [it["MatchId"] for it in listed] == ["abc"]
 
     # composite validation (queue/handlers.py:144-161)
     with pytest.raises(ValueError):
@@ -77,7 +78,7 @@ def test_process_queue_end_to_end(engine, spark, lake):
     assert job["TotalObjectUpdateFailedCount"] == 0
     assert spark.read.parquet(lake).count() < n0
     # ST3: completed job consumed the queue
-    assert engine.list_queue() == []
+    assert engine.list_queue_page() == ([], None)
 
     # job listing + event paging
     jobs = engine.list_jobs()
@@ -637,7 +638,7 @@ def test_queue_anchor_survives_large_delete_burst(engine):
     anchor = next_start  # an early anchor, position ~10
     all_ids = [
         it["DeletionQueueItemId"]
-        for it in engine.list_queue(page_size=n + 10)
+        for it in engine.list_queue_page(page_size=n + 10)[0]
     ]
     engine.delete_matches(all_ids)  # one burst larger than the cap
     engine.enqueue_matches([{"MatchId": "fresh"}])
@@ -656,7 +657,7 @@ def test_queue_burst_anchors_survive_older_tombstones(engine):
     engine.enqueue_matches([{"MatchId": f"b{i}"} for i in range(cap + 500)])
     ids = {
         it["MatchId"]: it["DeletionQueueItemId"]
-        for it in engine.list_queue(page_size=2 * cap + 2000)
+        for it in engine.list_queue_page(page_size=2 * cap + 2000)[0]
     }
     # delete the LATER-enqueued b's first: their tombstones sit after
     # every a in the enqueue-order index

@@ -6,21 +6,13 @@ tail ended in an interleaved tripwire dump and the record never
 parsed), so these tests pin it structurally: the emit path prints the
 payload as the final stdout line and round-trips through json.loads,
 and no other print in bench.py may write to stdout.
-
-Also pins the round-18 probe hygiene additions (r17 ADVICE): the
-fixed-point outlier cut, the current-run probe_suspect tag, and the
-probe_excluded fallback marker.
 """
 
 import ast
 import json
 import os
 
-from test_bench_tripwire import (  # noqa: F401 — shared module loader
-    _record,
-    _record_cal,
-    bench,
-)
+from test_bench_tripwire import bench  # shared module loader
 
 
 def test_emit_record_stdout_round_trips(tmp_path, capsys, monkeypatch):
@@ -99,68 +91,3 @@ def test_only_emit_record_prints_to_stdout():
         if isinstance(n, ast.FunctionDef) and n.name == "emit_record"
     )
     assert emit_fn.lineno <= stdout_prints[0] <= emit_fn.end_lineno
-
-
-def test_probe_outlier_cut_anchors_to_fleet_best():
-    """A degraded MAJORITY must not hide itself (r17 ADVICE): with
-    probes [0.5, 2.4, 2.5, 2.6] a median anchor (2.45) cuts nothing at
-    factor 1.5 — the poisoned normalized floors stay in the band.
-    Anchoring to the fleet BEST (min for time probes) cuts all three
-    degraded records regardless of the mix."""
-    recs = [
-        (None, 0.5, None, None, None, frozenset()),
-        (None, 2.4, None, None, None, frozenset()),
-        (None, 2.5, None, None, None, frozenset()),
-        (None, 2.6, None, None, None, frozenset()),
-    ]
-    cut = bench._probe_outlier_cut(recs, 1, slower_is_higher=True)
-    survivors = [r[1] for r in cut if r[1]]
-    assert survivors == [0.5]
-    # the excluded records carry the marker naming the basis
-    assert all("cpu" in r[-1] for r in cut if r[1] is None)
-
-
-def test_current_run_probe_suspect_tagged(tmp_path):
-    """The current session's probe gets the same outlier treatment as
-    the history's (r17 ADVICE): a run whose probe is >= 1.5x the fleet
-    median carries probe_suspect so the reader knows today's floors
-    are mispriced — advisory, flags still compute."""
-    _record_cal(tmp_path, 1, {"q1": 1.0}, 0.5)
-    _record_cal(tmp_path, 2, {"q1": 1.1}, 0.55)
-    out = {"queries": {"q1": 1.0}, "calibration": {"value": 2.6}}
-    bench.evaluate_tripwire(out, str(tmp_path))
-    assert out["tripwire"]["probe_suspect"] == {"cpu": True}
-    # a quiet probe carries no tag at all
-    out2 = {"queries": {"q1": 1.0}, "calibration": {"value": 0.5}}
-    bench.evaluate_tripwire(out2, str(tmp_path))
-    assert "probe_suspect" not in out2["tripwire"]
-
-
-def test_fallback_flag_reports_probe_excluded_not_weather_suspect(
-    tmp_path,
-):
-    """A record whose probe was NULLED by the outlier cut must not be
-    mislabeled as a pre-probe-era record when it supplies the raw
-    fallback floor (r17 ADVICE): the flag says probe_excluded."""
-    # two degraded-probe records (fleet median comes from r1/r2 quiet
-    # probes on a DIFFERENT basis row so the cut engages) plus a quiet
-    # fleet; q2 exists only in the degraded records, so its band falls
-    # back to raw seconds with the floor's probe nulled by the cut.
-    _record_cal(tmp_path, 1, {"q1": 1.0}, 0.5)
-    _record_cal(tmp_path, 2, {"q1": 1.1}, 0.55)
-    _record_cal(tmp_path, 3, {"q2": 1.0}, 2.75)
-    _record_cal(tmp_path, 4, {"q2": 1.1}, 2.8)
-    out = {"queries": {"q2": 3.0}, "calibration": {"value": 0.5}}
-    bench.evaluate_tripwire(out, str(tmp_path))
-    flag = out["tripwire"]["flagged"]["sf0.1"]["q2"]
-    assert flag["calibrated"] is False
-    assert flag.get("probe_excluded") is True
-    assert "weather_suspect" not in flag
-    # a genuinely pre-probe-era floor still reads weather_suspect
-    _record(tmp_path, 5, {"q3": 0.5})
-    _record(tmp_path, 6, {"q3": 0.55})
-    out2 = {"queries": {"q3": 2.0}, "calibration": {"value": 0.5}}
-    bench.evaluate_tripwire(out2, str(tmp_path))
-    flag2 = out2["tripwire"]["flagged"]["sf0.1"]["q3"]
-    assert flag2.get("weather_suspect") is True
-    assert "probe_excluded" not in flag2

@@ -1,10 +1,10 @@
-"""The bench regression tripwire must compare against the multi-round
-band floor (min across recorded rounds), never a single prior sample —
-round 9 measured identical code moving -51%/+11% per query round-over-
-round, so one sample would both false-positive and false-negative."""
+"""The bench's sf10 sampling policy, and the loader the bench tests share.
+
+A bench record is never judged against earlier records; comparing two
+commits is ``tools/ab.py``'s job. What stays here is how many samples
+each sf10 lane row takes, which decides what the record's min is."""
 
 import importlib.util
-import json
 import os
 import sys
 
@@ -23,619 +23,24 @@ def _load_bench():
 bench = _load_bench()
 
 
-def _record(tmp_path, n, queries, sf1_queries=None):
-    parsed = {"queries": queries}
-    if sf1_queries is not None:
-        parsed["sf1"] = {"queries": sf1_queries}
-    doc = {"n": n, "rc": 0, "parsed": parsed}
-    (tmp_path / f"BENCH_r{n:02d}.json").write_text(json.dumps(doc))
-
-
-def test_flags_only_sustained_regressions(tmp_path):
-    # q1's band floor is 0.4 (r1..r3: noisy 0.4-1.0); current 0.55 is
-    # inside 1.5x the floor even though it is above the LAST sample —
-    # no flag. q2 genuinely regressed: floor 0.2, current 0.9.
-    _record(tmp_path, 1, {"q1": 1.0, "q2": 0.25, "q3": 0.21}, {"q1": 4.0})
-    _record(tmp_path, 2, {"q1": 0.4, "q2": 0.2, "q3": 0.19}, {"q1": 3.0})
-    _record(tmp_path, 3, {"q1": 0.5, "q2": 0.22, "q3": 0.2}, {"q1": 8.0})
-    out = {
-        "queries": {"q1": 0.55, "q2": 0.9, "q3": 0.3},
-        "sf1": {"queries": {"q1": 4.2}},
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    tw = out["tripwire"]
-    assert tw["evaluated"] is True and tw["rounds_seen"] == 3
-    assert "q1" not in tw["flagged"].get("sf0.1", {})
-    assert tw["flagged"]["sf0.1"]["q2"]["band_floor"] == 0.2
-    assert tw["flagged"]["sf0.1"]["q2"]["ratio"] == 4.5
-    # q3: 1.58x its floor but only +0.11s — sub-second jitter crosses
-    # any ratio under neighbor load; the absolute min_delta gate holds
-    assert "q3" not in tw["flagged"]["sf0.1"]
-    # sf1 lane: floor 3.0, current 4.2 = 1.4x -> inside the band
-    assert "sf1" not in tw["flagged"]
-
-
-def test_needs_two_prior_rounds(tmp_path):
-    # one prior sample is not a band: a -51% lucky run last round would
-    # make every healthy query look 2x regressed this round
-    _record(tmp_path, 1, {"q1": 0.1})
-    out = {"queries": {"q1": 0.5}}
-    bench.evaluate_tripwire(out, str(tmp_path))
-    assert out["tripwire"]["flagged"] == {}
-
-
-def test_new_query_and_corrupt_record_tolerated(tmp_path):
-    _record(tmp_path, 1, {"q1": 0.4})
-    _record(tmp_path, 2, {"q1": 0.4})
-    (tmp_path / "BENCH_r03.json").write_text("{not json")
-    out = {"queries": {"q1": 0.41, "brand_new": 9.0}}
-    bench.evaluate_tripwire(out, str(tmp_path))
-    assert out["tripwire"]["flagged"] == {}
-    assert out["tripwire"]["rounds_seen"] == 2
-
-
-def _record_cal(tmp_path, n, queries, cal, sf1_queries=None, sf10=None):
-    parsed = {"queries": queries, "calibration": {"value": cal}}
-    if sf1_queries is not None:
-        parsed["sf1"] = {"queries": sf1_queries}
-    if sf10 is not None:
-        parsed["sf10"] = {"queries": sf10}
-    doc = {"n": n, "rc": 0, "parsed": parsed}
-    (tmp_path / f"BENCH_r{n:02d}.json").write_text(json.dumps(doc))
-
-
-def test_uniformly_slow_host_does_not_flag(tmp_path):
-    """Round-10 adjudication case: every query 2.5x slower AND the
-    calibration probe 2.5x slower is host weather, not a regression —
-    the normalized band must stay quiet where the raw band would have
-    flagged everything."""
-    _record_cal(tmp_path, 1, {"q1": 1.0, "q2": 0.8}, 0.5, {"q1": 4.0})
-    _record_cal(tmp_path, 2, {"q1": 1.1, "q2": 0.9}, 0.55, {"q1": 4.4})
-    out = {
-        "queries": {"q1": 2.5, "q2": 2.0},
-        "sf1": {"queries": {"q1": 10.0}},
-        "calibration": {"value": 1.25},  # probe slowed by the same 2.5x
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    assert out["tripwire"]["flagged"] == {}
-
-
-def test_single_query_regression_flags_under_drift(tmp_path):
-    """The same 2.5x-slow host, but q1 ALSO regressed 3x in normalized
-    terms — it must flag (with the drift-adjusted floor) while its
-    merely-weathered neighbors stay quiet."""
-    _record_cal(tmp_path, 1, {"q1": 1.0, "q2": 0.8}, 0.5)
-    _record_cal(tmp_path, 2, {"q1": 1.1, "q2": 0.9}, 0.55)
-    out = {
-        "queries": {"q1": 7.5, "q2": 2.0},  # q1: 3x normalized
-        "calibration": {"value": 1.25},
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    flags = out["tripwire"]["flagged"]["sf0.1"]
-    assert list(flags) == ["q1"]
-    assert flags["q1"]["calibrated"] is True
-    # floor re-priced to the current host: (1.0/0.5) * 1.25 = 2.5s
-    assert flags["q1"]["band_floor"] == 2.5
-    assert flags["q1"]["ratio"] == 3.0
-
-
-def test_uncalibrated_history_falls_back_to_raw_band(tmp_path):
-    """Records predating the probe (and a current record without one)
-    keep the raw-seconds band — the tripwire degrades gracefully across
-    the history boundary — and the flag carries weather_suspect because
-    its floor aggregates pre-probe weather that cannot be re-priced."""
-    _record(tmp_path, 1, {"q1": 0.4})
-    _record(tmp_path, 2, {"q1": 0.45})
-    out = {
-        "queries": {"q1": 1.2},
-        "calibration": {"value": 1.0},  # current has one, history doesn't
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    flags = out["tripwire"]["flagged"]["sf0.1"]
-    assert flags["q1"]["calibrated"] is False
-    assert flags["q1"]["weather_suspect"] is True
-    assert flags["q1"]["band_floor"] == 0.4
-
-
-def test_calibration_engages_at_one_probed_prior(tmp_path):
-    """The round-12 boundary: exactly ONE prior record carries the
-    probe. The normalized band must engage (1-sample band beats pricing
-    today against pre-probe-era raw seconds): a host running 2x slower
-    than the probed prior — query and probe alike — must NOT flag even
-    though raw seconds put the current run 2x over the pre-probe floor,
-    and a real normalized regression at the same boundary MUST flag
-    with n_probed=1."""
-    _record(tmp_path, 1, {"q1": 1.0, "q2": 0.5})  # pre-probe era
-    _record_cal(tmp_path, 2, {"q1": 1.1, "q2": 0.55}, 0.5)  # first probe
-    # weather case: everything (probe included) 2x the probed prior
-    out = {
-        "queries": {"q1": 2.2, "q2": 1.1},
-        "calibration": {"value": 1.0},
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    assert out["tripwire"]["flagged"] == {}
-    # regression case: q1 3x in normalized terms on the same host
-    out = {
-        "queries": {"q1": 6.6, "q2": 1.1},
-        "calibration": {"value": 1.0},
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    flags = out["tripwire"]["flagged"]["sf0.1"]
-    assert list(flags) == ["q1"]
-    assert flags["q1"]["calibrated"] is True
-    assert flags["q1"]["n_probed"] == 1
-    # floor re-priced via the one probed prior: (1.1/0.5) * 1.0 = 2.2
-    assert flags["q1"]["band_floor"] == 2.2
-
-
-def _record_io(
-    tmp_path, n, queries, cal, io,
-    workload="seq-write-fsync-256MiB-fresh-max2",
-):
-    parsed = {
-        "queries": queries,
-        "calibration": {"value": cal},
-        "calibration_io": {"value": io, "workload": workload},
-    }
-    (tmp_path / f"BENCH_r{n:02d}.json").write_text(
-        json.dumps({"n": n, "rc": 0, "parsed": parsed})
-    )
-
-
-def test_io_bound_row_normalizes_by_disk_probe(tmp_path):
-    """The round-14 bisect case: find_forget_job is disk-bandwidth-
-    bound (its raw min tracked the 197-536 MiB/s disk oscillation while
-    the CPU probe sat flat), so its band must live in seconds x MiB/s.
-    Disk weather — row 2.5x slower, disk probe 2.5x slower, CPU probe
-    FLAT (exactly what round 14 measured) — must stay quiet; a plan
-    regression (3x the bytes at the same bandwidth) must flag with the
-    io basis. CPU-bound neighbors keep the CPU band either way."""
-    _record_io(tmp_path, 1, {"find_forget_job": 4.0, "q2": 1.0}, 0.5, 500.0)
-    _record_io(tmp_path, 2, {"find_forget_job": 4.4, "q2": 1.1}, 0.5, 450.0)
-    # disk-weather run: bandwidth collapsed 500 -> 200 MiB/s, the row
-    # scaled with it (4.0 * 500/200 = 10.0), CPU probe flat — the CPU
-    # band would price the floor at 4.0 and false-flag at ratio 2.5
-    out = {
-        "queries": {"find_forget_job": 10.0, "q2": 1.05},
-        "calibration": {"value": 0.5},
-        "calibration_io": {"value": 200.0},
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    assert out["tripwire"]["flagged"] == {}
-    # regression run: same 200 MiB/s disk, but the row moved 3x the
-    # bytes — io-normalized floor is min(4.0*500, 4.4*450)/200 = 9.9s,
-    # current 30.0
-    out = {
-        "queries": {"find_forget_job": 30.0, "q2": 1.05},
-        "calibration": {"value": 0.5},
-        "calibration_io": {"value": 200.0},
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    flags = out["tripwire"]["flagged"]["sf0.1"]
-    assert list(flags) == ["find_forget_job"]
-    assert flags["find_forget_job"]["basis"] == "io"
-    assert flags["find_forget_job"]["band_floor"] == 9.9
-    assert flags["find_forget_job"]["ratio"] == 3.03
-
-
-def test_io_tagged_row_on_cpu_bound_lane_not_flagged_by_fast_disk(tmp_path):
-    """The io tag covers every lane, but at small scale factors the
-    row is partly CPU-bound: if the floor were io-ONLY, a FASTER disk
-    today would shrink the floor under an unchanged row and false-flag
-    it. The floor is the max of both bases, so the CPU band holds the
-    line (and the same max lets the io band absorb disk weather on the
-    lane that IS disk-bound — the first io test)."""
-    _record_io(tmp_path, 1, {"find_forget_job": 1.0}, 0.5, 200.0)
-    _record_io(tmp_path, 2, {"find_forget_job": 1.05}, 0.5, 210.0)
-    out = {
-        # row unchanged, disk probe 3x faster, CPU probe flat:
-        # io floor alone would be 1.0*200/600 = 0.33 -> ratio 3
-        "queries": {"find_forget_job": 1.0},
-        "calibration": {"value": 0.5},
-        "calibration_io": {"value": 600.0},
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    assert out["tripwire"]["flagged"] == {}
-
-
-def test_old_basis_io_readings_are_excluded_from_the_band(tmp_path):
-    """Round-16 ADVICE: the pre-r15 probe rewrote one reused buffer, so
-    a dedup/compressing filesystem reported memory bandwidth — those
-    readings are NOT comparable with fresh-urandom readings and must
-    not price the implied-MiB floor. History carrying only old-basis
-    (or untagged) io readings degrades to the CPU band, and a flag on
-    the disk-bound row then carries io_unpriced — exactly the
-    pre-probe behavior."""
-    _record_io(
-        tmp_path, 1, {"find_forget_job": 4.0}, 0.5, 5000.0,
-        workload="seq-write-fsync-256MiB-max2",  # reused-buffer probe
-    )
-    _record_io(
-        tmp_path, 2, {"find_forget_job": 4.4}, 0.5, 4500.0,
-        workload=None,  # untagged: methodology unknown
-    )
-    # the inflated 5000 MiB/s priors would put the io floor at
-    # 4.0*5000/200 = 100 s and silently absorb a 30 s regression; with
-    # the old-basis readings excluded the CPU band flags it instead
-    out = {
-        "queries": {"find_forget_job": 30.0},
-        "calibration": {"value": 0.5},
-        "calibration_io": {"value": 200.0},
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    flag = out["tripwire"]["flagged"]["sf0.1"]["find_forget_job"]
-    assert flag["basis"] == "cpu"
-    assert flag["io_unpriced"] is True
-    # a mixed band keeps only the fresh reading
-    _record_io(tmp_path, 3, {"find_forget_job": 4.0}, 0.5, 500.0)
-    bench.evaluate_tripwire(out, str(tmp_path))
-    flag = out["tripwire"]["flagged"]["sf0.1"]["find_forget_job"]
-    assert flag["basis"] == "io"
-    assert flag["n_probed"] == 1
-    # floor = 4.0 * 500 / 200 = 10.0 from the fresh prior only
-    assert flag["band_floor"] == 10.0
-
-
-def _record_io2(tmp_path, n, queries, cal, io, ios):
-    parsed = {
-        "queries": queries,
-        "calibration": {"value": cal},
-        "calibration_io": {
-            "value": io, "workload": "seq-write-fsync-256MiB-fresh-max2",
-        },
-        "calibration_io_sustained": {
-            "value": ios, "workload": "seq-write-fsync-1024MiB-fresh-max1",
-        },
-    }
-    (tmp_path / f"BENCH_r{n:02d}.json").write_text(
-        json.dumps({"n": n, "rc": 0, "parsed": parsed})
-    )
-
-
-def test_sustained_io_reading_preferred_and_absorbs_burst_gap(tmp_path):
-    """Round-16 case, measured live: a burst-credit volume serves the
-    256 MiB probe at ~500 MiB/s while a multi-GiB rewrite gets
-    ~200 MiB/s — and the two regimes drift INDEPENDENTLY. When the
-    sustained rate collapses 2.6x with the burst probe flat, the
-    burst-priced io floor would flag pure disk weather on the GiB-
-    moving row; the sustained band (preferred whenever both sides
-    carry the reading) scales with the row and stays quiet. A real
-    regression at the SAME sustained bandwidth still flags, priced in
-    sustained units."""
-    _record_io2(tmp_path, 1, {"find_forget_job": 6.0}, 0.5, 520.0, 520.0)
-    _record_io2(tmp_path, 2, {"find_forget_job": 6.4}, 0.5, 500.0, 500.0)
-    # weather run: burst probe FLAT at 500, sustained collapsed to 200,
-    # row scaled with sustained (6.0 * 520/200 = 15.6). Burst pricing
-    # would floor at 6.0*520/500 = 6.24 -> ratio 2.5 (false flag).
-    out = {
-        "queries": {"find_forget_job": 15.6},
-        "calibration": {"value": 0.5},
-        "calibration_io": {"value": 500.0},
-        "calibration_io_sustained": {
-            "value": 200.0,
-            "workload": "seq-write-fsync-1024MiB-fresh-max1",
-        },
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    assert out["tripwire"]["flagged"] == {}
-    # regression run: same 200 MiB/s sustained, 3x the bytes moved
-    out = {
-        "queries": {"find_forget_job": 47.0},
-        "calibration": {"value": 0.5},
-        "calibration_io": {"value": 500.0},
-        "calibration_io_sustained": {
-            "value": 200.0,
-            "workload": "seq-write-fsync-1024MiB-fresh-max1",
-        },
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    flag = out["tripwire"]["flagged"]["sf0.1"]["find_forget_job"]
-    assert flag["basis"] == "io" and flag["io_regime"] == "sustained"
-    # floor = min(6.0*520, 6.4*500) / 200 = 15.6
-    assert flag["band_floor"] == 15.6
-
-
-def test_sustained_reading_falls_back_to_burst_when_history_lacks_it(
-    tmp_path,
-):
-    """History written before the sustained probe existed prices the
-    io band in burst units exactly as before (self-heal-over-one-round,
-    the same pattern the io band itself used in round 15); the flag
-    says which regime priced it."""
-    _record_io(tmp_path, 1, {"find_forget_job": 4.0}, 0.5, 500.0)
-    _record_io(tmp_path, 2, {"find_forget_job": 4.4}, 0.5, 450.0)
-    out = {
-        "queries": {"find_forget_job": 30.0},
-        "calibration": {"value": 0.5},
-        "calibration_io": {"value": 200.0},
-        "calibration_io_sustained": {
-            "value": 150.0,
-            "workload": "seq-write-fsync-1024MiB-fresh-max1",
-        },
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    flag = out["tripwire"]["flagged"]["sf0.1"]["find_forget_job"]
-    assert flag["basis"] == "io" and flag["io_regime"] == "burst"
-    assert flag["band_floor"] == 9.9  # min(4.0*500, 4.4*450) / 200
-
-
-def test_io_bound_row_without_io_history_marks_unpriced(tmp_path):
-    """Pre-io-probe history degrades to the CPU band, but any flag on a
-    disk-bound row priced that way carries io_unpriced — the round-14
-    bisect says such a flag cannot distinguish plan from disk weather."""
-    _record_cal(tmp_path, 1, {"find_forget_job": 4.0}, 0.5)
-    _record_cal(tmp_path, 2, {"find_forget_job": 4.4}, 0.5)
-    out = {
-        "queries": {"find_forget_job": 30.0},
-        "calibration": {"value": 0.5},
-        "calibration_io": {"value": 200.0},
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    flag = out["tripwire"]["flagged"]["sf0.1"]["find_forget_job"]
-    assert flag["basis"] == "cpu"
-    assert flag["io_unpriced"] is True
-
-
-def test_io_band_regime_recorded_without_flags(tmp_path):
-    """Round-17 (r16 verdict ask #4): the artifact must show which
-    regime priced each io-bound row's floor even on a CLEAN run —
-    engagement of the sustained band was previously only visible when
-    something flagged."""
-    _record_io2(tmp_path, 1, {"find_forget_job": 6.0}, 0.5, 520.0, 500.0)
-    _record_io2(tmp_path, 2, {"find_forget_job": 6.4}, 0.5, 500.0, 480.0)
-    out = {
-        "queries": {"find_forget_job": 6.1},
-        "calibration": {"value": 0.5},
-        "calibration_io": {"value": 500.0},
-        "calibration_io_sustained": {
-            "value": 490.0,
-            "workload": "seq-write-fsync-1024MiB-fresh-max1",
-        },
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    assert out["tripwire"]["flagged"] == {}
-    assert out["tripwire"]["io_band"] == {
-        "sf0.1": {"find_forget_job": "sustained"}
-    }
-    # burst-only current record -> burst regime, still visible
-    out2 = {
-        "queries": {"find_forget_job": 6.1},
-        "calibration": {"value": 0.5},
-        "calibration_io": {"value": 500.0},
-    }
-    bench.evaluate_tripwire(out2, str(tmp_path))
-    assert out2["tripwire"]["io_band"] == {
-        "sf0.1": {"find_forget_job": "burst"}
-    }
-
-
-def test_sf10_retry_policy_closes_the_over_cutoff_hole(tmp_path):
-    """Round-17 (r16 verdict ask #2): a first sample above the 60 s
-    cutoff must earn ONE retry when it exceeds the row's band floor by
-    the tripwire's own (factor, min_delta) margin — r16 recorded a
-    single 68.7 s weather sample as a cell precisely because the lane
-    refused to retry anything over 60 s. Watch rows are exempt from
-    the cutoff entirely (r16 ADVICE: their 45-52 s first samples sat
-    near the line, stranding min-of-3 at one sample)."""
+def test_sf10_retry_policy():
+    """Watch rows always run min-of-3, the 60 s cutoff included (their
+    45-52 s first samples sat near the line). Other rows at or above
+    the cutoff stay min-of-1. Sub-cutoff rows run min-of-2 with a third
+    sample when the two spread past 1.25x."""
     watch = {"w"}
     retry = bench.sf10_should_retry
-    # over-cutoff + over-floor: exactly one bounded retry
-    assert retry("q", [68.7], floor=14.8, watch=watch) is True
-    assert retry("q", [68.7, 65.0], floor=14.8, watch=watch) is False
-    # over-cutoff but consistent with its band: min-of-1 stands
-    assert retry("q", [68.7], floor=60.0, watch=watch) is False
-    # over-cutoff with no band (new row, <2 priors): min-of-1
-    assert retry("q", [68.7], floor=None, watch=watch) is False
-    # watch rows: always min-of-3, cutoff does not strand them
-    assert retry("w", [70.0], floor=None, watch=watch) is True
-    assert retry("w", [70.0, 68.0], floor=None, watch=watch) is True
-    assert retry("w", [70.0, 68.0, 69.0], floor=None, watch=watch) is False
+    # over-cutoff: min-of-1, however slow the first sample
+    assert retry("q", [68.7], watch) is False
+    assert retry("q", [600.0], watch) is False
+    # watch rows: always min-of-3, the cutoff does not strand them
+    assert retry("w", [70.0], watch) is True
+    assert retry("w", [70.0, 68.0], watch) is True
+    assert retry("w", [70.0, 68.0, 69.0], watch) is False
     # sub-cutoff rows keep min-of-2 with a spread-triggered third
-    assert retry("q", [10.0], floor=None, watch=watch) is True
-    assert retry("q", [10.0, 10.5], floor=None, watch=watch) is False
-    assert retry("q", [10.0, 14.0], floor=None, watch=watch) is True
-    assert retry("q", [10.0, 14.0, 11.0], floor=None, watch=watch) is False
-
-
-def test_sf10_retry_floors_price_like_the_tripwire(tmp_path):
-    """The retry floor is the tripwire's cpu-basis floor: best-ever
-    cost per calibration-second re-priced at today's probe; raw min
-    without probes; absent under two priors."""
-    _record_cal(tmp_path, 1, {}, 0.5, sf10={"heavy": 20.0, "solo": 5.0})
-    _record_cal(tmp_path, 2, {}, 0.4, sf10={"heavy": 18.0})
-    floors = bench.sf10_retry_floors(str(tmp_path), cur_cal=0.8)
-    # min(20/0.5, 18/0.4) * 0.8 = min(40, 45) * 0.8 = 32.0
-    assert floors == {"heavy": 32.0}
-    # no current probe -> raw-seconds floor (pre-calibration behavior)
-    assert bench.sf10_retry_floors(str(tmp_path), cur_cal=None) == {
-        "heavy": 18.0
-    }
-
-
-def _record_sh(tmp_path, n, queries, cal, sh, sf10=None):
-    parsed = {
-        "queries": queries,
-        "calibration": {"value": cal},
-        "calibration_shuffle": {
-            "value": sh, "workload": "shuffle-12M-md5-repart64-agg-min2-v1",
-        },
-    }
-    if sf10 is not None:
-        parsed["sf10"] = {"queries": sf10}
-    (tmp_path / f"BENCH_r{n:02d}.json").write_text(
-        json.dumps({"n": n, "rc": 0, "parsed": parsed})
-    )
-
-
-def test_shuffle_band_absorbs_parallel_regime_collapse(tmp_path):
-    """Round-17 case, measured live: shuffle-heavy sf10 dedup rows ran
-    1.5-2x their cpu-priced bands while the arithmetic probe read
-    FASTER than the prior round and both io probes sat mid-range — a
-    parallel shuffle/memory regime the other probes cannot see. When
-    the row scales with the shuffle probe, the shuffle-priced floor
-    (max-of-bases) absorbs the weather; a real regression at the SAME
-    shuffle rate still flags, priced in shuffle units."""
-    _record_sh(tmp_path, 1, {}, 0.5, 2.0,
-               sf10={"dedup_simhash_pairs_v2": 16.0})
-    _record_sh(tmp_path, 2, {}, 0.5, 2.2,
-               sf10={"dedup_simhash_pairs_v2": 18.0})
-    # weather run: cpu probe FLAT, shuffle probe collapsed 2x, row
-    # scaled with it (16.0 * 4.0/2.0 = 32.0). The cpu-priced floor
-    # (16.0) would flag at ratio 2.0; the shuffle floor absorbs it.
-    out = {
-        "sf10": {"queries": {"dedup_simhash_pairs_v2": 32.0}},
-        "calibration": {"value": 0.5},
-        "calibration_shuffle": {
-            "value": 4.0,
-            "workload": "shuffle-12M-md5-repart64-agg-min2-v1",
-        },
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    assert out["tripwire"]["flagged"] == {}
-    assert out["tripwire"]["shuffle_band"] == {
-        "sf10": {"dedup_simhash_pairs_v2": "priced"}
-    }
-    # real regression: same shuffle rate as history, 3x the work
-    out2 = {
-        "sf10": {"queries": {"dedup_simhash_pairs_v2": 48.0}},
-        "calibration": {"value": 0.5},
-        "calibration_shuffle": {
-            "value": 2.0,
-            "workload": "shuffle-12M-md5-repart64-agg-min2-v1",
-        },
-    }
-    bench.evaluate_tripwire(out2, str(tmp_path))
-    flag = out2["tripwire"]["flagged"]["sf10"]["dedup_simhash_pairs_v2"]
-    assert flag["basis"] == "shuffle"
-    # floor = min(16/2.0, 18/2.2) * 2.0 = 16.0 -> ratio 3.0
-    assert flag["band_floor"] == 16.0 and flag["ratio"] == 3.0
-
-
-def test_shuffle_reading_gated_by_workload_version(tmp_path):
-    """A prior record whose shuffle workload tag is a different version
-    must not combine into the band (the io '-fresh' methodology-gate
-    pattern); with no valid prior the row stays cpu-priced and the
-    artifact says unpriced."""
-    _record_cal(tmp_path, 1, {}, 0.5, sf10={"dedup_paragraphs": 20.0})
-    parsed = {
-        "queries": {},
-        "calibration": {"value": 0.5},
-        "calibration_shuffle": {"value": 2.0, "workload": "shuffle-v0-old"},
-        "sf10": {"queries": {"dedup_paragraphs": 21.0}},
-    }
-    (tmp_path / "BENCH_r02.json").write_text(
-        json.dumps({"n": 2, "rc": 0, "parsed": parsed})
-    )
-    out = {
-        "sf10": {"queries": {"dedup_paragraphs": 60.0}},
-        "calibration": {"value": 0.5},
-        "calibration_shuffle": {
-            "value": 2.0,
-            "workload": "shuffle-12M-md5-repart64-agg-min2-v1",
-        },
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    flag = out["tripwire"]["flagged"]["sf10"]["dedup_paragraphs"]
-    assert flag["basis"] == "cpu"
-    assert out["tripwire"]["shuffle_band"] == {
-        "sf10": {"dedup_paragraphs": "unpriced"}
-    }
-
-def test_degraded_cpu_probe_record_excluded_from_normalized_band(tmp_path):
-    """Round-17 measured case: a session whose CPU probe ran ~4-5x the
-    fleet median while its (disk/shuffle-bound) cells sat at quiet
-    values. Normalizing such a record fabricates a floor 3-6x below any
-    cell ever observed, and min() then selects it — a later QUIET run
-    false-flagged 37 healthy rows this way. The degraded-probe record
-    must not contribute to the normalized band; the quiet records keep
-    pricing it."""
-    _record_cal(tmp_path, 1, {"q1": 1.0}, 0.5)
-    _record_cal(tmp_path, 2, {"q1": 1.1}, 0.55)
-    # degraded session: probe 5x the fleet, row at its quiet value
-    # (non-uniform degradation — the proportionality assumption breaks).
-    # Unfixed, this record's normalized 1.0/2.75 = 0.364 s/cal-s would
-    # price a quiet-run floor of 0.364*0.5 = 0.18 and flag q1 at 5.5x.
-    _record_cal(tmp_path, 3, {"q1": 1.0}, 2.75)
-    out = {"queries": {"q1": 1.0}, "calibration": {"value": 0.5}}
-    bench.evaluate_tripwire(out, str(tmp_path))
-    assert out["tripwire"]["flagged"] == {}
-    # a real regression still flags, priced off the QUIET records:
-    # floor = min(1.0/0.5, 1.1/0.55) * 0.5 = 1.0
-    out2 = {"queries": {"q1": 3.0}, "calibration": {"value": 0.5}}
-    bench.evaluate_tripwire(out2, str(tmp_path))
-    flag = out2["tripwire"]["flagged"]["sf0.1"]["q1"]
-    assert flag["band_floor"] == 1.0 and flag["ratio"] == 3.0
-    # the excluded record still counts toward n_prior (raw evidence),
-    # but not toward the probed band depth
-    assert flag["n_prior"] == 3 and flag["n_probed"] == 2
-
-
-def test_degraded_io_probe_record_excluded_from_implied_mib_band(tmp_path):
-    """The io twin of the case above (bandwidth probes degrade DOWNWARD):
-    a session that caught the disk at ~9x below the fleet median while
-    the io-tagged row was not proportionally slow. Its implied-MiB
-    product (seconds x degraded-MiB/s) is far below the row's true byte
-    volume and would false-flag every healthy quiet run."""
-    _record_io(tmp_path, 1, {"find_forget_job": 4.0}, 0.5, 500.0)
-    _record_io(tmp_path, 2, {"find_forget_job": 4.4}, 0.5, 450.0)
-    # degraded-disk session: probe reads 50 MiB/s (9x below median) but
-    # the row ran near its quiet value (it was not purely disk-bound in
-    # that regime) -> implied MiB 5.0*50 = 250 vs the true ~2000.
-    # Unfixed floor at today's 400 MiB/s: 250/400 = 0.625 s -> ratio 8.
-    _record_io(tmp_path, 3, {"find_forget_job": 5.0}, 0.5, 50.0)
-    out = {
-        "queries": {"find_forget_job": 5.0},
-        "calibration": {"value": 0.5},
-        "calibration_io": {"value": 400.0},
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    assert out["tripwire"]["flagged"] == {}
-    # floor prices off the quiet records: min(4.0*500, 4.4*450)/400 =
-    # 4.95 s; a genuine 3x-the-bytes regression still flags in io units
-    out2 = {
-        "queries": {"find_forget_job": 16.0},
-        "calibration": {"value": 0.5},
-        "calibration_io": {"value": 400.0},
-    }
-    bench.evaluate_tripwire(out2, str(tmp_path))
-    flag = out2["tripwire"]["flagged"]["sf0.1"]["find_forget_job"]
-    assert flag["basis"] == "io"
-    assert flag["band_floor"] == 4.95
-
-
-def test_degraded_shuffle_probe_record_excluded(tmp_path):
-    """Same rule for the shuffle basis: the round-17 baseline session
-    recorded a 59.9 s shuffle probe (~10x the fleet median) while its
-    shuffle-bound cells were nowhere near 10x slow; its pv/psh unit
-    would fabricate sub-observed floors for every SHUFFLE_BOUND_ROW."""
-    _record_sh(tmp_path, 1, {}, 0.5, 5.0,
-               sf10={"dedup_paragraphs": 20.0})
-    _record_sh(tmp_path, 2, {}, 0.5, 5.5,
-               sf10={"dedup_paragraphs": 22.0})
-    # degraded session: shuffle probe 55 s, row only 1.5x — normalized
-    # 30/55 = 0.55 vs the quiet 4.0; unfixed floor 0.55*5.0 = 2.7 s
-    _record_sh(tmp_path, 3, {}, 0.5, 55.0,
-               sf10={"dedup_paragraphs": 30.0})
-    out = {
-        "sf10": {"queries": {"dedup_paragraphs": 21.0}},
-        "calibration": {"value": 0.5},
-        "calibration_shuffle": {
-            "value": 5.0,
-            "workload": "shuffle-12M-md5-repart64-agg-min2-v1",
-        },
-    }
-    bench.evaluate_tripwire(out, str(tmp_path))
-    assert out["tripwire"]["flagged"] == {}
-
-
-def test_probe_outlier_cut_needs_a_fleet(tmp_path):
-    """With a single probed record there is no fleet median to call it
-    an outlier against — the one-sample normalized band must keep
-    engaging exactly as test_calibration_engages_at_one_probed_prior
-    pins (a 1-sample band beats raw pre-probe seconds)."""
-    _record_cal(tmp_path, 1, {"q1": 1.0}, 2.75)  # looks slow, no fleet
-    _record(tmp_path, 2, {"q1": 1.0})  # pre-probe era
-    out = {"queries": {"q1": 2.0}, "calibration": {"value": 5.5}}
-    # uniformly-2x-the-probed-prior weather: normalized band must hold
-    bench.evaluate_tripwire(out, str(tmp_path))
-    assert out["tripwire"]["flagged"] == {}
+    assert retry("q", [10.0], watch) is True
+    assert retry("q", [10.0, 10.5], watch) is False
+    assert retry("q", [10.0, 14.0], watch) is True
+    assert retry("q", [10.0, 14.0, 11.0], watch) is False
+    # a second sample that crosses the cutoff ends the row
+    assert retry("q", [50.0, 70.0], watch) is False

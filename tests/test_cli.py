@@ -36,7 +36,7 @@ def test_cli_full_runbook(spark, tmp_path, sf_dir, capsys):
 
     run(capsys, *base, "enqueue", "--match-id", "1", "--match-id", "7")
     q = run(capsys, *base, "list-queue")
-    assert len(q) == 2
+    assert len(q["MatchIds"]) == 2 and q["NextStart"] is None
 
     job = run(capsys, *base, "process")
     assert job["JobStatus"] == "COMPLETED"
@@ -190,6 +190,24 @@ def test_cli_metrics_sparkless(tmp_path, capsys):
     out = run(capsys, "--state-dir", state, "metrics")
     assert out["JobsByStatus"] == {"COMPLETED": 1}
     assert out["RunningJobs"] == 0
+
+
+def test_cli_list_queue_pages_by_item_id(spark, tmp_path, capsys):
+    """--start-at is a page's NextStart, an item id: consuming the item
+    a page ended on must not shift the next page past a live item, as
+    an integer offset would."""
+    from amazon_s3_find_and_forget_spark.api import Engine
+
+    state = str(tmp_path / "state")
+    eng = Engine(None, state_dir=state)
+    eng.enqueue_matches([{"MatchId": m} for m in ("m0", "m1", "m2")])
+    base = ["--state-dir", state, "--cpus", "4", "list-queue",
+            "--page-size", "1"]
+    page1 = run(capsys, *base)
+    assert [it["MatchId"] for it in page1["MatchIds"]] == ["m0"]
+    eng.delete_matches([page1["NextStart"]])
+    page2 = run(capsys, *base, "--start-at", page1["NextStart"])
+    assert [it["MatchId"] for it in page2["MatchIds"]] == ["m1"]
 
 
 def test_cli_zorder(spark, tmp_path, sf_dir, capsys):
