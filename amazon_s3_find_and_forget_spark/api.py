@@ -28,6 +28,7 @@ import os
 import threading
 import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -70,16 +71,25 @@ class AlreadyRunningError(RuntimeError):
 
 
 class Engine:
-    """Control plane over a state directory + a SparkSession."""
+    """Control plane over a state directory + a SparkSession.
+
+    ``spark`` is a live session or a zero-argument callable that returns
+    one; a callable is called once, the first time a method needs a
+    session. Only ``put_data_mapper`` (schema validation),
+    ``process_queue``, ``vacuum`` and the deletion of a job whose
+    document names a ``ManifestTable`` need one. Every other call reads
+    and writes the state directory alone, as the reference's
+    control-plane Lambdas touch only DynamoDB, so it starts no JVM.
+    """
 
     def __init__(
         self,
-        spark: SparkSession,
+        spark: SparkSession | Callable[[], SparkSession],
         state_dir: str,
         kms=None,
         store_factory=None,
     ):
-        self.spark = spark
+        self._spark = spark
         self.state_dir = state_dir
         self.kms = kms
         # optional (role_arn | None) -> ObjectStore factory threaded to
@@ -94,6 +104,14 @@ class Engine:
         self._mutex = threading.RLock()
         self._job_thread: threading.Thread | None = None
         os.makedirs(os.path.join(state_dir, "jobs"), exist_ok=True)
+
+    @property
+    def spark(self) -> SparkSession:
+        if callable(self._spark):
+            with self._mutex:
+                if callable(self._spark):
+                    self._spark = self._spark()
+        return self._spark
 
     # --- tiny JSON "tables" ------------------------------------------------
 
@@ -571,12 +589,7 @@ class Engine:
         if t is not None:
             t.join(timeout)
 
-    def delete_job(
-        self,
-        job_id: str,
-        manifest_table: str | None = None,
-        force: bool = False,
-    ) -> dict:
+    def delete_job(self, job_id: str, force: bool = False) -> dict:
         """Delete a job document and clean up its manifests.
 
         The reference reacts to a Job row REMOVE (DynamoDB TTL or manual
@@ -600,22 +613,16 @@ class Engine:
         forever, which would otherwise block every future
         ``process_queue`` with AlreadyRunningError and be unsweepable).
 
-        ``manifest_table`` defaults to the ``ManifestTable`` setting, so
-        catalog partitions are dropped wherever the engine registered
-        them without every caller having to thread the table name.
+        The catalog table is the ``ManifestTable`` on the job document:
+        ``process_queue`` snapshots the setting there, so partitions are
+        dropped from the table the job registered them in, whatever the
+        setting reads now.
         """
         if not all(c.isalnum() or c in "-_" for c in job_id):
             raise ValueError(f"Invalid job id {job_id!r}")
         job = self._load(os.path.join("jobs", job_id), None)
         if job is None:
             raise KeyError(job_id)
-        if manifest_table is None:
-            # prefer the name the job RAN under (settings snapshot on the
-            # job doc): partitions registered before a ManifestTable
-            # reconfiguration must still be dropped from the old table
-            manifest_table = job.get(
-                "ManifestTable"
-            ) or self.get_settings().get("ManifestTable")
         if job.get("JobStatus") in self.ACTIVE_STATUSES and not force:
             raise AlreadyRunningError(
                 f"Job {job_id} is {job['JobStatus']}; refusing to delete "
@@ -647,7 +654,9 @@ class Engine:
                 os.rmdir(part_root)
             except OSError:  # pragma: no cover - unexpected stragglers
                 pass
-        dropped = self._drop_manifest_partitions(job_id, manifest_table)
+        dropped = self._drop_manifest_partitions(
+            job_id, job.get("ManifestTable")
+        )
         os.remove(self._path(os.path.join("jobs", job_id)))
         return {
             "Id": job_id,
@@ -661,7 +670,7 @@ class Engine:
         """Drop a job's (JobId, DataMapperId) partitions from the
         catalog-registered manifest table (glue.batch_delete_partition
         analog, stream_processor.py:110-127)."""
-        if not manifest_table or self.spark is None:
+        if not manifest_table:
             return 0
         if not self.spark.catalog.tableExists(manifest_table):
             return 0
@@ -689,9 +698,7 @@ class Engine:
             dropped += 1
         return dropped
 
-    def expire_jobs(
-        self, now: int | None = None, manifest_table: str | None = None
-    ) -> list[str]:
+    def expire_jobs(self, now: int | None = None) -> list[str]:
         """Sweep expired job documents (the DynamoDB TTL analog).
 
         Deletes — via ``delete_job``, so manifests are cleaned up too —
@@ -705,7 +712,7 @@ class Engine:
         expired = []
         for jid, job in list(self._iter_jobs()):
             if self._is_expirable(job, now):
-                self.delete_job(jid, manifest_table=manifest_table)
+                self.delete_job(jid)
                 expired.append(jid)
         return expired
 
@@ -762,20 +769,6 @@ class Engine:
         return jobs[:page_size]
 
     # --- maintenance -------------------------------------------------------
-
-    def compact_index(self, index_dir: str) -> dict:
-        """Maintenance pass for a dedup-screen index: fold its per-batch
-        ``batch=<digest>`` delta directories into one base partition
-        without breaking the screen's idempotent-retry protocol. This is
-        the screen-index counterpart of ``vacuum``, which does not touch
-        an index: its bin-packing globs only a directory's top-level
-        ``*.parquet`` files, and an index keeps every row under a
-        ``batch=`` partition directory. See
-        ``operators.incremental.compact_index`` for the protocol and
-        crash-ordering contract."""
-        from .operators.incremental import compact_index
-
-        return compact_index(self.spark, index_dir)
 
     def vacuum(
         self,

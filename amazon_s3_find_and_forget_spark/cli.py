@@ -25,18 +25,6 @@ import os
 import sys
 
 
-def _engine(args):
-    from .api import Engine
-    from .session import get_spark
-
-    spark = get_spark(
-        app_name="s3f2-cli",
-        cpus=args.cpus,
-        shuffle_partitions=args.cpus,
-    )
-    return Engine(spark, state_dir=args.state_dir)
-
-
 def _emit(obj) -> None:
     print(json.dumps(obj, indent=2, default=str))
 
@@ -163,21 +151,15 @@ def main(argv: list[str] | None = None) -> int:
     )
     dj.add_argument("job_id")
     dj.add_argument(
-        "--manifest-table",
-        default=None,
-        help="also drop the job's partitions from this catalog table",
-    )
-    dj.add_argument(
         "--force",
         action="store_true",
         help="delete even an active-status job (recover a wedged run)",
     )
 
-    ej = sub.add_parser(
+    sub.add_parser(
         "expire-jobs",
         help="sweep jobs past their JobDetailsRetentionDays expiry",
     )
-    ej.add_argument("--manifest-table", default=None)
 
     sub.add_parser(
         "metrics", help="operational gauges: queue depth, job statuses"
@@ -555,7 +537,8 @@ def main(argv: list[str] | None = None) -> int:
 
     args = p.parse_args(argv)
 
-    # validate argument semantics BEFORE paying Spark session startup
+    # validate argument semantics first: a data command would otherwise
+    # fail only after the Engine has started its session
     if args.cmd == "enqueue":
         if not args.match_id and not args.composite:
             p.error("enqueue needs --match-id and/or --composite")
@@ -666,39 +649,23 @@ def main(argv: list[str] | None = None) -> int:
             p.error("--by needs at least one column")
         if args.files < 1:
             p.error("--files must be >= 1")
+    from .api import Engine
+    from .session import get_spark
+
     if args.cmd == "settings":
         bad = [kv for kv in args.set if "=" not in kv]
         if bad:
             p.error(f"--set takes KEY=VALUE, got {bad[0]!r}")
-        from .api import Engine
-
         unknown = {
             kv.split("=", 1)[0] for kv in args.set
         } - set(Engine.DEFAULT_SETTINGS)
         if unknown:
             p.error(f"unknown settings: {sorted(unknown)}")
-        # settings only touch the state dir — never boot Spark for them
-        eng = Engine(None, state_dir=args.state_dir)
-    else:
-        # metrics/delete-job/expire-jobs are pure state-dir maintenance
-        # (unless a catalog table must be touched) — don't pay Spark
-        # startup for them
-        sparkless = args.cmd == "metrics" or (
-            args.cmd in ("delete-job", "expire-jobs")
-            and not args.manifest_table
-        )
-        if sparkless:
-            from .api import Engine
-
-            eng = Engine(None, state_dir=args.state_dir)
-            if args.cmd != "metrics" and eng.get_settings().get(
-                "ManifestTable"
-            ):
-                # a configured ManifestTable means deletion must drop
-                # catalog partitions — that needs a session after all
-                eng = _engine(args)
-        else:
-            eng = _engine(args)
+    # the Engine starts the session on first use, so commands that only
+    # read and write the state dir start no JVM
+    eng = Engine(
+        lambda: get_spark(app_name="s3f2-cli", cpus=args.cpus), args.state_dir
+    )
 
     if args.cmd == "put-mapper":
         cfg = {
@@ -758,17 +725,9 @@ def main(argv: list[str] | None = None) -> int:
         )
         _emit({"Events": events, "NextStart": next_wm})
     elif args.cmd == "delete-job":
-        _emit(
-            eng.delete_job(
-                args.job_id,
-                manifest_table=args.manifest_table,
-                force=args.force,
-            )
-        )
+        _emit(eng.delete_job(args.job_id, force=args.force))
     elif args.cmd == "expire-jobs":
-        _emit(
-            {"Expired": eng.expire_jobs(manifest_table=args.manifest_table)}
-        )
+        _emit({"Expired": eng.expire_jobs()})
     elif args.cmd == "metrics":
         _emit(eng.metrics())
     elif args.cmd == "serve":
@@ -781,6 +740,9 @@ def main(argv: list[str] | None = None) -> int:
         )
         if tokens:
             authorizer = BearerTokenAuthorizer(tokens)
+        # start the session before listening, so the first request that
+        # needs it does not pay the JVM start
+        eng.spark
         server = serve(
             eng,
             host=args.host,

@@ -12,7 +12,7 @@ that thinness is the point of the Spark-first design.
 | F4 | ``dot_path_value`` | ``F.col("a.b.c")`` / case-insensitive dict walk (json_handler.py:26-38) |
 | F5 | ``iso8601_to_epoch`` | ``F.to_timestamp``/``unix_timestamp`` (boto_utils.py:182-201) |
 | F6 | typed decimal parse | schema-driven Arrow cast (parquet_handler.py:109-130) |
-| F8 | ``parse_file_url`` | path/URI normalization (boto_utils.py:208-211) |
+| F8 | ``parse_file_url`` | ``sources.object_path``: decodes Spark's object URIs (boto_utils.py:208-211) |
 | F9 | ``sanitize_message`` | match-id redaction (events.py:50-69) |
 | F10 | manifest stringification | ``build_manifest_df`` (generate_queries.py:114-127) |
 """
@@ -29,6 +29,7 @@ from ..plans.sql_text import (  # noqa: F401  (F2/F3)
     find_query_sql,
 )
 from ..schema import cast_match_id, schema_from_hive_columns  # noqa: F401
+from ..sources import object_path as parse_file_url  # noqa: F401  (F8)
 from ..sources.jsonl_file import get_value as dot_path_value  # noqa: F401
 from ..sources.parquet_file import _typed_values as typed_decimal_values  # noqa: F401
 
@@ -36,11 +37,6 @@ from ..sources.parquet_file import _typed_values as typed_decimal_values  # noqa
 def iso8601_to_epoch(col: Column) -> Column:
     """F5: ISO-8601 string -> epoch seconds (bigint), JVM-side."""
     return F.unix_timestamp(F.to_timestamp(col))
-
-
-def parse_file_url(url: str) -> str:
-    """F8: normalize a ``file:`` URI or plain path to a local path."""
-    return url[len("file:") :] if url.startswith("file:") else url
 
 
 __all__ = [

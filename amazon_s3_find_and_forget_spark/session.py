@@ -76,13 +76,10 @@ def _with_import_root(pythonpath: str | None) -> str:
 def get_spark(
     app_name: str = "s3-find-and-forget-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     conf = dict(extra_conf or {})
     master = (
         conf.pop("spark.master", None)
@@ -97,7 +94,7 @@ def get_spark(
     # scale defaults; a conf spark-submit set for this driver beats its
     # default, and ``extra_conf`` beats both
     defaults = {
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.shuffle.partitions": str(cpus),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",

@@ -449,7 +449,7 @@ def sf10_should_retry(
 
 
 def main():
-    spark = get_spark(app_name="s3f2-bench", cpus=CPUS, shuffle_partitions=CPUS)
+    spark = get_spark(app_name="s3f2-bench", cpus=CPUS)
     sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
 
     # warm the JVM/codegen and the Arrow python-UDF worker pool on trivial

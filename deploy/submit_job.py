@@ -52,25 +52,17 @@ def main(argv=None):
     p.add_argument("--dry-run", action="store_true",
                    help="Find phase only: report affected counts, "
                    "rewrite nothing")
-    p.add_argument("--shuffle-partitions", type=int, default=None,
-                   help="spark.sql.shuffle.partitions for this driver "
-                   "(default: a submitted --conf value, else the driver's "
-                   "core count)")
     args = p.parse_args(argv)
     if not args.match_id:
         p.error("at least one --match-id is required")
 
     # Under spark-submit, get_spark keeps the submitted master and every
     # submitted conf: its own scale defaults (shuffle partitions, AQE,
-    # Arrow, ...) fill in only the keys the submit left unset, and
-    # --shuffle-partitions beats both.
+    # Arrow, ...) fill in only the keys the submit left unset.
     from amazon_s3_find_and_forget_spark.api import Engine
     from amazon_s3_find_and_forget_spark.session import get_spark
 
-    extra = {}
-    if args.shuffle_partitions:
-        extra["spark.sql.shuffle.partitions"] = str(args.shuffle_partitions)
-    spark = get_spark(app_name="s3f2-deletion-job", extra_conf=extra)
+    spark = get_spark(app_name="s3f2-deletion-job")
     eng = Engine(spark, args.state_dir)
 
     for spec in args.mapper:

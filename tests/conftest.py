@@ -16,7 +16,6 @@ def spark():
     s = get_spark(
         app_name="s3f2-tests",
         cpus=4,
-        shuffle_partitions=4,
         extra_conf={
             "spark.driver.memory": "4g",
             # bucketed-table tests must not write into the repo

@@ -356,9 +356,14 @@ def test_delete_job_drops_catalog_partitions(engine, spark, lake, tmp_path):
         )
     engine._save(
         os.path.join("jobs", "jobA"),
-        {"Id": "jobA", "JobStatus": "COMPLETED", "CreatedAt": 0},
+        {
+            "Id": "jobA",
+            "JobStatus": "COMPLETED",
+            "CreatedAt": 0,
+            "ManifestTable": table,
+        },
     )
-    out = engine.delete_job("jobA", manifest_table=table)
+    out = engine.delete_job("jobA")
     assert out["PartitionsDropped"] == 1
     parts = [r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect()]
     assert parts == ["JobId=jobB/DataMapperId=li"]
@@ -481,9 +486,14 @@ def test_drop_partitions_handles_quoted_and_escaped_mapper_ids(
     register_manifest_table(mdf, table, path=str(tmp_path / "mq"))
     engine._save(
         os.path.join("jobs", "jq1"),
-        {"Id": "jq1", "JobStatus": "COMPLETED", "CreatedAt": 0},
+        {
+            "Id": "jq1",
+            "JobStatus": "COMPLETED",
+            "CreatedAt": 0,
+            "ManifestTable": table,
+        },
     )
-    out = engine.delete_job("jq1", manifest_table=table)
+    out = engine.delete_job("jq1")
     assert out["PartitionsDropped"] == 1
     assert spark.sql(f"SHOW PARTITIONS {table}").count() == 0
     spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -688,25 +698,32 @@ def test_queue_legacy_state_dir_backfills_order_index(engine):
     assert [it["MatchId"] for it in page2] == ["m2", "m3", "m4"]
 
 
-def test_engine_compact_index_facade(engine, spark, tmp_path):
-    """Engine.compact_index delegates to the protocol-aware fold (the
-    screen-index sibling of vacuum) — one epoch folds the deltas into a
-    single base directory and the screens keep working."""
-    from amazon_s3_find_and_forget_spark.operators import incremental as inc
+def test_engine_starts_its_session_once(tmp_path):
+    """A session factory is called on the first read of ``spark`` and
+    never again, even when a second thread reads ``spark`` while the
+    first is still inside the factory."""
+    import threading
+    import time
 
-    docs = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], "doc_id long, text string"
-    )
-    index_dir = str(tmp_path / "idx")
-    inc.exact_index(docs.where("doc_id = 1")).write.parquet(
-        f"{index_dir}/batch=d0"
-    )
-    inc.exact_index(docs.where("doc_id = 2")).write.parquet(
-        f"{index_dir}/batch=d1"
-    )
-    stats = engine.compact_index(index_dir)
-    assert stats["BasePath"].startswith(f"{index_dir}/batch=base-")
-    assert stats["BaseRows"] == 2
-    assert sorted(os.listdir(index_dir)) == [
-        os.path.basename(stats["BasePath"])
+    calls = []
+    session = object()
+
+    def factory():
+        calls.append(1)
+        time.sleep(0.2)  # hold the first caller inside the factory
+        return session
+
+    engine = Engine(factory, str(tmp_path / "state"))
+    assert calls == []
+    seen = []
+    threads = [
+        threading.Thread(target=lambda: seen.append(engine.spark))
+        for _ in range(2)
     ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=10)
+    assert not any(t.is_alive() for t in threads)
+    assert len(calls) == 1
+    assert seen == [session, session]

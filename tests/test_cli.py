@@ -154,52 +154,116 @@ def test_cli_check_quality_gate(spark, tmp_path, sf_dir, capsys):
     assert rc == 1
 
 
-def test_cli_delete_job_and_expire(tmp_path, capsys):
-    """delete-job / expire-jobs run without booting Spark when no
-    --manifest-table is given (pure state-dir maintenance)."""
+def _no_session():
+    pytest.fail("a state-only Engine call started a Spark session")
+
+
+@pytest.fixture
+def state_only(tmp_path, monkeypatch):
+    """An Engine over a fresh state dir holding one mapper and two
+    completed jobs, with the session factory patched to raise: a CLI
+    command that asks it for a session fails the test."""
+    from amazon_s3_find_and_forget_spark import session
     from amazon_s3_find_and_forget_spark.api import Engine
 
+    def refuse(*args, **kwargs):
+        raise AssertionError("get_spark called by a state-only command")
+
+    monkeypatch.setattr(session, "get_spark", refuse)
     state = str(tmp_path / "state")
-    eng = Engine(None, state_dir=state)
+    eng = Engine(_no_session, state_dir=state)
+    eng._save(
+        "data_mappers",
+        {"cust": {"Location": "/lake/cust", "Columns": ["c_custkey"]}},
+    )
     eng._save(
         os.path.join("jobs", "done1"),
         {"Id": "done1", "JobStatus": "COMPLETED", "CreatedAt": 0},
     )
     eng._save(
         os.path.join("jobs", "old1"),
-        {"Id": "old1", "JobStatus": "COMPLETED", "CreatedAt": 0, "Expires": 1},
+        {"Id": "old1", "JobStatus": "COMPLETED", "CreatedAt": 1, "Expires": 1},
     )
-    out = run(capsys, "--state-dir", state, "delete-job", "done1")
-    assert out["Id"] == "done1"
-    assert eng.get_job("done1") is None
+    return eng, ["--state-dir", state, "--cpus", "4"]
 
-    out = run(capsys, "--state-dir", state, "expire-jobs")
+
+def test_cli_state_only_commands_start_no_session(state_only, capsys):
+    """Listing, queueing and settings read and write the state dir
+    alone, so no command among them asks for a Spark session."""
+    eng, base = state_only
+    out = run(capsys, *base, "settings", "--set", "QueryMaxRetries=5")
+    assert out["QueryMaxRetries"] == 5
+    assert run(capsys, *base, "settings")["QueryMaxRetries"] == 5
+    assert list(run(capsys, *base, "list-mappers")) == ["cust"]
+    out = run(capsys, *base, "enqueue", "--match-id", "7")
+    assert [it["MatchId"] for it in out] == ["7"]
+    out = run(capsys, *base, "list-queue")
+    assert [it["MatchId"] for it in out["MatchIds"]] == ["7"]
+    jobs = run(capsys, *base, "list-jobs")
+    assert [j["Id"] for j in jobs] == ["old1", "done1"]
+    assert run(capsys, *base, "job-events", "done1")["Events"] == []
+    assert run(capsys, *base, "delete-mapper", "cust") == {"Deleted": "cust"}
+    assert eng.list_data_mappers() == {}
+
+
+def test_cli_delete_job_and_expire(state_only, capsys):
+    """delete-job / expire-jobs run without a Spark session when the
+    job named no manifest table (pure state-dir maintenance)."""
+    eng, base = state_only
+    out = run(capsys, *base, "delete-job", "done1")
+    assert out["Id"] == "done1" and out["PartitionsDropped"] == 0
+    assert eng.get_job("done1") is None
+    out = run(capsys, *base, "expire-jobs")
     assert out["Expired"] == ["old1"]
     assert eng.get_job("old1") is None
 
 
-def test_cli_metrics_sparkless(tmp_path, capsys):
-    from amazon_s3_find_and_forget_spark.api import Engine
+def test_cli_metrics_sparkless(state_only, capsys):
+    eng, base = state_only
+    eng.enqueue_matches([{"MatchId": "7"}])
+    out = run(capsys, *base, "metrics")
+    assert out["JobsByStatus"] == {"COMPLETED": 2}
+    assert out["RunningJobs"] == 0 and out["DeletionQueueSize"] == 1
 
-    state = str(tmp_path / "state")
-    eng = Engine(None, state_dir=state)
-    eng._save(
-        os.path.join("jobs", "c1"),
-        {"Id": "c1", "JobStatus": "COMPLETED", "CreatedAt": 0},
+
+def test_cli_delete_job_drops_partitions_after_setting_cleared(
+    spark, tmp_path, sf_dir, capsys
+):
+    """A job's catalog partitions live in the table its job document
+    names: clearing the ManifestTable setting after the run must not
+    orphan them when the job is deleted."""
+    table = "s3f2_manifests_cli_cleared"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    lake = str(tmp_path / "lake")
+    os.makedirs(lake)
+    shutil.copy(
+        os.path.join(sf_dir, "customer.parquet"),
+        os.path.join(lake, "customer.parquet"),
     )
-    out = run(capsys, "--state-dir", state, "metrics")
-    assert out["JobsByStatus"] == {"COMPLETED": 1}
-    assert out["RunningJobs"] == 0
+    base = ["--state-dir", str(tmp_path / "state"), "--cpus", "4"]
+    run(capsys, *base, "settings", "--set", f"ManifestTable={table}")
+    run(capsys, *base, "put-mapper", "cust", "--location", lake,
+        "--column", "c_custkey")
+    run(capsys, *base, "enqueue", "--match-id", "1")
+    job = run(capsys, *base, "process")
+    assert job["JobStatus"] == "COMPLETED"
+    assert spark.sql(f"SHOW PARTITIONS {table}").count() == 1
+
+    run(capsys, *base, "settings", "--set", "ManifestTable=null")
+    out = run(capsys, *base, "delete-job", job["Id"])
+    assert out["PartitionsDropped"] == 1
+    assert spark.sql(f"SHOW PARTITIONS {table}").count() == 0
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_cli_list_queue_pages_by_item_id(spark, tmp_path, capsys):
+def test_cli_list_queue_pages_by_item_id(tmp_path, capsys):
     """--start-at is a page's NextStart, an item id: consuming the item
     a page ended on must not shift the next page past a live item, as
     an integer offset would."""
     from amazon_s3_find_and_forget_spark.api import Engine
 
     state = str(tmp_path / "state")
-    eng = Engine(None, state_dir=state)
+    eng = Engine(_no_session, state_dir=state)
     eng.enqueue_matches([{"MatchId": m} for m in ("m0", "m1", "m2")])
     base = ["--state-dir", state, "--cpus", "4", "list-queue",
             "--page-size", "1"]

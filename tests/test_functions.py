@@ -17,6 +17,10 @@ def test_iso8601_to_epoch(spark):
 def test_parse_file_url():
     assert sf.parse_file_url("file:/tmp/x.parquet") == "/tmp/x.parquet"
     assert sf.parse_file_url("/tmp/x.parquet") == "/tmp/x.parquet"
+    # the form input_file_name() emits: empty authority, percent-encoded
+    assert (
+        sf.parse_file_url("file:///lake%20a/x.parquet") == "/lake a/x.parquet"
+    )
 
 
 def test_redaction():

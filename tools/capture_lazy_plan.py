@@ -40,9 +40,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     dedup._eager = lambda df: df
     dedup._populated = lambda df: df
-    spark = get_spark(
-        app_name="s3f2-plan-capture", cpus=4, shuffle_partitions=4
-    )
+    spark = get_spark(app_name="s3f2-plan-capture", cpus=4)
     for name in names:
         fn = entry_queries.QUERIES[name]
         df = fn(spark, sf_dir)

@@ -63,7 +63,6 @@ def main() -> None:
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(app_name="s3f2-profile", cpus=cpus,
-                      shuffle_partitions=cpus,
                       extra_conf=extra_conf or None)
     # bench-identical warm-up
     entry_queries.load(spark, sf_dir, "region").count()

@@ -55,7 +55,6 @@ def main() -> None:
     spark = get_spark(
         app_name="s3f2-stageprof",
         cpus=cpus,
-        shuffle_partitions=cpus,
         extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": logdir,
