@@ -6,7 +6,7 @@ Reference endpoints re-expressed (SURVEY.md §3; citations inline):
 | Reference (API Gateway + Lambda + DynamoDB)      | Here                       |
 |--------------------------------------------------|----------------------------|
 | PUT/GET/DELETE /v1/data_mappers/{id}             | put/get/delete_data_mapper |
-| GET /v1/data_mappers                             | list_data_mappers          |
+| GET /v1/data_mappers                             | list_data_mappers_page     |
 | PATCH /v1/queue (+/matches)                      | enqueue_matches            |
 | GET /v1/queue                                    | list_queue_page            |
 | DELETE /v1/queue/matches                         | delete_matches             |
@@ -18,12 +18,15 @@ everything data-plane (Find/Forget) runs through ``jobs.run_job`` on
 Spark. Single-writer semantics match the reference: exactly one running
 job (queue/handlers.py:123-124), queue items consumed by a completed
 job are removed (stream_processor.py:129-139), and error surfaces are
-redacted so match ids never leak into logs (events.py:50-69).
+redacted so match ids never leak into logs (events.py:50-69). Every
+listing pages by one rule (``_page``): an exclusive start key on the
+listing's sort key, as DynamoDB's ExclusiveStartKey.
 """
 
 from __future__ import annotations
 
 import json
+import operator
 import os
 import threading
 import time
@@ -66,6 +69,22 @@ def sanitize_event_data(data, match_ids: list):
     return data
 
 
+def _page(
+    rows: list[dict], key: str, start_at, page_size: int, newest_first=False
+) -> tuple[list[dict], object]:
+    """The one listing rule: sort ``rows`` by ``key`` (descending when
+    ``newest_first``), keep those strictly past the exclusive start key
+    ``start_at``, and return ``(page, NextStart)``, where ``NextStart``
+    is the last key of a full page and None on a short (final) one."""
+    rows = sorted(rows, key=lambda r: r[key], reverse=newest_first)
+    if start_at is not None:
+        past = operator.lt if newest_first else operator.gt
+        rows = [r for r in rows if past(r[key], start_at)]
+    page = rows[:page_size]
+    next_start = page[-1][key] if page and len(page) == page_size else None
+    return page, next_start
+
+
 class AlreadyRunningError(RuntimeError):
     """Parity: 'There is already a job in progress' (queue/handlers.py:123-124)."""
 
@@ -89,6 +108,11 @@ class Engine:
         kms=None,
         store_factory=None,
     ):
+        if "://" in state_dir:  # os/open would make a URI a local dir
+            raise ValueError(
+                f"state dir {state_dir!r} is a URI; give a POSIX path the "
+                "driver can see (a shared mount in cluster deploy mode)"
+            )
         self._spark = spark
         self.state_dir = state_dir
         self.kms = kms
@@ -103,6 +127,7 @@ class Engine:
         # (temp+rename) so lock-free readers never see a torn file
         self._mutex = threading.RLock()
         self._job_thread: threading.Thread | None = None
+        self._last_ns = 0  # the time part of the last queue id assigned
         os.makedirs(os.path.join(state_dir, "jobs"), exist_ok=True)
 
     @property
@@ -210,18 +235,11 @@ class Engine:
         """GET /v1/data_mappers pagination in the reference's shape:
         items carry their id inline as ``DataMapperId`` and ``start_at``
         is an exclusive id start key (data_mappers/handlers.py:46-67)."""
-        mappers = self._load("data_mappers", {})
         rows = [
-            {"DataMapperId": mid, **cfg} for mid, cfg in mappers.items()
+            {"DataMapperId": mid, **cfg}
+            for mid, cfg in self._load("data_mappers", {}).items()
         ]
-        rows.sort(key=lambda r: r["DataMapperId"])
-        if start_at is not None:
-            rows = [r for r in rows if r["DataMapperId"] > start_at]
-        page = rows[:page_size]
-        next_start = (
-            page[-1]["DataMapperId"] if len(page) == page_size else None
-        )
-        return page, next_start
+        return _page(rows, "DataMapperId", start_at, page_size)
 
     def delete_data_mapper(self, mapper_id: str) -> None:
         with self._mutex:
@@ -231,30 +249,33 @@ class Engine:
 
     # --- deletion queue (queue/handlers.py:59-108,144-180) ------------------
 
+    def _new_item_id(self) -> str:
+        """An engine-assigned DeletionQueueItemId whose text order is
+        enqueue order: zero-padded epoch nanoseconds, moved past the last
+        id this engine assigned, plus a random suffix so two processes
+        never assign the same id. Call under ``_mutex``."""
+        self._last_ns = max(time.time_ns(), self._last_ns + 1)
+        return f"{self._last_ns:020d}-{uuid.uuid4().hex[:8]}"
+
     def enqueue_matches(self, matches: list[dict]) -> list[dict]:
-        """PATCH /v1/queue/matches: validate then append queue items."""
-        items = []
-        for match in matches:
-            q = QueueItem.from_dict(match)  # validation inside
-            items.append(
+        """PATCH /v1/queue/matches: validate then append queue items.
+        Each item gets an engine-assigned id (any DeletionQueueItemId the
+        client sends is ignored, as in queue/handlers.py:164-180)."""
+        parsed = [QueueItem.from_dict(m) for m in matches]  # validation
+        with self._mutex:
+            items = [
                 {
-                    "DeletionQueueItemId": q.item_id,
+                    "DeletionQueueItemId": self._new_item_id(),
                     "Type": q.type,
                     "MatchId": q.match_id,
                     "CreatedAt": q.created_at,
                     "DataMappers": q.data_mappers,
                 }
-            )
-        with self._mutex:
+                for q in parsed
+            ]
             queue = self._load("deletion_queue", [])
             queue.extend(items)
             self._save("deletion_queue", queue)
-            # append-only enqueue-order index: lets pagination resume
-            # positionally when its anchor item was deleted mid-scan
-            # (DynamoDB's ExclusiveStartKey needs no live item either)
-            order = self._load("queue_order", [])
-            order.extend(it["DeletionQueueItemId"] for it in items)
-            self._save("queue_order", order)
         return items
 
     def list_queue_page(
@@ -265,120 +286,24 @@ class Engine:
         is the last id of a full page / None on the final short page
         (parity: queue/handlers.py:73-101).
 
-        A deleted anchor does not lose the rest of the scan: DynamoDB's
-        ExclusiveStartKey is a position, not a live-item reference, so a
-        client paging while ``delete_matches`` runs must resume at the
-        position the anchor occupied. The enqueue-order index
-        (``queue_order``, maintained by enqueue/delete) recovers that
-        position; a token the store has never issued scans past the end
-        (the pre-index behavior, kept for legacy state dirs).
-
-        Both files load under the writer mutex: enqueue/delete write
-        them sequentially, and a read BETWEEN the two writes would see
-        new queue items absent from the order index (``pos.get -> -1``),
-        which a positional resume would misread as "before the anchor"
-        and silently drop from the page.
-
-        Legacy state dirs (items enqueued before the order index
-        existed) are backfilled IN MEMORY on every load: any live queue
-        item missing from the index is PREPENDED in queue order — every
-        un-indexed item predates the index's first write (enqueue has
-        written both files under the mutex ever since), so they sort
-        before every indexed id, and the queue file itself is
-        append-ordered. Nothing is persisted: a GET must stay a pure
-        read (saving here would make it a read-modify-write that races
-        a concurrent enqueue in another PROCESS, where only this
-        in-process mutex guards the files, and could clobber the
-        enqueue's order entries). The merge costs one pass over data
-        already loaded."""
-        with self._mutex:
-            queue = self._load("deletion_queue", [])
-            order = self._load("queue_order", [])
-        indexed = set(order)
-        missing = [
-            it["DeletionQueueItemId"]
-            for it in queue
-            if it["DeletionQueueItemId"] not in indexed
-        ]
-        if missing:
-            order = missing + order
-        if start_at is not None:
-            idx = next(
-                (
-                    i + 1
-                    for i, it in enumerate(queue)
-                    if it["DeletionQueueItemId"] == start_at
-                ),
-                None,
-            )
-            if idx is None:  # anchor no longer live: positional resume
-                pos = {qid: i for i, qid in enumerate(order)}
-                anchor_pos = pos.get(start_at)
-                if anchor_pos is None:  # foreign/expired token
-                    idx = len(queue)
-                else:
-                    idx = next(
-                        (
-                            i
-                            for i, it in enumerate(queue)
-                            if pos.get(it["DeletionQueueItemId"], -1)
-                            > anchor_pos
-                        ),
-                        len(queue),
-                    )
-            queue = queue[idx:]
-        page = queue[:page_size]
-        next_start = (
-            page[-1]["DeletionQueueItemId"] if len(page) == page_size else None
-        )
-        return page, next_start
-
-    # deleted ids kept in the enqueue-order index so in-flight pagination
-    # anchors stay resolvable; bounded so the index can't grow forever
-    _QUEUE_ORDER_TOMBSTONES = 1000
+        Ids sort in enqueue order, so like DynamoDB's ExclusiveStartKey
+        a start key places the scan without naming a live item: a client
+        paging while ``delete_matches`` runs resumes after its deleted
+        anchor, and a token the store never assigned sorts wherever its
+        text falls. Ids from state dirs that predate engine-assigned ids
+        (uuid4) sort by their text among the new ones, so a full scan
+        still returns every item exactly once."""
+        queue = self._load("deletion_queue", [])
+        return _page(queue, "DeletionQueueItemId", start_at, page_size)
 
     def delete_matches(self, item_ids: list[str]) -> None:
         drop = set(item_ids)
         with self._mutex:
-            pre = self._load("deletion_queue", [])
-            queue = [
-                it for it in pre if it["DeletionQueueItemId"] not in drop
-            ]
-            self._save("deletion_queue", queue)
-            # legacy backfill happens HERE (a writer already holding the
-            # files' read-modify-write), never in the read path: items
-            # enqueued before the order index existed must enter the
-            # index before pruning, or deleting such an item leaves no
-            # tombstone and a client resuming at it silently ends early.
-            # Pre-index items predate every indexed id, so they prepend
-            # in queue order (same invariant as list_queue_page's
-            # in-memory merge).
-            order = self._load("queue_order", [])
-            indexed = set(order)
-            missing = [
-                it["DeletionQueueItemId"]
-                for it in pre
-                if it["DeletionQueueItemId"] not in indexed
-            ]
-            if missing:
-                order = missing + order
-            # prune the enqueue-order index: keep every live id plus the
-            # most recent tombstones (old anchors age out, order intact).
-            # The floor scales with THIS call's delete burst: one job
-            # consuming 50k matches must leave all 50k anchors
-            # resolvable — a client mid-scan through them would
-            # otherwise resume at an "unknown" anchor and silently end
-            # early; the cap only ages out anchors across LATER deletes
-            live = {it["DeletionQueueItemId"] for it in queue}
-            dead = [qid for qid in order if qid not in live]
-            floor = max(self._QUEUE_ORDER_TOMBSTONES, len(drop))
-            # THIS call's ids are kept explicitly: ``dead`` is in
-            # ENQUEUE order, so when older tombstones sit later in it,
-            # dead[-floor:] alone would evict this burst's
-            # earliest-enqueued anchors — exactly the ones a client
-            # mid-scan through the consumed matches resumes from
-            keep = live | set(dead[-floor:]) | drop
-            self._save("queue_order", [q for q in order if q in keep])
+            queue = self._load("deletion_queue", [])
+            self._save(
+                "deletion_queue",
+                [it for it in queue if it["DeletionQueueItemId"] not in drop],
+            )
 
     # --- jobs (queue/handlers.py process_handler + jobs/handlers.py) --------
 
@@ -554,8 +479,7 @@ class Engine:
             self._save(os.path.join("jobs", job_id), job)
             if result.status == "COMPLETED":
                 # ST3: queue items consumed by a completed job are removed
-                consumed = {it.item_id for it in items}
-                self.delete_matches(list(consumed))
+                self.delete_matches([it.item_id for it in items])
             return job
 
         if not detach:
@@ -753,20 +677,18 @@ class Engine:
 
     def list_jobs(
         self, page_size: int = 10, start_at: int | None = None
-    ) -> list[dict]:
-        """O1: newest-first top-K job listing.
+    ) -> tuple[list[dict], int | None]:
+        """O1: newest-first job listing as ``(page, NextStart)``.
 
         ``start_at`` is the reference's exclusive CreatedAt upper bound
-        (jobs/handlers.py:79-88: ``Key("CreatedAt").lt(start_at)``), so a
-        client pages back in time by passing the previous page's
-        ``NextStart`` (= min CreatedAt of the page)."""
+        (jobs/handlers.py:79-88: ``Key("CreatedAt").lt(start_at)``), and
+        ``NextStart`` is the min CreatedAt of a full page, None on a
+        short (final) one (jobs/handlers.py:93-104)."""
         jobs = [
             {k: v for k, v in job.items() if k != "Events"}
             for _, job in self._iter_jobs()
-            if start_at is None or job["CreatedAt"] < start_at
         ]
-        jobs.sort(key=lambda j: j["CreatedAt"], reverse=True)
-        return jobs[:page_size]
+        return _page(jobs, "CreatedAt", start_at, page_size, newest_first=True)
 
     # --- maintenance -------------------------------------------------------
 
@@ -815,6 +737,7 @@ class Engine:
         """W1: page forward through a job's events from a Sk watermark.
 
         Returns (events, next_watermark); parity jobs/handlers.py:115-216.
+        The watermark is the last Sk of any non-empty page, full or not.
         """
         job = self._load(os.path.join("jobs", job_id), None)
         if job is None:
@@ -831,8 +754,5 @@ class Engine:
                 raise ValueError(
                     f"Watermark {watermark!r} is beyond the job's end"
                 )
-        events = [e for e in job.get("Events", []) if e["Sk"] > watermark]
-        events.sort(key=lambda e: e["Sk"])
-        page = events[:page_size]
-        next_wm = page[-1]["Sk"] if page else watermark
-        return page, next_wm
+        page, _ = _page(job.get("Events", []), "Sk", watermark, page_size)
+        return page, page[-1]["Sk"] if page else watermark

@@ -86,7 +86,12 @@ def collect_auth_tokens(
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="amazon_s3_find_and_forget_spark")
     p.add_argument("--state-dir", default="./.s3f2-state")
-    p.add_argument("--cpus", type=int, default=8)
+    p.add_argument(
+        "--cpus",
+        type=int,
+        help="cores of a local session (default: $SPARK_GRAFT_CPUS, "
+        "else every core)",
+    )
     sub = p.add_subparsers(dest="cmd", required=True)
 
     pm = sub.add_parser("put-mapper", help="register a lake table")
@@ -718,7 +723,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "process":
         _emit(eng.process_queue())
     elif args.cmd == "list-jobs":
-        _emit(eng.list_jobs())
+        _emit(eng.list_jobs()[0])
     elif args.cmd == "job-events":
         events, next_wm = eng.list_job_events(
             args.job_id, watermark=args.start_at, page_size=args.page_size

@@ -443,14 +443,11 @@ class HttpApi:
                 raise _Invalid(
                     "Invalid Request: start_at must be a timestamp"
                 )
-        jobs = self.engine.list_jobs(page_size=page_size, start_at=start_at)
-        # jobs/handlers.py:93-104: NextStart = min CreatedAt on a full
-        # page, explicit null on a short (final) page
-        next_start = (
-            min(j["CreatedAt"] for j in jobs)
-            if len(jobs) == page_size
-            else None
+        jobs, next_start = self.engine.list_jobs(
+            page_size=page_size, start_at=start_at
         )
+        # jobs/handlers.py:93-104: NextStart is an explicit null on a
+        # short (final) page
         return 200, {"Jobs": jobs, "NextStart": next_start}
 
     def list_job_events(self, path, qs, body):

@@ -289,59 +289,6 @@ def minhash_signatures(
     )
 
 
-def minhash_signatures_sql(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    num_perm: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, sig array<long>) MinHash signatures as pure JVM expressions —
-    the round-8 A/B alternative to the Arrow/numpy kernel.
-
-    Same LSH math (affine permutations over the 31-bit universal space,
-    identical ``_affine_params`` stream), but shingles hash through
-    ``xxhash64(substring(...))`` and the num_perm-way min-reduction is a
-    single ``aggregate``/``zip_with`` over the shingle-hash array — no
-    Python worker, no Arrow transfer. Shingling is character-level here
-    vs byte-level in the numpy kernel, so the two paths are
-    interchangeable as an LSH family but NOT row-for-row identical.
-
-    Trade (measured in ``tools/ab_minhash.py``, ``AB_MODE=kernel``;
-    reproduce with ``git show ef4b941:tools/ab_minhash.py``):
-    higher-order-function lambdas evaluate interpreted (outside
-    whole-stage codegen), so each shingle costs an interpreted
-    multiply-min per permutation; the numpy kernel does the same
-    arithmetic at SIMD memory bandwidth and pays only the Arrow round
-    trip. Measured min-of-3: sf0.1 (5k docs) 0.87 s numpy vs 0.93 s
-    JVM; sf1 (50k docs) 1.13 s vs 7.29 s — the JVM path scales ~6x
-    WORSE because the interpreted per-element cost is linear in
-    shingles x num_perm while numpy amortizes it to memory bandwidth.
-    The numpy kernel therefore stays the ``minhash_signatures``
-    default; this variant remains as the measured alternative (and the
-    escape hatch for Python-worker-less clusters).
-    """
-    p = _MINHASH_PRIME
-    ab = ", ".join(
-        f"named_struct('a', {a}L, 'b', {b}L)"
-        for a, b in _affine_params(num_perm, seed)
-    )
-    t = f"lower(coalesce({text_col}, ''))"
-    sh = (
-        f"transform(sequence(1, greatest(length({t}) - {k - 1}, 1)), "
-        f"i -> pmod(xxhash64(substring({t}, i, {k})), {p}L))"
-    )
-    sig = (
-        f"aggregate({sh}, array_repeat({p}L, {num_perm}), "
-        f"(acc, h) -> zip_with(acc, array({ab}), "
-        f"(m, s) -> least(m, pmod(s.a * h + s.b, {p}L))))"
-    )
-    return _spread(df).select(
-        F.col(id_col).alias("_id"), F.expr(sig).alias("_sig")
-    )
-
-
 def _with_shingles(df: DataFrame, text_col: str, k: int) -> DataFrame:
     # sequence(1, greatest(len-k+1, 1)) then substring per index
     return df.withColumn(

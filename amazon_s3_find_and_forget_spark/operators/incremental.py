@@ -58,10 +58,15 @@ def read_index_or_empty(
     older builds: the NULL marks "written before the stamp existed"
     for the caller to adjudicate.
 
+    The index is its ``batch=<digest>`` partitions (``ValueError`` on
+    the removed ``batch_id=<int>`` layout), and ``batch`` reads as the
+    string each directory is named by: a digest such as ``12345e2`` or
+    ``0123456789012345`` is never inferred as a number.
+
     An empty index is legitimate in exactly two states, both "no delta
-    was ever committed": the directory does not exist yet (first batch,
-    nothing written), or it exists but holds no committed parquet
-    footer — a crash during the FIRST delta's write leaves only
+    was ever committed": no ``batch=`` directory exists yet (first
+    batch, nothing written), or none holds a committed parquet footer —
+    a crash during the FIRST delta's write leaves only
     ``_temporary``/marker files, and the read then fails schema
     inference. Both classify as empty; by the append-only protocol a
     non-empty index always has at least one committed, footer-bearing
@@ -76,18 +81,25 @@ def read_index_or_empty(
     """
     from pyspark.errors import AnalysisException
 
-    empty_markers = (
-        "PATH_NOT_FOUND",
-        "Path does not exist",
-        "UNABLE_TO_INFER_SCHEMA",
-        "Unable to infer schema",
-    )
+    empty_markers = ("UNABLE_TO_INFER_SCHEMA", "Unable to infer schema")
+    paths = list(_batch_dirs(spark, index_dir).values())
+    if not paths:
+        return empty_index()
     try:
-        raw = spark.read.parquet(index_dir)
+        # each partition read as its own root has no partition column,
+        # so this read infers no type for ``batch``
+        data = spark.read.parquet(*paths).schema
     except AnalysisException as e:
         if not any(m in str(e) for m in empty_markers):
             raise
         return empty_index()
+    # a partition column the reader is given is not inferred
+    # (SPARK-26188), so ``batch`` keeps its directory-name text
+    raw = (
+        spark.read.schema(data.add("batch", "string"))
+        .option("basePath", index_dir)
+        .parquet(*paths)
+    )
     cols = [
         F.lit(None).cast(defaults[c]).alias(c)
         if defaults and c in defaults and c not in raw.columns
@@ -804,6 +816,28 @@ def _list_dirs(spark, root: str) -> list[str]:
     ]
 
 
+def _batch_dirs(spark, index_dir: str) -> dict[str, str]:
+    """``{digest: path}`` of an index's ``batch=<digest>`` partitions.
+
+    Raises ``ValueError`` on ``batch_id=<int>`` partitions — the layout
+    of the removed structured-streaming screens, which nothing reads —
+    rather than report such an index as empty."""
+    import re
+
+    names = _list_dirs(spark, index_dir)
+    if any(re.fullmatch(r"batch_id=-?\d+", n) for n in names):
+        raise ValueError(
+            f"{index_dir} holds batch_id=<int> partitions: that is the "
+            "removed structured-streaming screen layout, which is no "
+            "longer read; rebuild the index with dedup-screen"
+        )
+    return {
+        n[len("batch="):]: f"{index_dir}/{n}"
+        for n in names
+        if n.startswith("batch=")
+    }
+
+
 def _has_success(spark, dirpath: str) -> bool:
     fs, jvm = _hadoop_fs(spark, dirpath)
     return fs.exists(jvm.org.apache.hadoop.fs.Path(dirpath + "/_SUCCESS"))
@@ -931,29 +965,15 @@ def compact_index(spark, index_dir: str) -> dict:
     mid-delete fails and must be re-run.
 
     Raises ``ValueError`` on an index holding ``batch_id=<int>``
-    partitions — the layout of the removed structured-streaming screens,
-    which this fold does not read — rather than report such an index as
+    partitions (see ``_batch_dirs``) rather than report such an index as
     having nothing to fold.
 
     Returns ``{"BasePath", "BaseRows", "FoldedDirs", "RemovedDirs"}``
     (all-zero no-op when there is nothing to fold).
     """
     import hashlib
-    import re
 
-    names = _list_dirs(spark, index_dir)
-    if any(re.fullmatch(r"batch_id=-?\d+", n) for n in names):
-        raise ValueError(
-            f"{index_dir} holds batch_id=<int> partitions: that is the "
-            "removed structured-streaming screen layout, which "
-            "compact-index no longer folds; rebuild the index with "
-            "dedup-screen"
-        )
-    fold = {}
-    for n in names:
-        m = re.fullmatch(r"batch=([^/]+)", n)
-        if m:
-            fold[m.group(1)] = f"{index_dir}/{n}"
+    fold = _batch_dirs(spark, index_dir)
     noop = {"BasePath": None, "BaseRows": 0, "FoldedDirs": 0, "RemovedDirs": 0}
     if not fold:
         return noop
@@ -994,11 +1014,9 @@ def compact_index(spark, index_dir: str) -> dict:
                 noop["RemovedDirs"] += 1
         return noop
 
-    folded = _fold_rows(
-        spark.read.option("basePath", index_dir)
-        .parquet(*sources.values())
-        .drop("batch")
-    )
+    # read without a basePath, so the fold carries (and Spark infers a
+    # type for) no ``batch`` column
+    folded = _fold_rows(spark.read.parquet(*sources.values()))
     folded = _eager(folded)
     base_rows = folded.count()
     # fresh (or at-most-partial) target, never a committed dir — see note

@@ -56,17 +56,6 @@ def _get_column(table_or_struct, dot_path: str):
     return arr
 
 
-def _leaf_type(schema_or_type, dot_path: str):
-    segments = dot_path.split(".")
-    t = schema_or_type
-    for i, seg in enumerate(segments):
-        fields = list(t) if isinstance(t, pa.Schema) else list(t)
-        name = _ci_field([f.name for f in fields], seg)
-        field = next(f for f in fields if f.name == name)
-        t = field.type
-    return t
-
-
 def _typed_values(values, arrow_type):
     """Coerce match values to the file's own leaf type (Decimal rescale)."""
     if pa.types.is_decimal(arrow_type):

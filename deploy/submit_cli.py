@@ -8,7 +8,7 @@ command runs on the cluster the submit targets with the submit's confs
 (deploy/README.md has the full recipe):
 
     spark-submit --py-files s3f2.zip deploy/submit_cli.py \
-        --state-dir s3://bucket/s3f2-state \
+        --state-dir /mnt/shared/s3f2-state \
         curate --input s3://lake/docs --out s3://lake/curated \
         --steps exact-dedup,decontaminate,gopher,split \
         --benchmark s3://bench/docs

@@ -7,7 +7,7 @@ JSON line. Self-contained — ship the package with --py-files (see
 deploy/README.md for the full recipe) and drive everything from args:
 
     spark-submit --py-files s3f2.zip deploy/submit_job.py \
-        --state-dir s3://bucket/s3f2-state \
+        --state-dir /mnt/shared/s3f2-state \
         --mapper lineitem=s3://lake/lineitem:l_orderkey:parquet \
         --match-id 12345 --match-id 67890 [--dry-run]
 

@@ -81,7 +81,7 @@ def test_process_queue_end_to_end(engine, spark, lake):
     assert engine.list_queue_page() == ([], None)
 
     # job listing + event paging
-    jobs = engine.list_jobs()
+    jobs, _ = engine.list_jobs()
     assert jobs[0]["Id"] == job["Id"]
     page1, wm = engine.list_job_events(job["Id"], page_size=2)
     assert len(page1) == 2
@@ -538,7 +538,7 @@ def test_iter_jobs_skips_corrupt_docs(engine):
         f.write('{"Id": "bad", "JobSta')  # truncated mid-write
     open(os.path.join(engine.state_dir, "jobs", "empty.json"), "w").close()
     # none of the four consumers may raise on the corrupt docs
-    assert [j["Id"] for j in engine.list_jobs()] == ["ok1"]
+    assert [j["Id"] for j in engine.list_jobs()[0]] == ["ok1"]
     assert engine._running_job_exists() is False
     assert engine.metrics()["JobsByStatus"] == {"COMPLETED": 1}
     assert engine.expire_jobs(now=10) == []
@@ -639,10 +639,10 @@ def test_redact_mode_mapper_through_engine(engine, spark, tmp_path):
 
 
 def test_queue_anchor_survives_large_delete_burst(engine):
-    """A single job consuming more matches than the tombstone cap must
-    leave every consumed anchor resolvable: a client mid-scan resumes
-    past its (deleted) anchor instead of silently ending early."""
-    n = Engine._QUEUE_ORDER_TOMBSTONES + 200
+    """A single job consuming a large burst of matches (1,200) leaves
+    every consumed anchor usable: a client mid-scan resumes past its
+    (deleted) anchor instead of silently ending early."""
+    n = 1000 + 200
     engine.enqueue_matches([{"MatchId": i} for i in range(n)])
     page, next_start = engine.list_queue_page(page_size=10)
     anchor = next_start  # an early anchor, position ~10
@@ -650,27 +650,25 @@ def test_queue_anchor_survives_large_delete_burst(engine):
         it["DeletionQueueItemId"]
         for it in engine.list_queue_page(page_size=n + 10)[0]
     ]
-    engine.delete_matches(all_ids)  # one burst larger than the cap
+    engine.delete_matches(all_ids)  # one large burst
     engine.enqueue_matches([{"MatchId": "fresh"}])
     page2, _ = engine.list_queue_page(start_at=anchor, page_size=10)
     assert [it["MatchId"] for it in page2] == ["fresh"]
 
 
 def test_queue_burst_anchors_survive_older_tombstones(engine):
-    """Tombstone pruning keeps ids in ENQUEUE order, so older
-    tombstones sitting LATER in enqueue order must not evict this
-    burst's earliest-enqueued anchors — they are exactly the ids a
-    client mid-scan through the consumed matches resumes from, and the
-    pruner keeps this call's ids explicitly."""
-    cap = Engine._QUEUE_ORDER_TOMBSTONES
+    """Deleting the later-enqueued half of the queue first, then the
+    earlier half, must not lose an early anchor of the second burst —
+    it is exactly the id a client mid-scan through the consumed matches
+    resumes from."""
+    cap = 1000
     engine.enqueue_matches([{"MatchId": f"a{i}"} for i in range(cap + 500)])
     engine.enqueue_matches([{"MatchId": f"b{i}"} for i in range(cap + 500)])
     ids = {
         it["MatchId"]: it["DeletionQueueItemId"]
         for it in engine.list_queue_page(page_size=2 * cap + 2000)[0]
     }
-    # delete the LATER-enqueued b's first: their tombstones sit after
-    # every a in the enqueue-order index
+    # delete the LATER-enqueued b's first
     engine.delete_matches([v for k, v in ids.items() if k.startswith("b")])
     _, next_start = engine.list_queue_page(page_size=10)
     anchor = next_start  # an early a anchor, position ~10
@@ -680,22 +678,96 @@ def test_queue_burst_anchors_survive_older_tombstones(engine):
     assert [it["MatchId"] for it in page] == ["fresh"]
 
 
-def test_queue_legacy_state_dir_backfills_order_index(engine):
-    """A state dir from before the enqueue-order index existed has live
-    queue items with no index entry; pagination must backfill them (in
-    queue order, BEFORE any indexed id) instead of treating them as
-    'before every anchor' and silently dropping them from a positional
-    resume."""
-    engine.enqueue_matches([{"MatchId": f"m{i}"} for i in range(4)])
-    os.remove(os.path.join(engine.state_dir, "queue_order.json"))
-    engine.enqueue_matches([{"MatchId": "m4"}])  # only m4 gets indexed
+def test_queue_pages_old_uuid_ids_with_engine_ids(engine):
+    """A state dir written before the engine assigned its own ids holds
+    uuid4 ids; they sort by their text among the engine's ids, so a
+    full scan returns every item exactly once, and a deleted anchor of
+    either kind still places the next page."""
+    engine.enqueue_matches([{"MatchId": f"new{i}"} for i in range(4)])
+    queue = engine._load("deletion_queue", [])
+    old = [
+        {"DeletionQueueItemId": str(uuid.uuid4()), "Type": "Simple",
+         "MatchId": f"old{i}", "CreatedAt": 1, "DataMappers": []}
+        for i in range(4)
+    ]
+    engine._save("deletion_queue", old + queue)
 
-    page, next_start = engine.list_queue_page(page_size=2)
-    assert [it["MatchId"] for it in page] == ["m0", "m1"]
-    anchor = next_start  # m1's id — a legacy, now-backfilled anchor
-    engine.delete_matches([anchor])
-    page2, _ = engine.list_queue_page(start_at=anchor, page_size=10)
-    assert [it["MatchId"] for it in page2] == ["m2", "m3", "m4"]
+    seen, start = [], None
+    while True:
+        page, start = engine.list_queue_page(start_at=start, page_size=3)
+        seen += [it["MatchId"] for it in page]
+        if start is None:
+            break
+    assert sorted(seen) == sorted(f"{k}{i}" for k in ("old", "new")
+                                  for i in range(4))
+    ids = sorted(it["DeletionQueueItemId"] for it in old + queue)
+    for anchor in ids:
+        engine.delete_matches([anchor])
+        rest, _ = engine.list_queue_page(start_at=anchor, page_size=100)
+        assert [it["DeletionQueueItemId"] for it in rest] == [
+            i for i in ids if i > anchor
+        ]
+
+
+def test_enqueue_assigns_ids_and_ignores_client_ids(engine):
+    """The engine assigns every DeletionQueueItemId, in enqueue order: a
+    client-sent id is ignored, so two items sent with the same id stay
+    two items, each deletable on its own."""
+    items = engine.enqueue_matches(
+        [{"MatchId": "a", "DeletionQueueItemId": "dup"},
+         {"MatchId": "b", "DeletionQueueItemId": "dup"}]
+    )
+    items += engine.enqueue_matches([{"MatchId": "c"}])
+    ids = [it["DeletionQueueItemId"] for it in items]
+    assert "dup" not in ids and len(set(ids)) == 3
+    assert ids == sorted(ids)
+    engine.delete_matches([ids[0]])
+    listed, _ = engine.list_queue_page()
+    assert [it["MatchId"] for it in listed] == ["b", "c"]
+
+
+def test_concurrent_enqueues_keep_id_order_and_file_order(tmp_path):
+    """Request threads enqueue at once: every id is distinct, and the
+    queue file's order is the ids' order, so paging by id loses or
+    repeats nothing."""
+    import sys
+    import threading
+
+    engine = Engine(_unused_session, str(tmp_path / "state"))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(
+                target=lambda t=t: [
+                    engine.enqueue_matches([{"MatchId": f"{t}-{i}"}])
+                    for i in range(25)
+                ]
+            )
+            for t in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    ids = [it["DeletionQueueItemId"] for it in engine._load("deletion_queue", [])]
+    assert len(ids) == 200 and ids == sorted(set(ids))
+
+
+def test_state_dir_uri_is_refused(tmp_path, monkeypatch):
+    """State is read and written with os/open on the driver, so a URI
+    state dir is refused instead of becoming a local ``s3:`` directory."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="POSIX path"):
+        Engine(_unused_session, "s3://my-bucket/s3f2-state")
+    assert os.listdir(tmp_path) == []
+
+
+def _unused_session():
+    pytest.fail("the engine started a session")
 
 
 def test_engine_starts_its_session_once(tmp_path):

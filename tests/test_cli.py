@@ -274,6 +274,25 @@ def test_cli_list_queue_pages_by_item_id(tmp_path, capsys):
     assert [it["MatchId"] for it in page2["MatchIds"]] == ["m1"]
 
 
+def test_cli_cpus_defaults_to_session_count(tmp_path, monkeypatch):
+    """Without --cpus the CLI leaves the core count to ``get_spark``
+    (``$SPARK_GRAFT_CPUS``, else every core), like every other entry
+    point, instead of a fixed count."""
+    from amazon_s3_find_and_forget_spark import session
+
+    seen = []
+
+    def factory(app_name, cpus=None, extra_conf=None):
+        seen.append(cpus)
+        raise RuntimeError("no session in this test")
+
+    monkeypatch.setattr(session, "get_spark", factory)
+    with pytest.raises(RuntimeError, match="no session"):
+        main(["--state-dir", str(tmp_path / "state"), "put-mapper", "m",
+              "--location", str(tmp_path), "--column", "id"])
+    assert seen == [None]
+
+
 def test_cli_zorder(spark, tmp_path, sf_dir, capsys):
     lake = str(tmp_path / "zlake")
     os.makedirs(lake)

@@ -357,6 +357,35 @@ def test_read_index_or_empty_treats_uncommitted_dir_as_empty(spark, tmp_path):
     assert out.count() == 0
 
 
+def test_index_batch_names_read_as_strings(spark, tmp_path):
+    """A digest that looks like a number (``12345e2``, or all digits
+    with a leading zero) names its partition as text: the index read
+    gives it back unchanged, so the screen's own-batch exclusion
+    matches it, and compaction folds such partitions."""
+    index_dir = str(tmp_path / "idx")
+    hist = docs(spark, HISTORY)
+    _write_delta(inc.exact_index(hist.where("doc_id <= 2")), index_dir,
+                 "12345e2")
+    _write_delta(inc.exact_index(hist.where("doc_id = 3")), index_dir,
+                 "0123456789012345")
+
+    def read(keep):
+        return inc.read_index_or_empty(
+            spark, index_dir, keep, ["content_hash", "doc_id", "batch"],
+            lambda: inc.exact_index(hist.limit(0)),
+        )
+
+    got = {r["batch"] for r in read(F.lit(True)).collect()}
+    assert got == {"12345e2", "0123456789012345"}
+    kept = read(F.col("batch") != "12345e2").collect()
+    assert {r["batch"] for r in kept} == {"0123456789012345"}
+    assert inc.compact_index(spark, index_dir)["BaseRows"] == 2
+    # the removed batch_id=<int> layout is refused, never read as empty
+    inc.exact_index(hist).write.parquet(f"{index_dir}/batch_id=5")
+    with pytest.raises(ValueError, match="batch_id="):
+        read(F.lit(True))
+
+
 # --- compaction crash windows ---------------------------------------------
 
 

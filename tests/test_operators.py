@@ -2188,36 +2188,6 @@ def test_count_min_check_guards_unbounded_exact_side(spark):
     assert all(r["cms_ok"] and r["n_exact"] == 1 for r in out.values())
 
 
-def test_minhash_signatures_sql_same_family(spark):
-    """The JVM-expression signature path (the measured A/B loser, kept
-    as the Python-worker-less escape hatch) is a valid MinHash family:
-    identical texts get identical signatures, near-identical texts agree
-    on most components, unrelated texts on few."""
-    base = "the quick brown fox jumps over the lazy dog " * 5
-    rows = [
-        (1, base),
-        (2, base),  # exact dup
-        (3, base + "and then some extra tail words here"),  # near dup
-        (4, "completely different content about spark shuffles " * 5),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = {
-        r["_id"]: list(r["_sig"])
-        for r in dedup.minhash_signatures_sql(df, "text", "doc_id").collect()
-    }
-    assert all(len(s) == 64 for s in sigs.values())
-    agree = lambda a, b: sum(x == y for x, y in zip(a, b))  # noqa: E731
-    assert sigs[1] == sigs[2]
-    assert agree(sigs[1], sigs[3]) >= 30  # high Jaccard -> high agreement
-    assert agree(sigs[1], sigs[4]) <= 15
-    # null/empty text must not produce a null signature
-    ne = spark.createDataFrame(
-        [(9, None), (10, "")], "doc_id long, text string"
-    )
-    out = dedup.minhash_signatures_sql(ne, "text", "doc_id").collect()
-    assert all(r["_sig"] is not None and len(r["_sig"]) == 64 for r in out)
-
-
 def test_training_order_deterministic_and_epoch_rerolls(spark):
     from amazon_s3_find_and_forget_spark.operators import text as text_ops
 
