@@ -75,14 +75,21 @@ def _page(
     """The one listing rule: sort ``rows`` by ``key`` (descending when
     ``newest_first``), keep those strictly past the exclusive start key
     ``start_at``, and return ``(page, NextStart)``, where ``NextStart``
-    is the last key of a full page and None on a short (final) one."""
+    is the last key of a full page and None on a short (final) one.
+
+    A full page runs on through the rows that tie with its last key, so
+    an exclusive ``NextStart`` skips none of them; only ``CreatedAt``
+    (seconds) has ties, every other key is unique."""
     rows = sorted(rows, key=lambda r: r[key], reverse=newest_first)
     if start_at is not None:
         past = operator.lt if newest_first else operator.gt
         rows = [r for r in rows if past(r[key], start_at)]
     page = rows[:page_size]
-    next_start = page[-1][key] if page and len(page) == page_size else None
-    return page, next_start
+    if not page or len(page) < page_size:
+        return page, None
+    while len(page) < len(rows) and rows[len(page)][key] == page[-1][key]:
+        page.append(rows[len(page)])
+    return page, page[-1][key]
 
 
 class AlreadyRunningError(RuntimeError):
@@ -189,9 +196,14 @@ class Engine:
         """Create/replace a mapper after validating it (P12):
         format supported, identifier columns resolve to identifier-able
         types in the actual table schema, partition keys exist, and the
-        location does not overlap another mapper's."""
+        location does not overlap another mapper's. A path Parquet
+        mapper without a ``Schema`` stores the one validation read
+        (``DataMapper.pins_schema``), as the reference reads its schema
+        from Glue, so no job infers it again. Returns the stored config."""
         candidate = self._mapper_from(mapper_id, config)
-        candidate.validate(self.spark, kms=self.kms)
+        schema = candidate.validate(self.spark, kms=self.kms)
+        if candidate.pins_schema:
+            config = {**config, "Schema": schema.toDDL()}
         with self._mutex:
             mappers = self._load("data_mappers", {})
             others = [
@@ -683,7 +695,9 @@ class Engine:
         ``start_at`` is the reference's exclusive CreatedAt upper bound
         (jobs/handlers.py:79-88: ``Key("CreatedAt").lt(start_at)``), and
         ``NextStart`` is the min CreatedAt of a full page, None on a
-        short (final) one (jobs/handlers.py:93-104)."""
+        short (final) one (jobs/handlers.py:93-104). A full page holds
+        every job of its last second, so jobs that share a second are
+        never skipped; such a page can be longer than ``page_size``."""
         jobs = [
             {k: v for k, v in job.items() if k != "Events"}
             for _, job in self._iter_jobs()

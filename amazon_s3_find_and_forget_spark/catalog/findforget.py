@@ -92,7 +92,7 @@ def q_find_files_simple(spark, sf_dir):
     DuckDB can oracle-check it (the absolute path is environment-local;
     the basename set is the engine-independent fact)."""
     df = load(spark, sf_dir, "lineitem")
-    files = find_affected_files(df, _lineitem_groups(df))
+    files = find_affected_files([(df, _lineitem_groups(df))])
     return files.select(
         F.element_at(F.split("file_path", "/"), -1).alias("file_name")
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .schema import validate_identifier
 
@@ -31,10 +32,12 @@ class DataMapper:
     ignore_object_not_found: bool = False
     encrypted: bool = False  # CSE-KMS envelope-encrypted objects
     partition_filter: str = ""  # SQL predicate over partition columns
-    schema: str = ""  # optional DDL schema; REQUIRED practice for JSON
-    # lakes at scale — without it spark.read.json runs a full inference
-    # pass over the lake before the Find scan even starts (the reference
-    # never infers: schemas come from the Glue catalog)
+    schema: str = ""  # DDL schema the read applies instead of inferring
+    # one (the reference never infers: schemas come from the Glue
+    # catalog). Engine.put_data_mapper pins it for a path Parquet mapper
+    # (``pins_schema``); give it yourself for JSON lakes at scale —
+    # without it spark.read.json runs a full inference pass over the
+    # lake before the Find scan even starts
     role_arn: str = ""  # cross-account access: object-store clients for
     # this mapper are built from STS AssumeRole credentials
     # (sources/object_store.py::store_for_mapper; reference parity
@@ -98,7 +101,28 @@ class DataMapper:
             return None
         return list(self.redact_columns) or list(self.columns)
 
+    @property
+    def pins_schema(self) -> bool:
+        """Whether registration stores the schema it reads as ``schema``:
+        a path Parquet mapper that has none. Then no job infers it again
+        (one Spark job each), and a file whose columns drift still reads
+        by name: an added column is left out of Find, and a type the
+        pinned one cannot read fails the scan loudly (re-put the mapper
+        after a type change). ``table:`` mappers take the catalog's
+        schema and encrypted ones their decrypted one; JSON stays
+        inferred, since a pinned type reads a changed JSON value as NULL
+        and Find would miss the match silently."""
+        return (
+            self.format == "parquet"
+            and not self.schema
+            and not self.encrypted
+            and not self.location.startswith("table:")
+        )
+
     def read(self, spark: SparkSession, kms=None) -> DataFrame:
+        """The mapper's lake as a DataFrame: through ``schema`` when it
+        has one, else with the schema inferred (a Spark job for Parquet;
+        a pass over the data for JSON), then ``partition_filter``."""
         if self.encrypted:
             from .sources.cse import read_encrypted_parquet
 
@@ -128,7 +152,8 @@ class DataMapper:
             df = df.where(self.partition_filter)
         return df
 
-    def validate(self, spark: SparkSession, kms=None) -> None:
+    def validate(self, spark: SparkSession, kms=None) -> StructType:
+        """Check the config against the lake's schema, and return it."""
         schema = self.read(spark, kms).schema
         for col in self.columns:
             validate_identifier(schema, col)
@@ -142,6 +167,7 @@ class DataMapper:
             from .schema import resolve_column
 
             resolve_column(schema, col)
+        return schema
 
 
 def check_no_overlap(mappers: list[DataMapper]) -> None:

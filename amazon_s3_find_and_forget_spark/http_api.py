@@ -402,8 +402,8 @@ class HttpApi:
         if body is None:
             raise _Invalid("Invalid Request: body is required")
         mapper_id = path["id"]
-        self.engine.put_data_mapper(mapper_id, body)
-        return 201, {"DataMapperId": mapper_id, **body}
+        stored = self.engine.put_data_mapper(mapper_id, body)[mapper_id]
+        return 201, {"DataMapperId": mapper_id, **stored}
 
     def get_data_mapper(self, path, qs, body):
         cfg = self.engine.get_data_mapper(path["id"])

@@ -20,7 +20,6 @@ import time
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,14 +64,6 @@ OBJECT_EVENTS = [
     "ObjectUpdateFailed",
     "ObjectRollbackFailed",
 ]
-
-
-def make_event(job_id: str, name: str, data: dict | None = None, at: int | None = None):
-    at = at if at is not None else int(time.time() * 1000)
-    sk = f"{at}#{uuid.uuid4()}"  # parity: boto_utils.py:113
-    import json
-
-    return (job_id, sk, name, at, json.dumps(data or {}))
 
 
 def fold_stats(events_df: DataFrame) -> DataFrame:
@@ -231,6 +222,23 @@ def _refresh(spark: SparkSession, mapper) -> None:
         spark.catalog.refreshByPath(mapper.location)
 
 
+def _find_session(spark: SparkSession) -> SparkSession:
+    """A per-job clone of ``spark`` (temp views and runtime confs
+    included, about 2 ms) in which an In-list of two or more values
+    plans as an ``InSet``, and an ``InSet`` over an int column never as
+    a ``switch`` over inlined values. An ``InSet`` holds its match set
+    by reference, so Find's generated code is the same from job to job
+    and the codegen cache compiles it once; the Parquet scan still gets
+    the pushed ``In`` filter. The caller's session keeps its confs:
+    operator queries never see these."""
+    clone = SparkSession(
+        spark.sparkContext, jsparkSession=spark._jsparkSession.cloneSession()
+    )
+    clone.conf.set("spark.sql.optimizer.inSetConversionThreshold", "0")
+    clone.conf.set("spark.sql.optimizer.inSetSwitchThreshold", "0")
+    return clone
+
+
 def run_job(
     spark: SparkSession,
     mappers: list,
@@ -251,10 +259,15 @@ def run_job(
     1. Manifest: the audit manifest of every routed mapper, written from
        the driver into ``manifest_dir`` (and registered in
        ``manifest_table``) before Find; a failed Find keeps it.
-    2. Find: ONE query. Every routed mapper's affected-file relation
-       (broadcast semi-join or pushed predicates) is tagged with the
-       mapper's ordinal, the relations are unioned, and one collect
-       brings the (path, size, mapper) list to the driver. Each attempt
+    2. Find: ONE query, ``find_affected_files`` over every routed
+       mapper's read (broadcast semi-join or pushed predicates) under one
+       ``distinct()``, and one collect brings the (path, size, mapper)
+       list to the driver. The mappers are read and Find is planned in a
+       per-job session clone (``_find_session``) whose match sets are
+       ``InSet``s, so a steady job compiles no new Find code. A mapper
+       with a pinned ``schema`` (``DataMapper.pins_schema``) is read
+       without inference, so a steady job over such mappers runs three
+       Spark jobs: Find's shuffle map and collect, and Forget. Each attempt
        emits one ``QuerySucceeded``, ``QueryRetried`` or ``QueryFailed``
        event naming all the ``DataMapperIds``. Past the retry budget the
        job ends ``FIND_FAILED`` and no object has been rewritten.
@@ -341,9 +354,10 @@ def run_job(
                         local_relation(spark, MANIFEST_SCHEMA, rows).coalesce(1),
                         manifest_table,
                     )
+            find_spark = _find_session(spark)
             reads = []
             for mapper, routed in routed_mappers:
-                df = mapper.read(spark, kms=kms)
+                df = mapper.read(find_spark, kms=kms)
                 reads.append(
                     (df, build_column_groups(df.schema, mapper.columns, routed))
                 )
@@ -360,16 +374,7 @@ def run_job(
                         break
                     started = time.monotonic()
                     try:
-                        union = reduce(
-                            DataFrame.unionAll,
-                            [
-                                find_affected_files(df, groups).withColumn(
-                                    "mapper", F.lit(i)
-                                )
-                                for i, (df, groups) in enumerate(reads)
-                            ],
-                        )
-                        found = union.collect()
+                        found = find_affected_files(reads).collect()
                         name, data = "QuerySucceeded", {}
                     except Exception as e:  # noqa: BLE001
                         # a failure with retries left records the attempt

@@ -19,7 +19,14 @@ Spark-first re-expression:
 - All column groups that compile to predicates are OR-combined into ONE
   scan branch (single pass over the lake), instead of the reference's
   one-query-per-group fan-out; join-backed groups become additional
-  branches, unioned, then ``distinct()`` on the file path.
+  branches. The branches of every mapper of a job are unioned under ONE
+  ``distinct()`` on (path, size, mapper): one shuffle per job, not one
+  per mapper.
+- ``jobs.run_job`` plans Find in a per-job session clone where every
+  In-list of two or more values becomes an ``InSet`` (Catalyst turns a
+  one-value list into ``=``), which holds the match set by reference:
+  the generated code is the same from job to job and is compiled once,
+  and the Parquet scan still gets the pushed ``In`` filter.
 - Partition pruning: apply ``partition_filter`` before calling — Catalyst
   turns it into static partition pruning, replacing the reference's
   one-query-per-partition fan-out (generate_queries.py:230-246).
@@ -44,6 +51,7 @@ PREDICATE_VALUE_LIMIT = 2048
 
 PATH_COL = "file_path"
 SIZE_COL = "file_size"
+MAPPER_COL = "mapper"
 
 
 def group_predicate(group: ColumnGroup) -> Column:
@@ -118,51 +126,46 @@ def _branches(
     return branches
 
 
-def find_affected_files(
-    df: DataFrame,
-    groups: list[ColumnGroup],
-    predicate_value_limit: int = PREDICATE_VALUE_LIMIT,
-) -> DataFrame:
-    """J1/J2 + P1 + A1: distinct file paths containing >= 1 match.
-
-    Returns ``file_path`` (the object URI) and ``file_size`` (its bytes,
-    which size the Forget dispatch). The scan reads only the identifier
-    columns (column pruning) and the pushed match predicates prune row
-    groups / files; the size comes from the file index, not the data.
-    """
+def _file_projection(df: DataFrame) -> list[Column]:
     if "_file_path" in df.columns:
         # non-native scans (e.g. the CSE-KMS mapInPandas decrypt) carry
         # provenance in explicit columns; input_file_name() is only
         # defined for native file-source scans
-        projection = [
+        return [
             F.col("_file_path").alias(PATH_COL),
             F.col("_file_size").alias(SIZE_COL),
         ]
-    else:
-        # the path stays input_file_name()'s file:/// URI form (the one
-        # events carry); _metadata.file_path spells it file:/
-        projection = [
-            F.input_file_name().alias(PATH_COL),
-            F.col("_metadata.file_size").alias(SIZE_COL),
-        ]
-    branches = _branches(df, groups, projection, predicate_value_limit)
+    # the path stays input_file_name()'s file:/// URI form (the one
+    # events carry); _metadata.file_path spells it file:/
+    return [
+        F.input_file_name().alias(PATH_COL),
+        F.col("_metadata.file_size").alias(SIZE_COL),
+    ]
+
+
+def find_affected_files(
+    reads: list[tuple[DataFrame, list[ColumnGroup]]],
+    predicate_value_limit: int = PREDICATE_VALUE_LIMIT,
+) -> DataFrame:
+    """J1/J2 + P1 + A1: distinct file paths containing >= 1 match.
+
+    ``reads`` is a job's list of ``(df, groups)``, one per data mapper
+    (a single-mapper caller passes one). Returns ``file_path`` (the
+    object URI), ``file_size`` (its bytes, which size the Forget
+    dispatch) and ``mapper`` (the index of the read that found it),
+    under ONE ``distinct()`` over every mapper's branches, so a job's
+    Find is one shuffle whatever its mapper count. The scans read only
+    the identifier columns (column pruning) and the pushed match
+    predicates prune row groups / files; the size comes from the file
+    index, not the data.
+    """
+    branches = []
+    for i, (df, groups) in enumerate(reads):
+        projection = _file_projection(df) + [F.lit(i).alias(MAPPER_COL)]
+        branches += _branches(df, groups, projection, predicate_value_limit)
     if not branches:
         return df.limit(0).select(*projection)
     return reduce(DataFrame.unionAll, branches).distinct()
-
-
-def affected_partitions(df: DataFrame, partition_keys: list[str]) -> DataFrame:
-    """A2: distinct combinations of a partition-key subset.
-
-    When a mapper restricts ``PartitionKeys`` to a subset, several
-    physical partitions collapse into one combination (reference
-    generate_queries.py:230-241 — there it bounds the per-partition query
-    fan-out; here it is exposed for batching/checkpointing granularity
-    and job planning UIs). A distinct over partition columns is
-    metadata-only for a partitioned scan: Catalyst answers it from the
-    file index without reading data files.
-    """
-    return df.select(*partition_keys).distinct()
 
 
 def find_matching_rows(

@@ -89,7 +89,7 @@ def main(argv=None):
             df = mapper.read(spark)
             groups = build_column_groups(df.schema, mapper.columns, routed)
             counts[mid] = {
-                "AffectedFiles": find_affected_files(df, groups).count()
+                "AffectedFiles": find_affected_files([(df, groups)]).count()
             }
         print(json.dumps({"DryRun": True, "Mappers": counts}))
         return 0

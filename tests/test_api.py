@@ -799,3 +799,65 @@ def test_engine_starts_its_session_once(tmp_path):
     assert not any(t.is_alive() for t in threads)
     assert len(calls) == 1
     assert seen == [session, session]
+
+
+def test_list_jobs_pages_through_ties_of_its_boundary_second(engine):
+    """CreatedAt is in seconds and NextStart an exclusive bound, so a
+    full page runs on through the jobs of its last second: with jobs at
+    5, 5 and 4 and page_size=1, paging lists all three, each once."""
+    for jid, created in (("j0", 5), ("j1", 5), ("j2", 4)):
+        engine._save(
+            os.path.join("jobs", jid),
+            {"Id": jid, "JobStatus": "COMPLETED", "CreatedAt": created},
+        )
+    seen, start = [], None
+    while True:
+        page, start = engine.list_jobs(page_size=1, start_at=start)
+        seen += [j["Id"] for j in page]
+        if start is None:
+            break
+    assert sorted(seen) == ["j0", "j1", "j2"]
+    page, start = engine.list_jobs(page_size=1)
+    assert sorted(j["Id"] for j in page) == ["j0", "j1"] and start == 5
+
+
+@pytest.mark.parametrize("id_type", ["int64", "int32"])
+def test_steady_job_runs_three_spark_jobs_and_compiles_nothing(
+    engine, spark, tmp_path, id_type
+):
+    """After one warm-up job, a Parquet-only job reads its pinned schema
+    without a Spark job, runs Find as one shuffle (2 Spark jobs) and
+    Forget as one, and its InSet match sets reuse the generated code of
+    the job before, so it adds no Janino compile. An int column is the
+    case where InSet would otherwise inline its values into a switch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    lake = tmp_path / "ids"
+    lake.mkdir()
+    for k in range(4):
+        ids = pa.array(range(k * 100, (k + 1) * 100), getattr(pa, id_type)())
+        pq.write_table(pa.table({"id": ids}), str(lake / f"p{k}.parquet"))
+    sc = spark.sparkContext
+    codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    store = sc._jsc.sc().statusStore()
+
+    def spark_jobs(job_id):
+        tag = f"s3f2-job-{job_id}"
+        jobs = store.jobsList(None)  # a Scala Seq of JobData
+        return sum(
+            jobs.apply(i).jobTags().contains(tag) for i in range(jobs.size())
+        )
+
+    engine.put_data_mapper("ids", {"Location": str(lake), "Columns": ["id"]})
+    engine.enqueue_matches([{"MatchId": 1}, {"MatchId": 3}])
+    assert engine.process_queue()["JobStatus"] == "COMPLETED"
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount()
+    engine.enqueue_matches([{"MatchId": m} for m in (5, 105, 107, 399)])
+    job = engine.process_queue()
+    assert job["JobStatus"] == "COMPLETED"
+    assert job["TotalObjectUpdatedCount"] == 3
+    assert spark_jobs(job["Id"]) == 3
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == compiles
+    # the InSet confs live on the job's session clone only
+    assert spark.conf.get("spark.sql.optimizer.inSetConversionThreshold") == "10"

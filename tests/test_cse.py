@@ -93,7 +93,11 @@ def test_find_over_encrypted_lake_carries_uri_and_size(spark, tmp_path):
     groups = build_column_groups(
         df.schema, ["customer_id"], [QueueItem(match_id=2)]
     )
-    found = find_affected_files(df, groups).collect()
+    found = (
+        find_affected_files([(df, groups)])
+        .select("file_path", "file_size")
+        .collect()
+    )
     # the same URI form and size a native scan of the object reports
     native = (
         spark.read.format("binaryFile")

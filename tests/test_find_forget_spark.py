@@ -1,8 +1,11 @@
 """End-to-end Find/Forget over Spark: semi-join plans, per-file rewrite,
 job lifecycle — run against a throwaway copy of the sf0.001 tables."""
 
+import json
 import os
 import shutil
+import time
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +16,6 @@ from amazon_s3_find_and_forget_spark.jobs import (
     fold_status,
     list_events,
     list_jobs,
-    make_event,
     run_job,
 )
 from amazon_s3_find_and_forget_spark.matches import (
@@ -46,13 +48,13 @@ def test_find_affected_files_predicate_path(spark, lake):
     df = spark.read.parquet(lake)
     items = [QueueItem(match_id=1), QueueItem(match_id=3)]
     groups = build_column_groups(df.schema, ["l_orderkey"], items)
-    paths = find_affected_files(df, groups)
-    assert paths.columns == ["file_path", "file_size"]
+    paths = find_affected_files([(df, groups)])
+    assert paths.columns == ["file_path", "file_size", "mapper"]
     found = paths.collect()
     hit = [r[0] for r in found]
-    # the size is the object's bytes on disk
-    for path, size in found:
-        assert size == os.path.getsize(path[len("file:") :])
+    # the size is the object's bytes on disk; the one read is mapper 0
+    for path, size, mapper in found:
+        assert size == os.path.getsize(path[len("file:") :]) and mapper == 0
     # every affected file really contains a match
     expected = {
         r[0]
@@ -68,10 +70,12 @@ def test_find_semi_join_path_same_result(spark, lake):
     df = spark.read.parquet(lake)
     items = [QueueItem(match_id=i) for i in (1, 3, 5)]
     groups = build_column_groups(df.schema, ["l_orderkey"], items)
-    pred = {r[0] for r in find_affected_files(df, groups).collect()}
+    pred = {r[0] for r in find_affected_files([(df, groups)]).collect()}
     joined = {
         r[0]
-        for r in find_affected_files(df, groups, predicate_value_limit=0).collect()
+        for r in find_affected_files(
+            [(df, groups)], predicate_value_limit=0
+        ).collect()
     }
     assert pred == joined
 
@@ -279,6 +283,13 @@ def test_list_jobs_topk(spark):
     )
     top = list_jobs(df, page_size=5).collect()
     assert [r.Id for r in top] == ["j19", "j18", "j17", "j16", "j15"]
+
+
+def make_event(job_id, name, data=None):
+    """One event row of ``fold_stats``'s input: (Id, Sk, EventName,
+    CreatedAt, EventData), Sk in the reference's ``<millis>#<uuid>``."""
+    at = int(time.time() * 1000)
+    return (job_id, f"{at}#{uuid.uuid4()}", name, at, json.dumps(data or {}))
 
 
 def test_fold_stats_multiple_jobs(spark):

@@ -252,6 +252,20 @@ def test_data_mapper_crud(base, lake):
     assert "Message" in body
 
 
+def test_data_mapper_put_pins_parquet_schema(base, spark, lake):
+    """A Parquet mapper put without a Schema stores the one it was
+    validated against, and both the PUT and the GET show it."""
+    st, put = call(
+        base, "PUT", "/v1/data_mappers/li",
+        {"Location": lake, "Columns": ["l_orderkey"]},
+    )
+    assert st == 201
+    st, got = call(base, "GET", "/v1/data_mappers/li")
+    assert st == 200
+    assert got["Schema"] == put["Schema"]
+    assert got["Schema"] == spark.read.parquet(lake).schema.toDDL()
+
+
 def test_data_mapper_pagination(base, tmp_path, sf_dir):
     for name in ("a", "b", "c"):
         d = tmp_path / f"lake-{name}"

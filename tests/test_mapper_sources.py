@@ -71,3 +71,111 @@ def test_catalog_table_mapper_find_forget(spark, tmp_path, sf_dir):
         assert after.where("s_suppkey = 1").count() == 0
     finally:
         spark.sql("DROP TABLE IF EXISTS s3f2_suppliers")
+
+
+# --- the schema pinned at registration --------------------------------------
+
+
+@pytest.fixture()
+def engine(spark, tmp_path):
+    from amazon_s3_find_and_forget_spark.api import Engine
+
+    return Engine(spark, str(tmp_path / "state"))
+
+
+def _write(path, columns):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(columns), path)
+
+
+def test_parquet_mapper_put_pins_its_schema(spark, engine, tmp_path, json_lake):
+    lake = tmp_path / "plake"
+    lake.mkdir()
+    _write(str(lake / "a.parquet"), {"id": [1, 2], "v": ["x", "y"]})
+    stored = engine.put_data_mapper("p", {"Location": str(lake), "Columns": ["id"]})
+    assert stored["p"]["Schema"] == spark.read.parquet(str(lake)).schema.toDDL()
+    assert engine.get_data_mapper("p")["Schema"] == stored["p"]["Schema"]
+    # a caller's own Schema is kept as given
+    engine.put_data_mapper(
+        "p", {"Location": str(lake), "Columns": ["id"], "Schema": "id bigint"}
+    )
+    assert engine.get_data_mapper("p")["Schema"] == "id bigint"
+    # JSON stays inferred: a pinned type would read a changed value as NULL
+    engine.put_data_mapper(
+        "j", {"Location": json_lake, "Columns": ["n_nationkey"], "Format": "json"}
+    )
+    assert "Schema" not in engine.get_data_mapper("j")
+
+
+def test_pinned_schema_still_finds_a_file_with_an_added_column(
+    spark, engine, tmp_path
+):
+    import pyarrow.parquet as pq
+
+    lake = tmp_path / "drift"
+    lake.mkdir()
+    _write(str(lake / "a.parquet"), {"id": [1, 2, 3], "v": ["a", "b", "c"]})
+    engine.put_data_mapper("d", {"Location": str(lake), "Columns": ["id"]})
+    # written after the put, with a column the pinned schema lacks
+    _write(
+        str(lake / "b.parquet"),
+        {"id": [2, 4, 5], "v": ["d", "e", "f"], "extra": [10, 20, 30]},
+    )
+    engine.enqueue_matches([{"MatchId": 2}, {"MatchId": 5}])
+    job = engine.process_queue()
+    assert job["JobStatus"] == "COMPLETED"
+    assert job["TotalObjectUpdatedCount"] == 2
+    a = pq.read_table(str(lake / "a.parquet")).to_pydict()
+    b = pq.read_table(str(lake / "b.parquet")).to_pydict()
+    assert a == {"id": [1, 3], "v": ["a", "c"]}
+    assert b == {"id": [4], "v": ["e"], "extra": [20]}
+
+
+def test_mapper_stored_without_schema_still_runs(spark, engine, tmp_path):
+    """A state dir written before schemas were pinned: the read infers."""
+    import pyarrow.parquet as pq
+
+    lake = tmp_path / "old"
+    lake.mkdir()
+    _write(str(lake / "a.parquet"), {"id": [1, 2, 3]})
+    engine._save(
+        "data_mappers", {"o": {"Location": str(lake), "Columns": ["id"]}}
+    )
+    engine.enqueue_matches([{"MatchId": 1}, {"MatchId": 3}])
+    job = engine.process_queue()
+    assert job["JobStatus"] == "COMPLETED"
+    assert pq.read_table(str(lake / "a.parquet")).to_pydict() == {"id": [2]}
+
+
+def test_table_mapper_on_a_temp_view_runs_in_the_find_clone(
+    spark, tmp_path, sf_dir
+):
+    """Find reads the mappers in a per-job clone of the caller's session;
+    the clone keeps the caller's temp views. A view hides the scan's
+    ``_metadata``, so this one carries the explicit provenance columns
+    that non-native scans use."""
+    from pyspark.sql import functions as F
+
+    lake = str(tmp_path / "vlake")
+    os.makedirs(lake)
+    shutil.copy(
+        os.path.join(sf_dir, "supplier.parquet"),
+        os.path.join(lake, "a.parquet"),
+    )
+    spark.read.parquet(lake).select(
+        "*",
+        F.input_file_name().alias("_file_path"),
+        F.col("_metadata.file_size").alias("_file_size"),
+    ).createOrReplaceTempView("s3f2_supplier_view")
+    try:
+        m = DataMapper("v", "table:s3f2_supplier_view", ["s_suppkey"])
+        before = spark.read.parquet(lake).count()
+        result = run_job(spark, [m], [QueueItem(match_id=1), QueueItem(match_id=2)])
+        assert result.status == "COMPLETED", result.events
+        after = spark.read.parquet(lake)
+        assert after.count() == before - 2
+        assert after.where("s_suppkey in (1, 2)").count() == 0
+    finally:
+        spark.catalog.dropTempView("s3f2_supplier_view")

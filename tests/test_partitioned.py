@@ -1,6 +1,7 @@
-"""Partitioned-lake semantics: static partition pruning in Find, the
-partition-combo dedup (A2), identifier/partition-key validation, and an
-end-to-end job over a hive-partitioned lake."""
+"""Partitioned-lake semantics: static partition pruning in Find (which
+replaces the reference's per-partition query fan-out, A2),
+identifier/partition-key validation, and an end-to-end job over a
+hive-partitioned lake."""
 
 import os
 
@@ -10,10 +11,7 @@ from pyspark.sql import functions as F
 from amazon_s3_find_and_forget_spark.data_mappers import DataMapper
 from amazon_s3_find_and_forget_spark.jobs import run_job
 from amazon_s3_find_and_forget_spark.matches import QueueItem, build_column_groups
-from amazon_s3_find_and_forget_spark.plans.find import (
-    affected_partitions,
-    find_affected_files,
-)
+from amazon_s3_find_and_forget_spark.plans.find import find_affected_files
 
 
 @pytest.fixture(scope="module")
@@ -41,19 +39,13 @@ def test_partition_filter_prunes_scan(spark, part_lake):
     groups = build_column_groups(
         df.schema, ["l_orderkey"], [QueueItem(match_id=1)]
     )
-    plan = find_affected_files(df, groups)._jdf.queryExecution().executedPlan().toString()
+    plan = find_affected_files([(df, groups)])._jdf.queryExecution().executedPlan().toString()
     # static partition pruning reached the scan
     assert "PartitionFilters" in plan
     assert "l_returnflag" in plan.split("PartitionFilters")[1][:200]
     # only files under the R partition can be returned
-    paths = [r.file_path for r in find_affected_files(df, groups).collect()]
+    paths = [r.file_path for r in find_affected_files([(df, groups)]).collect()]
     assert paths and all("l_returnflag=R" in p for p in paths)
-
-
-def test_affected_partitions_subset(spark, part_lake):
-    df = spark.read.parquet(part_lake)
-    combos = affected_partitions(df, ["l_returnflag"]).collect()
-    assert sorted(r.l_returnflag for r in combos) == ["A", "N", "R"]
 
 
 def test_identifier_cannot_be_partition_key(part_lake):
@@ -120,3 +112,40 @@ def test_job_with_partition_filter_limits_blast_radius(
     assert after.where(
         (F.col("l_orderkey") == int(key)) & (F.col("l_returnflag") == "A")
     ).count() == 0
+
+
+def test_pinned_schema_finds_the_same_files(spark, part_lake, tmp_path):
+    """A hive-partitioned mapper with a partition_filter, its schema
+    pinned at registration, finds the files an inferring read finds."""
+    from amazon_s3_find_and_forget_spark.api import Engine
+
+    engine = Engine(spark, str(tmp_path / "state"))
+    config = {
+        "Location": part_lake,
+        "Columns": ["l_orderkey"],
+        "PartitionKeys": ["l_returnflag"],
+        "PartitionFilter": "l_returnflag in ('A', 'R')",
+    }
+    pinned = engine.put_data_mapper("li", config)["li"]
+    assert "l_returnflag" in pinned["Schema"]
+
+    keys = [
+        r[0]
+        for r in spark.read.parquet(part_lake)
+        .select("l_orderkey")
+        .distinct()
+        .orderBy("l_orderkey")
+        .limit(8)
+        .collect()
+    ]
+
+    def found(cfg):
+        df = engine._mapper_from("li", cfg).read(spark)
+        groups = build_column_groups(
+            df.schema, ["l_orderkey"], [QueueItem(match_id=k) for k in keys]
+        )
+        return sorted(tuple(r) for r in find_affected_files([(df, groups)]).collect())
+
+    files = found(pinned)
+    assert files and files == found(config)
+    assert all("l_returnflag=N" not in r[0] for r in files)

@@ -50,7 +50,7 @@ def test_find_pushes_in_filter(spark, lake):
     groups = build_column_groups(
         df.schema, ["l_orderkey"], [QueueItem(match_id=k) for k in (1, 3, 5)]
     )
-    plan = explain_str(find_affected_files(df, groups))
+    plan = explain_str(find_affected_files([(df, groups)]))
     assert "PushedFilters" in plan
     assert "In(l_orderkey" in plan  # match set reaches the parquet scan
 
@@ -60,7 +60,7 @@ def test_find_prunes_columns(spark, lake):
     groups = build_column_groups(
         df.schema, ["l_orderkey"], [QueueItem(match_id=1)]
     )
-    plan = explain_str(find_affected_files(df, groups))
+    plan = explain_str(find_affected_files([(df, groups)]))
     # scan should read only the identifier column, not all 11
     assert "l_extendedprice" not in plan.split("PushedFilters")[0] or (
         "ReadSchema: struct<l_orderkey" in plan
@@ -73,7 +73,7 @@ def test_find_semi_join_broadcasts(spark, lake):
         df.schema, ["l_orderkey"], [QueueItem(match_id=k) for k in range(100)]
     )
     plan = explain_str(
-        find_affected_files(df, groups, predicate_value_limit=10)
+        find_affected_files([(df, groups)], predicate_value_limit=10)
     )
     assert "BroadcastHashJoin" in plan
     assert "LeftSemi" in plan

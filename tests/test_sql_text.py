@@ -100,7 +100,7 @@ def test_rendered_sql_matches_dataframe_plan(spark, tmp_path, sf_dir):
 
     from amazon_s3_find_and_forget_spark.plans.find import find_affected_files
 
-    expected = {r.file_path for r in find_affected_files(df, groups).collect()}
+    expected = {r.file_path for r in find_affected_files([(df, groups)]).collect()}
 
     df.createOrReplaceTempView("li_view")
     sql = find_query_sql("li_view", groups)
