@@ -604,13 +604,9 @@ def q_text_llm_pipeline(spark, sf_dir):
     clean = dedup.decontaminate_spans(pool, bench, n=8).select(
         "doc_id", "text"
     )
-    flagged = text.gopher_quality_flags(clean)
-    survivors = flagged.where(
-        F.col("ok_word_count")
-        & F.col("ok_mean_word_len")
-        & F.col("ok_symbol_ratio")
-        & F.col("ok_alpha_words")
-    ).select("doc_id", "text")
+    survivors = text.gopher_filter(clean, text.GOPHER_RULES[:4]).select(
+        "doc_id", "text"
+    )
     pool2 = survivors.join(docs.select("doc_id", "lang"), "doc_id")
     return text.dsir_select(
         pool2, None, 40, salt="r13pipe",
@@ -625,22 +621,22 @@ def q_text_selection_pipeline(spark, sf_dir):
     literal model (the text_pareto_filter kernel, bias raised to +1.2
     so the screen keeps ~15% and every stage contributes survivors to
     gate) -> DSIR Gumbel-top-k selection (English-survivor target)
-    over the doubly-screened pool — exactly the chain the packaged
-    ``curate --steps gopher,classifier,dsir`` composes, with training
-    replaced by the fixed model so the whole composition is
-    closed-form in both engines. Each stage is gated alone
+    over the doubly-screened pool. It is the step order of
+    ``curation.curate(steps=["gopher", "classifier", "dsir"])``, with
+    three differences that keep the composition closed-form in both
+    engines: the classifier is a fixed literal model, never trained;
+    the Pareto draw reads scores rounded to 6 places (``scored=``),
+    where ``curate`` scores unrounded; and the row returns the DSIR
+    picks with their scores, where ``curate`` keeps the picked rows'
+    own columns. Each stage is gated alone
     (text_gopher_quality / text_pareto_filter / text_dsir_sample);
     this row gates their composition: the Pareto screen changes the
     DSIR pool AND its importance-weight denominator, so a drift in
     any stage moves the final 25-row selection."""
     docs = load(spark, sf_dir, "documents")
-    flagged = text.gopher_quality_flags(docs)
-    survivors = flagged.where(
-        F.col("ok_word_count")
-        & F.col("ok_mean_word_len")
-        & F.col("ok_symbol_ratio")
-        & F.col("ok_alpha_words")
-    ).select("doc_id", "text")
+    survivors = text.gopher_filter(docs, text.GOPHER_RULES[:4]).select(
+        "doc_id", "text"
+    )
     B = 64
     model = {
         "weights": [(((b * 37) % 13) - 6) / 10.0 for b in range(B)],

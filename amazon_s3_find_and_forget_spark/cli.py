@@ -13,6 +13,9 @@ user scripting the reference's API can port a runbook line by line:
     python -m amazon_s3_find_and_forget_spark list-jobs
     python -m amazon_s3_find_and_forget_spark job-events <job-id>
 
+The data commands call package functions (``dedup-screen`` is
+``operators.incremental.screen_batch``; ``curate`` and ``select-data``
+are in ``curation``): this module parses, reads input files and prints.
 State lives under ``--state-dir`` (default ``./.s3f2-state``); output is
 one JSON document per command on stdout.
 """
@@ -24,9 +27,44 @@ import json
 import os
 import sys
 
+from .operators import InputRefused
+
 
 def _emit(obj) -> None:
     print(json.dumps(obj, indent=2, default=str))
+
+
+def _warn(warnings: list[dict]) -> None:
+    for w in warnings:
+        print(json.dumps(w), file=sys.stderr)
+
+
+def read_list_file(path: str) -> list[str]:
+    """The entries of a list file: one per line, stripped, with blank
+    lines and ``#`` comment lines skipped."""
+    with open(path, encoding="utf-8") as f:
+        stripped = [ln.strip() for ln in f]
+    return [ln for ln in stripped if ln and not ln.startswith("#")]
+
+
+def _read_json(path: str):
+    with open(path) as f:
+        return json.load(f)
+
+
+def _read_input(p, flag: str, path: str, read):
+    """``read(path)``, or a usage error naming ``flag`` if that fails."""
+    try:
+        return read(path)
+    except OSError as e:
+        p.error(f"{flag}: {e}")
+
+
+def _one_source(p, what: str, *flags: tuple[str, object]) -> None:
+    """A usage error unless exactly one ``(flag, value)`` pair is set."""
+    if sum(bool(v) for _, v in flags) != 1:
+        names = " / ".join(flag for flag, _ in flags)
+        p.error(f"{what} needs exactly one of {names}")
 
 
 def collect_auth_tokens(
@@ -46,12 +84,7 @@ def collect_auth_tokens(
 
     specs = list(argv_specs)
     if token_file:
-        with open(token_file) as f:
-            specs += [
-                line.strip()
-                for line in f
-                if line.strip() and not line.lstrip().startswith("#")
-            ]
+        specs += read_list_file(token_file)
     for var in env_vars:
         val = os.environ.get(var)
         if not val:
@@ -564,78 +597,61 @@ def main(argv: list[str] | None = None) -> int:
         bad = [s for s in args.accepted if ":" not in s]
         if bad:
             p.error(f"--accepted takes COL:V1[,V2...], got {bad[0]!r}")
-    gopher_rules: list[str] = []
+    if args.cmd in ("select-data", "curate"):
+        from .operators.text import GOPHER_RULES, load_merges
+
+        gopher_rules = [r.strip() for r in args.rules.split(",") if r.strip()]
+        bad_rules = sorted(set(gopher_rules) - set(GOPHER_RULES))
+    model = None
     if args.cmd == "select-data":
         if args.method == "dsir":
             if args.k is None or args.k < 1:
                 p.error("--method dsir requires --k >= 1")
-            if not (args.target_filter or args.target):
-                p.error("--method dsir requires --target-filter or --target")
-        if (
-            args.method == "classifier"
-            and not args.target_filter
-            and not args.model_in
-        ):
-            p.error(
-                "--method classifier requires --target-filter or --model-in"
-            )
+            _one_source(p, "--method dsir", ("--target", args.target),
+                        ("--target-filter", args.target_filter))
+        if args.method == "classifier":
+            _one_source(p, "--method classifier",
+                        ("--model-in", args.model_in),
+                        ("--target-filter", args.target_filter))
+            if args.model_in:
+                model = _read_input(p, "--model-in", args.model_in, _read_json)
+        if args.train_sample < 0:
+            p.error("--train-sample must be >= 0")
         if args.method == "prototypes" and (
             args.keep_frac is None or not 0 < args.keep_frac <= 1
         ):
             p.error("--method prototypes requires --keep-frac in (0, 1]")
         if args.method == "gopher":
-            known = {
-                "word_count", "mean_word_len", "symbol_ratio",
-                "alpha_words", "stop_words",
-            }
-            gopher_rules = [
-                r.strip() for r in args.rules.split(",") if r.strip()
-            ]
-            bad_rules = sorted(set(gopher_rules) - known)
             if not gopher_rules:
                 p.error("--rules needs at least one rule")
             if bad_rules:
                 p.error(f"unknown Gopher rules: {bad_rules}")
-    curate_steps: list[str] = []
     curate_ratios: dict[str, float] = {}
+    blocklist = badwords = merges = None
     if args.cmd == "curate":
-        _order = [
-            "url-screen", "c4-clean", "paragraph-dedup", "exact-dedup",
-            "exact-substr", "decontaminate", "gopher", "classifier",
-            "dsir", "split",
-        ]
+        from .curation import CURATE_STEPS
+
         wanted = {s.strip() for s in args.steps.split(",") if s.strip()}
-        bad_steps = sorted(wanted - set(_order))
+        bad_steps = sorted(wanted - set(CURATE_STEPS))
         if bad_steps:
             p.error(f"unknown curate steps: {bad_steps}")
         if not wanted:
             p.error("--steps needs at least one step")
-        curate_steps = [s for s in _order if s in wanted]
+        curate_steps = [s for s in CURATE_STEPS if s in wanted]
         if "decontaminate" in wanted and not args.benchmark:
             p.error("the decontaminate step requires --benchmark")
-        if "classifier" in wanted and (
-            bool(args.clf_model_in) == bool(args.clf_target_filter)
-        ):
-            p.error(
-                "the classifier step needs exactly one of "
-                "--clf-model-in / --clf-target-filter"
-            )
+        if "classifier" in wanted:
+            _one_source(p, "the classifier step",
+                        ("--clf-model-in", args.clf_model_in),
+                        ("--clf-target-filter", args.clf_target_filter))
+        if args.clf_train_sample < 0:
+            p.error("--clf-train-sample must be >= 0")
         if "dsir" in wanted:
             if args.dsir_k is None or args.dsir_k < 1:
                 p.error("the dsir step requires --dsir-k >= 1")
-            if bool(args.dsir_target) == bool(args.dsir_target_filter):
-                p.error(
-                    "the dsir step needs exactly one of --dsir-target "
-                    "/ --dsir-target-filter"
-                )
-        known = {
-            "word_count", "mean_word_len", "symbol_ratio",
-            "alpha_words", "stop_words",
-        }
-        gopher_rules = [
-            r.strip() for r in args.rules.split(",") if r.strip()
-        ]
-        bad_rules = sorted(set(gopher_rules) - known)
+            _one_source(p, "the dsir step",
+                        ("--dsir-target", args.dsir_target),
+                        ("--dsir-target-filter", args.dsir_target_filter))
         if "gopher" in wanted and (bad_rules or not gopher_rules):
             p.error(f"bad Gopher rules: {bad_rules or 'empty'}")
         if "split" in wanted:
@@ -647,6 +663,30 @@ def main(argv: list[str] | None = None) -> int:
                 p.error("--split-ratios takes NAME:FRACTION[,...]")
             if abs(sum(curate_ratios.values()) - 1.0) > 1e-9:
                 p.error("--split-ratios must sum to 1")
+            if any(not 0 <= f <= 1 for f in curate_ratios.values()):
+                p.error("--split-ratios fractions must be in [0, 1]")
+        if "url-screen" in wanted and args.blocklist_file:
+            blocklist = _read_input(p, "--blocklist-file",
+                                    args.blocklist_file, read_list_file)
+        if "c4-clean" in wanted and args.badwords_file:
+            badwords = _read_input(p, "--badwords-file",
+                                   args.badwords_file, read_list_file)
+        if args.substr_tokenizer == "bpe" and args.substr_merges:
+            merges = _read_input(p, "--substr-merges", args.substr_merges,
+                                 load_merges)
+        if "classifier" in wanted and args.clf_model_in:
+            model = _read_input(p, "--clf-model-in", args.clf_model_in,
+                                _read_json)
+    if args.cmd == "dedup-screen":
+        if args.batch_id is not None:
+            from .operators.incremental import check_batch_id
+
+            try:
+                check_batch_id(args.batch_id)
+            except InputRefused as e:
+                p.error(str(e))
+        if args.mode == "embedding" and args.dim is None:
+            p.error("--mode embedding requires --dim")
     zorder_cols: list[str] = []
     if args.cmd == "zorder":
         zorder_cols = [c.strip() for c in args.by.split(",") if c.strip()]
@@ -767,715 +807,73 @@ def main(argv: list[str] | None = None) -> int:
         finally:
             server.server_close()
     elif args.cmd == "dedup-screen":
-        import hashlib
+        from .operators.incremental import screen_batch
 
-        from pyspark.sql import functions as F
-
-        from .operators import incremental as inc
-
-        batch = eng.spark.read.parquet(args.input)
-        # idempotency: the batch's identity is its landed input path
-        # PLUS a fingerprint of the landed bytes (file listing with
-        # sizes and mtimes) — outputs go to batch=<digest> partitions
-        # with OVERWRITE, and screening excludes the batch's own
-        # partition, so a re-run after a mid-write failure produces
-        # byte-identical results instead of appending duplicates.
-        # The fingerprint closes the reused-path trap: NEW data landing
-        # at yesterday's path gets a NEW digest instead of silently
-        # overwriting (and self-excluding) yesterday's index delta,
-        # which would re-admit yesterday's documents; a pure retry
-        # leaves the input files untouched and keeps the same digest.
-        # realpath, not abspath: a retry reaching the same data through
-        # a different symlink spelling must map to the SAME partition,
-        # or the exclusion stops hiding the first attempt's
-        # half-written delta and the batch's rows all match their own
-        # index entries. --batch-id overrides for the case no
-        # fingerprint can solve (identical data re-landed at a
-        # different path that must screen as the SAME batch).
-        if args.batch_id is not None:
-            import re as _re
-
-            # the id is interpolated into batch=<id> partition paths
-            # AND string-compared against Spark's URL-decoded partition
-            # value: '/' nests directories, '%' round-trips decoded
-            # ('a%2Fb' reads back as 'a/b' and stops excluding the
-            # batch's own delta), '=' breaks partition parsing — refuse
-            # anything that does not round-trip verbatim
-            if not _re.fullmatch(r"[A-Za-z0-9._-]{1,64}", args.batch_id):
-                p.error(
-                    "--batch-id must be 1-64 chars of [A-Za-z0-9._-]: "
-                    "it names a batch=<id> partition directory and must "
-                    "round-trip Spark's partition-value decoding "
-                    "verbatim"
-                )
-            if args.batch_id.startswith("base-"):
-                p.error(
-                    "--batch-id must not start with 'base-': that "
-                    "prefix names compaction base partitions, and a "
-                    "batch id colliding with one would self-exclude "
-                    "the folded index (compact-index) and re-admit "
-                    "every indexed document"
-                )
-            digest = args.batch_id
-        else:
-            # listed through the Hadoop FS API (inc.input_fingerprint)
-            # so s3a://hdfs:// inputs fingerprint their landed bytes too
-            # — an os.walk of a remote scheme is silently empty, which
-            # would degrade the digest to path-only and re-open the
-            # reused-path trap on exactly the stores that matter.
-            # Digest format v2 (round 12): local-directory digests
-            # changed; a retry of a PRE-upgrade crashed batch must pass
-            # --batch-id <old digest> to keep excluding its own delta.
-            real, entries = inc.input_fingerprint(eng.spark, args.input)
-            digest = hashlib.md5(
-                "\n".join([real] + entries).encode()
-            ).hexdigest()[:16]
-        # a batch whose digest was already FOLDED into a compaction base
-        # must not re-run: its rows now live in the base, the
-        # own-partition exclusion below no longer hides them, and every
-        # document would self-match — overwriting the previously-correct
-        # novel output with an empty partition. (Re-screening the same
-        # DATA on purpose needs a fresh --batch-id; it will then —
-        # correctly — find everything already indexed.)
-        if digest in inc.folded_batch_digests(eng.spark, args.index_dir):
-            p.error(
-                f"batch {digest} was already screened and folded into a "
-                "compaction base of this index; re-running it would "
-                "self-match every row and overwrite its novel output "
-                "with an empty partition. If you intend to re-screen "
-                "this data as a NEW batch, pass a fresh --batch-id."
+        try:
+            report, warnings = screen_batch(
+                eng.spark, args.input, args.index_dir, args.novel_out,
+                args.mode, text_col=args.text_column, id_col=args.id_column,
+                threshold=args.threshold, emb_col=args.embedding_column,
+                dim=args.dim, bits=args.bits, tables=args.tables,
+                lsh_seed=args.lsh_seed, bloom_capacity=args.bloom_capacity,
+                bloom_fpp=args.bloom_fpp,
+                assume_hash_scheme=args.assume_hash_scheme,
+                batch_id=args.batch_id,
             )
-        if args.mode == "embedding" and args.dim is None:
-            p.error("--mode embedding requires --dim")
-        index_cols = {
-            "exact": ["content_hash", args.id_column],
-            "minhash": ["_id", "_sig"],
-            "embedding": ["_id", "_u", "_k"],
-            # bloom deltas are one bitmap row per batch; the read path
-            # ORs committed rows, so compaction's row-concatenating
-            # fold is already correct for this layout. hash_scheme is
-            # NULL-filled over pre-stamp indexes (see read defaults).
-            "bloom": ["bits", "num_bits", "num_hashes", "hash_scheme"],
-        }[args.mode]
-        # UNCOMMITTED partitions never screen: a crashed earlier run can
-        # leave a markerless batch=<d1> dir with footer-bearing part
-        # files, and a retry that maps to a DIFFERENT digest (e.g. the
-        # input was re-staged with fresh mtimes) would otherwise read
-        # that half-written delta as committed history and silently drop
-        # its own documents as already-seen. Same _SUCCESS contract as
-        # compact-index; the stale partial stays on disk for the
-        # operator (re-run that batch, or delete the dir if superseded).
-        partials = [
-            n[len("batch="):]
-            for n in inc._list_dirs(eng.spark, args.index_dir)
-            if n.startswith("batch=")
-            and not inc._has_success(
-                eng.spark, f"{args.index_dir}/{n}"
-            )
-        ]
-        keep = F.col("batch") != digest
-        if partials:
-            print(
-                json.dumps(
-                    {
-                        "Warning": "uncommitted batch partitions "
-                        "excluded from the screen (crashed run?)",
-                        "Partitions": sorted(partials),
-                    }
-                ),
-                file=sys.stderr,
-            )
-            keep = keep & ~F.col("batch").isin(partials)
-        index = inc.read_index_or_empty(
-            eng.spark,
-            args.index_dir,
-            keep,
-            index_cols,
-            lambda: (
-                inc.exact_index(
-                    batch.limit(0), args.text_column, args.id_column
-                )
-                if args.mode == "exact"
-                else inc.minhash_index(
-                    batch.limit(0), args.text_column, args.id_column
-                )
-                if args.mode == "minhash"
-                else inc.embedding_index(
-                    batch.limit(0), args.dim, args.bits, args.tables,
-                    emb_col=args.embedding_column, id_col=args.id_column,
-                    seed=args.lsh_seed,
-                )
-                if args.mode == "embedding"
-                else eng.spark.createDataFrame(
-                    [],
-                    "bits binary, num_bits long, num_hashes int, "
-                    "hash_scheme int",
-                )
-            ),
-            defaults={"hash_scheme": "int"},
-        )
-        threshold = (
-            args.threshold
-            if args.threshold is not None
-            else {"exact": 0.0, "minhash": 0.8, "embedding": 0.95,
-                  "bloom": 0.0}[args.mode]
-        )
-        if args.mode == "exact":
-            novel, delta = inc.incremental_exact_dedup(
-                batch, index, args.text_column, args.id_column
-            )
-        elif args.mode == "bloom":
-            import numpy as np
-
-            rows = index.collect()  # one bitmap row per committed batch
-            if rows:
-                try:
-                    inc.check_bloom_hash_scheme(
-                        rows, args.index_dir, args.assume_hash_scheme
-                    )
-                except ValueError as e:
-                    p.error(str(e))
-                num_bits = int(rows[0]["num_bits"])
-                n_hashes = int(rows[0]["num_hashes"])
-                if any(
-                    int(r["num_bits"]) != num_bits
-                    or int(r["num_hashes"]) != n_hashes
-                    for r in rows
-                ):
-                    p.error(
-                        "bloom index mixes filter geometries — deltas "
-                        "disagree on num_bits/num_hashes; screen a new "
-                        "geometry into a fresh --index-dir"
-                    )
-                bits = np.zeros(num_bits // 64, dtype=np.uint64)
-                for r in rows:
-                    bits |= np.frombuffer(bytes(r["bits"]), dtype=np.uint64)
-                # geometry is a property of the INDEX, pinned by the
-                # first batch — sizing flags on a later batch cannot
-                # resize a live filter, and silently ignoring them lets
-                # an operator believe an undersized filter was grown
-                # (it keeps screening at a higher-than-priced fp rate).
-                # Warn loudly with the inherited geometry; resizing
-                # means rebuilding into a fresh --index-dir.
-                if args.bloom_capacity is not None:
-                    want_bits, want_k = inc.bloom_params(
-                        args.bloom_capacity, args.bloom_fpp
-                    )
-                    if (want_bits, want_k) != (num_bits, n_hashes):
-                        print(
-                            json.dumps(
-                                {
-                                    "Warning": "bloom geometry flags "
-                                    "ignored: the filter keeps its "
-                                    "first-batch geometry; to resize, "
-                                    "rebuild into a fresh --index-dir",
-                                    "InheritedNumBits": num_bits,
-                                    "InheritedNumHashes": n_hashes,
-                                    "RequestedNumBits": want_bits,
-                                    "RequestedNumHashes": want_k,
-                                }
-                            ),
-                            file=sys.stderr,
-                        )
-            else:
-                if args.bloom_capacity is None:
-                    p.error(
-                        "--mode bloom requires --bloom-capacity on the "
-                        "first batch (the filter's fixed memory is sized "
-                        "from it)"
-                    )
-                num_bits, n_hashes = inc.bloom_params(
-                    args.bloom_capacity, args.bloom_fpp
-                )
-                bits = np.zeros(num_bits // 64, dtype=np.uint64)
-            novel, delta_bits = inc.incremental_bloom_dedup(
-                batch, bits, n_hashes, args.text_column, args.id_column
-            )
-            delta = eng.spark.createDataFrame(
-                [
-                    (
-                        bytearray(delta_bits.tobytes()),
-                        num_bits,
-                        n_hashes,
-                        inc.BLOOM_HASH_SCHEME,
-                    )
-                ],
-                "bits binary, num_bits long, num_hashes int, "
-                "hash_scheme int",
-            )
-        elif args.mode == "minhash":
-            novel, delta = inc.incremental_minhash_dedup(
-                batch,
-                index,
-                args.text_column,
-                args.id_column,
-                threshold=threshold,
-            )
-        else:
-            novel, delta = inc.incremental_embedding_dedup(
-                batch,
-                index,
-                args.dim,
-                threshold=threshold,
-                bits=args.bits,
-                n_tables=args.tables,
-                seed=args.lsh_seed,
-                emb_col=args.embedding_column,
-                id_col=args.id_column,
-            )
-        novel.write.mode("overwrite").parquet(
-            f"{args.novel_out}/batch={digest}"
-        )
-        delta.write.mode("overwrite").parquet(
-            f"{args.index_dir}/batch={digest}"
-        )
-        # batch-scoped counters only: cumulative lake counts would
-        # re-scan the whole corpus history just to print a log line
-        _emit(
-            {
-                "Mode": args.mode,
-                "Batch": digest,
-                "BatchRows": batch.count(),
-                "NovelRows": eng.spark.read.parquet(
-                    f"{args.novel_out}/batch={digest}"
-                ).count(),
-                "IndexRowsAdded": eng.spark.read.parquet(
-                    f"{args.index_dir}/batch={digest}"
-                ).count(),
-            }
-        )
+        except InputRefused as e:
+            _warn(e.warnings)
+            p.error(str(e))
+        _warn(warnings)
+        _emit(report)
     elif args.cmd == "compact-index":
         from .operators.incremental import compact_index
 
         _emit(compact_index(eng.spark, args.index_dir))
     elif args.cmd == "curate":
-        from pyspark.sql import functions as F
+        from .curation import curate
 
-        from .operators import dedup as dedup_ops
-        from .operators import text as text_ops
-
-        df = eng.spark.read.parquet(args.input)
-        tcol, icol = args.text_column, args.id_column
-
-        def _barrier(d):
-            # Lazy localCheckpoint after every mutating stage (round
-            # 17): each stage's report count is an action, and without
-            # a barrier stage k's count re-executes stages 1..k-1 —
-            # O(stages x corpus) scans, with the expensive map-side
-            # text rewrites (c4 regex chains, the ExactSubstr verify,
-            # BPE pandas_udf) recomputed every time (shuffle-file
-            # reuse only shields the exchanges). The barrier
-            # materializes each stage ONCE at its own count and later
-            # stages read the checkpoint — the same pruned-barrier
-            # shape the catalog curation pipelines bench at the sf10
-            # lane. eager=False so a stage that is never counted (or
-            # a chain that fails validation) costs nothing.
-            return d.localCheckpoint(eager=False)
-
-        report: dict = {"InputRows": df.count(), "Steps": curate_steps}
-        # Non-NULL id contract, enforced up front: the rewrite steps
-        # (paragraph-dedup, decontaminate) rejoin rewritten text on the
-        # id column, and an equi-join drops NULL keys — silently, even
-        # though the underlying operators preserve NULL-id rows. A
-        # null-SAFE rejoin is no fix either (two NULL-id rows would
-        # cross-match). Fail loudly with the count instead of losing
-        # rows; the caller assigns surrogate ids and reruns.
-        # url-screen is in the set too: dedup_by_url keys its survivor
-        # semi-join on (url_norm, id), so a NULL id would drop the row
-        rejoin_steps = {
-            "url-screen", "c4-clean", "paragraph-dedup", "exact-substr",
-            "decontaminate",
-        } & set(curate_steps)
-        if rejoin_steps:
-            n_null_ids = df.where(F.col(icol).isNull()).count()
-            report["NullIdRows"] = n_null_ids
-            if n_null_ids:
-                raise SystemExit(
-                    f"curate: {n_null_ids} input rows have NULL "
-                    f"{icol!r}; steps {sorted(rejoin_steps)} rejoin "
-                    "rewritten text on that column and would silently "
-                    "drop them — assign non-NULL ids and rerun"
-                )
-        if "url-screen" in curate_steps:
-            from .operators import urls as url_ops
-
-            ucol = args.url_column
-            if ucol not in df.columns:
-                raise SystemExit(
-                    f"curate: url-screen needs column {ucol!r} "
-                    f"(have {df.columns}); pass --url-column"
-                )
-            n_before = report["InputRows"]
-            if args.blocklist_file:
-                with open(args.blocklist_file, encoding="utf-8") as f:
-                    entries = [
-                        ln.strip()
-                        for ln in f
-                        if ln.strip() and not ln.lstrip().startswith("#")
-                    ]
-                df = _barrier(url_ops.filter_blocked_domains(
-                    df, entries, url_col=ucol, id_col=icol
-                ))
-                n_after_block = df.count()
-                report["UrlBlocked"] = n_before - n_after_block
-                n_before = n_after_block
-            df = _barrier(url_ops.dedup_by_url(
-                df, url_col=ucol, id_col=icol
-            ).drop("url_norm"))
-            n_url = df.count()
-            report["UrlDupRows"] = n_before - n_url
-            report["UrlSurvivors"] = n_url
-        if "c4-clean" in curate_steps:
-            badwords = None
-            if args.badwords_file:
-                with open(args.badwords_file, encoding="utf-8") as f:
-                    badwords = [
-                        ln.strip()
-                        for ln in f
-                        if ln.strip() and not ln.lstrip().startswith("#")
-                    ]
-            c4 = _barrier(text_ops.c4_clean(
-                df, text_col=tcol, id_col=icol,
-                min_words=args.c4_min_words,
-                min_sentences=args.c4_min_sentences,
-                badwords=badwords,
-            ))
-            n_before = df.count()
-            stats = c4.agg(
-                F.sum("n_lines").alias("nl"),
-                F.sum("kept_lines").alias("kl"),
-                F.sum(F.col("kept").cast("long")).alias("k"),
-            ).collect()[0]
-            report["C4LinesDropped"] = int(
-                (stats["nl"] or 0) - (stats["kl"] or 0)
+        try:
+            report = curate(
+                eng.spark.read.parquet(args.input), curate_steps, args.out,
+                text_col=args.text_column, id_col=args.id_column,
+                url_col=args.url_column, blocklist=blocklist,
+                c4_min_words=args.c4_min_words,
+                c4_min_sentences=args.c4_min_sentences, badwords=badwords,
+                benchmark=args.benchmark, ngram=args.ngram,
+                decon_mode=args.decon_mode, paragraph_sep=args.paragraph_sep,
+                substr_min_tokens=args.substr_min_tokens,
+                substr_mode=args.substr_mode,
+                substr_tokenizer=args.substr_tokenizer, substr_merges=merges,
+                audit_out=args.audit_out, audit_k=args.audit_k,
+                gopher_rules=gopher_rules, clf_model=model,
+                clf_target_filter=args.clf_target_filter,
+                clf_model_out=args.clf_model_out,
+                clf_train_sample=args.clf_train_sample,
+                clf_iters=args.clf_iters, pareto_alpha=args.pareto_alpha,
+                dsir_target=args.dsir_target,
+                dsir_target_filter=args.dsir_target_filter,
+                dsir_k=args.dsir_k, buckets=args.buckets, hash_fn=args.hash,
+                split_ratios=curate_ratios, salt=args.salt,
             )
-            report["C4PagesDropped"] = n_before - int(stats["k"] or 0)
-            report["C4Survivors"] = int(stats["k"] or 0)
-            df = _barrier(df.drop(tcol).join(
-                c4.where(F.col("kept")).select(icol, tcol), icol
-            ))
-        if "paragraph-dedup" in curate_steps:
-            pd_out = _barrier(dedup_ops.remove_duplicated_paragraphs(
-                df, sep=args.paragraph_sep, text_col=tcol, id_col=icol
-            ))
-            report["ParagraphsRemoved"] = int(
-                pd_out.agg(F.sum("removed_paragraphs")).collect()[0][0]
-                or 0
-            )
-            df = _barrier(
-                df.drop(tcol).join(pd_out.select(icol, tcol), icol)
-            )
-        if "exact-dedup" in curate_steps:
-            df = _barrier(
-                dedup_ops.exact_dedup(df, text_col=tcol, id_col=icol)
-            )
-            report["ExactSurvivors"] = df.count()
-        substr_merges = None
-        if args.substr_tokenizer == "bpe":
-            from .operators.text import load_merges as _load_merges
-
-            substr_merges = (
-                _load_merges(args.substr_merges)
-                if args.substr_merges
-                else []
-            )
-        if args.audit_out:
-            # the audit runs HERE — on exactly the relation the
-            # exact-substr step is about to see (post upstream dedup),
-            # at the same min_tokens operating point AND token unit —
-            # so the recorded table is the one the cut acted on, not a
-            # pre-dedup view whose counts the earlier steps already
-            # changed
-            audit = dedup_ops.top_repeated_substrings(
-                df, min_tokens=args.substr_min_tokens, k=args.audit_k,
-                text_col=tcol, id_col=icol,
-                tokenizer=args.substr_tokenizer, merges=substr_merges,
-            )
-            audit.write.mode("error").parquet(args.audit_out)
-            arows = eng.spark.read.parquet(args.audit_out).collect()
-            report["AuditOut"] = args.audit_out
-            report["AuditRows"] = len(arows)
-            if arows:
-                top = max(
-                    arows,
-                    key=lambda r: (r["n_occurrences"], r["substring"]),
-                )
-                report["AuditTopRepeat"] = {
-                    "n_occurrences": int(top["n_occurrences"]),
-                    "n_docs": int(top["n_docs"]),
-                    "substring": top["substring"][:120],
-                }
-        if "exact-substr" in curate_steps:
-            xs = _barrier(dedup_ops.dedup_exact_substrings(
-                df, min_tokens=args.substr_min_tokens, text_col=tcol,
-                id_col=icol, mode=args.substr_mode,
-                tokenizer=args.substr_tokenizer, merges=substr_merges,
-            ))
-            report["SubstrTokensRemoved"] = int(
-                xs.agg(F.sum("removed_tokens")).collect()[0][0] or 0
-            )
-            df = _barrier(
-                df.drop(tcol).join(xs.select(icol, tcol), icol)
-            )
-        if "decontaminate" in curate_steps:
-            bench = eng.spark.read.parquet(args.benchmark)
-            dc = _barrier(dedup_ops.decontaminate_spans(
-                df, bench, n=args.ngram, text_col=tcol, id_col=icol,
-                mode=args.decon_mode,
-            ))
-            report["ContaminatedTokensRemoved"] = int(
-                dc.agg(F.sum("removed_tokens")).collect()[0][0] or 0
-            )
-            df = _barrier(
-                df.drop(tcol).join(dc.select(icol, tcol), icol)
-            )
-        if "gopher" in curate_steps:
-            flagged = text_ops.gopher_quality_flags(df, text_col=tcol)
-            cond = None
-            for rule in gopher_rules:
-                c = F.col(f"ok_{rule}")
-                cond = c if cond is None else (cond & c)
-            df = _barrier(flagged.where(cond).select(*df.columns))
-            report["GopherSurvivors"] = df.count()
-        if "classifier" in curate_steps:
-            # the GPT-3 selection story (Brown et al. 2020, App. A) as
-            # a chain step: rule filtering (gopher) upstream, then the
-            # trained-quality Pareto keep rule over the survivors —
-            # training (when inline) sees the CURATED pool, the same
-            # relation the filter acts on. Scoring + the Pareto draw
-            # are map-only over a broadcast <= --buckets-row model; the
-            # one corpus-sized join is the id semi-join back to df.
-            if args.clf_model_in:
-                with open(args.clf_model_in) as fh:
-                    clf_model = json.load(fh)
-            else:
-                labeled = df.withColumn(
-                    "_y",
-                    F.coalesce(
-                        F.expr(args.clf_target_filter).cast("int"),
-                        F.lit(0),
-                    ),
-                )
-                n_pool = df.count()
-                if args.clf_train_sample and n_pool > args.clf_train_sample:
-                    frac = args.clf_train_sample / n_pool
-                    bound = format(
-                        min(int(frac * 2**32), 2**32 - 1), "08x"
-                    )
-                    labeled = labeled.where(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.col(icol).cast("string"),
-                                    F.lit("|train-sample"),
-                                )
-                            ),
-                            1,
-                            8,
-                        )
-                        < bound
-                    )
-                clf_model = text_ops.train_quality_classifier(
-                    labeled,
-                    "_y",
-                    n_buckets=args.buckets,
-                    iters=args.clf_iters,
-                    text_col=tcol,
-                    id_col=icol,
-                    hash_fn=args.hash,
-                )
-            if args.clf_model_out:
-                tmp_model = args.clf_model_out + ".tmp"
-                with open(tmp_model, "w") as fh:
-                    json.dump(clf_model, fh)
-                os.replace(tmp_model, args.clf_model_out)
-                report["ClassifierModelOut"] = args.clf_model_out
-            clf_kept = text_ops.pareto_quality_filter(
-                df,
-                clf_model,
-                alpha=args.pareto_alpha,
-                salt=args.salt,
-                text_col=tcol,
-                id_col=icol,
-            )
-            df = _barrier(df.join(clf_kept.select(icol), icol))
-            report["ClassifierSurvivors"] = df.count()
-        if "dsir" in curate_steps:
-            # DSIR importance resampling (Xie et al. 2023) as the
-            # final selection cut: hashed-n-gram importance weights
-            # against the target distribution, Gumbel-top-k draw —
-            # deterministic under --salt. The target can be a separate
-            # corpus (--dsir-target) or a predicate slice of the
-            # curated pool itself (--dsir-target-filter).
-            # predicate-slice targets take the one-pass path (the pool
-            # gram stream carries the membership bit instead of
-            # recomputing the chain for the target side)
-            picks = text_ops.dsir_select(
-                df,
-                eng.spark.read.parquet(args.dsir_target)
-                if args.dsir_target
-                else None,
-                args.dsir_k,
-                salt=args.salt,
-                n_buckets=args.buckets,
-                hash_fn=args.hash,
-                text_col=tcol,
-                id_col=icol,
-                target_predicate=None
-                if args.dsir_target
-                else F.expr(args.dsir_target_filter),
-            )
-            df = _barrier(df.join(picks.select(icol), icol))
-            report["DsirSelected"] = df.count()
-        if "split" in curate_steps:
-            df = text_ops.deterministic_split(
-                df, key_col=icol, ratios=curate_ratios, salt=args.salt
-            )
-        df.write.mode("error").parquet(args.out)
-        out_df = eng.spark.read.parquet(args.out)
-        report["OutputRows"] = out_df.count()
-        if "split" in curate_steps:
-            report["SplitCounts"] = {
-                r["split"]: r["count"]
-                for r in out_df.groupBy("split").count().collect()
-            }
-        report["Out"] = args.out
+        except InputRefused as e:
+            raise SystemExit(str(e)) from None
         _emit(report)
-
     elif args.cmd == "select-data":
-        from pyspark.sql import functions as F
+        from .curation import select_data
 
-        from .operators import text as text_ops
-
-        df = eng.spark.read.parquet(args.input)
-        n_in = df.count()
-        if args.method == "gopher":
-            flagged = text_ops.gopher_quality_flags(
-                df, text_col=args.text_column
-            )
-            cond = None
-            for rule in gopher_rules:
-                c = F.col(f"ok_{rule}")
-                cond = c if cond is None else (cond & c)
-            selected = flagged.where(cond)
-        elif args.method == "temperature":
-            selected = text_ops.temperature_mixture(
-                df,
-                alpha=args.alpha,
-                target_total=args.target_total,
-                stratum_col=args.stratum_column,
-                key_col=args.id_column,
-                salt=args.salt,
-                max_rate=args.max_rate,
-            )
-        elif args.method == "prototypes":
-            from .operators import similarity as sim_ops
-
-            cent = sim_ops.train_ivf_centroids(
-                df, n_centroids=args.clusters, emb_col=args.emb_column
-            )
-            kept = sim_ops.prune_prototypes(
-                df,
-                cent,
-                args.keep_frac,
-                mode=args.prune_mode,
-                emb_col=args.emb_column,
-                id_col=args.id_column,
-            )
-            selected = df.join(
-                kept.select(args.id_column, "ivf_cell", "proto_sim"),
-                args.id_column,
-            )
-        elif args.method == "dsir":
-            # predicate-slice targets take the one-pass path (see the
-            # curate dsir step)
-            picks = text_ops.dsir_select(
-                df,
-                eng.spark.read.parquet(args.target)
-                if args.target
-                else None,
-                args.k,
-                salt=args.salt,
-                n_buckets=args.buckets,
-                hash_fn=args.hash,
-                text_col=args.text_column,
-                id_col=args.id_column,
-                target_predicate=None
-                if args.target
-                else F.expr(args.target_filter),
-            )
-            # carry the original columns alongside the scores
-            selected = df.join(
-                picks.select(args.id_column, "log_w", "score"),
-                args.id_column,
-            )
-        else:  # classifier
-            if args.model_in:
-                with open(args.model_in) as fh:
-                    model = json.load(fh)
-            else:
-                labeled = df.withColumn(
-                    "_y",
-                    F.coalesce(
-                        F.expr(args.target_filter).cast("int"), F.lit(0)
-                    ),
-                )
-                # honor the operator's "train on a bounded sample,
-                # score the lake" contract in the packaged path: cap
-                # the training set with a deterministic hash-threshold
-                # filter (map-only, the deterministic_split convention
-                # — no sort, no single-task bottleneck; ~cap docs kept)
-                if args.train_sample and n_in > args.train_sample:
-                    frac = args.train_sample / n_in
-                    bound = format(
-                        min(int(frac * 2**32), 2**32 - 1), "08x"
-                    )
-                    labeled = labeled.where(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.col(args.id_column).cast("string"),
-                                    F.lit("|train-sample"),
-                                )
-                            ),
-                            1,
-                            8,
-                        )
-                        < bound
-                    )
-                model = text_ops.train_quality_classifier(
-                    labeled,
-                    "_y",
-                    n_buckets=args.buckets,
-                    iters=args.iters,
-                    text_col=args.text_column,
-                    id_col=args.id_column,
-                    hash_fn=args.hash,
-                )
-            if args.model_out:
-                tmp_model = args.model_out + ".tmp"
-                with open(tmp_model, "w") as fh:
-                    json.dump(model, fh)
-                os.replace(tmp_model, args.model_out)
-            kept = text_ops.pareto_quality_filter(
-                df,
-                model,
-                alpha=args.pareto_alpha,
-                salt=args.salt,
-                text_col=args.text_column,
-                id_col=args.id_column,
-            )
-            selected = df.join(kept, args.id_column)
-        selected.write.mode("error").parquet(args.out)
-        n_out = eng.spark.read.parquet(args.out).count()
-        _emit(
-            {
-                "Method": args.method,
-                "InputRows": n_in,
-                "SelectedRows": n_out,
-                "Out": args.out,
-            }
-        )
+        _emit(select_data(
+            eng.spark.read.parquet(args.input), args.method, args.out,
+            target_filter=args.target_filter, target=args.target, k=args.k,
+            salt=args.salt, buckets=args.buckets, hash_fn=args.hash,
+            rules=gopher_rules, pareto_alpha=args.pareto_alpha,
+            iters=args.iters, model=model, model_out=args.model_out,
+            train_sample=args.train_sample, text_col=args.text_column,
+            id_col=args.id_column, emb_col=args.emb_column,
+            keep_frac=args.keep_frac, clusters=args.clusters,
+            prune_mode=args.prune_mode, alpha=args.alpha,
+            target_total=args.target_total, stratum_col=args.stratum_column,
+            max_rate=args.max_rate,
+        ))
     elif args.cmd == "zorder":
         import glob
 

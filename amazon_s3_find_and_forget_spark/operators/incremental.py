@@ -26,9 +26,13 @@ batch-agreement tests).
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import InputRefused
 from .dedup import (
     _eager,
     banded_signatures,
@@ -74,7 +78,7 @@ def read_index_or_empty(
     Any OTHER read failure (corrupt footer on committed data,
     permissions) propagates so the caller's retry machinery re-runs the
     batch — substituting an empty index there would silently re-admit
-    every previously-seen document. The CLI ``dedup-screen`` reads its
+    every previously-seen document. ``screen_batch`` reads its
     index through here so this classification (whose error text has
     already changed across Spark versions, hence multiple markers)
     lives in one place.
@@ -370,14 +374,14 @@ def check_bloom_hash_scheme(rows, where: str, assume: int | None = None):
     """Adjudicate the ``hash_scheme`` stamps of collected Bloom delta
     rows before ORing them into a probe bitmap. ``assume`` resolves
     NULL (pre-stamp) rows to a declared scheme; stamped rows are never
-    overridden. Raises ``ValueError`` when any row's resolved scheme
+    overridden. Raises ``InputRefused`` when any row's resolved scheme
     differs from ``BLOOM_HASH_SCHEME`` (or stays unknown)."""
     schemes = set()
     for r in rows:
         v = r["hash_scheme"] if "hash_scheme" in r.__fields__ else None
         schemes.add(int(v) if v is not None else assume)
     if None in schemes:
-        raise ValueError(
+        raise InputRefused(
             f"bloom index at {where} has delta rows written before "
             "hash-scheme stamping (round 16 or earlier); the h2 hash "
             "changed in round 16, so probing an old bitmap with the "
@@ -389,7 +393,7 @@ def check_bloom_hash_scheme(rows, where: str, assume: int | None = None):
         )
     stale = sorted(schemes - {BLOOM_HASH_SCHEME})
     if stale:
-        raise ValueError(
+        raise InputRefused(
             f"bloom index at {where} was written under hash scheme(s) "
             f"{stale} but this build probes with scheme "
             f"{BLOOM_HASH_SCHEME}; the bitmaps are incompatible — "
@@ -765,7 +769,7 @@ def incremental_embedding_dedup(
 
 # --- index compaction (protocol-aware) -----------------------------------
 #
-# The ``dedup-screen`` idempotent-retry protocol writes one delta
+# The ``screen_batch`` idempotent-retry protocol writes one delta
 # directory per batch (``batch=<digest>``) and re-reads every prior delta
 # on every screen: at a cadence of minutes, a year of batches is ~500k
 # partition directories, and the file-LISTING cost grows linearly with
@@ -822,8 +826,6 @@ def _batch_dirs(spark, index_dir: str) -> dict[str, str]:
     Raises ``ValueError`` on ``batch_id=<int>`` partitions — the layout
     of the removed structured-streaming screens, which nothing reads —
     rather than report such an index as empty."""
-    import re
-
     names = _list_dirs(spark, index_dir)
     if any(re.fullmatch(r"batch_id=-?\d+", n) for n in names):
         raise ValueError(
@@ -971,8 +973,6 @@ def compact_index(spark, index_dir: str) -> dict:
     Returns ``{"BasePath", "BaseRows", "FoldedDirs", "RemovedDirs"}``
     (all-zero no-op when there is nothing to fold).
     """
-    import hashlib
-
     fold = _batch_dirs(spark, index_dir)
     noop = {"BasePath": None, "BaseRows": 0, "FoldedDirs": 0, "RemovedDirs": 0}
     if not fold:
@@ -1047,3 +1047,199 @@ def compact_index(spark, index_dir: str) -> dict:
         "FoldedDirs": len(sources),
         "RemovedDirs": removed,
     }
+
+
+def check_batch_id(batch_id: str) -> None:
+    """Refuse (``InputRefused``) an explicit batch id that cannot name
+    its own partitions. The id becomes ``batch=<id>`` directories and is
+    string-compared against Spark's URL-decoded partition value: '/'
+    nests directories, '%' round-trips decoded ('a%2Fb' reads back as
+    'a/b' and stops excluding the batch's own delta), '=' breaks
+    partition parsing, and ``base-`` names compaction bases."""
+    if not re.fullmatch(r"[A-Za-z0-9._-]{1,64}", batch_id):
+        raise InputRefused(
+            "--batch-id must be 1-64 chars of [A-Za-z0-9._-]: it names a "
+            "batch=<id> partition directory and must round-trip Spark's "
+            "partition-value decoding verbatim"
+        )
+    if batch_id.startswith("base-"):
+        raise InputRefused(
+            "--batch-id must not start with 'base-': that prefix names "
+            "compaction base partitions, and a batch id colliding with one "
+            "would self-exclude the folded index (compact-index) and "
+            "re-admit every indexed document"
+        )
+
+
+_BLOOM_DELTA = "bits binary, num_bits long, num_hashes int, hash_scheme int"
+
+
+def screen_batch(
+    spark, input_path: str, index_dir: str, novel_out: str,
+    mode: str = "exact", *, text_col: str = "text", id_col: str = "doc_id",
+    threshold: float | None = None, emb_col: str = "embedding",
+    dim: int | None = None, bits: int = 10, tables: int = 8,
+    lsh_seed: int = 42, bloom_capacity: int | None = None,
+    bloom_fpp: float = 0.01, assume_hash_scheme: int | None = None,
+    batch_id: str | None = None,
+) -> tuple[dict, list[dict]]:
+    """Screen the parquet batch at ``input_path`` against the index in
+    ``index_dir`` (``mode``: exact, minhash, embedding or bloom). The
+    novel rows go to ``novel_out/batch=<id>`` and the index delta to
+    ``index_dir/batch=<id>``, both overwritten. Returns the batch-scoped
+    report (lake-wide counts would re-scan the history) and warnings.
+
+    ``<id>`` is ``batch_id`` (see ``check_batch_id``), or else a digest
+    of the resolved input path plus its file listing
+    (``input_fingerprint``). Screening excludes the batch's own
+    partition, so a retry after a mid-write failure overwrites instead
+    of appending duplicates, and new data at a reused path gets a new
+    identity instead of overwriting the earlier delta. Partitions
+    without ``_SUCCESS`` never screen: a crashed run's half-written
+    delta would drop this batch's documents as seen.
+
+    A bloom index's geometry is pinned by its first batch, which must
+    give ``bloom_capacity``; later sizing arguments that disagree are
+    ignored with a warning. Raises ``InputRefused`` for a batch already
+    folded into a compaction base (its rows now live in the base and
+    would all self-match), a bloom index of mixed geometry or of
+    another hash scheme, and a first bloom batch without capacity.
+    """
+    import numpy as np
+
+    warnings: list[dict] = []
+
+    def refuse(msg: str):
+        raise InputRefused(msg, warnings)
+
+    batch = spark.read.parquet(input_path)
+    if batch_id is not None:
+        check_batch_id(batch_id)
+        digest = batch_id
+    else:
+        real, entries = input_fingerprint(spark, input_path)
+        digest = hashlib.md5(
+            "\n".join([real] + entries).encode()
+        ).hexdigest()[:16]
+    if digest in folded_batch_digests(spark, index_dir):
+        refuse(
+            f"batch {digest} was already screened and folded into a "
+            "compaction base of this index; re-running it would self-match "
+            "every row and overwrite its novel output with an empty "
+            "partition. If you intend to re-screen this data as a NEW "
+            "batch, pass a fresh --batch-id."
+        )
+    partials = [
+        n[len("batch="):]
+        for n in _list_dirs(spark, index_dir)
+        if n.startswith("batch=")
+        and not _has_success(spark, f"{index_dir}/{n}")
+    ]
+    keep = F.col("batch") != digest
+    if partials:
+        warnings.append({
+            "Warning": "uncommitted batch partitions "
+            "excluded from the screen (crashed run?)",
+            "Partitions": sorted(partials),
+        })
+        keep = keep & ~F.col("batch").isin(partials)
+
+    def empty_index():
+        if mode == "exact":
+            return exact_index(batch.limit(0), text_col, id_col)
+        if mode == "minhash":
+            return minhash_index(batch.limit(0), text_col, id_col)
+        if mode == "embedding":
+            return embedding_index(
+                batch.limit(0), dim, bits, tables,
+                emb_col=emb_col, id_col=id_col, seed=lsh_seed,
+            )
+        return spark.createDataFrame([], _BLOOM_DELTA)
+
+    index = read_index_or_empty(
+        spark, index_dir, keep,
+        {
+            "exact": ["content_hash", id_col],
+            "minhash": ["_id", "_sig"],
+            "embedding": ["_id", "_u", "_k"],
+            # one bitmap row per batch, ORed on read, so compaction's
+            # row-concatenating fold is already correct for it
+            "bloom": ["bits", "num_bits", "num_hashes", "hash_scheme"],
+        }[mode],
+        empty_index, defaults={"hash_scheme": "int"},
+    )
+    if threshold is None:
+        threshold = {"minhash": 0.8, "embedding": 0.95}.get(mode, 0.0)
+    if mode == "exact":
+        novel, delta = incremental_exact_dedup(batch, index, text_col, id_col)
+    elif mode == "bloom":
+        rows = index.collect()  # one bitmap row per committed batch
+        if rows:
+            try:
+                check_bloom_hash_scheme(rows, index_dir, assume_hash_scheme)
+            except InputRefused as e:
+                refuse(str(e))
+            num_bits = int(rows[0]["num_bits"])
+            n_hashes = int(rows[0]["num_hashes"])
+            if any(
+                int(r["num_bits"]) != num_bits
+                or int(r["num_hashes"]) != n_hashes
+                for r in rows
+            ):
+                refuse(
+                    "bloom index mixes filter geometries — deltas disagree "
+                    "on num_bits/num_hashes; screen a new geometry into a "
+                    "fresh --index-dir"
+                )
+            bloom = np.zeros(num_bits // 64, dtype=np.uint64)
+            for r in rows:
+                bloom |= np.frombuffer(bytes(r["bits"]), dtype=np.uint64)
+            if bloom_capacity is not None:
+                want = bloom_params(bloom_capacity, bloom_fpp)
+                if want != (num_bits, n_hashes):
+                    warnings.append({
+                        "Warning": "bloom geometry flags ignored: the "
+                        "filter keeps its first-batch geometry; to "
+                        "resize, rebuild into a fresh --index-dir",
+                        "InheritedNumBits": num_bits,
+                        "InheritedNumHashes": n_hashes,
+                        "RequestedNumBits": want[0],
+                        "RequestedNumHashes": want[1],
+                    })
+        else:
+            if bloom_capacity is None:
+                refuse(
+                    "--mode bloom requires --bloom-capacity on the first "
+                    "batch (the filter's fixed memory is sized from it)"
+                )
+            num_bits, n_hashes = bloom_params(bloom_capacity, bloom_fpp)
+            bloom = np.zeros(num_bits // 64, dtype=np.uint64)
+        novel, delta_bits = incremental_bloom_dedup(
+            batch, bloom, n_hashes, text_col, id_col
+        )
+        delta = spark.createDataFrame(
+            [(bytearray(delta_bits.tobytes()), num_bits, n_hashes,
+              BLOOM_HASH_SCHEME)],
+            _BLOOM_DELTA,
+        )
+    elif mode == "minhash":
+        novel, delta = incremental_minhash_dedup(
+            batch, index, text_col, id_col, threshold=threshold
+        )
+    else:
+        novel, delta = incremental_embedding_dedup(
+            batch, index, dim, threshold=threshold, bits=bits,
+            n_tables=tables, seed=lsh_seed, emb_col=emb_col, id_col=id_col,
+        )
+    novel_dir = f"{novel_out}/batch={digest}"
+    delta_dir = f"{index_dir}/batch={digest}"
+    novel.write.mode("overwrite").parquet(novel_dir)
+    delta.write.mode("overwrite").parquet(delta_dir)
+    report = {
+        "Mode": mode,
+        "Batch": digest,
+        "BatchRows": batch.count(),
+        "NovelRows": spark.read.parquet(novel_dir).count(),
+        "IndexRowsAdded": spark.read.parquet(delta_dir).count(),
+    }
+    return report, warnings

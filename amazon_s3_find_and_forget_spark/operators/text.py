@@ -23,8 +23,9 @@ Operators:
 - ``mixture_sample``       per-source rate mixing w/ deterministic epochs
 - ``dsir_importance_weights`` / ``dsir_select``  DSIR hashed-n-gram
   importance weighting + Gumbel-top-k resampling (Xie et al. 2023)
-- ``gopher_quality_flags``  Gopher/MassiveWeb rule filters (Rae et al.
-  2021) as per-rule booleans + the conjunction
+- ``gopher_quality_flags`` / ``gopher_filter``  Gopher/MassiveWeb rule
+  filters (Rae et al. 2021) as per-rule booleans + the conjunction, and
+  the rows passing a chosen rule subset
 - ``train_quality_classifier`` / ``score_quality_classifier`` /
   ``pareto_quality_filter`` / ``binary_auc``  GPT-3-style quality
   classifier (Brown et al. 2020 App. A): NB log-odds features,
@@ -32,6 +33,8 @@ Operators:
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -51,6 +54,12 @@ STOPWORDS_EN = LANG_MARKERS["en"]
 # Gopher's rule-E stop set (Rae et al. 2021, Appendix A1.1): a document
 # must contain at least two of these to pass the stop-word screen.
 GOPHER_STOP_WORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
+
+# The per-rule flags of ``gopher_quality_flags`` (``ok_<rule>``), in order.
+GOPHER_RULES = (
+    "word_count", "mean_word_len", "symbol_ratio", "alpha_words",
+    "stop_words",
+)
 
 
 def tokens(col: Column) -> Column:
@@ -317,6 +326,34 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("fingerprint", F.md5(normalized))
 
 
+def hash_draw(key_col: str, salt: str = "") -> Column:
+    """A uniform 32-bit draw per row, a pure function of (key, salt):
+    the first 8 hex chars of ``md5(key || salt)``. Fixed-width hex
+    compares lexicographically as it does numerically, so
+    ``hash_draw(k) < hash_threshold(frac)`` keeps a ``frac`` share of
+    the keys, map-only and identically on every engine."""
+    return F.substring(
+        F.md5(F.concat(F.col(key_col).cast("string"), F.lit(salt))), 1, 8
+    )
+
+
+def hash_uniform(key_col: str, salt: str = "") -> Column:
+    """``hash_draw`` as a double in (0, 1), never 0 or 1 by the half
+    offset: ``(int(draw, 16) + 0.5) / 2^32``."""
+    return (
+        F.conv(hash_draw(key_col, salt), 16, 10).cast("double") + F.lit(0.5)
+    ) / F.lit(float(2**32))
+
+
+def hash_threshold(frac: float) -> str:
+    """The ``hash_draw`` bound below which a ``frac`` share of keys
+    fall. ``ValueError`` outside [0, 1]: a negative fraction would
+    format with a minus sign, which every draw compares above."""
+    if not 0 <= frac <= 1 + 1e-9:
+        raise ValueError(f"hash fraction {frac} must be in [0, 1]")
+    return format(min(int(frac * 2**32), 2**32 - 1), "08x")
+
+
 def deterministic_split(
     df: DataFrame,
     key_col: str = "doc_id",
@@ -337,16 +374,16 @@ def deterministic_split(
     no Python, trivially 100 TB-safe.
     """
     ratios = ratios or {"train": 0.9, "val": 0.05, "test": 0.05}
+    if any(not 0 <= r <= 1 for r in ratios.values()):
+        raise ValueError(f"split fractions must be in [0, 1]: {ratios}")
     assert abs(sum(ratios.values()) - 1.0) < 1e-9
-    h = F.substring(
-        F.md5(F.concat(F.col(key_col).cast("string"), F.lit(salt))), 1, 8
-    )
+    h = hash_draw(key_col, salt)
     names = list(ratios)
     cum = 0.0
     expr = None
     for name in names[:-1]:
         cum += ratios[name]
-        bound = format(min(int(cum * 2**32), 2**32 - 1), "08x")
+        bound = hash_threshold(cum)
         expr = (
             F.when(h < bound, name)
             if expr is None
@@ -1714,9 +1751,7 @@ def mixture_sample(
     """
     import math
 
-    h = F.substring(
-        F.md5(F.concat(F.col(key_col).cast("string"), F.lit(salt))), 1, 8
-    )
+    h = hash_draw(key_col, salt)
     rate_expr = None
     frac_expr = None
     for s, rate in rates.items():
@@ -1724,7 +1759,7 @@ def mixture_sample(
             raise ValueError(f"negative rate for stratum {s!r}")
         base = int(math.floor(rate))
         frac = rate - base
-        bound = format(min(int(frac * 2**32), 2**32 - 1), "08x")
+        bound = hash_threshold(frac)
         # NULL keys: the hash (and the comparison) is NULL — coalesce the
         # fractional draw to 0 so a NULL-key row contributes exactly its
         # floor(rate) copies on EVERY stratum (the SQL convention: NULL <
@@ -2117,23 +2152,7 @@ def dsir_select(
     if method == "topk":
         score = F.col("log_w")
     else:
-        u = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col(id_col).cast("string"),
-                            F.lit(f"|dsir|{salt}"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("double")
-            + F.lit(0.5)
-        ) / F.lit(float(2**32))
+        u = hash_uniform(id_col, f"|dsir|{salt}")
         score = F.col("log_w") + (-F.log(-F.log(u)))
     return (
         w.withColumn("score", F.round(score, 6))
@@ -2235,6 +2254,21 @@ def gopher_quality_flags(
             "gopher_pass", ok_wc & ok_mwl & ok_sym & ok_alpha & ok_stop
         )
     )
+
+
+def gopher_filter(
+    df: DataFrame, rules: Sequence[str], text_col: str = "text"
+) -> DataFrame:
+    """The rows of ``gopher_quality_flags(df)`` that pass every named
+    rule (``GOPHER_RULES`` names them), flag columns included.
+    ``ValueError`` on an empty or unknown rule list."""
+    bad = sorted(set(rules) - set(GOPHER_RULES))
+    if bad or not rules:
+        raise ValueError(f"bad Gopher rules: {bad or 'empty'}")
+    cond = F.col(f"ok_{rules[0]}")
+    for rule in rules[1:]:
+        cond = cond & F.col(f"ok_{rule}")
+    return gopher_quality_flags(df, text_col=text_col).where(cond)
 
 
 def train_quality_classifier(
@@ -2501,23 +2535,7 @@ def pareto_quality_filter(
         raise ValueError(f"alpha={alpha} must be > 0")
     if scored is None:
         scored = score_quality_classifier(df, model, text_col, id_col)
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col(id_col).cast("string"),
-                        F.lit(f"|pareto|{salt}"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(float(2**32))
+    u = hash_uniform(id_col, f"|pareto|{salt}")
     draw = F.pow(F.lit(1.0) - u, F.lit(-1.0 / float(alpha))) - F.lit(1.0)
     return scored.where(draw > (F.lit(1.0) - F.col("quality_prob")))
 

@@ -1,4 +1,9 @@
-"""End-to-end CLI driver test: the reference runbook, line by line."""
+"""End-to-end CLI driver test: the reference runbook, line by line.
+
+Each data command keeps one runbook test through argv (dedup-screen,
+compact-index, curate, select-data) plus its refusal tests; the other
+pipeline cases call the package functions the commands call
+(``screen_batch``, ``curate``, ``select_data``) directly."""
 
 import json
 import pytest
@@ -6,6 +11,12 @@ import os
 import shutil
 
 from amazon_s3_find_and_forget_spark.cli import main
+from amazon_s3_find_and_forget_spark.curation import curate, select_data
+from amazon_s3_find_and_forget_spark.operators import InputRefused
+from amazon_s3_find_and_forget_spark.operators.incremental import (
+    compact_index,
+    screen_batch,
+)
 
 
 def run(capsys, *argv):
@@ -13,6 +24,13 @@ def run(capsys, *argv):
     assert rc == 0
     out = capsys.readouterr().out
     return json.loads(out)
+
+
+def _screen(spark, *args, **kwargs):
+    """``screen_batch``'s report, for a screen that must not warn."""
+    report, warnings = screen_batch(spark, *args, **kwargs)
+    assert warnings == []
+    return report
 
 
 def test_cli_full_runbook(spark, tmp_path, sf_dir, capsys):
@@ -344,7 +362,11 @@ def test_cli_redact_runbook(spark, tmp_path, sf_dir, capsys):
 
 def test_cli_dedup_screen_runbook(spark, tmp_path, capsys):
     """Two dedup-screen invocations: the second batch screens against
-    the index the first one built (exact mode, append-only)."""
+    the index the first one built (exact mode, append-only). A re-run
+    overwrites its own partition, and a markerless partition left by a
+    crashed run is excluded with a JSON warning on stderr."""
+    from amazon_s3_find_and_forget_spark.operators import incremental as inc
+
     state = str(tmp_path / "state")
     base = ["--state-dir", state, "--cpus", "4"]
     b1 = str(tmp_path / "b1")
@@ -373,23 +395,32 @@ def test_cli_dedup_screen_runbook(spark, tmp_path, capsys):
     )
     assert kept == [1, 2, 11]
     # idempotent: re-running a batch overwrites its own partition —
-    # no duplicate novel rows, no index growth
-    r3 = run(capsys, *base, "dedup-screen", "--input", b2,
-             "--index-dir", index, "--novel-out", novel)
-    assert r3 == r2
+    # no duplicate novel rows, no index growth; a crashed run's
+    # markerless delta (holding gamma) does not screen it
+    partial = f"{index}/batch=deadbeef00000001"
+    inc.exact_index(spark.read.parquet(b2)).write.parquet(partial)
+    os.remove(os.path.join(partial, "_SUCCESS"))
+    assert main(base + ["dedup-screen", "--input", b2,
+                        "--index-dir", index, "--novel-out", novel]) == 0
+    out = capsys.readouterr()
+    assert json.loads(out.out) == r2
+    assert json.loads(out.err.strip().splitlines()[-1]) == {
+        "Warning": "uncommitted batch partitions excluded from the "
+        "screen (crashed run?)",
+        "Partitions": ["deadbeef00000001"],
+    }
     kept2 = sorted(
         r["doc_id"] for r in spark.read.parquet(novel).collect()
     )
     assert kept2 == [1, 2, 11]
 
 
-def test_cli_dedup_screen_bloom_runbook(spark, tmp_path, capsys):
-    """Bloom mode end-to-end: the first batch sizes the filter
-    (--bloom-capacity), later batches inherit its geometry from the
-    index, compaction folds the bitmap deltas, and the folded base
-    still screens. A fresh index without capacity fails fast."""
-    state = str(tmp_path / "state")
-    base = ["--state-dir", state, "--cpus", "4"]
+def test_cli_dedup_screen_bloom_runbook(spark, tmp_path):
+    """Bloom mode end-to-end through ``screen_batch``: the first batch
+    sizes the filter (``bloom_capacity``), later batches inherit its
+    geometry from the index, compaction folds the bitmap deltas, and
+    the folded base still screens. A fresh index without capacity is
+    refused."""
     b1, b2, b3 = (str(tmp_path / n) for n in ("b1", "b2", "b3"))
     spark.createDataFrame(
         [(1, "alpha"), (2, "beta"), (3, "alpha")],
@@ -404,63 +435,51 @@ def test_cli_dedup_screen_bloom_runbook(spark, tmp_path, capsys):
     index = str(tmp_path / "idx")
     novel = str(tmp_path / "novel")
 
-    with pytest.raises(SystemExit):
-        main(base + ["dedup-screen", "--mode", "bloom", "--input", b1,
-                     "--index-dir", index, "--novel-out", novel])
+    with pytest.raises(InputRefused, match="requires --bloom-capacity"):
+        screen_batch(spark, b1, index, novel, "bloom")
 
-    r1 = run(capsys, *base, "dedup-screen", "--mode", "bloom",
-             "--input", b1, "--index-dir", index, "--novel-out", novel,
-             "--bloom-capacity", "1000")
+    r1 = _screen(spark, b1, index, novel, "bloom", bloom_capacity=1000)
     assert (r1["Mode"], r1["BatchRows"], r1["NovelRows"],
             r1["IndexRowsAdded"]) == ("bloom", 3, 2, 1)
-    r2 = run(capsys, *base, "dedup-screen", "--mode", "bloom",
-             "--input", b2, "--index-dir", index, "--novel-out", novel)
+    r2 = _screen(spark, b2, index, novel, "bloom")
     assert (r2["BatchRows"], r2["NovelRows"]) == (2, 1)
     kept = sorted(r["doc_id"] for r in spark.read.parquet(novel).collect())
     assert kept == [1, 2, 11]
-    rc = run(capsys, *base, "compact-index", "--index-dir", index)
+    rc = compact_index(spark, index)
     assert rc["FoldedDirs"] == 2 and rc["BaseRows"] == 2
-    r3 = run(capsys, *base, "dedup-screen", "--mode", "bloom",
-             "--input", b3, "--index-dir", index, "--novel-out", novel)
+    r3 = _screen(spark, b3, index, novel, "bloom")
     assert (r3["BatchRows"], r3["NovelRows"]) == (2, 1)  # gamma seen
     kept = sorted(r["doc_id"] for r in spark.read.parquet(novel).collect())
     assert kept == [1, 2, 11, 21]
-    # round-16 ADVICE: sizing flags on a non-first batch cannot resize
-    # a live filter — the screen keeps the inherited geometry but must
-    # SAY so (an operator believing the filter grew would keep
-    # screening at a higher-than-priced fp rate)
+    # sizing arguments on a non-first batch cannot resize a live
+    # filter — the screen keeps the inherited geometry but must SAY so
+    # (an operator believing the filter grew would keep screening at a
+    # higher-than-priced fp rate)
     b4 = str(tmp_path / "b4")
     spark.createDataFrame(
         [(30, "epsilon")], "doc_id long, text string"
     ).coalesce(1).write.parquet(b4)
-    capsys.readouterr()
-    rc4 = main(base + ["dedup-screen", "--mode", "bloom", "--input", b4,
-                       "--index-dir", index, "--novel-out", novel,
-                       "--bloom-capacity", "7", "--bloom-fpp", "0.05"])
-    assert rc4 in (0, None)
-    err4 = capsys.readouterr().err
-    assert "bloom geometry flags ignored" in err4
-    assert "InheritedNumBits" in err4
-    # matching flags (the documented geometry) stay quiet
+    _, warnings = screen_batch(spark, b4, index, novel, "bloom",
+                               bloom_capacity=7, bloom_fpp=0.05)
+    (w,) = warnings
+    assert w["Warning"].startswith("bloom geometry flags ignored")
+    assert (w["InheritedNumBits"], w["RequestedNumBits"]) == (9600, 64)
+    # matching arguments (the documented geometry) stay quiet
     b5 = str(tmp_path / "b5")
     spark.createDataFrame(
         [(31, "zeta")], "doc_id long, text string"
     ).coalesce(1).write.parquet(b5)
-    rc5 = main(base + ["dedup-screen", "--mode", "bloom", "--input", b5,
-                       "--index-dir", index, "--novel-out", novel,
-                       "--bloom-capacity", "1000"])
-    assert rc5 in (0, None)
-    assert "bloom geometry" not in capsys.readouterr().err
+    _screen(spark, b5, index, novel, "bloom", bloom_capacity=1000)
 
 
-def test_cli_bloom_hash_scheme_stamp(spark, tmp_path, capsys):
-    """Round-17 (r16 ADVICE): every Bloom delta row carries a
-    hash_scheme stamp; an index whose rows predate the stamp (the
-    ambiguous pre/post-h2-fix window) refuses to screen unless the
-    operator blesses it with --assume-hash-scheme, and declaring the
-    OLD scheme still refuses — those bitmaps are incompatible."""
-    state = str(tmp_path / "state")
-    base = ["--state-dir", state, "--cpus", "4"]
+def test_cli_bloom_hash_scheme_stamp(spark, tmp_path):
+    """Every Bloom delta row carries a hash_scheme stamp; an index whose
+    rows predate the stamp (the ambiguous pre/post-h2-fix window)
+    refuses to screen unless the caller blesses it with
+    ``assume_hash_scheme``, and declaring the OLD scheme still refuses —
+    those bitmaps are incompatible."""
+    from amazon_s3_find_and_forget_spark.operators import incremental as inc
+
     b1, b2 = (str(tmp_path / n) for n in ("b1", "b2"))
     spark.createDataFrame(
         [(1, "alpha"), (2, "beta")], "doc_id long, text string"
@@ -470,14 +489,9 @@ def test_cli_bloom_hash_scheme_stamp(spark, tmp_path, capsys):
     ).coalesce(1).write.parquet(b2)
     index = str(tmp_path / "idx")
     novel = str(tmp_path / "novel")
-    run(capsys, *base, "dedup-screen", "--mode", "bloom", "--input", b1,
-        "--index-dir", index, "--novel-out", novel,
-        "--bloom-capacity", "1000")
+    _screen(spark, b1, index, novel, "bloom", bloom_capacity=1000)
     # new deltas are stamped with the current scheme
     idx_df = spark.read.parquet(index)
-    assert "hash_scheme" in idx_df.columns
-    from amazon_s3_find_and_forget_spark.operators import incremental as inc
-
     assert [r["hash_scheme"] for r in idx_df.collect()] == [
         inc.BLOOM_HASH_SCHEME
     ]
@@ -494,36 +508,27 @@ def test_cli_bloom_hash_scheme_stamp(spark, tmp_path, capsys):
         old_rows, "bits binary, num_bits long, num_hashes int"
     ).coalesce(1).write.parquet(f"{index}/{batch_dir}")
     # screening over pre-stamp rows refuses with the rebuild/bless hint
-    with pytest.raises(SystemExit):
-        main(base + ["dedup-screen", "--mode", "bloom", "--input", b2,
-                     "--index-dir", index, "--novel-out", novel])
-    err = capsys.readouterr().err
-    assert "hash-scheme stamping" in err
-    assert "--assume-hash-scheme" in err
+    with pytest.raises(InputRefused, match="hash-scheme stamping") as e:
+        screen_batch(spark, b2, index, novel, "bloom")
+    assert "--assume-hash-scheme" in str(e.value)
     # declaring the OLD scheme still refuses (bitmaps incompatible)
-    with pytest.raises(SystemExit):
-        main(base + ["dedup-screen", "--mode", "bloom", "--input", b2,
-                     "--index-dir", index, "--novel-out", novel,
-                     "--assume-hash-scheme", "1"])
-    assert "incompatible" in capsys.readouterr().err
+    with pytest.raises(InputRefused, match="incompatible"):
+        screen_batch(spark, b2, index, novel, "bloom", assume_hash_scheme=1)
     # blessing with the CURRENT scheme screens correctly (alpha seen)
-    r2 = run(capsys, *base, "dedup-screen", "--mode", "bloom",
-             "--input", b2, "--index-dir", index, "--novel-out", novel,
-             "--assume-hash-scheme", str(inc.BLOOM_HASH_SCHEME))
+    r2 = _screen(spark, b2, index, novel, "bloom",
+                 assume_hash_scheme=inc.BLOOM_HASH_SCHEME)
     assert (r2["BatchRows"], r2["NovelRows"]) == (2, 1)
     kept = sorted(r["doc_id"] for r in spark.read.parquet(novel).collect())
     assert kept == [1, 2, 11]
 
 
-def test_cli_dedup_screen_symlink_retry_same_identity(spark, tmp_path, capsys):
+def test_cli_dedup_screen_symlink_retry_same_identity(spark, tmp_path):
     """A retry that reaches the same landed batch through a different
     path SPELLING (symlink) must map to the same batch partition: the
     idempotency digest uses realpath, so the retry overwrites its own
     outputs instead of screening the batch against its own first-run
     delta (which would report every row as already seen). An explicit
-    --batch-id overrides the digest for relands no path can identify."""
-    state = str(tmp_path / "state")
-    base = ["--state-dir", state, "--cpus", "4"]
+    ``batch_id`` overrides the digest for relands no path can identify."""
     real = tmp_path / "real"
     real.mkdir()
     b1 = real / "b1"
@@ -535,55 +540,54 @@ def test_cli_dedup_screen_symlink_retry_same_identity(spark, tmp_path, capsys):
     index = str(tmp_path / "idx")
     novel = str(tmp_path / "novel")
 
-    r1 = run(capsys, *base, "dedup-screen", "--input", str(link / "b1"),
-             "--index-dir", index, "--novel-out", novel)
-    r2 = run(capsys, *base, "dedup-screen", "--input", str(b1),
-             "--index-dir", index, "--novel-out", novel)
+    r1 = _screen(spark, str(link / "b1"), index, novel)
+    r2 = _screen(spark, str(b1), index, novel)
     assert r1 == r2  # same identity -> idempotent overwrite
     kept = sorted(r["doc_id"] for r in spark.read.parquet(novel).collect())
     assert kept == [1, 2]
 
-    # --batch-id: same content deliberately relanded as a NEW batch
+    # batch_id: same content deliberately relanded as a NEW batch
     # screens against the original delta — nothing is novel
-    r3 = run(capsys, *base, "dedup-screen", "--input", str(b1),
-             "--index-dir", index, "--novel-out", novel,
-             "--batch-id", "reland-001")
-    assert (r3["NovelRows"], r3["IndexRowsAdded"]) == (0, 0)
+    r3 = _screen(spark, str(b1), index, novel, batch_id="reland-001")
+    assert (r3["Batch"], r3["NovelRows"], r3["IndexRowsAdded"]) == (
+        "reland-001", 0, 0,
+    )
     kept2 = sorted(r["doc_id"] for r in spark.read.parquet(novel).collect())
     assert kept2 == [1, 2]
 
 
-def test_cli_dedup_screen_rejects_unsafe_batch_id(spark, tmp_path, capsys):
+def test_cli_dedup_screen_rejects_unsafe_batch_id(tmp_path, capsys):
     """--batch-id names a batch=<id> partition directory and is
     string-compared against Spark's URL-DECODED partition value, so ids
     that don't round-trip verbatim ('a%2Fb' reads back as 'a/b' and
     stops excluding the batch's own delta; '/' nests directories) are
-    refused up front."""
-    b1 = str(tmp_path / "b1")
-    spark.createDataFrame(
-        [(1, "alpha")], "doc_id long, text string"
-    ).coalesce(1).write.parquet(b1)
+    refused up front, and so is ``screen_batch`` given one."""
+    from amazon_s3_find_and_forget_spark.operators.incremental import (
+        check_batch_id,
+    )
+
     for bad in ("a%2Fb", "a/b", "a=b", "", "x" * 65):
-        with pytest.raises(SystemExit):
+        with pytest.raises(SystemExit) as e:
             main([
                 "--state-dir", str(tmp_path / "state"), "--cpus", "4",
-                "dedup-screen", "--input", b1,
+                "dedup-screen", "--input", str(tmp_path / "b1"),
                 "--index-dir", str(tmp_path / "idx"),
                 "--novel-out", str(tmp_path / "novel"),
                 "--batch-id", bad,
             ])
+        assert e.value.code == 2
+        assert "--batch-id must be 1-64 chars" in capsys.readouterr().err
+        with pytest.raises(InputRefused):
+            check_batch_id(bad)
+    check_batch_id("reland-001.v2")
 
 
-def test_cli_dedup_screen_reused_path_gets_new_identity(
-    spark, tmp_path, capsys
-):
+def test_cli_dedup_screen_reused_path_gets_new_identity(spark, tmp_path):
     """NEW data landing at a reused path must screen as a NEW batch:
     the default idempotency digest fingerprints the landed files
     (names, sizes, mtimes), so the second landing cannot overwrite —
     and self-exclude — the first landing's index delta, which would
     silently re-admit the first batch's documents."""
-    state = str(tmp_path / "state")
-    base = ["--state-dir", state, "--cpus", "4"]
     landing = tmp_path / "landing"
     index = str(tmp_path / "idx")
     novel = str(tmp_path / "novel")
@@ -591,8 +595,7 @@ def test_cli_dedup_screen_reused_path_gets_new_identity(
     spark.createDataFrame(
         [(1, "alpha")], "doc_id long, text string"
     ).coalesce(1).write.parquet(str(landing))
-    r1 = run(capsys, *base, "dedup-screen", "--input", str(landing),
-             "--index-dir", index, "--novel-out", novel)
+    r1 = _screen(spark, str(landing), index, novel)
     assert (r1["NovelRows"], r1["IndexRowsAdded"]) == (1, 1)
 
     # day 2: different documents land at the SAME path
@@ -600,9 +603,9 @@ def test_cli_dedup_screen_reused_path_gets_new_identity(
     spark.createDataFrame(
         [(2, "beta"), (3, "alpha")], "doc_id long, text string"
     ).coalesce(1).write.parquet(str(landing))
-    r2 = run(capsys, *base, "dedup-screen", "--input", str(landing),
-             "--index-dir", index, "--novel-out", novel)
+    r2 = _screen(spark, str(landing), index, novel)
     # alpha is screened by day 1's (still-visible) delta; only beta is new
+    assert r2["Batch"] != r1["Batch"]
     assert (r2["NovelRows"], r2["IndexRowsAdded"]) == (1, 1)
     kept = sorted(r["doc_id"] for r in spark.read.parquet(novel).collect())
     assert kept == [1, 2]
@@ -698,11 +701,16 @@ def test_cli_compact_index_folds_screen_deltas(spark, tmp_path, capsys):
             "--input", b2, "--index-dir", index, "--novel-out", novel,
             "--batch-id", "base-evil",
         ])
+    # a batch folded into the base is refused as a usage error
+    capsys.readouterr()
+    with pytest.raises(SystemExit) as e:
+        main(base + ["dedup-screen", "--input", str(tmp_path / "b0"),
+                     "--index-dir", index, "--novel-out", novel])
+    assert e.value.code == 2
+    assert "folded into a compaction base" in capsys.readouterr().err
 
 
-def test_cli_dedup_screen_refuses_folded_batch_rerun(
-    spark, tmp_path, capsys
-):
+def test_cli_dedup_screen_refuses_folded_batch_rerun(spark, tmp_path):
     """A re-run of a batch whose digest compaction already folded into
     the base must be refused: its rows now live in the base, the
     own-partition exclusion no longer hides them, and the re-run would
@@ -710,40 +718,31 @@ def test_cli_dedup_screen_refuses_folded_batch_rerun(
     novel output with an EMPTY partition. The folded history is a
     manifest inside the base partition and carries forward across
     compaction epochs."""
-    state = str(tmp_path / "state")
-    base = ["--state-dir", state, "--cpus", "4"]
+    from amazon_s3_find_and_forget_spark.operators import (
+        incremental as inc,
+    )
+
     index = str(tmp_path / "idx")
     novel = str(tmp_path / "novel")
     b0 = str(tmp_path / "b0")
     spark.createDataFrame(
         [(1, "alpha"), (2, "beta")], "doc_id long, text string"
     ).coalesce(1).write.parquet(b0)
-    r0 = run(capsys, *base, "dedup-screen", "--input", b0,
-             "--index-dir", index, "--novel-out", novel)
+    r0 = _screen(spark, b0, index, novel)
     assert r0["NovelRows"] == 2
-    run(capsys, *base, "compact-index", "--index-dir", index)
+    compact_index(spark, index)
 
     # same input, unchanged on disk -> same digest -> refused loudly
-    with pytest.raises(SystemExit):
-        main([*base, "dedup-screen", "--input", b0,
-              "--index-dir", index, "--novel-out", novel])
-    err = capsys.readouterr().err
-    assert "folded into a compaction base" in err
+    with pytest.raises(InputRefused, match="folded into a compaction base"):
+        screen_batch(spark, b0, index, novel)
     # the first run's novel output survives untouched
     kept = sorted(r["doc_id"] for r in spark.read.parquet(novel).collect())
     assert kept == [1, 2]
 
-    # an explicit --batch-id matching a folded digest is refused too
-    from amazon_s3_find_and_forget_spark.operators import (
-        incremental as inc,
-    )
-
-    folded = inc.folded_batch_digests(spark, index)
-    assert len(folded) == 1
-    (d0,) = folded
-    with pytest.raises(SystemExit):
-        main([*base, "dedup-screen", "--input", b0, "--batch-id", d0,
-              "--index-dir", index, "--novel-out", novel])
+    # an explicit batch_id matching a folded digest is refused too
+    assert inc.folded_batch_digests(spark, index) == {r0["Batch"]}
+    with pytest.raises(InputRefused):
+        screen_batch(spark, b0, index, novel, batch_id=r0["Batch"])
 
     # history carries forward across a SECOND compaction epoch
     # (fold = previous base + a new delta)
@@ -751,33 +750,25 @@ def test_cli_dedup_screen_refuses_folded_batch_rerun(
     spark.createDataFrame(
         [(10, "gamma")], "doc_id long, text string"
     ).coalesce(1).write.parquet(b1)
-    r1 = run(capsys, *base, "dedup-screen", "--input", b1,
-             "--index-dir", index, "--novel-out", novel)
+    r1 = _screen(spark, b1, index, novel)
     assert r1["NovelRows"] == 1
-    run(capsys, *base, "compact-index", "--index-dir", index)
+    compact_index(spark, index)
     folded2 = inc.folded_batch_digests(spark, index)
-    assert d0 in folded2 and len(folded2) == 2
-    with pytest.raises(SystemExit):
-        main([*base, "dedup-screen", "--input", b0,
-              "--index-dir", index, "--novel-out", novel])
+    assert folded2 == {r0["Batch"], r1["Batch"]}
+    with pytest.raises(InputRefused):
+        screen_batch(spark, b0, index, novel)
 
-    # a deliberate re-screen under a FRESH --batch-id is allowed and —
+    # a deliberate re-screen under a FRESH batch_id is allowed and —
     # correctly — finds everything already indexed
-    r2 = run(capsys, *base, "dedup-screen", "--input", b0,
-             "--index-dir", index, "--novel-out", novel,
-             "--batch-id", "reland-001")
+    r2 = _screen(spark, b0, index, novel, batch_id="reland-001")
     assert (r2["NovelRows"], r2["IndexRowsAdded"]) == (0, 0)
 
 
-def test_cli_dedup_screen_excludes_uncommitted_partition(
-    spark, tmp_path, capsys
-):
+def test_cli_dedup_screen_excludes_uncommitted_partition(spark, tmp_path):
     """A markerless (crashed, half-written) batch partition must not
     screen a later run: a retry whose input was re-staged (fresh
     mtimes -> new fingerprint digest) would otherwise match its own
     first attempt's partial delta and silently drop its documents."""
-    state = str(tmp_path / "state")
-    base = ["--state-dir", state, "--cpus", "4"]
     index = str(tmp_path / "idx")
     novel = str(tmp_path / "novel")
     b1 = str(tmp_path / "b1")
@@ -793,20 +784,19 @@ def test_cli_dedup_screen_excludes_uncommitted_partition(
     inc.exact_index(docs).write.parquet(f"{index}/batch=deadbeef00000001")
     os.remove(os.path.join(index, "batch=deadbeef00000001", "_SUCCESS"))
 
-    r = run(capsys, *base, "dedup-screen", "--input", b1,
-            "--index-dir", index, "--novel-out", novel)
-    # both docs are novel: the partial partition was excluded
+    r, warnings = screen_batch(spark, b1, index, novel)
+    # both docs are novel: the partial partition was excluded, and the
+    # screen says so
     assert (r["NovelRows"], r["IndexRowsAdded"]) == (2, 2)
+    assert [w["Partitions"] for w in warnings] == [["deadbeef00000001"]]
     kept = sorted(x["doc_id"] for x in spark.read.parquet(novel).collect())
     assert kept == [1, 2]
 
 
-def test_cli_dedup_screen_embedding_mode(spark, tmp_path, capsys):
-    """--mode embedding completes the CLI screen trio: the second batch's
+def test_cli_dedup_screen_embedding_mode(spark, tmp_path):
+    """Embedding mode completes the screen trio: the second batch's
     near-duplicate vectors (cosine >= threshold) of indexed ones are
     dropped; the index delta is LSH-keyed unit vectors."""
-    state = str(tmp_path / "state")
-    base = ["--state-dir", state, "--cpus", "4"]
     index = str(tmp_path / "vidx")
     novel = str(tmp_path / "vnovel")
     schema = "vec_id long, embedding array<float>"
@@ -819,24 +809,12 @@ def test_cli_dedup_screen_embedding_mode(spark, tmp_path, capsys):
         [(10, [0.99, 0.05, 0.0, 0.0]), (11, [0.0, 0.0, 1.0, 0.0])], schema
     ).coalesce(1).write.parquet(b2)
 
-    r1 = run(capsys, *base, "dedup-screen", "--mode", "embedding",
-             "--dim", "4", "--id-column", "vec_id",
-             "--input", b1, "--index-dir", index, "--novel-out", novel)
+    r1 = _screen(spark, b1, index, novel, "embedding", dim=4, id_col="vec_id")
     assert (r1["NovelRows"], r1["IndexRowsAdded"]) == (2, 2)
-    r2 = run(capsys, *base, "dedup-screen", "--mode", "embedding",
-             "--dim", "4", "--id-column", "vec_id",
-             "--input", b2, "--index-dir", index, "--novel-out", novel)
+    r2 = _screen(spark, b2, index, novel, "embedding", dim=4, id_col="vec_id")
     assert (r2["NovelRows"], r2["IndexRowsAdded"]) == (1, 1)
     kept = sorted(x["vec_id"] for x in spark.read.parquet(novel).collect())
     assert kept == [1, 2, 11]
-
-    # --dim is required in embedding mode
-    with pytest.raises(SystemExit):
-        main([
-            "--state-dir", state, "--cpus", "4", "dedup-screen",
-            "--mode", "embedding", "--input", b2,
-            "--index-dir", index, "--novel-out", novel,
-        ])
 
 
 def test_cli_select_data_modes(spark, tmp_path, sf_dir, capsys):
@@ -877,18 +855,14 @@ def test_cli_select_data_modes(spark, tmp_path, sf_dir, capsys):
 
 
 def test_cli_select_data_validation(tmp_path, capsys):
-    import pytest as _pytest
-
     base = ["--state-dir", str(tmp_path / "s")]
-    with _pytest.raises(SystemExit):
-        main(base + ["select-data", "--input", "x", "--out", "y",
-                     "--method", "dsir"])  # no k / target
-    with _pytest.raises(SystemExit):
-        main(base + ["select-data", "--input", "x", "--out", "y",
-                     "--method", "gopher", "--rules", "nonsense"])
-    with _pytest.raises(SystemExit):
-        main(base + ["select-data", "--input", "x", "--out", "y",
-                     "--method", "classifier"])
+    for argv in (
+        ["--method", "dsir"],  # no k / target
+        ["--method", "gopher", "--rules", "nonsense"],
+        ["--method", "classifier"],  # no model / target
+    ):
+        with pytest.raises(SystemExit):
+            main(base + ["select-data", "--input", "x", "--out", "y"] + argv)
 
 
 def test_cli_select_data_model_roundtrip(spark, tmp_path, sf_dir, capsys):
@@ -915,87 +889,63 @@ def test_cli_select_data_model_roundtrip(spark, tmp_path, sf_dir, capsys):
     assert a == b and r1["SelectedRows"] == r2["SelectedRows"]
 
 
-def test_cli_select_data_train_sample_cap(spark, tmp_path, sf_dir, capsys):
-    # --train-sample bounds the CLASSIFIER training set (the operator's
-    # "train on a bounded sample, score the lake" contract in the
-    # packaged path): capped training still scores/filters the FULL
-    # corpus, the cap is deterministic, and 0 disables it (identical
-    # survivors to the uncapped default on a small corpus)
-    state = str(tmp_path / "state")
-    base = ["--state-dir", state, "--cpus", "4"]
-    docs = os.path.join(sf_dir, "documents.parquet")
+def test_cli_select_data_train_sample_cap(spark, tmp_path, sf_dir):
+    # train_sample bounds the CLASSIFIER training set (the operator's
+    # "train on a bounded sample, score the lake" contract): capped
+    # training still scores/filters the FULL corpus, the cap is
+    # deterministic, and 0 disables it (identical survivors to the
+    # uncapped default on a small corpus)
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
-    out_cap = str(tmp_path / "cap")
-    r = run(capsys, *base, "select-data", "--input", docs, "--out", out_cap,
-            "--method", "classifier", "--target-filter", "lang = 'en'",
-            "--iters", "6", "--salt", "cap", "--train-sample", "200")
+    def select(name, **kw):
+        out = str(tmp_path / name)
+        r = select_data(docs, "classifier", out, target_filter="lang = 'en'",
+                        iters=6, salt="cap", **kw)
+        return r, {x.doc_id for x in spark.read.parquet(out).collect()}
+
+    r, a = select("cap", train_sample=200)
     assert r["SelectedRows"] >= 1
     # the Pareto filter still ran over the whole corpus: survivors can
     # include docs outside any 200-doc training subset
-    assert r["InputRows"] == spark.read.parquet(docs).count()
-
-    out_cap2 = str(tmp_path / "cap2")
-    r2 = run(capsys, *base, "select-data", "--input", docs, "--out", out_cap2,
-             "--method", "classifier", "--target-filter", "lang = 'en'",
-             "--iters", "6", "--salt", "cap", "--train-sample", "200")
-    a = {x.doc_id for x in spark.read.parquet(out_cap).collect()}
-    b = {x.doc_id for x in spark.read.parquet(out_cap2).collect()}
-    assert a == b  # deterministic under the cap
-
-    out_off = str(tmp_path / "off")
-    run(capsys, *base, "select-data", "--input", docs, "--out", out_off,
-        "--method", "classifier", "--target-filter", "lang = 'en'",
-        "--iters", "6", "--salt", "cap", "--train-sample", "0")
-    out_default = str(tmp_path / "dflt")
-    run(capsys, *base, "select-data", "--input", docs, "--out", out_default,
-        "--method", "classifier", "--target-filter", "lang = 'en'",
-        "--iters", "6", "--salt", "cap")
-    c = {x.doc_id for x in spark.read.parquet(out_off).collect()}
-    d = {x.doc_id for x in spark.read.parquet(out_default).collect()}
-    assert c == d  # corpus < default cap: cap is a no-op
+    assert r["InputRows"] == docs.count()
+    assert select("cap2", train_sample=200)[1] == a  # deterministic
+    # corpus < default cap: the cap is a no-op
+    assert select("off", train_sample=0)[1] == select("dflt")[1]
+    # a negative cap would compare every hash above a '-' bound and
+    # train on nothing
+    with pytest.raises(ValueError, match="must be in"):
+        select("neg", train_sample=-5)
 
 
-def test_cli_select_data_prototypes(spark, tmp_path, sf_dir, capsys):
-    state = str(tmp_path / "state")
-    base = ["--state-dir", state, "--cpus", "4"]
+def test_cli_select_data_prototypes(spark, tmp_path, sf_dir):
     embs = os.path.join(sf_dir, "embeddings.parquet")
-
     out = str(tmp_path / "proto")
-    r = run(capsys, *base, "select-data", "--input", embs, "--out", out,
-            "--method", "prototypes", "--keep-frac", "0.5",
-            "--clusters", "8", "--id-column", "vec_id")
+    r = select_data(spark.read.parquet(embs), "prototypes", out,
+                    keep_frac=0.5, clusters=8, id_col="vec_id")
     assert 0 < r["SelectedRows"] < r["InputRows"]
     sel = spark.read.parquet(out)
     assert {"vec_id", "embedding", "ivf_cell", "proto_sim"} <= set(sel.columns)
 
     # keep-frac is required and validated before Spark starts
-    import pytest as _pytest
-    with _pytest.raises(SystemExit):
-        main(["--state-dir", state, "select-data", "--input", embs,
-              "--out", out, "--method", "prototypes"])
-    with _pytest.raises(SystemExit):
-        main(["--state-dir", state, "select-data", "--input", embs,
-              "--out", out, "--method", "prototypes", "--keep-frac", "1.5"])
-
-
-def test_cli_select_data_temperature(spark, tmp_path, sf_dir, capsys):
     state = str(tmp_path / "state")
-    base = ["--state-dir", state, "--cpus", "4"]
-    docs = os.path.join(sf_dir, "documents.parquet")
+    for extra in ([], ["--keep-frac", "1.5"]):
+        with pytest.raises(SystemExit):
+            main(["--state-dir", state, "select-data", "--input", embs,
+                  "--out", out, "--method", "prototypes"] + extra)
 
+
+def test_cli_select_data_temperature(spark, tmp_path, sf_dir):
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     out = str(tmp_path / "temp")
-    r = run(capsys, *base, "select-data", "--input", docs, "--out", out,
-            "--method", "temperature", "--alpha", "0.5", "--salt", "tm")
+    r = select_data(docs, "temperature", out, alpha=0.5, salt="tm")
     # alpha-rebalance preserves the expected total (binomial jitter)
     assert abs(r["SelectedRows"] - r["InputRows"]) <= r["InputRows"] // 10
-    sel = spark.read.parquet(out)
-    assert "copy" in sel.columns
+    assert "copy" in spark.read.parquet(out).columns
     # a capped run is never larger per stratum than one epoch
     out2 = str(tmp_path / "temp2")
-    run(capsys, *base, "select-data", "--input", docs, "--out", out2,
-        "--method", "temperature", "--alpha", "0.5", "--salt", "tm",
-        "--max-rate", "1.0")
-    n_in = spark.read.parquet(docs).groupBy("source").count().collect()
+    select_data(docs, "temperature", out2, alpha=0.5, salt="tm",
+                max_rate=1.0)
+    n_in = docs.groupBy("source").count().collect()
     n_out = {r["source"]: r["count"] for r in
              spark.read.parquet(out2).groupBy("source").count().collect()}
     for row in n_in:
@@ -1035,23 +985,17 @@ def test_cli_curate_full_chain(spark, tmp_path, sf_dir, capsys):
               "--split-ratios", "train:0.5,val:0.2"])  # sums to 0.7
 
 
-def test_cli_curate_classifier_and_dsir_steps(spark, tmp_path, sf_dir,
-                                              capsys):
-    """Round-17 (r16 verdict ask #6): the packaged chain covers the
-    full GPT-3/DSIR selection story — gopher -> classifier (Pareto
-    keep rule, trained inline or loaded) -> dsir (importance
-    resampling to k) -> split — with per-stage counts in the report
-    and model save/load pass-through."""
-    state = str(tmp_path / "state")
-    base = ["--state-dir", state, "--cpus", "4"]
-    docs = os.path.join(sf_dir, "documents.parquet")
+def test_cli_curate_classifier_and_dsir_steps(spark, tmp_path, sf_dir):
+    """The curate chain covers the full GPT-3/DSIR selection story —
+    gopher -> classifier (Pareto keep rule, trained inline or loaded)
+    -> dsir (importance resampling to k) -> split — with per-stage
+    counts in the report and the model saved for reuse."""
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     out = str(tmp_path / "sel")
     model = str(tmp_path / "clf.json")
-    r = run(capsys, *base, "curate", "--input", docs, "--out", out,
-            "--steps", "gopher,classifier,dsir,split",
-            "--clf-target-filter", "lang = 'en'",
-            "--clf-model-out", model,
-            "--dsir-target-filter", "lang = 'en'", "--dsir-k", "10")
+    r = curate(docs, ["gopher", "classifier", "dsir", "split"], out,
+               clf_target_filter="lang = 'en'", clf_model_out=model,
+               dsir_target_filter="lang = 'en'", dsir_k=10)
     assert r["Steps"] == ["gopher", "classifier", "dsir", "split"]
     assert r["ClassifierSurvivors"] <= r["GopherSurvivors"]
     assert r["DsirSelected"] == 10 <= r["ClassifierSurvivors"]
@@ -1060,59 +1004,49 @@ def test_cli_curate_classifier_and_dsir_steps(spark, tmp_path, sf_dir,
     assert r["ClassifierModelOut"] == model
     sel = spark.read.parquet(out)
     assert "split" in sel.columns and "text" in sel.columns
-    # the saved model reloads: same chain, --clf-model-in, identical
+    # the saved model reloads: same chain, a loaded model, identical
     # survivors (the Pareto draw is deterministic under the same salt)
-    out2 = str(tmp_path / "sel2")
-    r2 = run(capsys, *base, "curate", "--input", docs, "--out", out2,
-             "--steps", "gopher,classifier", "--clf-model-in", model)
+    with open(model) as f:
+        loaded = json.load(f)
+    r2 = curate(docs, ["classifier", "gopher"], str(tmp_path / "sel2"),
+                clf_model=loaded)
     assert r2["ClassifierSurvivors"] == r["ClassifierSurvivors"]
-    # validation runs before Spark
-    import pytest as _pytest
+    # the CLI refuses incomplete classifier and dsir steps before Spark
     for bad in (
         ["--steps", "classifier"],                      # no model/filter
-        ["--steps", "classifier", "--clf-model-in", model,
-         "--clf-target-filter", "x"],                   # both
         ["--steps", "dsir", "--dsir-target-filter", "x"],  # no k
         ["--steps", "dsir", "--dsir-k", "5"],           # no target
     ):
-        with _pytest.raises(SystemExit):
-            main(["--state-dir", state, "curate", "--input", docs,
-                  "--out", out] + bad)
+        with pytest.raises(SystemExit):
+            main(["--state-dir", str(tmp_path / "state"), "curate",
+                  "--input", "x", "--out", out] + bad)
 
 
-def test_cli_curate_paragraph_step(spark, tmp_path, capsys):
-    state = str(tmp_path / "state")
-    base = ["--state-dir", state, "--cpus", "4"]
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
+def test_cli_curate_paragraph_step(spark, tmp_path):
+    src = spark.createDataFrame(
         [(1, "alpha\nFOOTER"), (2, "beta\nFOOTER"), (3, "gamma\nFOOTER")],
         "doc_id long, text string",
-    ).write.parquet(src)
+    )
     out = str(tmp_path / "p")
-    r = run(capsys, *base, "curate", "--input", src, "--out", out,
-            "--steps", "paragraph-dedup")
+    r = curate(src, ["paragraph-dedup"], out)
     assert r["ParagraphsRemoved"] == 2  # doc 1 keeps the canonical FOOTER
     texts = {x.doc_id: x.text for x in spark.read.parquet(out).collect()}
     assert texts[1] == "alpha\nFOOTER"
     assert texts[2] == "beta" and texts[3] == "gamma"
 
 
-def test_cli_curate_exact_substr_step(spark, tmp_path, capsys):
+def test_cli_curate_exact_substr_step(spark, tmp_path):
     # a 5-token run repeated across docs is cut from BOTH (remove-all
     # semantics, verbatim); counts land in the report
-    state = str(tmp_path / "state")
-    base = ["--state-dir", state, "--cpus", "4"]
-    src = str(tmp_path / "xsrc")
     run5 = "v w x y z"
-    spark.createDataFrame(
+    src = spark.createDataFrame(
         [(1, f"a {run5} b"), (2, f"{run5} c"), (3, "clean doc here")],
         "doc_id long, text string",
-    ).write.parquet(src)
+    )
     out = str(tmp_path / "xout")
     audit = str(tmp_path / "xaudit")
-    r = run(capsys, *base, "curate", "--input", src, "--out", out,
-            "--steps", "exact-substr", "--substr-min-tokens", "5",
-            "--audit-out", audit)
+    r = curate(src, ["exact-substr"], out, substr_min_tokens=5,
+               audit_out=audit)
     assert r["SubstrTokensRemoved"] == 10
     texts = {x.doc_id: x.text for x in spark.read.parquet(out).collect()}
     assert texts == {1: "a b", 2: "c", 3: "clean doc here"}
@@ -1226,23 +1160,64 @@ def test_cli_curate_url_screen_step(spark, tmp_path, capsys):
                      str(tmp_path / "u2"), "--steps", "url-screen"])
 
 
-def test_cli_curate_rejects_null_ids(spark, tmp_path, capsys):
+def test_cli_curate_rejects_null_ids(spark, tmp_path):
     # the rewrite steps rejoin on the id column; an equi-join would
     # silently drop NULL-id rows, so curate enforces the non-NULL id
     # contract up front with the offending count in the message
-    state = str(tmp_path / "state")
-    base = ["--state-dir", state, "--cpus", "4"]
-    src = str(tmp_path / "nsrc")
-    spark.createDataFrame(
+    src = spark.createDataFrame(
         [(1, "alpha\nFOOTER"), (None, "beta\nFOOTER")],
         "doc_id long, text string",
-    ).write.parquet(src)
+    )
     out = str(tmp_path / "nout")
-    import pytest as _pytest
-    with _pytest.raises(SystemExit, match="1 input rows have NULL"):
-        main(["--state-dir", state, "--cpus", "4", "curate",
-              "--input", src, "--out", out, "--steps", "paragraph-dedup"])
+    with pytest.raises(InputRefused, match="1 input rows have NULL"):
+        curate(src, ["paragraph-dedup"], out)
     # steps with no id rejoin accept NULL ids (exact-dedup keys on text)
-    r = run(capsys, *base, "curate", "--input", src, "--out", out,
-            "--steps", "exact-dedup")
+    r = curate(src, ["exact-dedup"], out)
     assert r["OutputRows"] == 2 and "NullIdRows" not in r
+
+
+def test_cli_refuses_bad_arguments_before_a_session(state_only, capsys):
+    """Every check that needs only the arguments runs before the session
+    starts: unsafe batch ids, embedding mode without --dim, an unreadable
+    input list file, two sources for one classifier or DSIR step, a
+    negative training cap and out-of-range split fractions all exit 2
+    without asking for Spark."""
+    _, base = state_only
+    screen = ["dedup-screen", "--input", "b", "--index-dir", "i",
+              "--novel-out", "n"]
+    curate_ = ["curate", "--input", "x", "--out", "y"]
+    select = ["select-data", "--input", "x", "--out", "y"]
+    for argv, msg in (
+        (screen + ["--batch-id", "a/b"], "--batch-id must be 1-64 chars"),
+        (screen + ["--batch-id", "base-x"], "must not start with 'base-'"),
+        (screen + ["--mode", "embedding"], "requires --dim"),
+        (curate_ + ["--steps", "url-screen", "--blocklist-file", "missing"],
+         "--blocklist-file: [Errno 2]"),
+        (curate_ + ["--steps", "classifier", "--clf-model-in", "m",
+                    "--clf-target-filter", "f"],
+         "the classifier step needs exactly one of --clf-model-in / "
+         "--clf-target-filter"),
+        (curate_ + ["--steps", "dsir", "--dsir-k", "3", "--dsir-target", "t",
+                    "--dsir-target-filter", "f"],
+         "the dsir step needs exactly one of --dsir-target / "
+         "--dsir-target-filter"),
+        (select + ["--method", "classifier", "--model-in", "m",
+                   "--target-filter", "f"],
+         "--method classifier needs exactly one of --model-in / "
+         "--target-filter"),
+        (select + ["--method", "dsir", "--k", "3", "--target", "t",
+                   "--target-filter", "f"],
+         "--method dsir needs exactly one of --target / --target-filter"),
+        (select + ["--method", "classifier", "--target-filter", "f",
+                   "--train-sample", "-5"], "--train-sample must be >= 0"),
+        (curate_ + ["--steps", "classifier", "--clf-target-filter", "f",
+                    "--clf-train-sample", "-1"],
+         "--clf-train-sample must be >= 0"),
+        (curate_ + ["--steps", "split", "--split-ratios",
+                    "train:1.5,val:-0.5"],
+         "--split-ratios fractions must be in [0, 1]"),
+    ):
+        with pytest.raises(SystemExit) as e:
+            main(base + argv)
+        assert e.value.code == 2, argv
+        assert msg in capsys.readouterr().err, argv
