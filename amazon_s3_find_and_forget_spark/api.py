@@ -25,12 +25,15 @@ listing's sort key, as DynamoDB's ExclusiveStartKey.
 
 from __future__ import annotations
 
+import fcntl
 import json
 import operator
 import os
+import tempfile
 import threading
 import time
 import uuid
+from contextlib import contextmanager
 from typing import Callable
 
 from pyspark.sql import SparkSession
@@ -128,11 +131,12 @@ class Engine:
         # AssumedRole/S3 resolution seam — tests inject fakes, real
         # deployments the boto builders
         self.store_factory = store_factory
-        # serializes read-modify-write cycles on the JSON tables so the
-        # HTTP facade (http_api.py) can mutate from request threads while
-        # a detached job finishes on its own thread; _save stays atomic
-        # (temp+rename) so lock-free readers never see a torn file
+        # orders this engine's threads (the HTTP facade's request
+        # threads, a detached job's thread); ``_locked`` adds the
+        # cross-process lock for read-modify-write cycles. _save stays
+        # atomic (temp+rename) so lock-free readers never see a torn file
         self._mutex = threading.RLock()
+        self._lock_fd: int | None = None  # the flock fd, while held
         self._job_thread: threading.Thread | None = None
         self._last_ns = 0  # the time part of the last queue id assigned
         os.makedirs(os.path.join(state_dir, "jobs"), exist_ok=True)
@@ -158,10 +162,44 @@ class Engine:
             return json.load(f)
 
     def _save(self, name: str, value) -> None:
-        tmp = self._path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(value, f, indent=1)
-        os.replace(tmp, self._path(name))
+        """Write a table whole: a temp file of its own in the same
+        directory, renamed over the table, so concurrent writers never
+        share a temp file and readers see the old or the new table."""
+        path = self._path(name)
+        fd, tmp = tempfile.mkstemp(
+            dir=os.path.dirname(path), prefix=f".{os.path.basename(path)}.",
+            suffix=".tmp",
+        )
+        try:
+            with os.fdopen(fd, "w") as f:
+                json.dump(value, f, indent=1)
+            os.replace(tmp, path)
+        except BaseException:
+            os.unlink(tmp)
+            raise
+
+    @contextmanager
+    def _locked(self):
+        """One read-modify-write of the state tables: ``_mutex`` orders
+        this engine's threads and an exclusive ``flock`` on the state
+        dir's ``.lock`` file orders every process that shares the dir.
+        Only the outermost holder takes the flock; the mutex is
+        re-entrant, but a second flock on a new fd in this process
+        would wait on the first forever."""
+        with self._mutex:
+            if self._lock_fd is not None:
+                yield
+                return
+            fd = os.open(
+                os.path.join(self.state_dir, ".lock"), os.O_RDWR | os.O_CREAT
+            )
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX)
+                self._lock_fd = fd
+                yield
+            finally:
+                self._lock_fd = None
+                os.close(fd)  # releases the flock
 
     # --- settings (settings/handlers.py:14-22) -----------------------------
 
@@ -185,7 +223,7 @@ class Engine:
         unknown = set(settings) - set(self.DEFAULT_SETTINGS)
         if unknown:
             raise ValueError(f"Unknown settings: {sorted(unknown)}")
-        with self._mutex:
+        with self._locked():
             merged = {**self._load("settings", {}), **settings}
             self._save("settings", merged)
         return self.get_settings()
@@ -204,7 +242,7 @@ class Engine:
         schema = candidate.validate(self.spark, kms=self.kms)
         if candidate.pins_schema:
             config = {**config, "Schema": schema.toDDL()}
-        with self._mutex:
+        with self._locked():
             mappers = self._load("data_mappers", {})
             others = [
                 self._mapper_from(mid, c)
@@ -254,7 +292,7 @@ class Engine:
         return _page(rows, "DataMapperId", start_at, page_size)
 
     def delete_data_mapper(self, mapper_id: str) -> None:
-        with self._mutex:
+        with self._locked():
             mappers = self._load("data_mappers", {})
             mappers.pop(mapper_id, None)
             self._save("data_mappers", mappers)
@@ -265,7 +303,7 @@ class Engine:
         """An engine-assigned DeletionQueueItemId whose text order is
         enqueue order: zero-padded epoch nanoseconds, moved past the last
         id this engine assigned, plus a random suffix so two processes
-        never assign the same id. Call under ``_mutex``."""
+        never assign the same id. Call under ``_locked``."""
         self._last_ns = max(time.time_ns(), self._last_ns + 1)
         return f"{self._last_ns:020d}-{uuid.uuid4().hex[:8]}"
 
@@ -274,7 +312,7 @@ class Engine:
         Each item gets an engine-assigned id (any DeletionQueueItemId the
         client sends is ignored, as in queue/handlers.py:164-180)."""
         parsed = [QueueItem.from_dict(m) for m in matches]  # validation
-        with self._mutex:
+        with self._locked():
             items = [
                 {
                     "DeletionQueueItemId": self._new_item_id(),
@@ -310,7 +348,7 @@ class Engine:
 
     def delete_matches(self, item_ids: list[str]) -> None:
         drop = set(item_ids)
-        with self._mutex:
+        with self._locked():
             queue = self._load("deletion_queue", [])
             self._save(
                 "deletion_queue",
@@ -392,7 +430,7 @@ class Engine:
         job_id = str(uuid.uuid4())
         # guard-check and QUEUED-doc save are one critical section: two
         # submitters must not both pass the guard before either persists
-        with self._mutex:
+        with self._locked():
             if self._running_job_exists():
                 raise AlreadyRunningError(
                     "There is already a job in progress"

@@ -293,3 +293,13 @@ def _assemble():
 
 
 QUERIES, ORACLES = _assemble()
+
+# Rows only the derived bench lanes time: their corpora (``documents_v2``)
+# exist only in derived scale dirs, so they are not in ``QUERIES`` or
+# the sweep.
+LANE_QUERIES = {"dedup_simhash_pairs_v2": dedup.q_dedup_simhash_pairs_v2}
+
+
+def query(name: str):
+    """The catalog query ``name``, a lane-only one included."""
+    return QUERIES[name] if name in QUERIES else LANE_QUERIES[name]

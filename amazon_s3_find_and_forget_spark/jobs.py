@@ -11,18 +11,22 @@ fold); the stats fold is a ``groupBy(Id).agg(sum(...))`` and the status
 fold a pure function. ``run_job`` folds each job's counters once, in
 process, with ``fold_counters``; ``api.Engine.process_queue``, the one
 deletion entry point, stores them with the ``fold_status`` fold. The
-``job_stats_fold`` catalog row runs ``fold_stats``.
+scanned-bytes statistic comes from Spark's own stage metrics
+(``spark_metrics``). The ``job_stats_fold`` catalog row runs
+``fold_stats``.
 """
 
 from __future__ import annotations
 
+import logging
 import time
 import uuid
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import spark_metrics
 
 # --- status state machine (parity: status_updater.py:19-51) ---------------
 
@@ -198,17 +202,23 @@ class JobResult:
     counters: dict = field(default_factory=dict)
 
 
-@contextmanager
-def _job_tag(sc, tag: str):
-    """Tag every Spark job this thread starts inside the block: the event
-    log records it as ``spark.job.tags`` and ``cancelJobsWithTag`` stops
-    the tagged work. Unlike ``setJobGroup`` it leaves the job description
-    alone, and tags nest."""
-    sc.addJobTag(tag)
+def _record_scanned_bytes(sc, job_id: str, query_event: dict) -> None:
+    """Put the input bytes of the job's Find phase on its final query
+    event as ``Statistics.DataScannedInBytes``, the reference's Athena
+    statistic (stats_updater.py:27-72), read from Spark's own stage
+    metrics. A failed read leaves the statistic out: the job runs on,
+    and its counter never holds a wrong number."""
     try:
-        yield
-    finally:
-        sc.removeJobTag(tag)
+        stages = spark_metrics.tagged_stages(sc, f"s3f2-job-{job_id}")
+    except Exception:  # noqa: BLE001
+        logging.getLogger(__name__).warning(
+            "job %s: Spark stage metrics unreadable, DataScannedInBytes "
+            "left out", job_id, exc_info=True,
+        )
+        return
+    query_event["EventData"]["Statistics"]["DataScannedInBytes"] = sum(
+        r["input_bytes"] for r in stages if "s3f2-phase-find" in r["tags"]
+    )
 
 
 def _refresh(spark: SparkSession, mapper) -> None:
@@ -269,8 +279,11 @@ def run_job(
        without inference, so a steady job over such mappers runs three
        Spark jobs: Find's shuffle map and collect, and Forget. Each attempt
        emits one ``QuerySucceeded``, ``QueryRetried`` or ``QueryFailed``
-       event naming all the ``DataMapperIds``. Past the retry budget the
-       job ends ``FIND_FAILED`` and no object has been rewritten.
+       event naming all the ``DataMapperIds``; the last one carries the
+       Find phase's input bytes as ``DataScannedInBytes``, read once
+       from Spark's stage metrics (``spark_metrics.tagged_stages``).
+       Past the retry budget the job ends ``FIND_FAILED`` and no object
+       has been rewritten.
     3. Forget: ONE dispatch (``forget_files``, its task count sized by
        the bytes) over the objects of every mapper, each rewritten with
        its own mapper's config, like the reference's single queue of
@@ -318,7 +331,7 @@ def run_job(
 
     sc = spark.sparkContext
     try:
-        with _job_tag(sc, f"s3f2-job-{job_id}"):
+        with spark_metrics.job_tag(sc, f"s3f2-job-{job_id}"):
             check_no_overlap(mappers)
             routed_mappers = [
                 (mapper, routed)
@@ -364,7 +377,7 @@ def run_job(
             query = {"DataMapperIds": [m.mapper_id for m, _ in routed_mappers]}
             # nothing routed: no query to run, nothing to forget
             found = None if reads else []
-            with _job_tag(sc, "s3f2-phase-find"):
+            with spark_metrics.job_tag(sc, "s3f2-phase-find"):
                 for attempt in range(query_max_retries + 1):
                     # bounded retry budget, the AthenaQueryMaxRetries analog
                     # (check_query_status.py:9-27 + state_machine.yaml:204-224);
@@ -398,6 +411,8 @@ def run_job(
                             "Statistics": {"EngineExecutionTimeInMillis": millis},
                         },
                     )
+            if reads:
+                _record_scanned_bytes(sc, job_id, events[-1])
             if found is None:
                 # fail fast: a Find failure past its retry budget abandons
                 # the job before any object is rewritten (parity:
@@ -431,7 +446,7 @@ def run_job(
                 )
                 for (mapper, _), (_, groups) in zip(routed_mappers, reads)
             ]
-            with _job_tag(sc, "s3f2-phase-forget"):
+            with spark_metrics.job_tag(sc, "s3f2-phase-forget"):
                 stats = forget_files(
                     spark,
                     [r[0] for r in found],

@@ -73,14 +73,8 @@ def _populated(df: DataFrame) -> DataFrame:
     binds at TWO branches once the subtree costs more than a
     scheduling round. The barrier costs one extra job (~0.1-0.2 s at
     gate scale) and removes O(branches - 1) recomputes of the most
-    expensive subtree in the plan.
-
-    ``os.environ['S3F2_LAZY_PERSIST']='1'`` restores the lazy behavior
-    (measurement escape hatch for A/B)."""
-    import os
-
-    if os.environ.get("S3F2_LAZY_PERSIST") != "1":
-        df.count()
+    expensive subtree in the plan."""
+    df.count()
     return df
 
 

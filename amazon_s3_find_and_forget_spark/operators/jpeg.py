@@ -12,14 +12,13 @@ Decoder: marker parse -> Huffman-decode MCUs -> dequantize -> de-zigzag
 BT.601 full-range YCbCr->RGB (the JFIF convention).
 
 Encoder (baseline, 4:4:4, Annex K tables scaled by quality): the exact
-inverse pipeline. Used for JPEG-in/JPEG-out resize and for round-trip
-tests; correctness of the decoder is additionally pinned against
+inverse pipeline, used for round-trip tests; correctness of the decoder is additionally pinned against
 hand-crafted spec-derived bitstreams in tests (not just the encoder's
 own output).
 
 Reference parity: the reference engine treats media as opaque bytes;
 this codec exists for the training-data-pipeline extension operators
-(feature extraction / resize over binary media columns).
+(feature extraction over binary media columns).
 """
 
 from __future__ import annotations

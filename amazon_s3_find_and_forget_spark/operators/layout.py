@@ -1,62 +1,15 @@
-"""Physical-layout helpers: bucketing and partitioned layouts.
+"""Physical-layout helpers: skew salting, compaction and Z-ordering.
 
-At 100 TB the dominant join cost is the shuffle of the fact table.
-Spark's bucketed tables persist a hash-partitioned layout so an
-equi-join on the bucket keys is *co-located*: both sides scan their
-matching buckets and join with NO Exchange in the plan. The engine's
-repeated-join relations (lineitem x orders for deletion auditing,
-embeddings x ivf_cell for ANN probes) are the candidates.
-
-These helpers are deliberately thin wrappers over the public
-``DataFrameWriter.bucketBy`` / ``partitionBy`` API — the value is the
-tested *plan shape* (see tests/test_layout.py), not the code.
+At 100 TB the layout decides the cost: a hot join key funnels through
+one reducer (``salted_join`` spreads it), erasure jobs leave thousands
+of small files (``compact_small_files`` bin-packs them), and a lake
+sorted on one column prunes nothing on the others (``write_zordered``
+clusters on several).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a bucketed (optionally sorted) catalog table.
-
-    Sorting within buckets additionally enables shuffle-AND-sort-free
-    sort-merge joins. ``n_buckets`` should be sized so one bucket of the
-    largest table fits an executor's memory at the target scale.
-    """
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
-
-
-def colocated_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: list[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Join two tables bucketed on the same keys/bucket-count.
-
-    When both sides are bucketed on ``on`` with equal bucket counts,
-    Catalyst's output-partitioning check elides both Exchanges — the
-    join runs bucket-to-bucket. The merge hint matters: at toy scale the
-    planner would otherwise pick a broadcast join and mark the buckets
-    unused ("Bucketed: false (disabled by query planner)"); at real
-    scale neither side broadcasts and sort-merge is what the planner
-    picks anyway — the hint makes the test rig exercise the scale plan.
-    """
-    return spark.table(left_table).join(
-        spark.table(right_table).hint("merge"), on, how
-    )
 
 
 def salted_join(
@@ -103,38 +56,6 @@ def salted_join(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
     return bigs.join(smalls, on + ["_salt"], how).drop("_salt")
-
-
-def salted_distinct_count(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase distinct count for skewed grouping keys.
-
-    A plain ``countDistinct`` under one hot group key funnels every
-    distinct value of that key through a single reducer. Salting by the
-    VALUE's hash splits the group across ``n_salts`` partitions —
-    correct because a value's salt is a function of the value, so each
-    distinct value is counted in exactly one partial — and the final
-    fold sums ``n_salts`` small rows per key. Partial (map-side)
-    aggregation applies to both phases.
-    """
-    from pyspark.sql import functions as F
-
-    partial = (
-        df.withColumn(
-            "_salt",
-            F.pmod(F.xxhash64(F.col(value_col)), F.lit(n_salts)).cast("int"),
-        )
-        .groupBy(*keys, "_salt")
-        .agg(F.count_distinct(F.col(value_col)).alias("_pc"))
-    )
-    return (
-        partial.groupBy(*keys)
-        .agg(F.sum("_pc").cast("long").alias("distinct_count"))
-    )
 
 
 def compact_small_files(

@@ -363,10 +363,3 @@ def parse_mp3(payload: bytes) -> list[Mp3Frame]:
         frames.append(frame)
         pos = frame.offset + frame.size
     return frames
-
-
-def mp3_duration_ms(payload: bytes) -> int:
-    frames = parse_mp3(payload)
-    return int(
-        sum(f.samples * 1000 / f.sample_rate for f in frames)
-    )

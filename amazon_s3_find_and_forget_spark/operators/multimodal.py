@@ -8,8 +8,7 @@ formats decodable with the standard library + numpy:
   rate / RMS / peak / zero-crossing / spectral-band features;
 - PPM/PGM (netpbm), BMP, PNG (stdlib zlib), GIF (variable-width LZW),
   and baseline JPEG (pure-numpy Huffman+IDCT codec, ``jpeg.py``): true
-  pixel decode -> dimension / channel-stat / histogram features, and a
-  real nearest-neighbor resize that re-encodes the payload;
+  pixel decode -> dimension / channel-stat / histogram features;
 - MP4 (ISO-BMFF) and MP3 containers (``media_containers.py``): real
   box-tree / frame-header parses -> true durations, bitrate stats, and
   per-frame byte ranges (frame_sample hashes the actual frame bytes
@@ -21,7 +20,7 @@ clearly-marked ``DETERMINISTIC_FAKE`` digest features so the distributed
 path stays testable end-to-end; set it False to fail loudly instead.
 
 Design: media rows are ``(media_id, kind, payload binary, meta struct)``.
-Decode / resize / frame-sample are ``mapInPandas`` stages: one Arrow
+Decode / frame-sample are ``mapInPandas`` stages: one Arrow
 batch in, one out, no driver involvement, scale = partition count. At
 100 TB the payload column stays opaque to Catalyst (never shuffled unless
 the transform needs it) and metadata predicates prune before decode.
@@ -541,20 +540,6 @@ def _decode_image(payload: bytes) -> np.ndarray:
     raise ValueError("not a supported raw image format")
 
 
-def _encode_pnm(arr: np.ndarray) -> bytes:
-    magic = b"P6" if arr.ndim == 3 else b"P5"
-    h, w = arr.shape[:2]
-    return magic + b"\n%d %d\n255\n" % (w, h) + arr.astype(np.uint8).tobytes()
-
-
-def _resize_nn(arr: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resample (pixel-center mapping)."""
-    h, w = arr.shape[:2]
-    rows = np.minimum(((np.arange(height) + 0.5) * h / height).astype(int), h - 1)
-    cols = np.minimum(((np.arange(width) + 0.5) * w / width).astype(int), w - 1)
-    return arr[rows][:, cols]
-
-
 def _image_features(payload: bytes) -> np.ndarray:
     """Real image features: dims + per-channel mean/std + 8-bin gray
     histogram (density)."""
@@ -671,62 +656,6 @@ def extract_features(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(batches, schema=FEATURE_SCHEMA)
-
-
-def resize_images(df: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
-    """Image resize: payload -> payload, metadata updated.
-
-    PPM/PGM/BMP/PNG/GIF/baseline-JPEG payloads take the REAL kernel —
-    decode, nearest-neighbor resample, re-encode — inside the Arrow
-    batch loop (JPEG re-encodes at quality 90). Externally-coded
-    formats (MP3/MP4 containers, progressive JPEG) fall back to the
-    deterministic fake tag, or raise when ``DETERMINISTIC_FAKE`` is
-    off. Either way the binary-in/binary-out shape is the same: the
-    payload column round-trips through ``mapInPandas`` untouched by
-    Catalyst, and the output schema carries the new dimensions.
-    """
-
-    def resize_one(p: bytes | None) -> bytes:
-        p = p if p is not None else b""
-        if _is_pnm(p):
-            return _encode_pnm(_resize_nn(_decode_pnm(p), width, height))
-        if _is_bmp(p):
-            return _encode_bmp(_resize_nn(_decode_bmp(p), width, height))
-        if _is_png(p):
-            return _encode_png(_resize_nn(_decode_png(p), width, height))
-        if _is_gif(p):
-            # NN-resample only re-uses input pixels, so the palette bound
-            # is preserved and the result re-encodes losslessly
-            return _encode_gif(_resize_nn(_decode_gif(p), width, height))
-        if jpeg.is_jpeg(p):
-            try:
-                resized = _resize_nn(jpeg.decode(p), width, height)
-                # 4:2:0 for color (the dominant wild-JPEG layout, ~half
-                # the bytes); grayscale encodes single-plane anyway
-                sub = "420" if resized.ndim == 3 else "444"
-                return jpeg.encode(resized, quality=90, subsampling=sub)
-            except ValueError:
-                if not DETERMINISTIC_FAKE:
-                    raise
-                return p + b"|resized:%dx%d" % (width, height)
-        if not DETERMINISTIC_FAKE:
-            raise NotImplementedError(
-                "non-netpbm resize requires codec libraries not present here"
-            )
-        # deterministic fake for externally-coded formats
-        return p + b"|resized:%dx%d" % (width, height)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            out["payload"] = [resize_one(p) for p in pdf["payload"]]
-            out["width"] = np.int32(width)
-            out["height"] = np.int32(height)
-            yield out
-
-    return df.where(F.col("kind") == "image").mapInPandas(
-        batches, schema=MEDIA_SCHEMA
-    )
 
 
 def frame_sample(df: DataFrame, every_ms: int = 1000) -> DataFrame:

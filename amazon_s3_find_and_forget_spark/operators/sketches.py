@@ -1,4 +1,4 @@
-"""Mergeable frequency sketches: Count-Min heavy hitters + freqItems.
+"""Mergeable frequency sketches: Count-Min heavy hitters.
 
 The third sketch family next to the HLL distinct-count and quantile
 gate rows (entry_queries q_events_distinct_sketch /
@@ -88,17 +88,3 @@ def count_min_check(
     return spark.createDataFrame(
         out, f"{col} {key_type}, n_exact long, cms_ok boolean"
     )
-
-
-def frequent_items(
-    df: DataFrame, cols: list[str], support: float = 0.01
-) -> dict[str, list]:
-    """Misra–Gries-style frequent items (no false negatives).
-
-    Thin seam over ``df.stat.freqItems``: every value with frequency
-    >= ``support`` is guaranteed present (false positives possible —
-    verify with an exact count of the returned candidates, which is
-    cheap because the candidate list is at most ``1/support`` long).
-    """
-    row = df.stat.freqItems(cols, support).head()
-    return {c: list(row[f"{c}_freqItems"]) for c in cols}

@@ -37,6 +37,7 @@ from __future__ import annotations
 from functools import reduce
 from operator import and_, or_
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -137,10 +138,15 @@ def _file_projection(df: DataFrame) -> list[Column]:
         ]
     # the path stays input_file_name()'s file:/// URI form (the one
     # events carry); _metadata.file_path spells it file:/
-    return [
-        F.input_file_name().alias(PATH_COL),
-        F.col("_metadata.file_size").alias(SIZE_COL),
-    ]
+    size = F.col("_metadata.file_size")
+    try:
+        df.metadataColumn("_metadata")
+    except AnalysisException:
+        # a view hides its scan's _metadata while input_file_name()
+        # resolves through it; Forget counts an unknown size as
+        # TASK_BYTES
+        size = F.lit(None).cast("long")
+    return [F.input_file_name().alias(PATH_COL), size.alias(SIZE_COL)]
 
 
 def find_affected_files(

@@ -15,10 +15,12 @@ import shutil
 import sys
 import tempfile
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from amazon_s3_find_and_forget_spark import entry_queries  # noqa: E402
+from amazon_s3_find_and_forget_spark import entry_queries, spark_metrics  # noqa: E402
+from amazon_s3_find_and_forget_spark.catalog import query  # noqa: E402
 from amazon_s3_find_and_forget_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -203,22 +205,23 @@ SF10_QUERIES = [
 #   stage's gram/feature work is corpus-linear, the cut is k-bounded).
 
 
-def _resolve_query(name: str):
-    """Catalog lookup plus the lane-only rows: queries over corpora
-    that exist only in derived scale dirs (``documents_v2``) are not in
-    the sweep registry — see catalog/dedup.py — but both derived lanes
-    time them."""
-    if name == "dedup_simhash_pairs_v2":
-        from amazon_s3_find_and_forget_spark.catalog.dedup import (
-            q_dedup_simhash_pairs_v2,
-        )
+def tagged_run(spark, thunk) -> tuple[object, float, dict]:
+    """Run ``thunk`` under a fresh Spark job tag: its result, its
+    seconds, and the stage-metric totals of the Spark jobs it ran
+    (``spark_metrics.totals``, read after the clock stops)."""
+    sc = spark.sparkContext
+    tag = f"bench-{uuid.uuid4().hex[:12]}"
+    with spark_metrics.job_tag(sc, tag):
+        start = time.perf_counter()
+        value = thunk()
+        elapsed = time.perf_counter() - start
+    stages = spark_metrics.tagged_stages(sc, tag)
+    return value, elapsed, spark_metrics.totals(stages)
 
-        return q_dedup_simhash_pairs_v2
-    return entry_queries.QUERIES[name]
 
-
-def bench_find_forget_job(spark, sf_dir: str = None) -> float:
-    """End-to-end deletion job over a 16-file copy of lineitem."""
+def bench_find_forget_job(spark, sf_dir: str = None) -> tuple[float, dict]:
+    """End-to-end deletion job over a 16-file copy of lineitem: its
+    seconds and the stage-metric totals of the job's Spark jobs."""
     from amazon_s3_find_and_forget_spark.data_mappers import DataMapper
     from amazon_s3_find_and_forget_spark.jobs import run_job
     from amazon_s3_find_and_forget_spark.matches import QueueItem
@@ -230,11 +233,11 @@ def bench_find_forget_job(spark, sf_dir: str = None) -> float:
         src.repartition(16).write.parquet(lake)
         mapper = DataMapper("lineitem", lake, ["l_orderkey"], format="parquet")
         items = [QueueItem(match_id=k) for k in entry_queries.MATCH_ORDERKEYS]
-        start = time.perf_counter()
-        result = run_job(spark, [mapper], items)
-        elapsed = time.perf_counter() - start
+        result, elapsed, stages = tagged_run(
+            spark, lambda: run_job(spark, [mapper], items)
+        )
         assert result.status == "COMPLETED", result.status
-        return elapsed
+        return elapsed, stages
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -245,17 +248,21 @@ def run_suite(
     runs: int,
     label: str,
     queries: list[str] = BENCH_QUERIES,
-) -> dict[str, float]:
-    """Min-of-``runs`` per query over one sf dir (one lane)."""
+) -> tuple[dict[str, float], dict[str, dict]]:
+    """Min-of-``runs`` per query over one sf dir (one lane): the
+    seconds per row, and the stage-metric totals of each row's
+    fastest run."""
     timings: dict[str, float] = {}
+    stages: dict[str, dict] = {}
     for name in queries:
-        fn = _resolve_query(name)
+        fn = query(name)
         best, n = None, 0
         for _ in range(runs):
-            start = time.perf_counter()
-            n = fn(spark, sf_dir).count()
-            elapsed = time.perf_counter() - start
-            best = elapsed if best is None else min(best, elapsed)
+            n, elapsed, totals = tagged_run(
+                spark, lambda: fn(spark, sf_dir).count()
+            )
+            if best is None or elapsed < best:
+                best, stages[name] = elapsed, totals
         timings[name] = round(best, 3)
         print(f"# [{label}] {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
         # drop caches a query persisted so queries don't interfere
@@ -271,14 +278,16 @@ def run_suite(
         _gc.collect()
         spark.sparkContext._jvm.System.gc()
 
-    timings["find_forget_job"] = round(
-        min(bench_find_forget_job(spark, sf_dir) for _ in range(runs)), 3
+    best, stages["find_forget_job"] = min(
+        (bench_find_forget_job(spark, sf_dir) for _ in range(runs)),
+        key=lambda run: run[0],
     )
+    timings["find_forget_job"] = round(best, 3)
     print(
         f"# [{label}] find_forget_job: {timings['find_forget_job']}s",
         file=sys.stderr,
     )
-    return timings
+    return timings, stages
 
 
 CAL_WORKLOAD = "range150m-xxhash64-xoragg-mod65536-p32-v1"
@@ -468,7 +477,7 @@ def main():
     RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     cal = calibration_probe(spark, RUNS)
     print(f"# calibration probe: {cal}s ({CAL_WORKLOAD})", file=sys.stderr)
-    timings = run_suite(spark, SF_DIR, RUNS, f"sf{sf}")
+    timings, stages = run_suite(spark, SF_DIR, RUNS, f"sf{sf}")
     total = round(sum(timings.values()), 3)
 
     out = {
@@ -476,6 +485,9 @@ def main():
         "value": total,
         "unit": "sec",
         "queries": timings,
+        # per row: executor CPU, tasks, input, shuffle and spill bytes
+        # of its fastest run (spark_metrics.totals)
+        "spark": stages,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "calibration": {"value": cal, "workload": CAL_WORKLOAD},
         "calibration_io": io_probe(),
@@ -490,8 +502,12 @@ def main():
     # shuffle-bound scaling regressions are measured per round, not once
     sf1_dir = ensure_sf1(SF_DIR)
     if sf1_dir:
-        sf1 = run_suite(spark, sf1_dir, RUNS, "sf1", SF1_QUERIES)
-        out["sf1"] = {"value": round(sum(sf1.values()), 3), "queries": sf1}
+        sf1, sf1_stages = run_suite(spark, sf1_dir, RUNS, "sf1", SF1_QUERIES)
+        out["sf1"] = {
+            "value": round(sum(sf1.values()), 3),
+            "queries": sf1,
+            "spark": sf1_stages,
+        }
         # Claim soak at lane scale (round 14, r13 verdict ask #5): the
         # v4 corpora carry a class-conditional vocabulary shift, so the
         # classifier's AUC/calibration/tilt/kept booleans must hold at
@@ -522,6 +538,7 @@ def main():
     if sf10_dir:
         SF10_RERUN_UNDER = 60.0
         sf10: dict[str, float] = {}
+        sf10_stages: dict[str, dict] = {}
         sf10_spread: dict[str, list[float]] = {}
         sf10_errors: dict[str, str] = {}
 
@@ -571,13 +588,17 @@ def main():
         SF10_SPREAD_THIRD = 1.25
 
         def sf10_run(name, thunk):
-            # ``thunk`` runs the row once and returns its own seconds; a
-            # lane query failing (the likeliest break at a new scale)
-            # must cost its own number, not the whole BENCH record
+            # ``thunk`` runs the row once and returns its own seconds and
+            # stage totals; a lane query failing (the likeliest break at
+            # a new scale) must cost its own number, not the whole BENCH
+            # record
             runs: list[float] = []
             try:
                 while True:
-                    runs.append(round(thunk(), 3))
+                    elapsed, totals = thunk()
+                    if not runs or elapsed < min(runs):
+                        sf10_stages[name] = totals
+                    runs.append(round(elapsed, 3))
                     _lane_gc()
                     if not sf10_should_retry(
                         name,
@@ -600,12 +621,13 @@ def main():
                 _lane_gc()
 
         def timed_count(fn):
-            start = time.perf_counter()
-            fn(spark, sf10_dir).count()
-            return time.perf_counter() - start
+            _, elapsed, totals = tagged_run(
+                spark, lambda: fn(spark, sf10_dir).count()
+            )
+            return elapsed, totals
 
         for name in SF10_QUERIES:
-            fn = _resolve_query(name)
+            fn = query(name)
             sf10_run(name, lambda f=fn: timed_count(f))
         # find_forget_job times itself: its lake setup is excluded
         sf10_run(
@@ -614,6 +636,7 @@ def main():
         out["sf10"] = {
             "value": round(sum(sf10.values()), 3),
             "queries": sf10,
+            "spark": sf10_stages,
             # actual per-row sample counts (r16 ADVICE: the old
             # hardcoded 2 misdescribed watched/spread-tripled rows)
             "runs": {q: len(r) for q, r in sf10_spread.items()},

@@ -18,7 +18,7 @@ def spark():
         cpus=4,
         extra_conf={
             "spark.driver.memory": "4g",
-            # bucketed-table tests must not write into the repo
+            # catalog tables (manifest tables) must not land in the repo
             "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="s3f2-wh-"),
         },
     )

@@ -7,6 +7,7 @@ import uuid
 
 import pytest
 
+from amazon_s3_find_and_forget_spark import spark_metrics
 from amazon_s3_find_and_forget_spark.api import (
     AlreadyRunningError,
     Engine,
@@ -93,6 +94,16 @@ def test_process_queue_end_to_end(engine, spark, lake):
     found = [e for e in job["Events"] if e["EventName"] == "QuerySucceeded"]
     assert found[0]["EventData"]["Statistics"]["EngineExecutionTimeInMillis"] > 0
     assert job["TotalQueryTimeInMillis"] > 0
+    # ... and so do the input bytes of its Find phase
+    stages = spark_metrics.tagged_stages(
+        spark.sparkContext, f"s3f2-job-{job['Id']}"
+    )
+    find_bytes = sum(
+        r["input_bytes"] for r in stages if "s3f2-phase-find" in r["tags"]
+    )
+    assert find_bytes > 0
+    assert found[0]["EventData"]["Statistics"]["DataScannedInBytes"] == find_bytes
+    assert job["TotalQueryScannedInBytes"] == find_bytes
 
 
 def test_single_job_guard(engine, spark, lake, tmp_path):
@@ -757,6 +768,38 @@ def test_concurrent_enqueues_keep_id_order_and_file_order(tmp_path):
     assert len(ids) == 200 and ids == sorted(set(ids))
 
 
+def test_enqueues_from_two_processes_lose_no_item(tmp_path):
+    """Two processes share one state dir: every read-modify-write of the
+    queue holds the dir's file lock and saves through its own temp file,
+    so 2 x 200 enqueues leave 400 items."""
+    import subprocess
+    import sys
+
+    state = str(tmp_path / "state")
+    script = (
+        "import sys\n"
+        "from amazon_s3_find_and_forget_spark.api import Engine\n"
+        "engine = Engine(lambda: None, sys.argv[1])\n"
+        "for i in range(200):\n"
+        "    engine.enqueue_matches([{'MatchId': f'{sys.argv[2]}-{i}'}])\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", script, state, tag],
+            cwd=root,
+            stderr=subprocess.PIPE,
+        )
+        for tag in ("a", "b")
+    ]
+    errors = [p.communicate(timeout=120)[1] for p in procs]
+    assert [p.returncode for p in procs] == [0, 0], errors
+    queue = Engine(_unused_session, state)._load("deletion_queue", [])
+    assert len(queue) == 400
+    assert len({it["DeletionQueueItemId"] for it in queue}) == 400
+    assert sorted(os.listdir(state)) == [".lock", "deletion_queue.json", "jobs"]
+
+
 def test_state_dir_uri_is_refused(tmp_path, monkeypatch):
     """State is read and written with os/open on the driver, so a URI
     state dir is refused instead of becoming a local ``s3:`` directory."""
@@ -840,14 +883,10 @@ def test_steady_job_runs_three_spark_jobs_and_compiles_nothing(
         pq.write_table(pa.table({"id": ids}), str(lake / f"p{k}.parquet"))
     sc = spark.sparkContext
     codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    store = sc._jsc.sc().statusStore()
 
     def spark_jobs(job_id):
-        tag = f"s3f2-job-{job_id}"
-        jobs = store.jobsList(None)  # a Scala Seq of JobData
-        return sum(
-            jobs.apply(i).jobTags().contains(tag) for i in range(jobs.size())
-        )
+        rows = spark_metrics.tagged_stages(sc, f"s3f2-job-{job_id}")
+        return spark_metrics.totals(rows)["spark_jobs"]
 
     engine.put_data_mapper("ids", {"Location": str(lake), "Columns": ["id"]})
     engine.enqueue_matches([{"MatchId": 1}, {"MatchId": 3}])

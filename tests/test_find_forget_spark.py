@@ -10,6 +10,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from amazon_s3_find_and_forget_spark import spark_metrics
 from amazon_s3_find_and_forget_spark.data_mappers import DataMapper, check_no_overlap
 from amazon_s3_find_and_forget_spark.jobs import (
     fold_stats,
@@ -132,6 +133,15 @@ def test_end_to_end_job(spark, lake):
 
     assert result.status == "COMPLETED"
     assert sum(s[3] for s in result.file_stats) == victims
+    # the scanned-bytes counter is the input bytes of the Find phase
+    stages = spark_metrics.tagged_stages(
+        spark.sparkContext, f"s3f2-job-{result.job_id}"
+    )
+    find_bytes = sum(
+        r["input_bytes"] for r in stages if "s3f2-phase-find" in r["tags"]
+    )
+    assert find_bytes > 0
+    assert result.counters["TotalQueryScannedInBytes"] == find_bytes
     spark.catalog.clearCache()
     after = spark.read.parquet(lake)
     assert after.count() == before - victims

@@ -199,25 +199,6 @@ def test_multimodal_routes_jpeg_through_real_decoder():
     assert not np.allclose(feats, stub)
 
 
-def test_multimodal_resize_reencodes_jpeg():
-    from amazon_s3_find_and_forget_spark.operators import multimodal
-
-    rng = np.random.default_rng(4)
-    img = rng.integers(0, 256, (64, 48, 3), dtype=np.uint8)
-    payload = jpeg.encode(img, 90)
-    # drive the kernel directly (the Spark-side mapInPandas shape is
-    # covered by test_operators' multimodal tests)
-    resized = None
-    for p in [payload]:
-        if jpeg.is_jpeg(p):
-            resized = jpeg.encode(
-                multimodal._resize_nn(jpeg.decode(p), 16, 12), quality=90
-            )
-    assert jpeg.is_jpeg(resized)
-    out = jpeg.decode(resized)
-    assert out.shape == (12, 16, 3)
-
-
 def test_decoder_survives_corruption_fuzz():
     """300 corrupted variants (truncation, byte flips, splices) must all
     either decode or raise ValueError — never hang, never leak raw

@@ -1,10 +1,6 @@
-"""Bucketed layouts produce shuffle-free co-located joins (plan-shape)."""
+"""Layout helpers: salted joins, small-file compaction, Z-ordering."""
 
 import os
-
-import pytest
-
-from amazon_s3_find_and_forget_spark.operators import layout
 
 
 def explain_str(df, mode="formatted"):
@@ -13,40 +9,13 @@ def explain_str(df, mode="formatted"):
     )
 
 
-@pytest.fixture(scope="module")
-def bucketed(spark, sf_dir):
-    # tables land in the session's warehouse dir (a tempdir, see conftest)
-    for name in ("lineitem", "orders"):
-        spark.sql(f"DROP TABLE IF EXISTS b_{name}")
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        if name == "lineitem":
-            df = df.withColumnRenamed("l_orderkey", "orderkey")
-        else:
-            df = df.withColumnRenamed("o_orderkey", "orderkey")
-        # one shuffle now (at write), zero at every subsequent join
-        layout.write_bucketed(
-            df.repartition(4), f"b_{name}", ["orderkey"], n_buckets=4
-        )
-    yield
-    for name in ("lineitem", "orders"):
-        spark.sql(f"DROP TABLE IF EXISTS b_{name}")
-
-
-def test_bucketed_join_has_no_exchange(spark, bucketed):
-    joined = layout.colocated_join(spark, "b_lineitem", "b_orders", ["orderkey"])
-    plan = explain_str(joined)
-    join_section = plan.split("== Physical Plan ==")[1]
-    assert "Exchange" not in join_section, join_section
-    assert joined.count() > 0
-
-
 def test_unbucketed_join_does_exchange(spark, sf_dir):
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).hint(
         "shuffle_merge"
     )
     plan = explain_str(li.join(o, li.l_orderkey == o.o_orderkey))
-    assert "Exchange" in plan  # the baseline the bucketing removes
+    assert "Exchange" in plan  # a sort-merge join of plain scans shuffles
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -82,28 +51,6 @@ def test_salted_join_matches_plain_join(spark):
 
     with _pytest.raises(ValueError):
         salted_join(big, small, ["k"], how="full")
-
-
-def test_salted_distinct_count_matches_plain(spark):
-    from pyspark.sql import functions as F
-
-    from amazon_s3_find_and_forget_spark.operators.layout import (
-        salted_distinct_count,
-    )
-
-    df = spark.createDataFrame(
-        [("hot", i % 37) for i in range(500)] + [("cold", i) for i in range(5)],
-        "k string, v long",
-    )
-    got = {
-        r.k: r.distinct_count
-        for r in salted_distinct_count(df, ["k"], "v", n_salts=8).collect()
-    }
-    want = {
-        r.k: r.dc
-        for r in df.groupBy("k").agg(F.count_distinct("v").alias("dc")).collect()
-    }
-    assert got == want
 
 
 def test_compact_small_files_preserves_rows(spark, tmp_path):

@@ -475,20 +475,6 @@ def test_ivf_cell_assignment_partitions_corpus(embs):
     assert len(counts) > 1  # corpus actually spreads over cells
 
 
-def test_resize_images_plumbing(spark):
-    from amazon_s3_find_and_forget_spark.operators import multimodal
-
-    rows = [
-        (1, "image", b"imgbytes", "image/png", 640, 480, None),
-        (2, "video", b"vid", "video/mp4", None, None, 5000),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = multimodal.resize_images(df, width=64, height=64).collect()
-    assert len(out) == 1  # only images pass through
-    assert out[0].width == 64 and out[0].height == 64
-    assert bytes(out[0].payload).endswith(b"|resized:64x64")
-
-
 def test_asof_join_basic(spark):
     from datetime import datetime
 
@@ -712,8 +698,7 @@ def test_real_wav_decode_features(spark):
 
 
 def test_real_ppm_decode_and_resize(spark):
-    """PPM payloads get real pixel features and a real nearest-neighbor
-    resize whose output re-decodes to the target dims."""
+    """PPM payloads get real pixel features."""
     rng = np.random.RandomState(3)
     img = rng.randint(0, 256, size=(10, 8, 3), dtype=np.uint8)
     payload = _ppm_bytes(img)
@@ -723,14 +708,6 @@ def test_real_ppm_decode_and_resize(spark):
     )
     feat = multimodal.extract_features(df).collect()[0].feature
     assert abs(feat[2] - img[..., 0].mean() / 255.0) < 1e-3  # mean R channel
-
-    out = multimodal.resize_images(df, width=4, height=5).collect()[0]
-    assert (out.width, out.height) == (4, 5)
-    resized = multimodal._decode_pnm(bytes(out.payload))
-    assert resized.shape == (5, 4, 3)
-    # nearest-neighbor: every output pixel is an input pixel
-    flat_in = {tuple(px) for px in img.reshape(-1, 3)}
-    assert all(tuple(px) in flat_in for px in resized.reshape(-1, 3))
 
 
 def test_stereo_wav_downmix():
@@ -868,8 +845,7 @@ def test_stratified_sample_exact_counts_deterministic(spark):
 def test_real_bmp_roundtrip_features_and_resize(spark):
     """Uncompressed BMP payloads take the real codec: encode/decode
     round-trips pixels exactly (incl. bottom-up rows and 4-byte row
-    padding), features reflect real channel stats, and resize re-encodes
-    a BMP whose pixels all come from the input."""
+    padding), and features reflect real channel stats."""
     rng = np.random.RandomState(7)
     img = rng.randint(0, 256, size=(9, 7, 3), dtype=np.uint8)  # odd stride
     payload = multimodal._encode_bmp(img)
@@ -882,12 +858,6 @@ def test_real_bmp_roundtrip_features_and_resize(spark):
     )
     feat = multimodal.extract_features(df).collect()[0].feature
     assert abs(feat[2] - img[..., 0].mean() / 255.0) < 1e-3
-
-    out = multimodal.resize_images(df, width=3, height=4).collect()[0]
-    resized = multimodal._decode_bmp(bytes(out.payload))
-    assert resized.shape == (4, 3, 3)
-    flat_in = {tuple(px) for px in img.reshape(-1, 3)}
-    assert all(tuple(px) in flat_in for px in resized.reshape(-1, 3))
 
 
 def test_bmp_8bit_palette_decode():
@@ -1053,7 +1023,7 @@ def _png_with_filters(img):
 def test_real_png_all_filters_roundtrip_and_pipeline(spark):
     """The stdlib-zlib PNG codec: decoding recovers exact pixels through
     every scanline filter type, our own encoder round-trips, and the
-    Spark feature/resize paths treat PNG as a real format."""
+    Spark feature path treats PNG as a real format."""
     rng = np.random.RandomState(11)
     img = rng.randint(0, 256, size=(7, 5, 3), dtype=np.uint8)
     assert np.array_equal(multimodal._decode_png(_png_with_filters(img)), img)
@@ -1072,15 +1042,12 @@ def test_real_png_all_filters_roundtrip_and_pipeline(spark):
     )
     feat = multimodal.extract_features(df).collect()[0].feature
     assert abs(feat[2] - img[..., 0].mean() / 255.0) < 1e-3
-    out = multimodal.resize_images(df, width=3, height=2).collect()[0]
-    resized = multimodal._decode_png(bytes(out.payload))
-    assert resized.shape == (2, 3, 3)
 
 
 def test_real_gif_lzw_roundtrip_and_pipeline(spark):
     """GIF codec: LZW encode/decode round-trips pixels losslessly,
     including code-width growth and multi-sub-block data; the Spark
-    feature and resize paths treat GIF as a real format."""
+    feature path treats GIF as a real format."""
     rng = np.random.RandomState(13)
     # ~200 distinct colors over a 80x60 image: the LZW table grows
     # through several code widths and the data spans many sub-blocks
@@ -1103,11 +1070,6 @@ def test_real_gif_lzw_roundtrip_and_pipeline(spark):
     )
     feat = multimodal.extract_features(df).collect()[0].feature
     assert abs(feat[2] - img[..., 0].mean() / 255.0) < 1e-3
-    out = multimodal.resize_images(df, width=8, height=6).collect()[0]
-    resized = multimodal._decode_gif(bytes(out.payload))
-    assert resized.shape == (6, 8, 3)
-    flat_in = {tuple(px) for px in img.reshape(-1, 3)}
-    assert all(tuple(px) in flat_in for px in resized.reshape(-1, 3))
 
 
 def test_semantic_dedup_survivors(spark):
@@ -1907,16 +1869,6 @@ def test_count_min_check_bounds_hold(spark):
     assert set(rows) == {"a", "b", "c"}  # nulls excluded
     assert rows["a"]["n_exact"] == 100
     assert all(r["cms_ok"] for r in out)
-
-
-def test_frequent_items_no_false_negatives(spark):
-    from amazon_s3_find_and_forget_spark.operators import sketches
-
-    df = spark.createDataFrame(
-        [("hot",)] * 90 + [(f"cold{i}",) for i in range(10)], "k string"
-    )
-    items = sketches.frequent_items(df, ["k"], support=0.5)["k"]
-    assert "hot" in items
 
 
 def test_count_min_check_non_string_key(spark):

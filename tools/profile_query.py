@@ -1,39 +1,55 @@
-"""Round-17 optimization harness: per-query plan capture + timing.
+"""Per-query timing, plan capture and Spark stage metrics.
 
 Usage:
     python tools/profile_query.py [--sf DIR] [--runs N] [--plans-out DIR]
-                                  [--tag TAG] query [query ...]
+                                  [--tag TAG] [--conf K=V ...]
+                                  query [query ...]
 
-For each catalog query (resolved like bench.py, including the lane-only
-``dedup_simhash_pairs_v2``): capture ``explain('formatted')`` of the
-returned DataFrame to ``<plans-out>/<query>_<tag>.txt`` (when
+For each catalog query (``catalog.query``, the lane-only
+``dedup_simhash_pairs_v2`` included): capture ``explain('formatted')``
+of the returned DataFrame to ``<plans-out>/<query>_<tag>.txt`` (when
 ``--plans-out`` is given) and time ``.count()`` min-of-``runs`` with the
-exact bench methodology (same session shape, same clearCache + GC
-between queries). Prints one JSON line with the timings so A/B runs are
+bench methodology (same session shape, same clearCache + GC between
+runs). Each run is read back through ``spark_metrics.tagged_stages``:
+the stages of the fastest run print to stderr, one line each, and their
+totals (executor CPU, tasks, input, shuffle and spill bytes) join the
+query's timings in the one JSON line on stdout, so A/B runs are
 machine-comparable.
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from amazon_s3_find_and_forget_spark import entry_queries  # noqa: E402
+from amazon_s3_find_and_forget_spark import entry_queries, spark_metrics  # noqa: E402
+from amazon_s3_find_and_forget_spark.catalog import query  # noqa: E402
 from amazon_s3_find_and_forget_spark.session import get_spark  # noqa: E402
 
 
-def _resolve(name: str):
-    if name == "dedup_simhash_pairs_v2":
-        from amazon_s3_find_and_forget_spark.catalog.dedup import (
-            q_dedup_simhash_pairs_v2,
-        )
+def _release(spark) -> None:
+    """Drop what a run persisted before the next one starts."""
+    spark.catalog.clearCache()
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
 
-        return q_dedup_simhash_pairs_v2
-    return entry_queries.QUERIES[name]
+
+def _stage_line(r: dict) -> str:
+    mib = lambda b: f"{b / (1 << 20):8.1f}M"  # noqa: E731
+    return (
+        f"  job {r['job_id']:4} stage {r['stage_id']:4} {r['status']:8} "
+        f"tasks={r['tasks']:4} cpu={r['executor_cpu_s']:7.2f}s "
+        f"run={r['executor_run_s']:7.2f}s gc={r['gc_s']:6.2f}s "
+        f"in={mib(r['input_bytes'])} shR={mib(r['shuffle_read_bytes'])} "
+        f"shW={mib(r['shuffle_write_bytes'])} spill={mib(r['spill_bytes'])} "
+        f"{r['name'][:60]}"
+    )
 
 
 def main() -> None:
@@ -64,6 +80,7 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(app_name="s3f2-profile", cpus=cpus,
                       extra_conf=extra_conf or None)
+    sc = spark.sparkContext
     # bench-identical warm-up
     entry_queries.load(spark, sf_dir, "region").count()
     from pyspark.sql.functions import col, pandas_udf
@@ -73,8 +90,8 @@ def main() -> None:
 
     out: dict[str, dict] = {}
     for name in names:
-        fn = _resolve(name)
-        spark.sparkContext.setJobDescription(f"profile:{name}")
+        fn = query(name)
+        sc.setJobDescription(f"profile:{name}")
         if plans_out:
             os.makedirs(plans_out, exist_ok=True)
             df = fn(spark, sf_dir)
@@ -83,26 +100,28 @@ def main() -> None:
             )
             with open(os.path.join(plans_out, f"{name}_{tag}.txt"), "w") as f:
                 f.write(plan)
-            spark.catalog.clearCache()
-            import gc as _gc
-
-            _gc.collect()
-            spark.sparkContext._jvm.System.gc()
-        samples = []
-        n = 0
+            _release(spark)
+        samples, best, n = [], None, 0
         for _ in range(runs):
-            start = time.perf_counter()
-            n = fn(spark, sf_dir).count()
-            samples.append(round(time.perf_counter() - start, 3))
-            spark.catalog.clearCache()
-            import gc as _gc
-
-            _gc.collect()
-            spark.sparkContext._jvm.System.gc()
-        out[name] = {"min": min(samples), "spread": samples, "rows": n}
+            run_tag = f"profile-{uuid.uuid4().hex[:12]}"
+            with spark_metrics.job_tag(sc, run_tag):
+                start = time.perf_counter()
+                n = fn(spark, sf_dir).count()
+                samples.append(round(time.perf_counter() - start, 3))
+            if best is None or samples[-1] < min(samples[:-1]):
+                best = spark_metrics.tagged_stages(sc, run_tag)
+            _release(spark)
+        out[name] = {
+            "min": min(samples),
+            "spread": samples,
+            "rows": n,
+            "spark": spark_metrics.totals(best),
+        }
         print(f"# {name}: {min(samples)}s {samples} ({n} rows)",
               file=sys.stderr)
-        spark.sparkContext.setJobDescription(None)
+        for r in best:
+            print(_stage_line(r), file=sys.stderr)
+        sc.setJobDescription(None)
     print(json.dumps({"sf_dir": sf_dir, "runs": runs, "queries": out}))
 
 
