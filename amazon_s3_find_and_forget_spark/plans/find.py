@@ -58,7 +58,12 @@ MAPPER_COL = "mapper"
 def group_predicate(group: ColumnGroup) -> Column:
     """Compile a column group's match set to a boolean Column (P7/P8)."""
     if not group.composite:
-        return F.col(group.columns[0]).isin(group.values)
+        # Catalyst plans a one-value In as ``=`` with the value inlined in
+        # the generated code, so each id would compile new code; a NULL
+        # second value keeps it an In (an InSet in the Find clone) and
+        # matches no row
+        values = list(group.values) + [None] * (len(set(group.values)) == 1)
+        return F.col(group.columns[0]).isin(values)
     per_tuple = [
         reduce(
             and_,

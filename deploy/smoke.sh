@@ -21,7 +21,25 @@ cp "$SF_DIR/lineitem.parquet" "$WORK/lake/lineitem.parquet"
 # The two spark-submit runs see only the --py-files zip: PYTHONPATH is
 # unset and the working directory is outside the checkout, as on a
 # cluster, so a module that only the checkout provides fails here.
-SUBMIT=(env -u PYTHONPATH "${SPARK_SUBMIT:-spark-submit}")
+# Both submits start their JVM from the class-data archive that a local
+# session records (session.get_spark) and under -Xshare:on, so they fail
+# if the JVM cannot map it; with no archive yet, a one-core session
+# records one. The archive was recorded with the empty conf dir beside it.
+ARCHIVE_OF='from amazon_s3_find_and_forget_spark.session import class_data_archive
+print(class_data_archive() or "")'
+ARCHIVE="$(python3 -c "$ARCHIVE_OF")"
+if [ -z "$ARCHIVE" ]; then
+    python3 -c 'from amazon_s3_find_and_forget_spark.session import get_spark
+get_spark(cpus=1).stop()' >>"$WORK/submit.log" 2>&1
+    ARCHIVE="$(python3 -c "$ARCHIVE_OF")"
+fi
+if [ -z "$ARCHIVE" ]; then
+    echo "SMOKE FAIL: no class-data archive was recorded" >&2
+    exit 1
+fi
+SUBMIT=(env -u PYTHONPATH SPARK_CONF_DIR="$(dirname "$ARCHIVE")/conf"
+    "${SPARK_SUBMIT:-spark-submit}"
+    --driver-java-options "-XX:SharedArchiveFile=$ARCHIVE -Xshare:on")
 OUT="$(cd "$WORK" && "${SUBMIT[@]}" \
     --master "local[4]" \
     --conf spark.sql.shuffle.partitions=4 \

@@ -1,6 +1,7 @@
 """Control-plane facade: data mapper CRUD + validation, queue CRUD,
 process with single-job guard, job/event listing, match-id redaction."""
 
+import json
 import os
 import shutil
 import uuid
@@ -800,6 +801,55 @@ def test_enqueues_from_two_processes_lose_no_item(tmp_path):
     assert sorted(os.listdir(state)) == [".lock", "deletion_queue.json", "jobs"]
 
 
+def test_two_concurrent_process_calls_start_one_job(engine, tmp_path):
+    """Two processes run the CLI's ``process`` on one state dir at the
+    same moment. The guard check and the QUEUED save are one critical
+    section under the dir's file lock, so one job document is created,
+    the other call stops at the single-job guard before it starts Spark,
+    and the one job consumes every queue item."""
+    import subprocess
+    import sys
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    lake = tmp_path / "ids"
+    lake.mkdir()
+    for k in range(2):
+        ids = pa.array(range(k * 100, (k + 1) * 100), pa.int64())
+        pq.write_table(pa.table({"id": ids}), str(lake / f"p{k}.parquet"))
+    engine.put_data_mapper("ids", {"Location": str(lake), "Columns": ["id"]})
+    engine.enqueue_matches([{"MatchId": 7}, {"MatchId": 107}])
+    script = (
+        "import sys, time\n"
+        "from amazon_s3_find_and_forget_spark.cli import main\n"
+        "time.sleep(max(0.0, float(sys.argv[2]) - time.time()))\n"
+        "sys.exit(main(['--state-dir', sys.argv[1], '--cpus', '2', 'process']))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g", PYSPARK_PYTHON=sys.executable)
+    start = str(time.time() + 5)  # both have imported the CLI by then
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", script, engine.state_dir, start],
+            cwd=root, env=env, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+        )
+        for _ in range(2)
+    ]
+    outs = [p.communicate(timeout=300) for p in procs]
+    codes = sorted(p.returncode for p in procs)
+    assert codes[0] == 0 and codes[1] != 0, [err[-2000:] for _, err in outs]
+    (refused,) = [err for p, (_, err) in zip(procs, outs) if p.returncode]
+    assert b"There is already a job in progress" in refused
+    (done,) = [json.loads(out) for p, (out, _) in zip(procs, outs) if not p.returncode]
+    assert os.listdir(os.path.join(engine.state_dir, "jobs")) == [done["Id"] + ".json"]
+    assert done["JobStatus"] == "COMPLETED"
+    assert done["DeletionQueueSize"] == 2
+    assert done["TotalObjectUpdatedCount"] == 2
+    assert engine.list_queue_page()[0] == []
+
+
 def test_state_dir_uri_is_refused(tmp_path, monkeypatch):
     """State is read and written with os/open on the driver, so a URI
     state dir is refused instead of becoming a local ``s3:`` directory."""
@@ -864,15 +914,24 @@ def test_list_jobs_pages_through_ties_of_its_boundary_second(engine):
     assert sorted(j["Id"] for j in page) == ["j0", "j1"] and start == 5
 
 
-@pytest.mark.parametrize("id_type", ["int64", "int32"])
+@pytest.mark.parametrize(
+    "id_type, warm, steady",
+    [
+        pytest.param("int64", [1, 3], [5, 105, 107, 399], id="int64"),
+        pytest.param("int32", [1, 3], [5, 105, 107, 399], id="int32"),
+        pytest.param("int64", [1], [105], id="int64-one-id"),
+    ],
+)
 def test_steady_job_runs_three_spark_jobs_and_compiles_nothing(
-    engine, spark, tmp_path, id_type
+    engine, spark, tmp_path, id_type, warm, steady
 ):
     """After one warm-up job, a Parquet-only job reads its pinned schema
     without a Spark job, runs Find as one shuffle (2 Spark jobs) and
     Forget as one, and its InSet match sets reuse the generated code of
     the job before, so it adds no Janino compile. An int column is the
-    case where InSet would otherwise inline its values into a switch."""
+    case where InSet would otherwise inline its values into a switch;
+    a one-id job is the case where Catalyst would plan ``=`` with the
+    id inlined."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -889,14 +948,42 @@ def test_steady_job_runs_three_spark_jobs_and_compiles_nothing(
         return spark_metrics.totals(rows)["spark_jobs"]
 
     engine.put_data_mapper("ids", {"Location": str(lake), "Columns": ["id"]})
-    engine.enqueue_matches([{"MatchId": 1}, {"MatchId": 3}])
+    engine.enqueue_matches([{"MatchId": m} for m in warm])
     assert engine.process_queue()["JobStatus"] == "COMPLETED"
     compiles = codegen.METRIC_COMPILATION_TIME().getCount()
-    engine.enqueue_matches([{"MatchId": m} for m in (5, 105, 107, 399)])
+    engine.enqueue_matches([{"MatchId": m} for m in steady])
     job = engine.process_queue()
     assert job["JobStatus"] == "COMPLETED"
-    assert job["TotalObjectUpdatedCount"] == 3
+    assert job["TotalObjectUpdatedCount"] == len({m // 100 for m in steady})
     assert spark_jobs(job["Id"]) == 3
     assert codegen.METRIC_COMPILATION_TIME().getCount() == compiles
     # the InSet confs live on the job's session clone only
     assert spark.conf.get("spark.sql.optimizer.inSetConversionThreshold") == "10"
+
+
+def test_steady_json_job_compiles_nothing(engine, spark, tmp_path):
+    """A JSON mapper's Find reads with filter pushdown off in the job's
+    clone: the JSON reader would compile its pushed ``In`` with the ids
+    inlined, a new compile on every job."""
+    import gzip
+
+    lake = tmp_path / "jlake"
+    lake.mkdir()
+    for k in range(2):
+        with gzip.open(lake / f"p{k}.json.gz", "wt") as f:
+            for i in range(k * 100, (k + 1) * 100):
+                f.write(json.dumps({"customer_id": i, "name": f"n{i}"}) + "\n")
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    engine.put_data_mapper(
+        "j", {"Location": str(lake), "Format": "json", "Columns": ["customer_id"]}
+    )
+    engine.enqueue_matches([{"MatchId": 1}, {"MatchId": 3}])
+    assert engine.process_queue()["JobStatus"] == "COMPLETED"
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount()
+    engine.enqueue_matches([{"MatchId": m} for m in (5, 105, 107)])
+    job = engine.process_queue()
+    assert job["JobStatus"] == "COMPLETED"
+    assert job["TotalObjectUpdatedCount"] == 2
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == compiles
+    # the pushdown conf lives on the job's session clone only
+    assert spark.conf.get("spark.sql.json.filterPushdown.enabled") == "true"

@@ -121,6 +121,8 @@ print(json.dumps({
     "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
     "sums": sorted(s for s, _ in out),
     "pyspark": [f for _, f in out],
+    "jvm_args": list(spark.sparkContext._jvm.java.lang.management
+                     .ManagementFactory.getRuntimeMXBean().getInputArguments()),
 }))
 spark.stop()
 """
@@ -145,6 +147,7 @@ def submitted(tmp_path_factory):
     (work / "driver.py").write_text(SUBMITTED_DRIVER)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["PYSPARK_PYTHON"] = sys.executable
+    env["XDG_CACHE_HOME"] = str(work / "cache")
     proc = subprocess.run(
         [submit, "--master", "local[3]", "--driver-memory", "1g",
          "--conf", "spark.ui.enabled=false",
@@ -153,7 +156,9 @@ def submitted(tmp_path_factory):
         cwd=work, env=env, capture_output=True, text=True, timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    return json.loads(proc.stdout.strip().splitlines()[-1])
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    out["cache"] = os.listdir(work / "cache") if (work / "cache").exists() else []
+    return out
 
 
 def test_spark_submit_master_is_kept(submitted):
@@ -169,3 +174,9 @@ def test_spark_submit_conf_beats_session_defaults(submitted):
 def test_spark_submit_py_files_runs_python_tasks(submitted):
     assert submitted["sums"] == [10, 35]
     assert all(".zip" not in f for f in submitted["pyspark"])
+
+
+def test_spark_submit_driver_gets_no_class_data_archive(submitted):
+    # spark-submit launched the JVM before get_spark ran: nothing to add
+    assert not [a for a in submitted["jvm_args"] if "Archive" in a]
+    assert submitted["cache"] == []
