@@ -235,12 +235,13 @@ def _refresh(spark: SparkSession, mapper) -> None:
 def _find_session(spark: SparkSession) -> SparkSession:
     """A per-job clone of ``spark`` (temp views and runtime confs
     included, about 2 ms) in which an In-list of two or more values
-    plans as an ``InSet``, and an ``InSet`` over an int column never as
-    a ``switch`` over inlined values. An ``InSet`` holds its match set
-    by reference, so Find's generated code is the same from job to job
-    and the codegen cache compiles it once; the Parquet scan still gets
-    the pushed ``In`` filter. The caller's session keeps its confs:
-    operator queries never see these."""
+    plans as an ``InSet`` (``group_predicate`` pads a one-value list),
+    and an ``InSet`` over an int column never as a ``switch`` over
+    inlined values. An ``InSet`` holds its match set by reference, so
+    Find's generated code is the same from job to job and the codegen
+    cache compiles it once; the Parquet scan still gets the pushed
+    ``In`` filter. The JSON reader gets no pushed filter. The caller's
+    session keeps its confs: operator queries never see these."""
     clone = SparkSession(
         spark.sparkContext, jsparkSession=spark._jsparkSession.cloneSession()
     )

@@ -171,7 +171,7 @@ def test_archive_key_follows_the_jdk_and_the_jars(tmp_path):
     assert session.archive_key(str(jdk), str(spark)) == key
     jar = spark / "jars" / "b.jar"
     jar.write_bytes(b"jar2")  # size
-    assert session.archive_key(str(jdk), str(spark)) not in {key}
+    assert session.archive_key(str(jdk), str(spark)) != key
     key = session.archive_key(str(jdk), str(spark))
     os.utime(jar, ns=(0, 10**9))  # mtime
     assert session.archive_key(str(jdk), str(spark)) != key
@@ -204,7 +204,7 @@ def test_the_launch_is_stock_when_the_archive_cannot_be_used(
     assert session._class_data_launch({}) is not None
     conf = {}
     if setting == "extraClassPath":
-        conf["spark.driver.extraClassPath"] = "/opt/lib/x.jar"
+        conf["spark.driver.extraClassPath"] = str(tmp_path / "x.jar")
     elif setting == "real conf file":
         (conf_dir / "log4j2.properties").write_text("")
     elif setting == "unwritable cache":
